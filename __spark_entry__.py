@@ -2332,7 +2332,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged = dedup.semantic_dedup(
         corpus, cents, id_col="vec_id", vector_col="embedding", threshold=0.9
     )
-    out = (
+    return (
         flagged.groupBy("cell")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -2341,10 +2341,6 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("cell")
     )
-    # propagate the operator's release handles (r12 leak fix: the
-    # groupBy created a new frame, dropping flagged's _vso_caches)
-    out._vso_caches = getattr(flagged, "_vso_caches", [])
-    return out
 
 
 _SEMDEDUP_COS_SQL = """round(
@@ -2894,9 +2890,7 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes the 62-bit simhash reproducible in DuckDB (_simhash_sql)."""
     d = load_table(spark, sf_dir, "documents")
     pairs = dedup.simhash_near_duplicates(d, max_hamming=3)
-    out = pairs.groupBy("hamming").agg(F.count(F.lit(1)).alias("n_pairs"))
-    out._vso_caches = getattr(pairs, "_vso_caches", [])
-    return out
+    return pairs.groupBy("hamming").agg(F.count(F.lit(1)).alias("n_pairs"))
 
 
 def _simhash_sql() -> str:
@@ -3827,9 +3821,7 @@ def ep3_label_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         e, k=8, llm=FakeChatModel(), sample_k=20, token_budget=25,
         quantizer="lloyd",
     )
-    out = res["audit"].orderBy("etiqueta_cluster")
-    out._vso_caches = getattr(res["audit"], "_vso_caches", [])
-    return out
+    return res["audit"].orderBy("etiqueta_cluster")
 
 
 def ep3_lloyd_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3919,15 +3911,11 @@ def ep3_lloyd_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cluster long, etiqueta_cluster string, corpus_chars int, corpus_sha string",
     )
     hist = assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_docs"))
-    out = (
+    return (
         hist.join(F.broadcast(stats_df), "cluster")
         .select("etiqueta_cluster", "n_docs", "corpus_chars", "corpus_sha")
         .orderBy("etiqueta_cluster")
     )
-    # release handle (r12 leak fix): the assignment persist must not
-    # outlive the query in the CacheManager
-    out._vso_caches = [assigned]
-    return out
 
 
 def _ep3_sql(metric: str) -> str:
@@ -4300,13 +4288,11 @@ def incremental_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cands = dedup.minhash_probe_corpus(batch, corpus_bands)
     verified = dedup.ngram_jaccard_pairs(d, cands, ngram_n=5, threshold=0.5)
-    out = verified.select(
+    return verified.select(
         F.col("id_a").alias("batch_id"),
         F.col("id_b").alias("corpus_id"),
         "jaccard",
     )
-    out._vso_caches = getattr(verified, "_vso_caches", [])
-    return out
 
 
 def _incremental_dedup_sql() -> str:
@@ -4367,9 +4353,7 @@ def dedup_canonical_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = dedup.minhash_signatures_kernel(d)
     cands = dedup.minhash_lsh_candidates(sigs, num_hashes=64)
     verified = dedup.ngram_jaccard_pairs(d, cands, ngram_n=5, threshold=0.5)
-    out = dedup.canonical_duplicate_groups(verified)
-    out._vso_caches = getattr(verified, "_vso_caches", [])
-    return out
+    return dedup.canonical_duplicate_groups(verified)
 
 
 def _dedup_canonical_sql() -> str:
@@ -4482,7 +4466,7 @@ def evt_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("h")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    out = j.select(
+    return j.select(
         "event_type",
         F.unix_timestamp("h").alias("hour_epoch"),
         F.coalesce("n_events", F.lit(0)).alias("n_events"),
@@ -4491,10 +4475,6 @@ def evt_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value_ffill"
         ),
     )
-    # release handle (r12 leak fix): the hourly-aggregate persist must
-    # not outlive the query in the CacheManager
-    out._vso_caches = [agg]
-    return out
 
 
 _GAP_FILL_SQL = """
@@ -4636,7 +4616,7 @@ def evt_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.unboundedPreceding, Window.currentRow
     )
     n_base = F.first("n_users").over(w)
-    out = rows.select(
+    return rows.select(
         "step",
         "event_type",
         "n_users",
@@ -4646,10 +4626,6 @@ def evt_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_base > 0, F.round(F.col("n_users") / n_base, 6)
         ).alias("conversion"),
     ).orderBy("step")
-    # release handles (r12 leak fix): the per-step persists must not
-    # outlive the query in the CacheManager
-    out._vso_caches = list(reached)
-    return out
 
 
 def evt_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8261,9 +8237,7 @@ def dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     blowup. Pipeline: operators/dedup.py:dup_span_coverage_frame."""
     d = load_table(spark, sf_dir, "documents")
     cov = dedup.dup_span_coverage_frame(d, n=_SPAN_N, w=_SPAN_W)
-    out = cov.orderBy("doc_id")
-    out._vso_caches = getattr(cov, "_vso_caches", [])
-    return out
+    return cov.orderBy("doc_id")
 
 
 def _dup_span_sql() -> str:
@@ -8352,12 +8326,10 @@ def g3_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     verts = e.select(F.col("event_type").alias("id")).distinct()
     edges = SIM.cooccurrence_edges(e, "user_id", "event_type")
     pr = GR.pagerank(edges, verts, damping=0.85, iterations=8)
-    out = pr.select(
+    return pr.select(
         F.col("id").alias("event_type"),
         F.round("rank", 6).alias("pagerank"),
     ).orderBy("event_type")
-    out._vso_caches = getattr(pr, "_vso_caches", [])
-    return out
 
 
 def _g3_pagerank_sql(damping: float = 0.85, iterations: int = 8) -> str:
@@ -8485,15 +8457,13 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     verts = cand.select(F.col("tok").alias("id")).distinct()
     pr = GR.pagerank(edges, verts, damping=0.85, iterations=8)
-    out = (
+    return (
         pr.select(
             F.col("id").alias("token"), F.round("rank", 6).alias("textrank")
         )
         .orderBy(F.desc("textrank"), "token")
         .limit(20)
     )
-    out._vso_caches = getattr(pr, "_vso_caches", [])
-    return out
 
 
 def _textrank_sql(damping: float = 0.85, iterations: int = 8) -> str:
@@ -8549,11 +8519,9 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality = d.select(
         "doc_id", F.length(F.trim(F.col("text"))).cast("long").alias("q")
     )
-    out = dedup.keep_best_duplicate_groups(verified, quality).orderBy(
+    return dedup.keep_best_duplicate_groups(verified, quality).orderBy(
         F.desc("group_size"), "group_id"
     )
-    out._vso_caches = getattr(verified, "_vso_caches", [])
-    return out
 
 
 def _keep_best_sql() -> str:
@@ -9265,7 +9233,7 @@ def evt_bitmap_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_events").alias("n_events"),
         )
     )
-    out = (
+    return (
         wk.join(dau, "week_idx")
         .select(
             "week_idx",
@@ -9286,8 +9254,6 @@ def evt_bitmap_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("week_idx")
     )
-    out._vso_caches = [daily]
-    return out
 
 
 _BITMAP_ROLLUP_SQL = """
@@ -9881,7 +9847,7 @@ def basket_brand_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     directional (antecedent → consequent) support / confidence / lift
     with n_ab >= 20. Plan: broadcast the part dim onto lineitem, ONE
     distinct (order, brand) pass (persisted — it feeds the totals and
-    the pair self-join; handle attached as _vso_caches), self-join on
+    the pair self-join), self-join on
     the order key (fan-out bounded by brands-per-order², not order
     size), then two tiny broadcast-joined total frames. N rides as a
     1-row broadcast (r12: was a driver count — one whole extra job;
@@ -9920,7 +9886,7 @@ def basket_brand_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     tc = tot.select(
         F.col("b").alias("consequent"), F.col("n_item").alias("n_consequent")
     )
-    out = (
+    return (
         pairs.join(F.broadcast(ta), "antecedent")
         .join(F.broadcast(tc), "consequent")
         .join(F.broadcast(nb))
@@ -9946,8 +9912,6 @@ def basket_brand_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("antecedent", "consequent")
     )
-    out._vso_caches = [bk]
-    return out
 
 
 _BASKET_RULES_SQL = """
@@ -10399,7 +10363,7 @@ def evt_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact rational numerator/denominator pair.)
 
     Plan: ONE combinable (type, day) aggregate over events (the only
-    pass over the fact table — persisted, handle attached), then a
+    pass over the fact table — persisted), then a
     per-type self-join on the daily series. Pair volume is |days|² per
     type — bounded by the CALENDAR, not by event count, so at 100 TB
     the join input is ~(types × years × 365) rows regardless of event
@@ -10431,7 +10395,7 @@ def evt_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     nd = daily.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_days"))
-    out = (
+    return (
         nd.join(pr, "event_type", "left")
         .select(
             "event_type",
@@ -10449,8 +10413,6 @@ def evt_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
-    out._vso_caches = [daily]
-    return out
 
 
 _MANN_KENDALL_SQL = """
@@ -10715,7 +10677,7 @@ def doc_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = LM.train_unigram_lm(toks, tokens_col="toks")
     bi = LM.train_bigram_lm(toks, tokens_col="toks")
     sc = LM.bigram_surprisal(toks, bi, vocab, tokens_col="toks")
-    out = (
+    return (
         d.select("doc_id")
         .join(sc, "doc_id", "left")
         .select(
@@ -10727,8 +10689,6 @@ def doc_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-    out._vso_caches = [toks]
-    return out
 
 
 _BIGRAM_LM_SQL = r"""
@@ -10840,7 +10800,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cross_pairs"
         ),
     )
-    out = (
+    return (
         filled.join(F.broadcast(tot))
         .select(
             "split_lo",
@@ -10856,8 +10816,6 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("split_lo", "split_hi")
     )
-    out._vso_caches = getattr(pairs, "_vso_caches", []) + [counts]
-    return out
 
 
 _SPLIT_LEAKAGE_SQL = (
@@ -11177,7 +11135,7 @@ def evt_lag_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         (n * F.col("sxx") - F.col("sx").cast("double") * F.col("sx"))
         * (n * F.col("syy") - F.col("sy").cast("double") * F.col("sy"))
     )
-    out = mom.select(
+    return mom.select(
         "t1",
         "t2",
         "lag",
@@ -11187,8 +11145,6 @@ def evt_lag_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sxy",
         F.when(den > 0, F.round(num / den, 6)).alias("pearson_r"),
     ).orderBy("t1", "t2", "lag")
-    out._vso_caches = [daily]
-    return out
 
 
 _LAG_CORR_SQL = """
@@ -12306,7 +12262,7 @@ def evt_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     med_den = F.when(
         F.col("m1.rn") == F.col("m2.rn"), F.col("m1.den")
     ).otherwise(F.lit(2) * F.col("m1.den") * F.col("m2.den"))
-    out = med.select(
+    return med.select(
         "event_type",
         "n_pairs",
         med_num.cast("long").alias("med_num"),
@@ -12315,8 +12271,6 @@ def evt_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
             "theil_sen_slope"
         ),
     ).orderBy("event_type")
-    out._vso_caches = [daily]
-    return out
 
 
 _THEIL_SEN_SQL = """
@@ -12688,7 +12642,7 @@ def copurchase_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("brand").orderBy(
         F.col("cosine").desc(), F.col("neighbor").asc()
     )
-    out = (
+    return (
         cos.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= 3)
         .select(
@@ -12702,8 +12656,6 @@ def copurchase_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("brand", "rnk")
     )
-    out._vso_caches = [cb]
-    return out
 
 
 _COPURCHASE_SQL = """
@@ -13090,7 +13042,7 @@ def evt_kendalls_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     s4 = joined.groupBy("m_all", "k_full").agg(
         F.sum(dev * dev).cast("long").alias("s4")
     )
-    out = (
+    return (
         joined.select("event_type", "rank_sum", "m_all", "k_full")
         .join(F.broadcast(s4), ["m_all", "k_full"])
         .select(
@@ -13112,8 +13064,6 @@ def evt_kendalls_w(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
-    out._vso_caches = [full]
-    return out
 
 
 _KENDALLS_W_SQL = """
@@ -13219,7 +13169,7 @@ def conformal_interval_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rk") == k)
         .select(F.col("score").alias("tau"))
     )
-    out = (
+    return (
         scored.where(F.col("split") == "test")
         .crossJoin(F.broadcast(tau_df))
         .agg(
@@ -13243,8 +13193,6 @@ def conformal_interval_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    out._vso_caches = [feats]
-    return out
 
 
 def _conformal_sql() -> str:
@@ -14691,7 +14639,7 @@ def evt_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    out = ranked.select(
+    return ranked.select(
         "event_type",
         "bucket",
         "n_days",
@@ -14705,8 +14653,6 @@ def evt_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "p_adj",
     ).orderBy("rnk")
-    out._vso_caches = [daily]
-    return out
 
 
 _BH_FDR_SQL = f"""
@@ -15006,7 +14952,7 @@ def evt_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("lag")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    out = (
+    return (
         j.where((F.col("den") > 0) & (F.col("n") > 8))
         .select(
             "event_type",
@@ -15017,8 +14963,6 @@ def evt_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type", "lag")
     )
-    out._vso_caches = [daily]
-    return out
 
 
 _LJUNG_BOX_SQL = """
@@ -15222,9 +15166,7 @@ def evt_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.sum("value") * 100).cast("long").alias("cents"))
         .persist()
     )
-    out = TS.holt_from_daily(daily)
-    out._vso_caches = [daily]
-    return out
+    return TS.holt_from_daily(daily)
 
 
 _HOLT_SQL = """
@@ -15989,7 +15931,7 @@ def g9_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # persist the degree-attached edge list: it feeds BOTH the global
     # moment aggregate and the per-degree knn profile — without the
-    # handle the co-order pair fan-out + two degree joins run twice
+    # persist the co-order pair fan-out + two degree joins run twice
     edj = (
         sym.join(deg, "src")
         .join(
@@ -16037,7 +15979,7 @@ def g9_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("deg_dst").cast("long").alias("sum_nbr_deg"),
         )
     )
-    out = (
+    return (
         knn.crossJoin(F.broadcast(glr))
         .select(
             "k",
@@ -16053,8 +15995,6 @@ def g9_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("k")
     )
-    out._vso_caches = [sym, edj]
-    return out
 
 
 _ASSORT_SQL = """
@@ -16718,18 +16658,15 @@ def g10_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (float(reach) / float(sd)) if sd > 0 else None,
                 )
             )
-        out = spark.createDataFrame(
+        return spark.createDataFrame(
             rows,
             "landmark long, l_degree long, c1 long, c2 long, c3 long, "
             "c4 long, n_reached long, sum_dist long, harmonic_num long, "
             "harmonic double, closeness4 double",
         ).orderBy("landmark")
-        out._vso_caches = [sym]
-        return out
     visited = lm.select("l", F.col("l").alias("node"))
     frontier = visited
     rings = []
-    caches = [sym]
     for k in range(1, 5):
         # persist each frontier: the iterative lineage otherwise
         # re-executes every prior round per downstream consumer (the
@@ -16741,7 +16678,6 @@ def g10_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(visited, ["l", "node"], "left_anti")
             .persist()
         )
-        caches.append(nxt)
         rings.append(nxt.select("l", F.lit(k).alias("dist")))
         visited = visited.unionByName(nxt)
         frontier = nxt
@@ -16771,7 +16707,7 @@ def g10_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     reached = c1 + c2 + c3 + c4
     sumd = c1 + 2 * c2 + 3 * c3 + 4 * c4
     harm_num = 12 * c1 + 6 * c2 + 4 * c3 + 3 * c4
-    out = (
+    return (
         lm.join(counts, F.col("l") == F.col("lc"), "left")
         .select(
             F.col("l").alias("landmark"),
@@ -16798,8 +16734,6 @@ def g10_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("landmark")
     )
-    out._vso_caches = caches
-    return out
 
 
 _G10_CLOSENESS_SQL = """
@@ -16938,15 +16872,13 @@ def doc_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     jsd = F.lit(0.5) * (
         F.col("s1") + F.col("s2") + (F.lit(1.0) - shared) * ln2
     )
-    out = agg.select(
+    return agg.select(
         "source",
         F.col("ns").alias("n_tokens"),
         shared.alias("shared_corpus_mass"),
         F.round(jsd, 6).alias("jsd_nats"),
         F.round(jsd / ln2, 6).alias("jsd_normalized"),
     ).orderBy("source")
-    out._vso_caches = [sw]
-    return out
 
 
 _JSD_SQL = r"""
@@ -19870,7 +19802,7 @@ def source_stylometry_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.abs(F.col("za") - F.col("zb"))).alias("sd"),
         )
     )
-    out = pairs.select(
+    return pairs.select(
         "src_a",
         "src_b",
         "n_markers",
@@ -19878,8 +19810,6 @@ def source_stylometry_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sd") / F.col("n_markers").cast("double"), 6
         ).alias("delta_burrows"),
     ).orderBy("src_a", "src_b")
-    out._vso_caches = [sw]
-    return out
 
 
 _STYLOMETRY_SQL = r"""
@@ -20349,7 +20279,7 @@ def doc_source_vocab_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src_a", "src_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
     )
-    out = (
+    return (
         inter.join(
             F.broadcast(
                 sizes.select(
@@ -20387,8 +20317,6 @@ def doc_source_vocab_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("src_a", "src_b")
     )
-    out._vso_caches = [sw]
-    return out
 
 
 _VOCAB_JACCARD_SQL = r"""
@@ -22045,7 +21973,7 @@ def part_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     qty = F.round(F.col("l_quantity")).cast("long")
     # persist: pm feeds THREE consumers (base-month scalar, base basket
-    # broadcast, current side) — without the handle the fact-table agg
+    # broadcast, current side) — without the persist the fact-table agg
     # re-runs per consumer
     pm = li.groupBy(F.col("l_partkey").alias("pk"), m.alias("m")).agg(
         F.sum(cents).cast("long").alias("cents"),
@@ -22078,15 +22006,13 @@ def part_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lasp = F.col("l_num") / F.col("l_den")
     paas = F.col("p_num") / F.col("p_den")
-    out = agg.select(
+    return agg.select(
         F.col("m").alias("month_idx"),
         "n_parts_matched",
         F.round(lasp, 6).alias("laspeyres"),
         F.round(paas, 6).alias("paasche"),
         F.round(F.sqrt(lasp * paas), 6).alias("fisher"),
     ).orderBy("month_idx")
-    out._vso_caches = [pm]
-    return out
 
 
 _PRICE_INDEX_SQL = """
@@ -22178,7 +22104,7 @@ def orders_chain_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     # persist: cum feeds BOTH sides of the age/age+1 self-join — without
-    # the handle the whole densify+window chain runs twice
+    # it the whole densify+window chain runs twice
     cum = dense.select(
         "cohort", "k", "max_age", F.sum("rev").over(wcum).alias("cum")
     ).persist()
@@ -22209,15 +22135,13 @@ def orders_chain_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.orderBy(F.col("k").desc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    out = (
+    return (
         fac.withColumn(
             "to_ultimate",
             F.round(F.exp(F.sum(F.log("factor")).over(wtail)), 6),
         )
         .orderBy("k")
     )
-    out._vso_caches = [cum]
-    return out
 
 
 _CHAIN_LADDER_SQL = """
@@ -22580,7 +22504,7 @@ def g13_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # persist: und feeds sym (twice via the union) AND the final
     # anti-join; sym feeds the degree agg and both wedge sides — without
-    # the handles the co-order pair fan-out re-runs per consumer
+    # the persists the co-order pair fan-out re-runs per consumer
     und = und.persist()
     sym = und.unionByName(
         und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -22614,14 +22538,12 @@ def g13_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     wtop = Window.orderBy(
         F.col("aa_score").desc(), F.col("u").asc(), F.col("v").asc()
     )
-    out = (
+    return (
         cand.withColumn("rn", F.row_number().over(wtop))
         .where(F.col("rn") <= 20)
         .drop("rn")
         .orderBy(F.col("aa_score").desc(), "u", "v")
     )
-    out._vso_caches = [und, sym]
-    return out
 
 
 _ADAMIC_ADAR_SQL = """

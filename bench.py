@@ -16,7 +16,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
-from vector_search_optimization_spark.session import get_spark
+from vector_search_optimization_spark.session import get_spark, release_caches
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -100,40 +100,31 @@ def main() -> None:
         # init (amortized at 100 TB); paying it here keeps the per-query
         # record independent of which dedup query the rotation puts
         # first (VERDICT r6 item 6).
-        # r12 fix (VERDICT r11 "what's wrong" #1): release the warmup
-        # pass's _vso_caches so no persisted subplan leaks across the
-        # warmup -> timed-loop edge. The declared purpose of this pass
+        # Release what the warmup pass persisted so nothing leaks across
+        # the warmup -> timed-loop edge. The declared purpose of this pass
         # is at-scale CODEGEN warmup (compiled classes survive the
         # unpersist); the first timed dedup query must still build its
         # own caches to stay self-contained.
-        from vector_search_optimization_spark.operators.dedup import (
-            release_caches as _rc,
-        )
-
         _wu_dedup = entrymod.queries()["dedup_canonical_groups"](
             spark, SF_DIR
         )
         _wu_dedup.write.format("noop").mode("overwrite").save()
-        _rc(_wu_dedup)
+        release_caches(_wu_dedup)
 
         entrymod.prepare(spark, SF_DIR)
     except Exception:  # noqa: BLE001
         pass
 
-    # r11 measurement fix (declared in OPTIMIZATION_r11.md): release each
-    # query's attached persist handles AFTER its timed write. Without
+    # r11 measurement fix (declared in OPTIMIZATION_r11.md): free
+    # everything the query persisted AFTER its timed write. Without
     # this, two queries that persist an IDENTICAL subplan (e.g. the
     # co-order graph's symmetrized edge list in g9/g13) share one
     # CacheManager entry, so whichever runs first subsidizes the others
-    # and per-query numbers stop being self-contained. The unpersist
+    # and per-query numbers stop being self-contained. The release
     # runs OUTSIDE the timed region; old semantics are preserved in
     # BENCH_LOCAL_r* history. r12 (ADVICE r11): the release also runs
-    # when the WRITE fails — a query that attaches caches and then
-    # errors must not leak them into every subsequent timed query.
-    from vector_search_optimization_spark.operators.dedup import (
-        release_caches,
-    )
-
+    # when the WRITE fails — a query that persists and then errors
+    # must not leak into every subsequent timed query.
     timings: dict[str, float] = {}
     total = 0.0
     for name, fn in entrymod.queries().items():

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import ann, dedup
+from vector_search_optimization_spark.session import release_caches
 
 BASE = (
     "the quick brown fox jumps over the lazy dog and runs far away into the woods "
@@ -504,27 +505,27 @@ def test_incremental_probe_append_consistency(spark, sf_small):
 def test_jaccard_similarity_join_releases_caches(spark):
     """Cache lifecycle: toks unpersists inside the call; the three
     result-lifetime caches (cand, sets, per_doc — r12: per_doc replaced
-    the old second collect_list pass and the pref persist) are attached
-    as handles and release_caches() returns executor storage to zero
-    growth. Input is UNIQUE to this test — CacheManager dedups identical
-    logical plans, so a shared fixture would reuse entries another test
-    already left."""
+    the old second collect_list pass and the pref persist) outlive it,
+    and the session-wide release_caches() frees them. Input is UNIQUE to
+    this test — CacheManager dedups identical logical plans, so a shared
+    fixture would reuse entries another test already left."""
     uniq = spark.createDataFrame(
         [(1, "release me now " * 4), (2, "release me now " * 4 + "tail"),
          (3, "completely different words here")],
         "doc_id long, text string",
     )
-    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    release_caches(uniq)  # start from an empty session
     out = dedup.jaccard_similarity_join(uniq, shingle_n=3, threshold=0.5)
     out.collect()
-    during = spark.sparkContext._jsc.getPersistentRDDs().size()
-    # exactly the three result-lifetime handles outlive the call
-    assert during - before == 3
-    assert dedup.release_caches(out) == 3
-    after = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert after == before
+    # exactly the three result-lifetime persists outlive the call
+    assert rdds().size() == 3
+    release_caches(out)
+    assert rdds().size() == 0 and cache_manager.isEmpty()
     # idempotent
-    assert dedup.release_caches(out) == 0
+    release_caches(out)
+    assert rdds().size() == 0 and cache_manager.isEmpty()
 
 
 # --- cross-path tokenization + NULL contract ---------------------------------

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import dedup, drift, upsert
 from vector_search_optimization_spark.operators import graph as GR
+from vector_search_optimization_spark.session import release_caches
 
 
 # --- PageRank ---------------------------------------------------------------
@@ -57,8 +58,7 @@ def test_pagerank_matches_numpy_power_method(spark, node_limit):
     assert set(got) == set(want)
     for n in nodes:
         assert got[n] == pytest.approx(want[n], rel=1e-12), n
-    for c in getattr(pr, "_vso_caches", []):
-        c.unpersist()
+    release_caches(pr)
 
 
 def test_pagerank_star_center_dominates_and_isolated_gets_base(spark):
@@ -74,8 +74,7 @@ def test_pagerank_star_center_dominates_and_isolated_gets_base(spark):
     assert got["z"] == pytest.approx((1.0 - 0.85) / len(nodes), rel=0, abs=0)
     # leaked dangling mass ⇒ total strictly below 1, but positive everywhere
     assert 0 < sum(got.values()) <= 1.0 + 1e-12
-    for c in getattr(pr, "_vso_caches", []):
-        c.unpersist()
+    release_caches(pr)
 
 
 def test_pagerank_checkpointing_is_bit_identical(spark):

@@ -13,6 +13,7 @@ import pytest
 import __spark_entry__ as m
 from vector_search_optimization_spark.operators import nearest_centroid as NC
 from vector_search_optimization_spark.operators import vector_agg as VA
+from vector_search_optimization_spark.session import release_caches
 from vector_search_optimization_spark.sources import load_table
 
 
@@ -223,6 +224,10 @@ _NESTED_LOOP_OK = {
                                # crossed onto the length-domain-bounded
                                # support grid + 1-row corpus-total
                                # broadcast (same densification posture)
+    "basket_brand_rules",      # 1-row basket-total frame broadcast onto
+                               # the brand-pair frame for support/lift
+    "dedup_exact_stats",       # 1-row survivor-total frame broadcast
+                               # onto the 1-row stats aggregate
 }
 
 
@@ -553,8 +558,7 @@ def test_bitmap_rollup_scans_events_once(spark, sf_small):
         outside = plan.split("InMemoryRelation")[0]
         assert "events.parquet" not in outside
     finally:
-        for c in getattr(df, "_vso_caches", []):
-            c.unpersist()
+        release_caches(df)
 
 
 def test_nb_confusion_scoring_is_equi_join(spark, sf_small):

@@ -14,8 +14,10 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from vector_search_optimization_spark.session import release_caches
 from vector_search_optimization_spark.sources import load_table, spread_scan
 from vector_search_optimization_spark.sources import readers as R
 
@@ -74,24 +76,45 @@ def test_fresh_scan_still_spreads(spark, sf_small):
     assert out is not d
 
 
-def test_queries_release_all_caches(spark, sf_small):
-    """r12 leak fix regression: every persist a query creates must reach
-    the returned frame's _vso_caches so release_caches() empties the
-    CacheManager — an unattached persist outlives the query and
-    subsidizes/pressures later ones (the full sweep lives in
-    tools/cache_leak_audit.py; these three queries each leaked before
-    the fix: per-step funnel persists, the gap-fill hourly aggregate,
-    the LSH candidate table inside ngram_jaccard_pairs)."""
-    import __spark_entry__ as entrymod
-    from vector_search_optimization_spark.operators.dedup import (
-        release_caches,
-    )
+def test_release_caches_frees_the_whole_session(spark):
+    """release_caches needs no handle on what was persisted: a plain
+    persist, a cache of a frame derived from it and an eager
+    localCheckpoint (which the CacheManager does not track) are all
+    freed through an unrelated frame."""
+    base = spark.range(50).withColumn("sq", F.col("id") * F.col("id"))
+    base.persist().count()
+    base.where(F.col("id") % 2 == 0).cache().count()
+    spark.range(7).localCheckpoint(eager=True)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() >= 3
+    release_caches(spark.range(1))
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
-    qs = entrymod.queries()
-    for name in ("evt_funnel", "evt_gap_fill", "minhash_verified_dedup"):
-        spark.catalog.clearCache()
-        df = qs[name](spark, sf_small)
-        df.write.format("noop").mode("overwrite").save()
-        release_caches(df)
-        left = spark.sparkContext._jsc.getPersistentRDDs().size()
-        assert left == 0, f"{name} left {left} cached RDD(s)"
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        # each once leaked a persist no release reached: per-step
+        # funnel persists, the gap-fill hourly aggregate, the LSH
+        # candidate table inside ngram_jaccard_pairs
+        "evt_funnel",
+        "evt_gap_fill",
+        "minhash_verified_dedup",
+        # persist shared frames: bigram tokens, winnow anchors, daily sums
+        "doc_bigram_lm",
+        "dup_span_coverage",
+        "evt_theil_sen_slope",
+    ],
+)
+def test_queries_release_all_caches(spark, sf_small, name):
+    """A registry query may persist freely; once its result is consumed,
+    release_caches() leaves no persisted RDD and an empty CacheManager,
+    so nothing it cached subsidizes or pressures the next query."""
+    import __spark_entry__ as entrymod
+
+    df = entrymod.queries()[name](spark, sf_small)
+    df.write.format("noop").mode("overwrite").save()
+    release_caches(df)
+    left = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert left == 0, f"{name} left {left} cached RDD(s)"
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 import __spark_entry__ as m
 from vector_search_optimization_spark.operators import lm_quality as LM
 from vector_search_optimization_spark.operators import validation as DQV
+from vector_search_optimization_spark.session import release_caches
 
 
 # ---------------------------------------------------------------------------
@@ -223,7 +224,7 @@ def test_split_leakage_flags_planted_cross_pair(spark):
     )
     pairs = dedup.jaccard_similarity_join(docs, shingle_n=3, threshold=0.5)
     assert pairs.count() == 1
-    dedup.release_caches(pairs)
+    release_caches(pairs)
 
 
 # ---------------------------------------------------------------------------

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as m
 from vector_search_optimization_spark.operators import timeseries as TS
+from vector_search_optimization_spark.session import release_caches
 
 
 # ---------------------------------------------------------------------------
@@ -79,21 +80,6 @@ def test_isotonic_matches_minimax_bruteforce(spark, seed):
     assert all(a < b for a, b in zip(means, means[1:]))
     assert sum(r.block_cents for r in rows) == sum(ys)
     assert sum(r.block_days for r in rows) == len(ys)
-
-
-@pytest.mark.parametrize(
-    "name",
-    ["doc_bigram_lm", "dup_span_coverage", "evt_theil_sen_slope"],
-)
-def test_persisting_queries_expose_cache_handles(spark, sf_small, name):
-    """Queries that persist shared frames must attach them as
-    _vso_caches so the repo's unpersist convention can release them
-    (ADVICE r7 #1 regression guard)."""
-    df = m.queries()[name](spark, sf_small)
-    handles = getattr(df, "_vso_caches", [])
-    assert handles, f"{name} persists but exposes no _vso_caches handle"
-    for h in handles:
-        h.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -491,15 +477,13 @@ def test_g10_distributed_loop_equals_driver_fast_path(spark, sf_small):
     centralities (the pagerank path-equality discipline)."""
     fast = m.queries()["g10_closeness"](spark, sf_small)
     fast_rows = sorted(tuple(r) for r in fast.collect())
-    for c in getattr(fast, "_vso_caches", []):
-        c.unpersist()
+    release_caches(fast)
     old = m._G10_DRIVER_EDGE_LIMIT
     m._G10_DRIVER_EDGE_LIMIT = 0
     try:
         slow = m.queries()["g10_closeness"](spark, sf_small)
         slow_rows = sorted(tuple(r) for r in slow.collect())
-        for c in getattr(slow, "_vso_caches", []):
-            c.unpersist()
+        release_caches(slow)
     finally:
         m._G10_DRIVER_EDGE_LIMIT = old
     assert fast_rows == slow_rows

@@ -16,7 +16,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
-from vector_search_optimization_spark.session import get_spark
+from vector_search_optimization_spark.session import get_spark, release_caches
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -36,10 +36,6 @@ def main() -> None:
     # (Arrow worker fork, codegen of a trivial plan) before timing
     entrymod.entry(spark).write.format("noop").mode("overwrite").save()
     entrymod.prepare(spark, SF_DIR)
-
-    from vector_search_optimization_spark.operators.dedup import (
-        release_caches,
-    )
 
     def timed(name: str) -> float:
         t0 = time.time()

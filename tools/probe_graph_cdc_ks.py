@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import drift, upsert
 from vector_search_optimization_spark.operators import graph as GR
-from vector_search_optimization_spark.session import get_spark
+from vector_search_optimization_spark.session import get_spark, release_caches
 
 SCALES = [int(a) for a in sys.argv[1:]] or [10, 100]
 BASE = 100_000
@@ -64,8 +64,7 @@ def _probe(spark, scale: int) -> dict:
     # and with it most of the iteration math
     out["pagerank_mass"] = round(pr.agg(F.sum("rank")).first()[0], 6)
     out["pagerank_s"] = round(time.time() - t0, 1)
-    for c in getattr(pr, "_vso_caches", []):
-        c.unpersist()
+    release_caches(pr)
 
     # --- snapshot diff: all four classes populated
     base = spark.range(n).select(

@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from vector_search_optimization_spark.session import get_spark
+from vector_search_optimization_spark.session import get_spark, release_caches
 
 SCALE = int(sys.argv[1]) if len(sys.argv) > 1 else 40
 N_DOCS = 5_000 * SCALE
@@ -313,7 +313,7 @@ def main() -> None:
         )
         flagged = dedup.semantic_dedup(emb, cents, threshold=0.95)
         n = flagged.where(~F.col("keep")).count()
-        dedup.release_caches(flagged)
+        release_caches(flagged)
         return n
 
     stage("semantic_dedup", _semantic_dedup)

@@ -1105,9 +1105,6 @@ def rp_blocked_top_pairs(
     )
     # bucketed rows feed both join sides: persist instead of re-deriving
     # (at lake scale this is the "write the bucketed table" stage).
-    # The handle is attached to the result (r12 leak fix) so callers
-    # release it via dedup.release_caches — an unattached persist
-    # outlives the query and subsidizes/pressures later ones.
     b = b.persist(StorageLevel.MEMORY_AND_DISK)
     e = b.select(
         F.col(id_col),
@@ -1134,7 +1131,7 @@ def rp_blocked_top_pairs(
         first_match = first_match & (
             (F.col("tbl") <= j) | (F.col("__ba")[j] != F.col("__bb")[j])
         )
-    out = (
+    return (
         a.join(bb, ["tbl", "bucket"])
         .where(F.col("id_a") < F.col("id_b"))
         .where(first_match)
@@ -1146,5 +1143,3 @@ def rp_blocked_top_pairs(
         .orderBy(F.desc("cos_sim"), "id_a", "id_b")
         .limit(k)
     )
-    out._vso_caches = [b]
-    return out

@@ -39,27 +39,8 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TX
 from ..functions import vector as V
+from ..session import release_caches  # noqa: F401 (re-exported for perfbench)
 from ..sources.readers import spread_scan
-
-# --- cache lifecycle ---------------------------------------------------------
-
-
-def release_caches(df: DataFrame) -> int:
-    """Unpersist every cached intermediate an operator attached to ``df``.
-
-    Operators that must persist intermediates a LAZY result still depends
-    on (e.g. jaccard_similarity_join's verified-candidate table) record
-    them on the returned DataFrame as ``_vso_caches``. Long-lived sessions
-    call this once the result has been consumed (written / collected) to
-    return the executor storage; short-lived sessions can ignore it.
-    Returns the number of cache entries released."""
-    handles = getattr(df, "_vso_caches", None) or []
-    for h in handles:
-        h.unpersist()
-    if handles:
-        df._vso_caches = []
-    return len(handles)
-
 
 # --- exact -------------------------------------------------------------------
 
@@ -371,10 +352,6 @@ def minhash_probe_corpus(
         .distinct()
     )
     if corpus_sigs is None or est_threshold is None:
-        # release handle for the batch-signature persist (r12 leak fix:
-        # an unattached persist outlives the query in the CacheManager —
-        # cross-query subsidy/pressure, the class bench.py releases)
-        cands._vso_caches = [sig_b]
         return cands
     sa = sig_b.select(F.col(id_col).alias("id_a"), F.col("signature").alias("__sa"))
     sb = corpus_sigs.select(
@@ -385,14 +362,12 @@ def minhash_probe_corpus(
         F.lit(0),
         lambda acc, x: acc + x,
     ) / F.size("__sa")
-    out = (
+    return (
         cands.join(F.broadcast(sa), "id_a")
         .join(sb, "id_b")
         .select("id_a", "id_b", F.round(est, 6).alias("est_jaccard"))
         .where(F.col("est_jaccard") >= est_threshold)
     )
-    out._vso_caches = [sig_b]
-    return out
 
 
 def minhash_lsh_candidates(
@@ -458,16 +433,12 @@ def minhash_near_duplicates(
         F.lit(0),
         lambda acc, x: acc + x,
     ) / F.size("__sa")
-    out = (
+    return (
         cands.join(sa, "id_a")
         .join(sb, "id_b")
         .select("id_a", "id_b", F.round(est, 6).alias("est_jaccard"))
         .where(F.col("est_jaccard") >= jaccard_threshold)
     )
-    # release handle (r12 leak fix): the signature persist must not
-    # outlive the query in the CacheManager
-    out._vso_caches = [sigs]
-    return out
 
 
 # --- simhash ------------------------------------------------------------------
@@ -642,7 +613,7 @@ def simhash_near_duplicates(
         first_match = first_match & (
             (F.col("seg") <= j) | (seg_val(F.col("__ha"), j) != seg_val(F.col("__hb"), j))
         )
-    out = (
+    return (
         a.join(b, ["seg", "segval"])
         .where(F.col("id_a") < F.col("id_b"))
         .where(first_match)
@@ -651,10 +622,6 @@ def simhash_near_duplicates(
         )
         .where(F.col("hamming") <= max_hamming)
     )
-    # release handle (r12 leak fix): the simhash persist must not
-    # outlive the query in the CacheManager
-    out._vso_caches = [hashed]
-    return out
 
 
 # --- n-gram jaccard ------------------------------------------------------------
@@ -713,12 +680,9 @@ def ngram_jaccard_pairs(
     intersect/union expressions.
     """
     # the candidate table feeds the id-set AND the final join: persist it so
-    # an upstream LSH pipeline isn't recomputed per consumer. Incoming
-    # release handles (e.g. minhash_probe_corpus's signature persist)
-    # are forwarded to the returned frame alongside this persist.
+    # an upstream LSH pipeline isn't recomputed per consumer.
     from pyspark import StorageLevel
 
-    upstream = getattr(candidates, "_vso_caches", None) or []
     candidates = candidates.persist(StorageLevel.MEMORY_AND_DISK)
     # compute n-grams only for rows that appear in a candidate pair — the
     # candidate set is tiny next to the corpus, and the HOF n-gram expansion
@@ -742,7 +706,7 @@ def ngram_jaccard_pairs(
     gb = grams.select(F.col(id_col).alias("id_b"), F.col("__g").alias("__gb"))
     inter = F.size(F.array_intersect("__ga", "__gb")).cast("double")
     union = F.size(F.array_union("__ga", "__gb")).cast("double")
-    out = (
+    return (
         candidates.join(ga, "id_a")
         .join(gb, "id_b")
         .select(
@@ -754,11 +718,6 @@ def ngram_jaccard_pairs(
         )
         .where(F.col("jaccard") >= threshold)
     )
-    # release handles (r12 leak fix): the candidate and grams persists —
-    # and any upstream handles riding on the candidates argument — must
-    # reach the caller for dedup.release_caches(result)
-    out._vso_caches = upstream + [candidates, grams]
-    return out
 
 
 # --- canonicalization ---------------------------------------------------------
@@ -977,7 +936,7 @@ def semantic_dedup(
 
     # result-lifetime cache: the assignment feeds both the pair stage
     # and the final annotation join (without it the argmin pass runs
-    # twice); released via dedup.release_caches(result). At lake scale
+    # twice); freed by the session-wide release_caches. At lake scale
     # this is the materialized cell-partitioned table (the IVF layout).
     assigned = assign_ivf_cells(
         df.select(id_col, vector_col), centroids, vector_col=vector_col
@@ -998,13 +957,11 @@ def semantic_dedup(
         .distinct()
         .withColumn("__dup", F.lit(True))
     )
-    out = (
+    return (
         assigned.join(dup_ids, id_col, "left")
         .withColumn("keep", F.col("__dup").isNull())
         .drop("__dup")
     )
-    out._vso_caches = [assigned]
-    return out
 
 
 # --- exact-threshold set-similarity join (AllPairs / PPJoin prefix filter) -----
@@ -1073,9 +1030,9 @@ def jaccard_similarity_join(
     # emits per-doc np.unique hashes, and the dfreq join is lossless),
     # so the verify sets are array_sort(transform(__ts, g)) — a
     # projection of the cache, not a re-aggregation. cand/sets must
-    # outlive the call (the returned result is lazy and reads both), so
-    # they are attached as release handles for
-    # dedup.release_caches(result). At lake scale the persisted frames
+    # outlive the call (the returned result is lazy and reads both);
+    # the session-wide release_caches frees them once the result is
+    # consumed. At lake scale the persisted frames
     # are materialized tables, not caches.
     toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -1139,7 +1096,7 @@ def jaccard_similarity_join(
     sb = sets.select(F.col(id_col).alias("id_b"), F.col("__s").alias("__sb"))
     inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
     union = F.size(F.array_union("__sa", "__sb")).cast("double")
-    out = (
+    return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
         .select(
@@ -1149,8 +1106,6 @@ def jaccard_similarity_join(
         )
         .where(F.col("jaccard") >= threshold)
     )
-    out._vso_caches = [cand, sets, per_doc]
-    return out
 
 
 def winnow_anchor_rows(
@@ -1213,8 +1168,7 @@ def dup_span_coverage_frame(
     The anchor frame ``sel`` has THREE consumers (shared-anchor groupBy,
     the matched join-back, and the per-doc selected count) — it is
     persisted so the winnow Arrow kernel runs ONCE per document, not 3×
-    (SCALING.md's prescribed fix; handle attached as ``_vso_caches`` for
-    the repo's unpersist convention)."""
+    (SCALING.md's prescribed fix)."""
     sel = winnow_anchor_rows(d, id_col, text_col, n, w).persist()
     shared = (
         sel.groupBy("gram")
@@ -1251,7 +1205,7 @@ def dup_span_coverage_frame(
         id_col, F.length(F.trim(F.col(text_col))).alias("len_t")
     )
     cov = F.coalesce(F.col("covered_chars"), F.lit(0).cast("long"))
-    out = (
+    return (
         base.join(nsel, id_col)
         .join(percov, id_col, "left")
         .select(
@@ -1267,8 +1221,6 @@ def dup_span_coverage_frame(
             .alias("dup_span_fraction"),
         )
     )
-    out._vso_caches = [sel]
-    return out
 
 
 def keep_best_duplicate_groups(

@@ -405,9 +405,8 @@ def pagerank(
     numpy-vs-distributed equality is pytest-pinned). Pass
     ``driver_node_limit=0`` to force the distributed loop.
 
-    Returns (id_col, rank). In the distributed path the persisted
-    transition frame is attached as ``out._vso_caches`` for callers to
-    release (the jaccard_similarity_join convention)."""
+    Returns (id_col, rank). In the distributed path the transition frame
+    stays persisted until the session-wide ``release_caches``."""
     n = vertices.count()
     base = (1.0 - damping) / n
     if 0 < n <= driver_node_limit and edges.count() <= driver_edge_limit:
@@ -440,12 +439,10 @@ def pagerank(
         for _ in range(iterations):
             contrib = np.bincount(dd, weights=r[ss] * p, minlength=n)
             r = base + damping * contrib
-        out = vertices.sparkSession.createDataFrame(
+        return vertices.sparkSession.createDataFrame(
             [(node, float(r[i])) for node, i in idx.items()],
             schema=vertices.select(id_col).schema.add("rank", "double"),
         )
-        out._vso_caches = []
-        return out
 
     w_d = F.col(weight).cast("double")
     sym = edges.select(
@@ -481,7 +478,6 @@ def pagerank(
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0:
             ranks = ranks.localCheckpoint(eager=True)
-    ranks._vso_caches = [trans]
     return ranks
 
 

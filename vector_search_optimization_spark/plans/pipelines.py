@@ -212,11 +212,6 @@ def cluster_label_pipeline(
             "left",
         )
     )
-    # release handles (r12 leak fix): the assignment persist feeds the
-    # eager sampling collect AND the lazy labeled/audit frames — callers
-    # release it via dedup.release_caches(result) when done
-    labeled._vso_caches = [assigned]
-    audit._vso_caches = [assigned]
     return {
         "labeled": labeled,
         "labels": labels,

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -56,3 +56,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def release_caches(df: DataFrame) -> None:
+    """Free everything persisted in ``df``'s session.
+
+    Queries and operators persist intermediates freely and never
+    unpersist what their lazy result still reads; this one call frees
+    them all. It clears the CacheManager, then unpersists every
+    persistent RDD still registered (``localCheckpoint`` blocks, which
+    the CacheManager does not track). Call it only between queries,
+    once the result has been consumed (written / collected): it also
+    frees whatever any other frame of the session had persisted."""
+    spark = df.sparkSession
+    spark.catalog.clearCache()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    # iterating a Py4J map costs ~10 ms even when it is empty, the usual
+    # case once clearCache has run
+    if not rdds.isEmpty():
+        for rdd in rdds.values():
+            rdd.unpersist(True)
