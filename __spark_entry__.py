@@ -3206,7 +3206,7 @@ def m9_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     comps, offs = _m9_basis(X)
     p3 = F.array(
         *[
-            V.dot("embedding", F.array(*[F.lit(float(c)) for c in comps[i]]))
+            V.dot("embedding", V.vector_lit(comps[i]))
             - F.lit(offs[i])
             for i in range(_M9_DIM)
         ]
@@ -3392,7 +3392,7 @@ def m10_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     e2 = e.select(
         *[
             (
-                V.dot("embedding", F.array(*[F.lit(float(c)) for c in comps[i]]))
+                V.dot("embedding", V.vector_lit(comps[i]))
                 - F.lit(offs[i])
             ).alias(f"p{i}")
             for i in range(_M9_DIM)
@@ -4831,10 +4831,13 @@ FROM documents GROUP BY 1
 # ---------------------------------------------------------------------------
 
 def _roundtrip_path(sf_dir: str, leaf: str) -> str:
-    """Per-sf scratch path so sf0.001 parity runs and sf0.01 driver runs
-    can't clobber each other's files."""
+    """Per-sf scratch path under the temp dir (TMPDIR) so sf0.001 parity
+    runs and sf0.01 driver runs, and runs with separate temp dirs, can't
+    clobber each other's files."""
+    import tempfile
+
     tag = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join("/tmp/spark_graft_roundtrip", tag)
+    path = os.path.join(tempfile.gettempdir(), "spark_graft_roundtrip", tag)
     os.makedirs(path, exist_ok=True)
     return os.path.join(path, leaf)
 
@@ -4950,7 +4953,7 @@ def f5_manhattan(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle before the top-k sort."""
     e = load_table(spark, sf_dir, "embeddings")
     dim = len(e.select("embedding").first()[0])
-    ref = F.array(*[F.lit(float(x)) for x in _f5_ref_vector(dim)])
+    ref = V.vector_lit(_f5_ref_vector(dim))
     return (
         e.select(
             "vec_id",
@@ -5961,7 +5964,7 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     deq = ann.quantize_int8(e).withColumn("deq", ann.dequantize_int8())
     qvec = e.orderBy("vec_id").select("embedding").first()[0]
-    qlit = F.array(*[F.lit(float(x)) for x in qvec])
+    qlit = V.vector_lit(qvec)
     return (
         deq.select(
             "vec_id",
@@ -6323,7 +6326,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     qvec = e.orderBy("vec_id").select("embedding").first()[0]
-    qlit = F.array(*[F.lit(float(x)) for x in qvec])
+    qlit = V.vector_lit(qvec)
     vec_scored = base.select(
         "doc_id",
         F.round(V.cosine_similarity("embedding", qlit), 6).alias("vec_score"),
@@ -17679,7 +17682,7 @@ def emb_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     def project(col):
         ys = []
         for row in signs:
-            lit = F.array(*[F.lit(float(s)) for s in row])
+            lit = V.vector_lit(row)
             ys.append(
                 F.aggregate(
                     F.zip_with(col, lit, lambda x, s: x.cast("double") * s),

@@ -146,6 +146,127 @@ def test_ivf_index_lifecycle_and_nprobe_recall_curve(spark, emb, tmp_path):
     assert recalls[-1] == 1.0  # all cells probed = exact
 
 
+def _jobs_in_group(spark, group: str, build) -> tuple:
+    """(Spark job ids ``build()`` fires under its own job group, its
+    result); the listener bus is drained first, so no job is missed."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_ivf_probe_build_fires_no_spark_job(spark, emb, tmp_path):
+    """Opening the index and building a probe runs no Spark job: the
+    corpus schema comes from a parquet footer, the centroids are read on
+    the driver, the query is one literal. Schemas and top-k rows equal a
+    probe over frames opened with plain spark.read.parquet."""
+    cents = ann.train_ivf_centroids(emb, num_cells=8, seed=42)
+    path = str(tmp_path / "ivf_index")
+    ann.write_ivf_index(emb, cents, path)
+    q = emb.orderBy("vec_id").first().embedding
+
+    def build():
+        indexed, loaded_cents = ann.load_ivf_index(spark, path)
+        probe = ann.ivf_topk(indexed, loaded_cents, q, k=10, nprobe=4)
+        return indexed, loaded_cents, probe
+
+    jobs, (indexed, loaded_cents, probe) = _jobs_in_group(
+        spark, "ivf-probe-build", build
+    )
+    assert jobs == []
+
+    # the tracker does see schema inference: plain reads fire jobs
+    plain_jobs, (plain_idx, plain_cents) = _jobs_in_group(
+        spark,
+        "ivf-plain-read",
+        lambda: (
+            spark.read.parquet(f"{path}/corpus"),
+            spark.read.parquet(f"{path}/centroids"),
+        ),
+    )
+    assert len(plain_jobs) >= 2
+
+    assert indexed.schema == plain_idx.schema
+    assert loaded_cents.schema == plain_cents.schema
+    want = ann.ivf_topk(plain_idx, plain_cents, q, k=10, nprobe=4).collect()
+    assert len(want) == 10
+    assert probe.collect() == want
+
+
+def test_load_ivf_index_without_spark_footer_falls_back(spark, tmp_path):
+    """An index written by another engine (pyarrow: no Spark schema
+    record in the footer) with an extra column opens with Spark's own
+    inference: same schema and rows as spark.read.parquet."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.RandomState(7)
+    path = tmp_path / "ivf_arrow"
+    for cell in range(2):
+        d = path / "corpus" / f"cell={cell}"
+        d.mkdir(parents=True)
+        pq.write_table(
+            pa.table({
+                "vec_id": pa.array(np.arange(cell * 10, cell * 10 + 10), pa.int64()),
+                "embedding": pa.array(
+                    list(rng.rand(10, 4).astype(np.float32)), pa.list_(pa.float32())
+                ),
+                "source": pa.array([f"s{i}" for i in range(10)]),
+            }),
+            d / "part-0.parquet",
+        )
+    (path / "centroids").mkdir()
+    pq.write_table(
+        pa.table({
+            "cell": pa.array([0, 1], pa.int32()),
+            "centroid": pa.array(
+                list(rng.rand(2, 4).astype(np.float32)), pa.list_(pa.float32())
+            ),
+        }),
+        path / "centroids" / "part-0.parquet",
+    )
+    for f in path.glob("**/*.parquet"):
+        assert ann._SPARK_ROW_METADATA not in (pq.read_metadata(f).metadata or {})
+
+    indexed, cents = ann.load_ivf_index(spark, str(path))
+    plain = spark.read.parquet(str(path / "corpus"))
+    plain_cents = spark.read.parquet(str(path / "centroids"))
+    assert "source" in indexed.columns
+    assert indexed.schema == plain.schema
+    assert cents.schema == plain_cents.schema
+    assert sorted(indexed.collect()) == sorted(plain.collect())
+    assert sorted(cents.collect()) == sorted(plain_cents.collect())
+
+
+def test_vector_lit_bit_identical_to_per_element_lits(spark):
+    """V.vector_lit (one SQL array literal) carries exactly the doubles
+    the per-element F.lit form does, non-finite and extreme values too."""
+    import struct
+
+    from vector_search_optimization_spark.functions import vector as V
+
+    vals = [
+        float("nan"), float("inf"), float("-inf"), -0.0, 0.0,
+        5e-324, 1.7976931348623157e308, -1.7976931348623157e308,
+        0.1, -1 / 3, 1e-5, 2.5e16, np.float32(0.1), np.float64(-7.25), 3,
+    ]
+    df = spark.range(1).select(
+        V.vector_lit(vals).alias("one"),
+        F.array(*[F.lit(float(x)) for x in vals]).alias("per_elem"),
+    )
+    assert dict(df.dtypes) == {"one": "array<double>", "per_elem": "array<double>"}
+    row = df.first()
+
+    def bits(xs):
+        return struct.pack(f"<{len(xs)}d", *map(float, xs))
+
+    assert bits(row.one) == bits(row.per_elem) == bits(vals)
+
+
 def test_ivf_append_is_incremental(spark, emb, tmp_path):
     """append_to_ivf_index adds a batch into the partitioned corpus
     without touching existing files: every pre-append file survives

@@ -288,3 +288,16 @@ def test_read_centroids_csv_rejects_wrong_header(spark, tmp_path):
     bad.write_text('centroid,cluster_label,etiqueta\n"[1.0, 2.0]",0,x\n')
     with _pytest.raises(ValueError, match="header"):
         read_centroids_csv(spark, str(bad))
+
+
+def test_roundtrip_path_follows_the_temp_dir(monkeypatch, tmp_path):
+    """The s*_roundtrip scratch files live under the temp dir (TMPDIR),
+    so two runs with separate temp dirs never share files."""
+    import tempfile
+
+    import __spark_entry__ as m
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    got = m._roundtrip_path("/data/sf0.01/", "csv_embeddings")
+    assert got == str(tmp_path / "spark_graft_roundtrip" / "sf0.01" / "csv_embeddings")
+    assert os.path.isdir(os.path.dirname(got))

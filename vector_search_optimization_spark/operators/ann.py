@@ -18,13 +18,20 @@ Scale notes: the corpus table never shuffles for brute force (map-side
 distance + partial top-k, AQE merges); IVF turns a full scan into a
 partition-pruned scan when the corpus is *written* partitioned by cell id
 (df.write.partitionBy("cell")), which is the intended layout at 100 TB.
+A probe over an index opened with ``load_ivf_index`` builds without any
+Spark job (footer-read corpus schema, driver-local centroids, one-literal
+query vector): its only Spark job is its collect.
 """
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 from typing import Sequence
 
 import numpy as np
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -36,7 +43,7 @@ _SIMS = ("cosine", "dot")
 
 
 def _score(vector_col: str, query: Sequence[float], sim: str) -> F.Column:
-    q = F.array(*[F.lit(float(x)) for x in query])
+    q = V.vector_lit(query)
     if sim == "cosine":
         return V.cosine_similarity(F.col(vector_col), q)
     if sim == "dot":
@@ -126,8 +133,8 @@ def matryoshka_topk(
     rows total. Both stage scores are rounded to 6dp BEFORE ordering
     with an id tie-break, so the shortlist boundary is deterministic and
     engine-independent (the oracle-parity rounding rule)."""
-    qpre = F.array(*[F.lit(float(x)) for x in query[:prefix_dim]])
-    qfull = F.array(*[F.lit(float(x)) for x in query])
+    qpre = V.vector_lit(query[:prefix_dim])
+    qfull = V.vector_lit(query)
     pre = F.round(
         V.cosine_similarity(F.slice(vector_col, 1, prefix_dim), qpre), 6
     )
@@ -513,7 +520,7 @@ def append_to_ivf_index(
     At 100 TB this is the nightly ingest job; periodic re-train +
     full write_ivf_index handles quantizer drift."""
     spark = df_new.sparkSession
-    centroids = spark.read.parquet(f"{path}/centroids")
+    centroids = _read_centroids(spark, path)
     assigned = assign_ivf_cells(df_new, centroids, vector_col)
     assigned.write.mode("append").partitionBy("cell").parquet(f"{path}/corpus")
 
@@ -541,13 +548,11 @@ def compact_ivf_cells(
     swap is per-file, not transactional, so a probe racing a compaction
     can see a cell mid-swap; at lake scale the same rewrite goes through
     the table format's commit protocol instead."""
-    import glob
-    import os
     import shutil
 
     compacted: list[int] = []
     for cell_dir in sorted(glob.glob(f"{path}/corpus/cell=*")):
-        files = glob.glob(f"{cell_dir}/*.parquet")
+        files = sorted(glob.glob(f"{cell_dir}/*.parquet"))
         if len(files) <= max_files_per_cell:
             continue
         cell = int(os.path.basename(cell_dir).split("=", 1)[1])
@@ -560,7 +565,7 @@ def compact_ivf_cells(
         # vec_id is sound only under the appended-at-most-once ingest
         # invariant (append_to_ivf_index) — crash duplicates are
         # bit-identical, so any pick is the same row.
-        spark.read.parquet(cell_dir).dropDuplicates([id_col]).coalesce(
+        _read_parquet(spark, cell_dir, files).dropDuplicates([id_col]).coalesce(
             1
         ).write.mode("overwrite").parquet(tmp)
         staged = [
@@ -612,11 +617,57 @@ def recall_at_k(
     return hit / n_exact
 
 
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _read_parquet(
+    spark,
+    path: str,
+    files: Sequence[str],
+    partition_fields: Sequence[T.StructField] = (),
+) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job.
+
+    Spark infers a parquet schema with a job that opens one data file's
+    footer and decodes the schema record Spark's writer left under
+    ``org.apache.spark.sql.parquet.row.metadata``. Reading that record
+    from the first of ``files`` that carries it (pyarrow, footer only, on
+    the driver) and passing it as the read schema gives the same frame
+    with no job; ``partition_fields`` are appended for the ``key=value``
+    directories under ``path``. Files without the record (written by
+    another engine) fall back to Spark's own inference."""
+    for f in files:
+        record = (pq.read_metadata(f).metadata or {}).get(_SPARK_ROW_METADATA)
+        if record is not None:
+            schema = T.StructType.fromJson(json.loads(record))
+            return spark.read.schema(
+                T.StructType(schema.fields + list(partition_fields))
+            ).parquet(path)
+    return spark.read.parquet(path)
+
+
+def _read_centroids(spark, path: str) -> DataFrame:
+    """The index's centroid table as a driver-local frame (a
+    LocalRelation: collecting it runs no Spark job). Rows come in cell
+    order, whatever the file layout."""
+    return spark.createDataFrame(pq.read_table(f"{path}/centroids").sort_by("cell"))
+
+
 def load_ivf_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """Open a written IVF index: (cell-partitioned corpus, centroids)."""
+    """Open a written IVF index: (cell-partitioned corpus, centroids).
+
+    Fires no Spark job: the corpus schema comes from a parquet footer
+    (_read_parquet) and the centroids are read on the driver
+    (_read_centroids), so a probe's only Spark job is its collect. Like
+    compact_ivf_cells, this assumes the index is on the local filesystem."""
     return (
-        spark.read.parquet(f"{path}/corpus"),
-        spark.read.parquet(f"{path}/centroids"),
+        _read_parquet(
+            spark,
+            f"{path}/corpus",
+            sorted(glob.glob(f"{path}/corpus/cell=*/*.parquet")),
+            [T.StructField("cell", T.IntegerType())],
+        ),
+        _read_centroids(spark, path),
     )
 
 
@@ -636,6 +687,10 @@ def ivf_topk(
     cell filter is an IN-list literal → partition pruning when the corpus
     is stored partitionBy("cell"); otherwise it's still a pushed-down scan
     filter that skips (1 - nprobe/num_cells) of the data.
+
+    The nprobe pick collects ``centroids`` and the query becomes one plan
+    literal (V.vector_lit). Over load_ivf_index's frames the build fires
+    no Spark job, so the probe's only job is the caller's collect.
     """
     cents = centroids.collect()
     q = np.array(query, dtype=np.float64)
@@ -839,7 +894,7 @@ def pq_adc_score(
     for j in range(m):
         qs = q[j * dsub : (j + 1) * dsub]
         lut = ((books[j] - qs[None, :]) ** 2).sum(axis=1)
-        lut_lit = F.array(*[F.lit(float(v)) for v in lut])
+        lut_lit = V.vector_lit(lut)
         total = total + F.element_at(lut_lit, F.col(codes_col)[j] + 1)
     return total
 
@@ -870,9 +925,7 @@ def pq_refined_topk(
         .orderBy("adc_dist", id_col)
         .limit(rerank)
     )
-    qcol = F.array(*[F.lit(float(x)) for x in query])
-    from ..functions import vector as V
-
+    qcol = V.vector_lit(query)
     return (
         cand.withColumn("exact_dist", V.sq_euclidean(vector_col, qcol))
         .orderBy("exact_dist", id_col)
@@ -963,7 +1016,7 @@ def ivfpq_refined_topk(
         ),
     )
     ids = [r[0] for r in cand_rows]
-    qcol = F.array(*[F.lit(float(x)) for x in query])
+    qcol = V.vector_lit(query)
     return (
         vectors_df.where(F.col(id_col).isin(ids))
         .select(id_col, V.sq_euclidean(vector_col, qcol).alias("exact_dist"))
@@ -978,7 +1031,7 @@ def _rp_bucket_expr(vector_col: str, planes: np.ndarray) -> F.Column:
     """Sign-pattern bucket id over plan-literal hyperplanes (a long)."""
     bucket = F.lit(0).cast("long")
     for i in range(len(planes)):
-        plane = F.array(*[F.lit(float(x)) for x in planes[i]])
+        plane = V.vector_lit(planes[i])
         bit = (V.dot(F.col(vector_col), plane) > 0).cast("long")
         bucket = bucket.bitwiseOR(F.shiftleft(bit, i))
     return bucket

@@ -127,7 +127,7 @@ def eps_neighbor_pairs(
     lines = _unit_lines(dim, num_lines, seed)
     base = df.select(F.col(id_col), F.col(vector_col))
     for l in range(num_lines):
-        line = F.array(*[F.lit(float(x)) for x in lines[l]])
+        line = V.vector_lit(lines[l])
         base = base.withColumn(
             f"__c{l}",
             F.floor(V.dot(F.col(vector_col), line) / F.lit(float(eps))).cast("long"),

@@ -249,7 +249,7 @@ class SearchIndex:
         kw = bm25_keyword_scores(
             self.docs, terms, self.text_col, self.id_col
         ).where(F.col("kw_score") > 0)
-        qlit = F.array(*[F.lit(float(x)) for x in query])
+        qlit = V.vector_lit(query)
         vec = self.docs.select(
             self.id_col,
             F.round(
@@ -361,7 +361,7 @@ def mmr_rerank(
     ).select(
         "rank",
         F.col(id_col),
-        F.round(V.cosine_similarity(vector_col, F.array([F.lit(float(x)) for x in query])), 6).alias("sim_q"),
+        F.round(V.cosine_similarity(vector_col, V.vector_lit(query)), 6).alias("sim_q"),
         F.col(vector_col).alias("__v"),
     )
     # max cosine to any HIGHER-ranked pick, recomputed engine-side: the
