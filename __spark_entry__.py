@@ -3206,8 +3206,7 @@ def m9_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     comps, offs = _m9_basis(X)
     p3 = F.array(
         *[
-            V.dot("embedding", V.vector_lit(comps[i]))
-            - F.lit(offs[i])
+            V.dot("embedding", comps[i]) - F.lit(offs[i])
             for i in range(_M9_DIM)
         ]
     )
@@ -3391,10 +3390,7 @@ def m10_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     comps, offs = _m9_basis(X)
     e2 = e.select(
         *[
-            (
-                V.dot("embedding", V.vector_lit(comps[i]))
-                - F.lit(offs[i])
-            ).alias(f"p{i}")
+            (V.dot("embedding", comps[i]) - F.lit(offs[i])).alias(f"p{i}")
             for i in range(_M9_DIM)
         ],
         V.dot("embedding", "embedding").alias("sq"),
@@ -4953,7 +4949,7 @@ def f5_manhattan(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle before the top-k sort."""
     e = load_table(spark, sf_dir, "embeddings")
     dim = len(e.select("embedding").first()[0])
-    ref = V.vector_lit(_f5_ref_vector(dim))
+    ref = _f5_ref_vector(dim)
     return (
         e.select(
             "vec_id",
@@ -5964,11 +5960,10 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     deq = ann.quantize_int8(e).withColumn("deq", ann.dequantize_int8())
     qvec = e.orderBy("vec_id").select("embedding").first()[0]
-    qlit = V.vector_lit(qvec)
     return (
         deq.select(
             "vec_id",
-            F.round(V.cosine_similarity(F.col("deq"), qlit), 6).alias("score"),
+            F.round(V.cosine_similarity("deq", qvec), 6).alias("score"),
         )
         .orderBy(F.desc("score"), "vec_id")
         .limit(20)
@@ -6326,10 +6321,9 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     qvec = e.orderBy("vec_id").select("embedding").first()[0]
-    qlit = V.vector_lit(qvec)
     vec_scored = base.select(
         "doc_id",
-        F.round(V.cosine_similarity("embedding", qlit), 6).alias("vec_score"),
+        F.round(V.cosine_similarity("embedding", qvec), 6).alias("vec_score"),
     ).where(F.col("vec_score").isNotNull())
     vec_top = R.top_ranked(
         vec_scored, "vec_score", "doc_id", _HYBRID_TOP, "rank_vec"
@@ -11472,24 +11466,14 @@ def label_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     gtot = VA.group_vector_mean(
         e.withColumn("g", F.lit(1)), "g", "embedding"
     ).select(F.col("centroid").alias("gc"))
-    dot = F.aggregate(
-        F.zip_with("centroid", "gc", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
     return (
         cents.join(F.broadcast(gtot))
         .select(
             "label",
-            F.round(nrm(F.col("centroid")), 6).alias("centroid_norm"),
-            F.round(
-                dot / (nrm(F.col("centroid")) * nrm(F.col("gc"))), 6
-            ).alias("cos_to_global"),
+            F.round(V.l2_norm("centroid"), 6).alias("centroid_norm"),
+            F.round(V.cosine_similarity("centroid", "gc"), 6).alias(
+                "cos_to_global"
+            ),
         )
         .orderBy("label")
     )
@@ -17679,22 +17663,9 @@ def emb_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     signs = _jl_signs()
     emb = load_table(spark, sf_dir, "embeddings")
 
-    def project(col):
-        ys = []
-        for row in signs:
-            lit = V.vector_lit(row)
-            ys.append(
-                F.aggregate(
-                    F.zip_with(col, lit, lambda x, s: x.cast("double") * s),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            )
-        return F.array(*ys)
-
     base = emb.select(
         "vec_id", "label", F.col("embedding").alias("v"),
-        project(F.col("embedding")).alias("y"),
+        F.array(*[V.dot("embedding", row) for row in signs]).alias("y"),
     )
     a = base.select(
         F.col("vec_id").alias("i"), "label",
@@ -17705,23 +17676,8 @@ def emb_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("vb"), F.col("y").alias("yb"),
     )
     pairs = a.join(b, "i")
-    exact = F.aggregate(
-        F.zip_with(
-            F.col("va"),
-            F.col("vb"),
-            lambda x, z: (x.cast("double") - z.cast("double"))
-            * (x.cast("double") - z.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    proj = F.aggregate(
-        F.zip_with(
-            F.col("ya"), F.col("yb"), lambda x, z: (x - z) * (x - z)
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    exact = V.sq_euclidean("va", "vb")
+    proj = V.sq_euclidean("ya", "yb")
     # E[|R(u-v)|²] = k·|u-v|² for ±1 entries (k = 16 rows), so the
     # unbiased distortion ratio is proj/(16·exact)
     ratio = (proj / F.lit(16.0)) / exact

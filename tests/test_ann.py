@@ -197,6 +197,59 @@ def test_ivf_probe_build_fires_no_spark_job(spark, emb, tmp_path):
     assert probe.collect() == want
 
 
+def test_probe_score_builds_in_few_py4j_calls(spark):
+    """The probe score is one SQL expression: building it for a 3,072-dim
+    query is a handful of Py4J round trips, not a few per element.
+
+    Counted like perfbench/trace.py's Py4JCounter (a ``send_command``
+    wrapper), but only on this thread: a streaming query left by an
+    earlier test calls back into Python and sends commands of its own."""
+    import gc
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+
+    q = np.random.RandomState(7).standard_normal(3072).tolist()
+    ann._score("embedding", q, "cosine")  # first call loads JVM classes
+    me = threading.get_ident()
+    calls = []
+    original = GatewayClient.send_command  # the Py4J client classes share it
+
+    def send_command(self_, *args, **kwargs):
+        if threading.get_ident() == me:
+            calls.append(args[0])
+        return original(self_, *args, **kwargs)
+
+    for sim in ("cosine", "dot"):
+        gc.collect()
+        gc.disable()  # no finalizer of an unrelated Java handle in the count
+        GatewayClient.send_command = send_command
+        try:
+            calls.clear()
+            ann._score("embedding", q, sim)
+        finally:
+            GatewayClient.send_command = original
+            gc.enable()
+        assert len(calls) <= 10, (sim, calls)
+
+
+def test_ivf_probe_plan_holds_query_once(spark, emb, tmp_path):
+    """The optimized plan of a cosine probe carries the query literal once
+    (its norm is a driver-folded constant) and two aggregates: the row
+    norm and the dot product."""
+    cents = ann.train_ivf_centroids(emb, num_cells=8, seed=42)
+    path = str(tmp_path / "ivf_index")
+    ann.write_ivf_index(emb, cents, path)
+    indexed, loaded_cents = ann.load_ivf_index(spark, path)
+    # eighths print the same in Python and Java, so the literal's text is known
+    q = [round(x * 8) / 8 for x in emb.orderBy("vec_id").first().embedding]
+    probe = ann.ivf_topk(indexed, loaded_cents, q, k=10, nprobe=4)
+    plan = probe._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("[" + ",".join(map(repr, q)) + "]") == 1
+    assert plan.count("aggregate(") == 2
+    assert len(probe.collect()) == 10
+
+
 def test_load_ivf_index_without_spark_footer_falls_back(spark, tmp_path):
     """An index written by another engine (pyarrow: no Spark schema
     record in the footer) with an extra column opens with Spark's own

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import math
+import struct
 
 import numpy as np
 import pytest
@@ -85,3 +86,197 @@ def test_parse_vector_roundtrip(spark):
 def test_distance_dispatch_rejects_unknown():
     with pytest.raises(ValueError, match="unknown metric"):
         V.distance("a", "b", "chebyshev")
+
+
+# --- one-SQL-expression kernels vs the Column-built formulas ------------
+# The kernels render SQL text; the reference below builds the same math
+# through the Column API (F.col, Python-lambda zip_with/aggregate, one
+# F.lit per element) the way the module did before. Every kernel must
+# match it bit for bit under every operand form.
+
+
+def _ref_d(v):
+    return (F.col(v) if isinstance(v, str) else v).cast("array<double>")
+
+
+def _ref_sum(a, b, term):
+    return F.aggregate(
+        F.zip_with(_ref_d(a), _ref_d(b), term), F.lit(0.0), lambda acc, x: acc + x
+    )
+
+
+def _ref_dot(a, b):
+    return _ref_sum(a, b, lambda x, y: x * y)
+
+
+def _ref_l2_norm(v):
+    return F.sqrt(_ref_dot(v, v))
+
+
+def _ref_l2_normalize(v):
+    norm = _ref_l2_norm(v)
+    return F.when(norm == 0.0, _ref_d(v)).otherwise(
+        F.transform(_ref_d(v), lambda x: x / norm)
+    )
+
+
+def _ref_cosine_similarity(a, b):
+    denom = _ref_l2_norm(a) * _ref_l2_norm(b)
+    return F.when(denom == 0.0, F.lit(None)).otherwise(_ref_dot(a, b) / denom)
+
+
+_REF_BINARY = {
+    "dot": _ref_dot,
+    "euclidean": lambda a, b: F.sqrt(_ref_sum(a, b, lambda x, y: (x - y) * (x - y))),
+    "sq_euclidean": lambda a, b: _ref_sum(a, b, lambda x, y: (x - y) * (x - y)),
+    "cosine_similarity": _ref_cosine_similarity,
+    "cosine_distance": lambda a, b: F.lit(1.0) - _ref_cosine_similarity(a, b),
+    "manhattan": lambda a, b: _ref_sum(a, b, lambda x, y: F.abs(x - y)),
+}
+_REF_METRICS = {
+    "euclidean": "euclidean",
+    "sqeuclidean": "sq_euclidean",
+    "cosine": "cosine_distance",
+    "manhattan": "manhattan",
+}
+_REF_UNARY = {"l2_norm": _ref_l2_norm, "l2_normalize": _ref_l2_normalize}
+
+
+def _ref_parse_vector(s):
+    cleaned = F.regexp_replace(F.col(s), r"[\[\]\s]", "")
+    return F.when(cleaned == "", F.lit(None)).otherwise(
+        F.transform(F.split(cleaned, ","), lambda x: x.cast("float"))
+    )
+
+
+_INF, _NAN = float("inf"), float("nan")
+# zero vector, NaN, +-inf, -0.0, the smallest subnormal, plain values
+_EDGE_ROWS = [
+    ([0.0, 0.0, 0.0], [1.0, 2.0, 3.0]),
+    ([_NAN, 1.0, 2.0], [1.0, 1.0, 1.0]),
+    ([_INF, 1.0, 0.0], [-_INF, 2.0, 1.0]),
+    ([-0.0, -0.0, 1.0], [0.0, -0.0, 2.0]),
+    ([5e-324, 1.0, -2.0], [5e-324, 5e-324, 0.5]),
+    ([1.0, 2.0, 2.0], [0.0, 3.0, 4.0]),
+    ([0.1, -0.7, 1e300], [3.3, 0.25, 1e-300]),
+]
+_EDGE_QUERIES = [
+    [0.0, 0.0, 0.0],
+    [_NAN, 0.5, 1.0],
+    [_INF, 0.0, -1.0],
+    [-0.0, 0.0, -0.0],
+    [5e-324, 5e-324, 5e-324],
+    [0.3, -1.7, 2.9],
+]
+
+
+def _bits(v):
+    """Bit pattern of a result, NaN folded to one token."""
+    if v is None:
+        return None
+    if isinstance(v, list):
+        return [_bits(x) for x in v]
+    return "nan" if math.isnan(v) else struct.pack("<d", v)
+
+
+@pytest.fixture(scope="module")
+def edge_df(spark):
+    rows = [(i, a, b, a, b) for i, (a, b) in enumerate(_EDGE_ROWS)]
+    return spark.createDataFrame(
+        rows,
+        "id int, a array<double>, b array<double>, "
+        "fa array<float>, fb array<float>",
+    )
+
+
+def _assert_same(df, pairs):
+    """Select every (new, reference) column pair once; compare bits."""
+    exprs = []
+    for i, (new, ref) in enumerate(pairs):
+        exprs += [new.alias(f"n{i}"), ref.alias(f"r{i}")]
+    for row in df.select(*exprs).collect():
+        for i in range(len(pairs)):
+            assert _bits(row[f"n{i}"]) == _bits(row[f"r{i}"]), (i, row)
+
+
+def _kernel_pairs(new_operands, ref_operands):
+    """(kernel, reference) column pairs for every kernel on one operand form."""
+    (na, nb), (ra, rb) = new_operands, ref_operands
+    pairs = [(getattr(V, k)(na, nb), ref(ra, rb)) for k, ref in _REF_BINARY.items()]
+    pairs += [
+        (V.distance(na, nb, metric), _REF_BINARY[k](ra, rb))
+        for metric, k in _REF_METRICS.items()
+    ]
+    for k, ref in _REF_UNARY.items():
+        pairs += [(getattr(V, k)(na), ref(ra)), (getattr(V, k)(nb), ref(rb))]
+    return pairs
+
+
+@pytest.mark.parametrize(
+    "names", [("a", "b"), ("fa", "fb"), ("a", "fb")], ids=["double", "float", "mixed"]
+)
+def test_kernels_bit_identical_on_column_names(edge_df, names):
+    _assert_same(edge_df, _kernel_pairs(names, names))
+
+
+def test_kernels_bit_identical_on_dotted_self_join(edge_df):
+    v = edge_df.select("id", F.col("fa").alias("__v"))
+    pairs_df = v.alias("a").crossJoin(v.alias("b"))
+    _assert_same(
+        pairs_df,
+        _kernel_pairs(("a.__v", "b.__v"), (F.col("a.__v"), F.col("b.__v"))),
+    )
+
+
+def test_kernels_bit_identical_on_slices_and_kernel_outputs(edge_df):
+    sl = (F.slice("a", 1, 2), F.slice("fb", 2, 2))
+    _assert_same(edge_df, _kernel_pairs(sl, sl))
+    _assert_same(
+        edge_df,
+        _kernel_pairs(
+            (V.l2_normalize("a"), V.l2_normalize("fb")),
+            (_ref_l2_normalize("a"), _ref_l2_normalize("fb")),
+        )
+        + [
+            (V.l2_norm(V.l2_normalize("a")), _ref_l2_norm(_ref_l2_normalize("a"))),
+            (
+                V.l2_normalize(V.l2_normalize("fa")),
+                _ref_l2_normalize(_ref_l2_normalize("fa")),
+            ),
+        ],
+    )
+
+
+@pytest.mark.parametrize("q", _EDGE_QUERIES, ids=lambda q: repr(q))
+def test_kernels_bit_identical_on_sequences(edge_df, q):
+    """A sequence operand (cosine's norm folded on the driver) equals the
+    reference over the per-element literal, in either argument position."""
+    ref_q = F.array(*[F.lit(float(x)) for x in q])
+    pairs = _kernel_pairs(("a", q), ("a", ref_q))
+    pairs += _kernel_pairs((q, "fb"), (ref_q, "fb"))
+    _assert_same(edge_df, pairs)
+
+
+def test_parse_vector_bit_identical(spark):
+    texts = ["[0.1, -2.5, 3]", "[]", "[1.5]", " [ 1e-45 ,\t-0.0 ] ", "[NaN, 7]", None]
+    df = spark.createDataFrame([(t,) for t in texts], "s string")
+    _assert_same(df, [(V.parse_vector("s"), _ref_parse_vector("s"))])
+
+
+@pytest.mark.parametrize("dim", [64, 3072])
+def test_folded_query_norm_matches_plan_norm(spark, dim):
+    """Cosine against a sequence (query norm folded on the driver) equals
+    cosine against the literal Column (norm computed in the plan), bit for
+    bit, for 200 seeded random vectors."""
+    rng = np.random.RandomState(dim)
+    rows = [(i, rng.standard_normal(dim).tolist()) for i in range(200)]
+    df = spark.createDataFrame(rows, "id int, v array<double>")
+    for q in (rng.standard_normal(dim), rng.standard_normal(dim).astype(np.float32)):
+        lit = V.vector_lit(q)
+        _assert_same(
+            df,
+            [
+                (V.cosine_similarity("v", q), V.cosine_similarity("v", lit)),
+                (V.cosine_distance(q, "v"), V.cosine_distance(lit, "v")),
+            ],
+        )

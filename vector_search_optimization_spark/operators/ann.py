@@ -43,11 +43,10 @@ _SIMS = ("cosine", "dot")
 
 
 def _score(vector_col: str, query: Sequence[float], sim: str) -> F.Column:
-    q = V.vector_lit(query)
     if sim == "cosine":
-        return V.cosine_similarity(F.col(vector_col), q)
+        return V.cosine_similarity(vector_col, query)
     if sim == "dot":
-        return V.dot(F.col(vector_col), q)
+        return V.dot(vector_col, query)
     raise ValueError(f"unknown similarity {sim!r}; one of {_SIMS}")
 
 
@@ -133,10 +132,11 @@ def matryoshka_topk(
     rows total. Both stage scores are rounded to 6dp BEFORE ordering
     with an id tie-break, so the shortlist boundary is deterministic and
     engine-independent (the oracle-parity rounding rule)."""
-    qpre = V.vector_lit(query[:prefix_dim])
-    qfull = V.vector_lit(query)
     pre = F.round(
-        V.cosine_similarity(F.slice(vector_col, 1, prefix_dim), qpre), 6
+        V.cosine_similarity(
+            F.slice(vector_col, 1, prefix_dim), query[:prefix_dim]
+        ),
+        6,
     )
     cand = (
         df.select(F.col(id_col), F.col(vector_col), pre.alias("pre_score"))
@@ -145,7 +145,7 @@ def matryoshka_topk(
     )
     return (
         cand.withColumn(
-            "score", F.round(V.cosine_similarity(vector_col, qfull), 6)
+            "score", F.round(V.cosine_similarity(vector_col, query), 6)
         )
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)
@@ -688,9 +688,11 @@ def ivf_topk(
     is stored partitionBy("cell"); otherwise it's still a pushed-down scan
     filter that skips (1 - nprobe/num_cells) of the data.
 
-    The nprobe pick collects ``centroids`` and the query becomes one plan
-    literal (V.vector_lit). Over load_ivf_index's frames the build fires
-    no Spark job, so the probe's only job is the caller's collect.
+    The nprobe pick collects ``centroids``; the score is one SQL
+    expression holding the query as one plan literal and its norm as a
+    driver-folded constant (V.cosine_similarity with a sequence operand).
+    Over load_ivf_index's frames the build fires no Spark job, so the
+    probe's only job is the caller's collect.
     """
     cents = centroids.collect()
     q = np.array(query, dtype=np.float64)
@@ -925,9 +927,8 @@ def pq_refined_topk(
         .orderBy("adc_dist", id_col)
         .limit(rerank)
     )
-    qcol = V.vector_lit(query)
     return (
-        cand.withColumn("exact_dist", V.sq_euclidean(vector_col, qcol))
+        cand.withColumn("exact_dist", V.sq_euclidean(vector_col, query))
         .orderBy("exact_dist", id_col)
         .limit(k)
         .select(id_col, "exact_dist", "adc_dist")
@@ -1016,10 +1017,9 @@ def ivfpq_refined_topk(
         ),
     )
     ids = [r[0] for r in cand_rows]
-    qcol = V.vector_lit(query)
     return (
         vectors_df.where(F.col(id_col).isin(ids))
-        .select(id_col, V.sq_euclidean(vector_col, qcol).alias("exact_dist"))
+        .select(id_col, V.sq_euclidean(vector_col, query).alias("exact_dist"))
         .join(F.broadcast(cand_df), id_col)
         .orderBy("exact_dist", id_col)
         .limit(k)
@@ -1031,8 +1031,7 @@ def _rp_bucket_expr(vector_col: str, planes: np.ndarray) -> F.Column:
     """Sign-pattern bucket id over plan-literal hyperplanes (a long)."""
     bucket = F.lit(0).cast("long")
     for i in range(len(planes)):
-        plane = V.vector_lit(planes[i])
-        bit = (V.dot(F.col(vector_col), plane) > 0).cast("long")
+        bit = (V.dot(vector_col, planes[i]) > 0).cast("long")
         bucket = bucket.bitwiseOR(F.shiftleft(bit, i))
     return bucket
 

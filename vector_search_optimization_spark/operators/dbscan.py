@@ -127,10 +127,9 @@ def eps_neighbor_pairs(
     lines = _unit_lines(dim, num_lines, seed)
     base = df.select(F.col(id_col), F.col(vector_col))
     for l in range(num_lines):
-        line = V.vector_lit(lines[l])
         base = base.withColumn(
             f"__c{l}",
-            F.floor(V.dot(F.col(vector_col), line) / F.lit(float(eps))).cast("long"),
+            F.floor(V.dot(vector_col, lines[l]) / F.lit(float(eps))).cast("long"),
         )
     probes = F.array(
         *[

@@ -146,7 +146,7 @@ def nearest_centroid_crossjoin(
                 F.col(label_col).alias("__cl"), F.col(centroid_col).alias("__cv")
             )
         )
-    ).withColumn("__dist", V.distance(F.col(vector_col), F.col("__cv"), rank_metric))
+    ).withColumn("__dist", V.distance(vector_col, "__cv", rank_metric))
 
     # group on a synthetic row id, not the payload columns: duplicates
     # survive and the wide vector column never becomes a grouping key

@@ -249,11 +249,10 @@ class SearchIndex:
         kw = bm25_keyword_scores(
             self.docs, terms, self.text_col, self.id_col
         ).where(F.col("kw_score") > 0)
-        qlit = V.vector_lit(query)
         vec = self.docs.select(
             self.id_col,
             F.round(
-                V.cosine_similarity(self.vector_col, qlit), 6
+                V.cosine_similarity(self.vector_col, query), 6
             ).alias("vec_score"),
         ).where(F.col("vec_score").isNotNull())
         fused = rrf_fuse(
@@ -361,7 +360,7 @@ def mmr_rerank(
     ).select(
         "rank",
         F.col(id_col),
-        F.round(V.cosine_similarity(vector_col, V.vector_lit(query)), 6).alias("sim_q"),
+        F.round(V.cosine_similarity(vector_col, query), 6).alias("sim_q"),
         F.col(vector_col).alias("__v"),
     )
     # max cosine to any HIGHER-ranked pick, recomputed engine-side: the
@@ -371,7 +370,7 @@ def mmr_rerank(
         F.col("b.rank") < F.col("a.rank"),
     ).groupBy("a.rank").agg(
         F.max(
-            F.round(V.cosine_similarity("a.__v", F.col("b.__v")), 6)
+            F.round(V.cosine_similarity("a.__v", "b.__v"), 6)
         ).alias("max_prior_sim")
     )
     lam_l = F.lit(lam)
