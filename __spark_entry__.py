@@ -3871,7 +3871,8 @@ def ep3_lloyd_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     far = ranked.where(F.col("__rf") <= k).select(
         "cluster", "id", "content", (F.col("__rf") * 2).alias("ord")
     )
-    corpora = (
+    # k cluster rows, sorted on the driver (the fake LLM's call order)
+    corpora = sorted(
         near.unionByName(far)
         .groupBy("cluster")
         .agg(
@@ -3889,8 +3890,8 @@ def ep3_lloyd_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 budget_chars,
             ).alias("corpus")
         )
-        .orderBy("cluster")
-        .collect()
+        .collect(),
+        key=lambda r: r["cluster"],
     )
     llm = FakeChatModel()
     stats = [

@@ -5,6 +5,8 @@ tail, 12 latent clusters at dim 8, category/content_type distributions
 shaped like the thesis corpus (FIXTURES.md F1).
 F2 centroids: the 12 true generator centers, both parquet-shaped (array)
 and CSV-shaped ("[f, f, ...]" strings).
+
+Also ``jobs_in_group``, the Spark-job counter the job-count pins share.
 """
 
 from __future__ import annotations
@@ -69,3 +71,16 @@ def make_chunks_and_centroids(spark, seed: int = 42):
         "cluster_label int, centroid array<float>, etiqueta string",
     )
     return chunks, centroids
+
+
+def jobs_in_group(spark, group: str, build) -> tuple:
+    """(Spark job ids ``build()`` fires under its own job group, its
+    result); the listener bus is drained first, so no job is missed."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group)), out

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import ann
 from vector_search_optimization_spark.sources import load_table
+from tests.fixtures import jobs_in_group
 
 
 @pytest.fixture(scope="module")
@@ -146,19 +147,6 @@ def test_ivf_index_lifecycle_and_nprobe_recall_curve(spark, emb, tmp_path):
     assert recalls[-1] == 1.0  # all cells probed = exact
 
 
-def _jobs_in_group(spark, group: str, build) -> tuple:
-    """(Spark job ids ``build()`` fires under its own job group, its
-    result); the listener bus is drained first, so no job is missed."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = build()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return list(sc.statusTracker().getJobIdsForGroup(group)), out
-
-
 def test_ivf_probe_build_fires_no_spark_job(spark, emb, tmp_path):
     """Opening the index and building a probe runs no Spark job: the
     corpus schema comes from a parquet footer, the centroids are read on
@@ -174,13 +162,13 @@ def test_ivf_probe_build_fires_no_spark_job(spark, emb, tmp_path):
         probe = ann.ivf_topk(indexed, loaded_cents, q, k=10, nprobe=4)
         return indexed, loaded_cents, probe
 
-    jobs, (indexed, loaded_cents, probe) = _jobs_in_group(
+    jobs, (indexed, loaded_cents, probe) = jobs_in_group(
         spark, "ivf-probe-build", build
     )
     assert jobs == []
 
     # the tracker does see schema inference: plain reads fire jobs
-    plain_jobs, (plain_idx, plain_cents) = _jobs_in_group(
+    plain_jobs, (plain_idx, plain_cents) = jobs_in_group(
         spark,
         "ivf-plain-read",
         lambda: (
@@ -666,6 +654,162 @@ def test_compact_ivf_cells_repeated_rounds_unique_names(spark, emb, tmp_path):
     assert rows_after == rows_mid
     for d in glob.glob(f"{path}/corpus/cell=*"):
         assert len(glob.glob(f"{d}/*.parquet")) <= 1
+
+
+def test_compact_ivf_cells_rewrites_fragmented_cells_in_one_write(
+    spark, emb, tmp_path
+):
+    """Compacting four fragmented cells is one Spark write (at most 2
+    jobs under AQE: the shuffle by cell and the write), not a write per
+    cell. The row set is exact, each compacted cell holds one file,
+    compliant cells are byte-untouched, and a stale staging directory
+    left by an interrupted earlier run is overwritten: none of its rows
+    reach the corpus and it is gone afterwards."""
+    import glob
+    import os
+    import shutil
+
+    old = emb.where(F.col("vec_id") % 2 == 0)
+    cents = ann.train_ivf_centroids(old, num_cells=8, seed=42)
+    path = str(tmp_path / "ivf_index")
+    ann.write_ivf_index(old.coalesce(1), cents, path)  # one file per cell
+    # fragment the four fullest cells: three one-file appends into each
+    new = ann.assign_ivf_cells(emb.where(F.col("vec_id") % 2 == 1), cents)
+    sizes = new.groupBy("cell").count().collect()
+    hot = sorted(r.cell for r in sorted(sizes, key=lambda r: -r["count"])[:4])
+    for i in range(3):
+        ann.append_to_ivf_index(
+            new.where(F.col("cell").isin(hot) & (F.col("vec_id") % 3 == i))
+            .drop("cell")
+            .coalesce(1),
+            path,
+        )
+
+    def files_per_cell():
+        return {
+            int(d.rsplit("=", 1)[1]): sorted(glob.glob(f"{d}/*.parquet"))
+            for d in glob.glob(f"{path}/corpus/cell=*")
+        }
+
+    def rows():
+        return sorted(
+            (r.vec_id, r.cell, tuple(r.embedding))
+            for r in spark.read.parquet(f"{path}/corpus").collect()
+        )
+
+    before = files_per_cell()
+    assert sorted(c for c, fs in before.items() if len(fs) > 2) == hot
+    compliant = {
+        f: open(f, "rb").read()
+        for c, fs in before.items()
+        if c not in hot
+        for f in fs
+    }
+    assert compliant
+    rows_before = rows()
+    assert len({r[0] for r in rows_before}) == len(rows_before)
+
+    staging = f"{path}/_compact_staging"
+    cold = min(c for c in before if c not in hot)
+    for c in (hot[0], cold):
+        os.makedirs(f"{staging}/cell={c}")
+        shutil.copy(before[c][0], f"{staging}/cell={c}/part-stale.parquet")
+
+    jobs, compacted = jobs_in_group(
+        spark,
+        "ivf-compact",
+        lambda: ann.compact_ivf_cells(spark, path, max_files_per_cell=2),
+    )
+    assert len(jobs) <= 2
+    assert compacted == hot
+
+    after = files_per_cell()
+    assert set(after) == set(before)
+    for c in hot:
+        assert len(after[c]) == 1
+        assert os.path.basename(after[c][0]).startswith("compacted-0-")
+    for f, data in compliant.items():
+        assert open(f, "rb").read() == data
+    assert {f for c, fs in after.items() if c not in hot for f in fs} == set(
+        compliant
+    )
+    assert rows() == rows_before
+    assert not os.path.exists(staging)
+
+
+def test_ivf_append_fires_one_spark_job(spark, emb, tmp_path):
+    """An append is its write and nothing more: the quantizer is read
+    and sorted on the driver, so the cell assignment adds no job."""
+    old = emb.where(F.col("vec_id") % 2 == 0)
+    cents = ann.train_ivf_centroids(old, num_cells=8, seed=42)
+    path = str(tmp_path / "ivf_index")
+    ann.write_ivf_index(old, cents, path)
+    new = emb.where(F.col("vec_id") % 2 == 1)
+
+    jobs, _ = jobs_in_group(
+        spark, "ivf-append", lambda: ann.append_to_ivf_index(new, path)
+    )
+    assert len(jobs) == 1
+    indexed, _ = ann.load_ivf_index(spark, path)
+    assert sorted(r.vec_id for r in indexed.select("vec_id").collect()) == sorted(
+        r.vec_id for r in emb.select("vec_id").collect()
+    )
+
+
+def test_ivf_empty_append_lands_no_file(spark, emb, tmp_path):
+    """Appending an empty frame writes no file under corpus/ other than
+    the _SUCCESS marker, so an empty micro-batch needs no guard."""
+    import os
+
+    cents = ann.train_ivf_centroids(emb, num_cells=8, seed=42)
+    path = str(tmp_path / "ivf_index")
+    ann.write_ivf_index(emb, cents, path)
+
+    def listing():
+        return {
+            os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+            for d, _, fs in os.walk(f"{path}/corpus")
+            for f in fs
+            if f not in ("_SUCCESS", "._SUCCESS.crc")
+        }
+
+    before = listing()
+    ann.append_to_ivf_index(emb.where(F.lit(False)), path)
+    assert listing() == before
+    indexed, _ = ann.load_ivf_index(spark, path)
+    assert indexed.count() == emb.count()
+
+
+def test_stream_micro_batch_fires_one_spark_job(spark, emb, tmp_path):
+    """One availableNow micro-batch of stream_append_to_ivf_index runs
+    exactly one Spark job under the stream's job group (its run id): the
+    append's write. No emptiness probe, no Spark sort of the quantizer."""
+    from vector_search_optimization_spark.streaming.index_maintenance import (
+        stream_append_to_ivf_index,
+    )
+
+    old = emb.where(F.col("vec_id") % 2 == 0)
+    new = emb.where(F.col("vec_id") % 2 == 1)
+    cents = ann.train_ivf_centroids(old, num_cells=8, seed=42)
+    path = str(tmp_path / "ivf_index")
+    ann.write_ivf_index(old, cents, path)
+    src = str(tmp_path / "arrivals")
+    new.coalesce(1).write.parquet(src)
+
+    stream = spark.readStream.schema(new.schema).parquet(src)
+    q = stream_append_to_ivf_index(
+        stream, path, checkpoint=str(tmp_path / "ckpt"), trigger_once=True
+    )
+    q.awaitTermination()
+    assert q.exception() is None
+    assert len(q.recentProgress) == 1
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(str(q.runId))) == 1
+    # the batch is scanned once, so its input metric counts each row once
+    assert q.recentProgress[0]["numInputRows"] == new.count()
+    indexed, _ = ann.load_ivf_index(spark, path)
+    assert indexed.count() == emb.count()
 
 
 def test_recall_at_k_harness(spark, emb):

@@ -212,9 +212,13 @@ def all_pairs_topk(
     import pandas as pd
     from pyspark.sql import types as T
 
-    rows = df.select(id_col, vector_col).orderBy(id_col).collect()
+    rows = df.select(id_col, vector_col).collect()
+    # id order on the driver (the collect is already n rows): a Spark
+    # orderBy would add a range-partition sampling job and a shuffle
     ids = np.array([r[0] for r in rows])
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    mat = np.array([r[1] for r in rows], dtype=np.float64)[order]
     norms = np.linalg.norm(mat, axis=1)
     norms[norms == 0.0] = np.nan
     unit = mat / norms[:, None]
@@ -536,41 +540,60 @@ def compact_ivf_cells(
     (streaming.index_maintenance) accrues, since every micro-batch lands
     at least one new file per touched cell.
 
-    Only over-fragmented cells are rewritten (single-file coalesce into a
-    fresh directory, then install-new-then-delete-old — a crash between
-    the phases duplicates rows, never loses them); untouched cells keep their
-    files byte-identical, preserving the append-only economics. Returns
-    the compacted cell ids.
+    Only over-fragmented cells are rewritten, all of them in ONE Spark
+    write: the fragmented cells are opened together (partition-pruned to
+    their directories), shuffled once by cell (which also satisfies the
+    dedup's distribution, so each cell lands whole in one task and gets
+    one file) and written partitionBy("cell") into a staging directory
+    beside the corpus. Each cell is then installed on its own,
+    install-new-then-delete-old — a crash between the phases duplicates
+    rows, never loses them; untouched cells keep their files
+    byte-identical, preserving the append-only economics. Returns the
+    compacted cell ids.
 
-    At 100 TB this is the nightly OPTIMIZE job: per-cell rewrite cost is
-    proportional to that cell's data and cells compact independently
-    (safe to shard across jobs). Run it as offline maintenance — the
-    swap is per-file, not transactional, so a probe racing a compaction
-    can see a cell mid-swap; at lake scale the same rewrite goes through
-    the table format's commit protocol instead."""
+    At 100 TB this is the nightly OPTIMIZE job: rewrite cost is
+    proportional to the fragmented cells' data, and cells are
+    independent (safe to shard across jobs). Run it as offline
+    maintenance — the swap is per-file, not transactional, so a probe
+    racing a compaction can see a cell mid-swap; at lake scale the same
+    rewrite goes through the table format's commit protocol instead."""
     import shutil
 
-    compacted: list[int] = []
+    fragmented: list[tuple[int, str, list[str]]] = []
     for cell_dir in sorted(glob.glob(f"{path}/corpus/cell=*")):
         files = sorted(glob.glob(f"{cell_dir}/*.parquet"))
-        if len(files) <= max_files_per_cell:
-            continue
-        cell = int(os.path.basename(cell_dir).split("=", 1)[1])
-        tmp = f"{path}/_compact_cell_{cell}"
-        # dropDuplicates makes crash recovery CONVERGE: a kill between
-        # install and delete below leaves original+compacted copies of
-        # each row; this rewrite collapses them instead of baking the
-        # duplication in forever (keep the streaming-duplicate contract
-        # bounded at one compaction cycle). Keeping an ARBITRARY row per
-        # vec_id is sound only under the appended-at-most-once ingest
-        # invariant (append_to_ivf_index) — crash duplicates are
-        # bit-identical, so any pick is the same row.
-        _read_parquet(spark, cell_dir, files).dropDuplicates([id_col]).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        staged = [
-            f for f in glob.glob(f"{tmp}/*.parquet")
-        ]
+        if len(files) > max_files_per_cell:
+            cell = int(os.path.basename(cell_dir).split("=", 1)[1])
+            fragmented.append((cell, cell_dir, files))
+    if not fragmented:
+        return []
+    cells = [cell for cell, _, _ in fragmented]
+    staging = f"{path}/_compact_staging"
+    # dropDuplicates makes crash recovery CONVERGE: a kill between
+    # install and delete below leaves original+compacted copies of
+    # each row; this rewrite collapses them instead of baking the
+    # duplication in forever (keep the streaming-duplicate contract
+    # bounded at one compaction cycle). Keeping an ARBITRARY row per
+    # vec_id is sound only under the appended-at-most-once ingest
+    # invariant (append_to_ivf_index) — crash duplicates are
+    # bit-identical, so any pick is the same row. Overwrite mode clears
+    # whatever an interrupted earlier run left in the staging directory.
+    (
+        _read_parquet(
+            spark,
+            f"{path}/corpus",
+            [f for _, _, files in fragmented for f in files],
+            [T.StructField("cell", T.IntegerType())],
+        )
+        .where(F.col("cell").isin(cells))
+        .repartition("cell")
+        .dropDuplicates(["cell", id_col])
+        .write.mode("overwrite")
+        .partitionBy("cell")
+        .parquet(staging)
+    )
+    for cell, cell_dir, files in fragmented:
+        staged = sorted(glob.glob(f"{staging}/cell={cell}/*.parquet"))
         # crash-safe order: INSTALL the compacted files first, then
         # delete the originals — a kill between the two phases leaves
         # the cell with duplicate rows (probe-time dedup on vec_id, the
@@ -588,9 +611,8 @@ def compact_ivf_cells(
             os.replace(f, f"{cell_dir}/compacted-{epoch}-{i}.parquet")
         for f in files:
             os.remove(f)
-        shutil.rmtree(tmp)
-        compacted.append(cell)
-    return compacted
+    shutil.rmtree(staging)
+    return cells
 
 
 def recall_at_k(

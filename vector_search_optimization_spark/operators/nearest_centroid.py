@@ -66,6 +66,16 @@ def _pairwise(mat: np.ndarray, cents: np.ndarray, metric: str) -> np.ndarray:
     raise ValueError(f"unknown metric {metric!r}; one of {_METRICS}")
 
 
+def _ascending(v) -> tuple:
+    """Sort key reproducing Spark's ascending order: nulls first, NaN
+    after every other value."""
+    if v is None:
+        return (0,)
+    if isinstance(v, float) and v != v:
+        return (2,)
+    return (1, v)
+
+
 def nearest_centroid(
     df: DataFrame,
     centroids: DataFrame,
@@ -79,13 +89,19 @@ def nearest_centroid(
     """Assign every row to its nearest centroid (scale path, no shuffle).
 
     The centroid table is collected to the driver (it is small by
-    construction — k clusters) and shipped to executors inside the UDF
-    closure; Spark broadcasts the serialized closure once per executor.
+    construction — k clusters), sorted there by label in Spark's
+    ascending order (nulls first, NaN last) so ties keep going to the
+    lowest label, and shipped to executors inside the UDF closure; Spark
+    broadcasts the serialized closure once per executor. Sorting on the
+    driver spares the range-partitioned sort's sampling job and shuffle:
+    over a driver-local centroid frame (a LocalRelation) the build fires
+    no Spark job.
     """
     if metric not in _METRICS:
         raise ValueError(f"unknown metric {metric!r}; one of {_METRICS}")
-    cent_rows = (
-        centroids.select(label_col, centroid_col).orderBy(label_col).collect()
+    cent_rows = sorted(
+        centroids.select(label_col, centroid_col).collect(),
+        key=lambda r: _ascending(r[0]),
     )
     labels = np.array([r[0] for r in cent_rows])
     cents = np.array([r[1] for r in cent_rows], dtype=np.float64)

@@ -16,7 +16,9 @@ partitioned parquet append.
 
 Scale notes (100 TB): each micro-batch does one map-side cell assignment
 (the quantizer broadcasts; no shuffle) and appends only to the cells it
-touches. Checkpointing gives exactly-once *offset* tracking; the sink is
+touches — one Spark job per micro-batch, the write itself: the quantizer
+is read and sorted on the driver, and no emptiness probe runs first.
+Checkpointing gives exactly-once *offset* tracking; the sink is
 append-only parquet, so a replayed epoch can duplicate rows — dedupe on
 vec_id at probe time or compact periodically, the standard
 streaming-into-lake contract. Quantizer drift is handled out-of-band by a
@@ -51,8 +53,8 @@ def stream_append_to_ivf_index(
     """
 
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # no emptiness probe: an empty batch's partitioned write lands no
+        # file, so the guard would only cost a job per micro-batch
         ann.append_to_ivf_index(batch_df, path, vector_col=vector_col)
 
     writer = stream_df.writeStream.foreachBatch(_fold).outputMode("append")
