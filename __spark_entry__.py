@@ -10,9 +10,12 @@ cross-engine summation-order noise doesn't break the value hash.
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import shutil
 from collections.abc import Callable
+from pathlib import Path
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -2923,12 +2926,8 @@ SELECT hamming, count(*) AS n_pairs FROM ham WHERE hamming <= 3 GROUP BY hamming
 # ---------------------------------------------------------------------------
 
 def _label_centroids(e: DataFrame, normalized: bool = False) -> DataFrame:
-    # kernel normalize (Arrow), not the interpreted HOF expression: same
-    # semantics (equivalence-tested), ~3x faster at bench scale and the
-    # gap grows with dim (CLAUDE.md: interpreted HOFs at dim 3072 are
-    # minutes vs milliseconds)
     src = (
-        e.withColumn("embedding", V.l2_normalize_kernel("embedding"))
+        e.withColumn("embedding", V.l2_normalize("embedding"))
         if normalized
         else e
     )
@@ -11521,12 +11520,12 @@ def evt_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fact table collapses to the calendar-bounded daily grid in one
     combinable pass; the decay weighting is a |days|-row aggregate per
     type (operators/timeseries.ewma_from_daily — the SAME combine the
-    streaming grid maintenance rewrites per micro-batch,
-    streaming/ewma_maintenance.py). pow() is not correctly-rounded IEEE
-    (engines may differ in the last ulp) and the weighted sums are
-    order-dependent, so the EWMA exports at 6dp (irrational —
-    tie-free); the day counts and the exact cents of the last day
-    export as integer anchors."""
+    streaming grid maintenance rewrites per micro-batch through
+    streaming.grid_monitor.start_daily_cents_monitor). pow() is not
+    correctly-rounded IEEE (engines may differ in the last ulp) and
+    the weighted sums are order-dependent, so the EWMA exports at 6dp
+    (irrational — tie-free); the day counts and the exact cents of
+    the last day export as integer anchors."""
     e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
     daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
@@ -12694,10 +12693,10 @@ def evt_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     only correctly-rounded ops (÷, sqrt, +/−) on them — both engines
     derive BIT-IDENTICAL doubles, so every float exports UNROUNDED.
     The whole statistic is the SHARED combine operators/timeseries.py:
-    runs_test_from_daily (streaming/runs_maintenance.py replays it per
-    micro-batch over the maintained grid). Plan: one daily groupBy,
-    one percentile agg joined back broadcast, one lag window, one
-    combinable final agg — all calendar-bounded."""
+    runs_test_from_daily (streaming.grid_monitor.start_daily_cents_monitor
+    replays it per micro-batch over the maintained grid). Plan: one
+    daily groupBy, one percentile agg joined back broadcast, one lag
+    window, one combinable final agg — all calendar-bounded."""
     e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
     daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
@@ -15144,9 +15143,9 @@ def evt_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold). The 100 TB shape: daily grid is types x days
     regardless of fact rows. The densify + fold live in the SHARED
     combine operators/timeseries.holt_from_daily, which
-    streaming/holt_maintenance.py replays per micro-batch over its
-    maintained grid (the ewma_from_daily one-combine-two-paths
-    pattern)."""
+    streaming.grid_monitor.start_daily_cents_monitor replays per
+    micro-batch over its maintained grid (the ewma_from_daily
+    one-combine-two-paths pattern)."""
     e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
     daily = (
@@ -15358,8 +15357,7 @@ ORDER BY label
 
 
 # ---------------------------------------------------------------------------
-# r8 third-session additions (registered BELOW the 50-slot driver window —
-# the r8 prepend cap of 24 is spent; rotate these to the FRONT in r9)
+# r8 third-session additions
 # ---------------------------------------------------------------------------
 
 
@@ -16050,7 +16048,7 @@ def evt_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     is calendar-correct), two tiny per-(type,dow) aggs. The
     decomposition itself is the SHARED timeseries.seasonal_from_daily
     combine (also driven continuously by
-    streaming/seasonal_maintenance.py)."""
+    streaming.grid_monitor.start_daily_cents_monitor)."""
     e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
     daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
@@ -18767,17 +18765,16 @@ ORDER BY event_type
 def evt_spc_individuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shewhart individuals/moving-range control chart per event type —
     the SPC monitoring read (center line, ±2.66·MR̄ control limits,
-    out-of-control day count) on daily revenue: center = S/n and
-    MR̄ = ΣMR/(n−1) are single exact-integer divisions (daily cents
-    and |lag diffs| exact), the limits chain bit-identical doubles
-    (2.66 = the d₂-derived individuals-chart constant, repr-exact
-    literal both sides), and violations are exact counts of
-    comparisons on those identical doubles. Plan: one combinable
-    daily agg, then the SHARED combine
-    operators/timeseries.spc_from_daily (also the streaming twin's
-    snapshot read — streaming/spc_maintenance.py; the extraction is
-    pure code motion, executedPlan verified identical): spine → one
-    lag window + one moments agg on the calendar-bounded grid."""
+    out-of-control day count) on daily revenue: center = S/n and MR̄ =
+    ΣMR/(n−1) are single exact-integer divisions (daily cents and |lag
+    diffs| exact), the limits chain bit-identical doubles (2.66 = the
+    d₂-derived individuals-chart constant, repr-exact literal both sides),
+    and violations are exact counts of comparisons on those identical
+    doubles. Plan: one combinable daily agg, then the SHARED combine
+    operators/timeseries.spc_from_daily (also the streaming twin's snapshot
+    read through streaming.grid_monitor.start_daily_cents_monitor; the
+    extraction is pure code motion, executedPlan verified identical): spine
+    → one lag window + one moments agg on the calendar-bounded grid."""
     from vector_search_optimization_spark.operators.timeseries import (
         spc_from_daily,
     )
@@ -20757,8 +20754,7 @@ ORDER BY event_type
 
 
 # ---------------------------------------------------------------------------
-# r10 additions (breadth capped per VERDICT r9 item 6 — the window cedes
-# its slots to the stale-audit rotation)
+# r10 additions
 # ---------------------------------------------------------------------------
 
 
@@ -20963,9 +20959,10 @@ def evt_sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable agg, then the SHARED timeseries.sax_motifs_from_daily
     combine (one ntile window + one lead window, both per-type and
     calendar-bounded, one motif agg, one WindowGroupLimit rank window)
-    — the same combine streaming/sax_maintenance.py reads its
-    maintained daily grid through (grid state, NOT motif counts: late
-    data shifts the quartile cuts, see the combine's note)."""
+    — the same combine that reads the daily grid
+    streaming.grid_monitor.start_daily_cents_monitor maintains (grid
+    state, NOT motif counts: late data shifts the quartile cuts, see
+    the combine's note)."""
     e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
     day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
     daily = e.groupBy("event_type", day.alias("d")).agg(
@@ -21851,9 +21848,9 @@ def evt_tail_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the no-exceedance corner (n=0 shared days ⇒ pair absent by the
     inner join).  Plan: one (type, day) combinable agg, then the
     SHARED combine operators/timeseries.tail_dependence_from_daily
-    (also the streaming twin's snapshot read --
-    streaming/tail_dep_maintenance.py): a day-keyed pair join
-    (|types|^2/2 x days -- calendar^2-bounded, fact-size-independent
+    (also the streaming twin's snapshot read through
+    streaming.grid_monitor.start_daily_cents_monitor): a day-keyed pair
+    join (|types|^2/2 x days -- calendar^2-bounded, fact-size-independent
     after the first shuffle), two rank windows on the pair frame, one
     broadcast threshold attach, one combinable reduce."""
     from vector_search_optimization_spark.operators.timeseries import (
@@ -22545,19 +22542,12 @@ ORDER BY aa_score DESC, u, v
 # registry / driver contract
 # ---------------------------------------------------------------------------
 
-# Ordering contract: the driver's correctness gate snapshots the FIRST 50
-# entries only (each CORRECTNESS_r{N} holds exactly 50).  The dict literal
-# below preserves the historical (r6) grouping for diff-stability; the
-# ACTUAL driver-visible order is rebuilt right after it from _R7_FRONT /
-# _R8_NEXT (see the rotation comment there).  Audit-freshness state after
-# the r6 window (per CORRECTNESS_r01..r06): 15 entries never audited, 12
-# r6-changed entries displaced without a row on their new form
-# (ep3_label_pipeline has never had a green driver row), 16 basics last
-# audited on r2-generation data, and the r3-audited half is two-plus
-# generations old — _R7_FRONT rotates exactly those forward, oldest debt
-# first.  tools/check_correctness.py covers the full registry locally.
-_REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
-    # r11 additions (the _R11_FRONT rebuild puts them at the window top):
+# The external correctness gate audits a prefix of the registry's order
+# each round and records it as CORRECTNESS_r<N>.json beside this module.
+# The order is computed (_audit_order) so the gate sees first what it has
+# not yet seen on its current form.  _QUERIES keeps the topic grouping.
+_QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
+    # r11 additions:
     "evt_tail_dependence": (evt_tail_dependence, _TAIL_DEP_SQL),
     "part_price_index": (part_price_index, _PRICE_INDEX_SQL),
     "orders_chain_ladder": (orders_chain_ladder, _CHAIN_LADDER_SQL),
@@ -22567,7 +22557,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     ),
     "lineitem_weibull_delay": (lineitem_weibull_delay, _WEIBULL_DELAY_SQL),
     "g13_adamic_adar": (g13_adamic_adar, _ADAMIC_ADAR_SQL),
-    # r10 additions (the _R10_FRONT rebuild puts them at the window top):
+    # r10 additions:
     "evt_permutation_entropy": (evt_permutation_entropy, _PERM_ENTROPY_SQL),
     "evt_rqa_determinism": (evt_rqa_determinism, _RQA_SQL),
     "evt_hill_tail_index": (evt_hill_tail_index, _HILL_SQL),
@@ -22578,7 +22568,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "evt_sax_motifs": (evt_sax_motifs, _SAX_MOTIFS_SQL),
     "doc_mattr_diversity": (doc_mattr_diversity, _MATTR_SQL),
     "orders_priority_trend_ca": (orders_priority_trend_ca, _CA_TREND_SQL),
-    # r9 additions (the _R9_FRONT rebuild puts them at the window top):
+    # r9 additions:
     "evt_icc_day_effect": (evt_icc_day_effect, _ICC_SQL),
     "evt_session_paths": (evt_session_paths, _SESSION_PATHS_SQL),
     "doc_yule_k": (doc_yule_k, _YULE_K_SQL),
@@ -22599,9 +22589,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "evt_dau_drawdown": (evt_dau_drawdown, _DAU_DRAWDOWN_SQL),
     "evt_turning_points": (evt_turning_points, _TURNING_POINTS_SQL),
     "evt_records_test": (evt_records_test, _RECORDS_TEST_SQL),
-    # r8 third-session additions — land BELOW the 50-slot window (the r8
-    # prepend cap is spent); the _R8_FRONT rebuild leaves them at the head
-    # of the post-window tail, and r9 rotates them to the front first.
+    # r8 third-session additions:
     "evt_welch_ttest": (evt_welch_ttest, _WELCH_SQL),
     "evt_quadratic_trend": (evt_quadratic_trend, _QUAD_TREND_SQL),
     "vocab_chao1_richness": (vocab_chao1_richness, _CHAO1_SQL),
@@ -22747,8 +22735,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "text_line_repetition": (text_line_repetition, _LINE_REP_SQL),
     "semantic_dedup": (semantic_dedup, _semantic_dedup_sql),
     "incremental_corpus_dedup": (incremental_corpus_dedup, _incremental_dedup_sql()),
-    # late r6 additions slot BELOW the verdict-deliverable queries so the
-    # driver's 50-slot audit window keeps covering those first
+    # late r6 additions:
     "evt_markov_transitions": (evt_markov_transitions, _EVT_MARKOV_SQL),
     "evt_cusum_changepoint": (evt_cusum_changepoint, _EVT_CUSUM_SQL),
     "q2_min_cost_supplier": (q2_min_cost_supplier, _Q2_SQL),
@@ -22883,528 +22870,67 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "fraction_sample": (fraction_sample, _FRAC_SQL),
 }
 
-# r7 window rotation (VERDICT r6 "Next round" item 1, executed): the driver
-# audits the FIRST 50 entries only, so _R7_FRONT reorders the registry to
-# put every entry with no current-generation driver row up front.  After
-# the 18 brand-new r7 queries were prepended (changed-first contract), the
-# 50-slot window holds, in order:
-#   [0-17]   the 18 NEW r7 queries (never audited anywhere): skyline, KM
-#            survival, HHI, affinity, dow/chi2/centroid/EWMA, AUC/Lorenz/
-#            Zipf/lag-corr/OLS-trend, Mann-Kendall/Benford/Heaps/bigram-LM/
-#            split-leakage;
-#   [18]     text_word_entropy — exports changed in r7 (ADVICE r6 #1);
-#   [19-33]  the 15 never-driver-audited r6 entries (evt_user_gini first —
-#            its UDAF numerator is also r7-changed, ADVICE r6 #2);
-#   [34-45]  the 12 r6-changed entries with no driver row on their new
-#            form — ep3_label_pipeline FIRST (never had a green row);
-#   [46-49]  p_filters + the first 3 r2-audited basics.
-# The remaining r2-audited basics and the r3 head were displaced below 50
-# by the new-query prepends — they are locally green on current-generation
-# data (full gate) and rotate forward in r8 via _R8_NEXT, which queues the
-# r3-audited remainder so by r9 no driver row is older than two data
-# generations.  New/changed queries are ALWAYS prepended as they land.
-_R7_FRONT: list[str] = [
-    # NEW in r7 (never audited, lead per the changed-first contract):
-    "evt_rolling_median",
-    "orders_backlog_timeline",
-    "parts_skyline",
-    "customer_order_survival",
-    "nation_revenue_hhi",
-    "evt_type_affinity",
-    "evt_dow_seasonality",
-    "doc_lang_source_chi2",
-    "label_centroid_cosine",
-    "evt_ewma_daily",
-    "evt_value_auc",
-    "customer_pareto_lorenz",
-    "corpus_zipf_slope",
-    "evt_lag_correlation",
-    "evt_type_trend_ols",
-    "evt_mann_kendall",
-    "orders_benford_audit",
-    "vocab_growth_heaps",
-    "doc_bigram_lm",
-    "split_leakage_audit",
-    "text_word_entropy",
-    "evt_user_gini",
-    "evt_markov_transitions",
-    "evt_cusum_changepoint",
-    "q2_min_cost_supplier",
-    "q9_product_profit",
-    "q11_important_stock",
-    "q20_surplus_suppliers",
-    "evt_attribution_linear",
-    "j13_lateral_topk",
-    "evt_grouping_sets",
-    "a19_percent_rank",
-    "decontaminate_bloom",
-    "source_mixture_weights",
-    "boilerplate_strip",
-    "mixture_sample_apply",
-    "ep3_label_pipeline",
-    "evt_sketch_audit",
-    "tokenizer_fertility",
-    "q1_pricing_summary",
-    "a5_two_level",
-    "j3_group_agg_enrichment",
-    "j1_inner_join_agg",
-    "unpivot_metrics",
-    "evt_asof_join",
-    "evt_range_join",
-    "evt_json_props",
-    "o7_interleave",
-    "p_filters",
-    "u_set_ops",
-    "w1_w2_proportion",
-    "w3_cumsum",
-    "w5_dense_numbering",
-    "o5_topk_per_group",
-    "pivot_categories",
-    "a1_a3_counts",
-    "a9_value_counts",
-    "a10_histogram",
-    "a11_a13_buckets_ratio",
-    "a12_first_per_group",
-    "evt_tumbling_window",
-    "evt_sliding_window",
-    "j2_left_join_flags",
-    "q3_shipping_priority",
-    "m4_dbscan_stats",
-    "g1_cooccurrence_edges",
-    "g2_communities",
-    "ep3_lloyd_audit",
-    "s1_csv_roundtrip",
-    "s2_json_roundtrip",
-    # BELOW the 50-slot window by design (the r7 window hard cap —
-    # prepending would push an r6-changed entry out): never-audited in
-    # r7, rotates forward in r8 with the rest of the audit debt.
-    "session_entry_exit",
-    "evt_theil_sen_slope",
-    "lineitem_weighted_median",
-    "evt_proportion_ztest",
-]
-
-_R8_NEXT: list[str] = [
-    "s6_excel_roundtrip",
-    "s3_orc_roundtrip",
-    "f5_manhattan",
-    "f7_string_caps",
-    "j5_literal_map",
-    "m1_kmeans_clusters",
-    "m2_silhouette",
-    "m3_k_sweep",
-    "m10_pca_variance",
-    "m11_spectral_embedding",
-    "a16_dict_accum",
-    "p8_null_tolerant",
-    "f10_bpe_token_count",
-    "mm_asset_features",
-    "split_assign",
-    "pack_batches",
-    "decontaminate_overlap",
-    "f11_token_budget",
-    "s7_convert_docs",
-    "s7_pdf_roundtrip",
-    "doc_chunking",
-    "text_repetition",
-    "evt_rollup",
-    "ann_quantized_topk",
-    "ann_pq_topk",
-    "ann_ivfpq_topk",
-    "ann_pq_refined_topk",
-    "ann_ivfpq_refined_topk",
-    "hybrid_search_rrf",
-    "doc_winnow_fingerprints",
-    "ngram_jaccard_dedup",
-    "pii_redaction",
-    "lm_quality_scores",
-    "tfidf_keywords",
-    "skew_salted_agg",
-    "curation_pipeline",
-    "dq_constraints",
-    "stratified_sample",
-    "fraction_sample",
-]
-
-_REGISTRY = {
-    name: _REGISTRY[name]
-    for name in (
-        *_R7_FRONT,
-        *_R8_NEXT,
-        *(k for k in _REGISTRY if k not in {*_R7_FRONT, *_R8_NEXT}),
-    )
-}
-
-# r8 window rotation (VERDICT r7 "Next round" item 1, executed): lead with
-# everything r8-new (prepended to _R8_FRONT as it lands) and r8-changed
-# (doc_bigram_lm / dup_span_coverage persist fixes — plans changed, exports
-# identical; evt_theil_sen_slope cache-handle fix), then the four r7 wave-5
-# queries that sat below the r7 hard cap and have NEVER been driver-audited,
-# then the 20 r2/r3-audited basics the r7 prepends displaced (VERDICT r7
-# item 1 — their last driver rows are five data-generations old), then
-# _R8_NEXT (the r3-audited remainder) fills the rest of the 50-slot window.
-# Budget: 6 changed/never-audited + 20 displaced = 26 fixed slots; every
-# r8-new prepend displaces one _R8_NEXT entry below 50 — cap r8 additions
-# at 24 so the fixed sets stay inside the window.
-_R8_FRONT: list[str] = [
-    # r8-NEW queries go HERE (top), newest first, as they land.
-    "emb_hubness_audit",
-    "evt_holt_linear",
-    "g7_hits",
-    "evt_ljung_box",
-    "evt_kruskal_dunn",
-    "emb_eigen_spectrum",
-    "source_quantile_divergence",
-    "evt_poisson_dispersion",
-    "text_word_burstiness",
-    "emb_intrinsic_dim",
-    "evt_hurst_rs",
-    "orders_interpurchase_regularity",
-    "g8_kcore_peel",
-    "evt_spearman_corr",
-    "evt_kendalls_w",
-    "conformal_interval_audit",
-    "source_diversity_profile",
-    "g6_clustering_coeff",
-    "evt_markov_stationary",
-    "evt_bh_fdr",
-    "evt_runs_test",
-    "evt_spectral_dft",
-    "copurchase_item_cosine",
-    "evt_isotonic_daily",
-    # r8-CHANGED (persist fixes, VERDICT r7 items 2-3):
-    "doc_bigram_lm",
-    "dup_span_coverage",
-    # never-driver-audited r7 wave-5 (VERDICT r7 item 2; theil-sen is
-    # also r8-changed — cache handle):
-    "evt_theil_sen_slope",
-    "session_entry_exit",
-    "lineitem_weighted_median",
-    "evt_proportion_ztest",
-    # the 20 displaced r2/r3-audited basics (VERDICT r7 item 1):
-    "w1_w2_proportion",
-    "w3_cumsum",
-    "w5_dense_numbering",
-    "o5_topk_per_group",
-    "pivot_categories",
-    "a1_a3_counts",
-    "a9_value_counts",
-    "a10_histogram",
-    "a11_a13_buckets_ratio",
-    "a12_first_per_group",
-    "evt_tumbling_window",
-    "evt_sliding_window",
-    "j2_left_join_flags",
-    "q3_shipping_priority",
-    "m4_dbscan_stats",
-    "g1_cooccurrence_edges",
-    "g2_communities",
-    "ep3_lloyd_audit",
-    "s1_csv_roundtrip",
-    "s2_json_roundtrip",
-]
-
-_REGISTRY = {
-    name: _REGISTRY[name]
-    for name in (
-        *_R8_FRONT,
-        *_R8_NEXT,
-        *(k for k in _REGISTRY if k not in {*_R8_FRONT, *_R8_NEXT}),
-    )
-}
-
-# r9 window rotation (VERDICT r8 "Next round" items 1 + 5, executed): the 32
-# r8 third-session additions landed BELOW the r8 window (the r8 prepend cap
-# was spent) and have never had a driver row — they fill 32 of the 50 slots.
-# r9-NEW queries prepend on top as they land; the cap is 18 (18 + 32 = 50)
-# so every one of the 32 keeps a window slot — do NOT exceed it.  Below the
-# window: _R8_NEXT (the r3-audited remainder, the oldest audit debt), then
-# the r4/r5-audited bulk in registry order (VERDICT r8 item 5).
-_R9_FRONT: list[str] = [
-    # r9-NEW queries go HERE (top), newest first, as they land (cap 18).
-    "evt_icc_day_effect",
-    "evt_session_paths",
-    "lineitem_abc_xyz",
-    "doc_yule_k",
-    "doc_source_vocab_jaccard",
-    "customer_segment_migration",
-    "evt_peak_over_threshold",
-    "orders_cohort_ltv",
-    "source_stylometry_delta",
-    "evt_granger_lag1",
-    "evt_records_test",
-    "evt_turning_points",
-    "evt_dau_drawdown",
-    "evt_funnel_conversion",
-    # the 32 never-driver-audited r8 third-session queries (VERDICT item 1):
-    "evt_welch_ttest",
-    "evt_quadratic_trend",
-    "vocab_chao1_richness",
-    "doc_source_mi",
-    "nation_theil_decomposition",
-    "g9_assortativity",
-    "evt_seasonal_decompose",
-    "evt_cms_audit",
-    "doc_readability",
-    "evt_pacf_durbin",
-    "evt_gumbel_maxima",
-    "g10_closeness",
-    "doc_js_divergence",
-    "lineitem_discount_qty_corr",
-    "evt_histogram_quantile_audit",
-    "evt_holt_winters",
-    "orders_ship_delay",
-    "g11_component_profile",
-    "evt_user_entropy_profile",
-    "evt_circadian_profile",
-    "emb_jl_projection_audit",
-    "orders_basket_negbin",
-    "part_return_wilson",
-    "emb_loo_knn_accuracy",
-    "evt_dau_mau_stickiness",
-    "evt_power_sample_size",
-    "source_neyman_allocation",
-    "g12_densification",
-    "evt_exponential_gof",
-    "evt_binseg_changepoint",
-    "evt_spc_individuals",
-    "evt_arrival_burstiness",
-]
-
-_REGISTRY = {
-    name: _REGISTRY[name]
-    for name in (
-        *_R9_FRONT,
-        *_R8_NEXT,
-        *(k for k in _REGISTRY if k not in {*_R9_FRONT, *_R8_NEXT}),
-    )
-}
-
-# r10 window rotation (VERDICT r9 item 1, executed): additions were capped
-# at 10 (the item-6 limit) so the stale-audit debt finally cycles.
-# Window = 10 r10-new + 4 r10-CHANGED (evt_records_test harmonic rewrite;
-# emb_loo_knn_accuracy cell-route dispatch; emb_hubness_audit /
-# emb_intrinsic_dim label-cap — their plans changed, exports identical at
-# gated scales) + ALL 35 r3-audited _R8_NEXT remainder entries (the
-# oldest debt: j5_literal_map..fraction_sample) + the first r5-audited
-# bulk entry (m4_grid_sweep) = 50 exactly.  Below the window the
-# remaining 43 r5-audited entries lead in registry order
-# (skew_salted_join, lsh_banding_audit, ann_matryoshka_topk,
-# text_gopher_repetition, evt_funnel, ...) — rotate them (and anything
-# r11-new/changed) forward in r11; after that every registry entry's
-# latest driver row is r6+.
-_R10_FRONT: list[str] = [
-    # r10-NEW queries go HERE (top), newest first, as they land (cap 10 —
-    # the VERDICT r9 limit; 10 + 4 changed + 35 r3-audited + 1 r5 = 50.
-    # The cap is now SPENT — no further r10 additions).
-    "evt_permutation_entropy",
-    "evt_rqa_determinism",
-    "evt_hill_tail_index",
-    "evt_haar_energy",
-    "doc_length_ks_drift",
-    "orders_priority_trend_ca",
-    "doc_mattr_diversity",
-    "evt_sax_motifs",
-    "evt_friedman_test",
-    "evt_type_emd",
-    # r10-CHANGED (plan-affecting rewrites need fresh driver rows):
-    "evt_records_test",
-    "emb_loo_knn_accuracy",
-    "emb_hubness_audit",
-    "emb_intrinsic_dim",
-    # the 35 r3-audited _R8_NEXT remainder entries (oldest audit debt):
-    "j5_literal_map",
-    "m1_kmeans_clusters",
-    "m2_silhouette",
-    "m3_k_sweep",
-    "m10_pca_variance",
-    "m11_spectral_embedding",
-    "a16_dict_accum",
-    "p8_null_tolerant",
-    "f10_bpe_token_count",
-    "mm_asset_features",
-    "split_assign",
-    "pack_batches",
-    "decontaminate_overlap",
-    "f11_token_budget",
-    "s7_convert_docs",
-    "s7_pdf_roundtrip",
-    "doc_chunking",
-    "text_repetition",
-    "evt_rollup",
-    "ann_quantized_topk",
-    "ann_pq_topk",
-    "ann_ivfpq_topk",
-    "ann_pq_refined_topk",
-    "ann_ivfpq_refined_topk",
-    "hybrid_search_rrf",
-    "doc_winnow_fingerprints",
-    "ngram_jaccard_dedup",
-    "pii_redaction",
-    "lm_quality_scores",
-    "tfidf_keywords",
-    "skew_salted_agg",
-    "curation_pipeline",
-    "dq_constraints",
-    "stratified_sample",
-    "fraction_sample",
-    # the first r5-audited bulk entry (the rest rotate in r11):
-    "m4_grid_sweep",
-]
-
-_REGISTRY = {
-    name: _REGISTRY[name]
-    for name in (
-        *_R10_FRONT,
-        *(k for k in _REGISTRY if k not in set(_R10_FRONT)),
-    )
-}
-
-# r11 window rotation (VERDICT r10 item 1, executed): this retires the
-# audit-freshness debt FOR GOOD — the 43 entries whose latest driver
-# audit is r5 (the last un-rotated cohort; recomputed from the ten
-# CORRECTNESS files) all take window slots, so additions are capped at
-# 6 (6 new + 1 r11-changed + 43 = 50).  After CORRECTNESS_r11, every
-# registry entry's latest driver audit is r6+.
-_R11_FRONT: list[str] = [
-    # r11-NEW queries go HERE (top), newest first, as they land (cap 6).
-    "evt_tail_dependence",
-    "part_price_index",
-    "orders_chain_ladder",
-    "doc_shingle_containment",
-    "lineitem_weibull_delay",
-    "g13_adamic_adar",
-    # r11-CHANGED (plan-affecting: the ANSI when()-gate on d_ks):
-    "doc_length_ks_drift",
-    # the 43 r5-audited entries (oldest remaining audit debt):
-    "skew_salted_join",
-    "lsh_banding_audit",
-    "ann_matryoshka_topk",
-    "text_gopher_repetition",
-    "evt_funnel",
-    "weighted_sample",
-    "ann_recall_audit",
-    "evt_psi_drift",
-    "q7_volume_shipping",
-    "source_overlap_matrix",
-    "text_compression_ratio",
-    "evt_gap_fill",
-    "evt_interarrival",
-    "a14_percentiles",
-    "j4_semi_join",
-    "j5_lookup_chain",
-    "q5_supplier_volume",
-    "w6_islands",
-    "f1_f2_norms",
+# Queries whose plan or build changed after the latest audit
+# (CORRECTNESS_r12.json); they lead the audit order.  A change that moves
+# a query's plan or results adds its name here; a name that is not in
+# _QUERIES fails the import.
+_CHANGED_SINCE_AUDIT: tuple[str, ...] = (
+    # nearest_centroid sorts the fetched centroids on the driver;
+    # prologue_report and f1_f2_norms normalize through the one-fold
+    # l2_normalize
+    "prologue_report",
     "j7_nearest_centroid",
-    "j9_distance_matrix",
-    "j8_similarity_buckets",
+    "ep3_lloyd_audit",
+    "f1_f2_norms",
+    # vector kernels built as one SQL expression (cosine's try_divide
+    # guard, driver-folded query norms)
+    "label_centroid_cosine",
+    "m9_mahalanobis_outliers",
+    "m10_pca_variance",
+    "f5_manhattan",
+    "emb_jl_projection_audit",
+    "m7_percentile_outliers",
     "ann_topk",
     "ann_topk_batch",
-    "ann_ivf_topk",
-    "emb_top_pairs",
-    "emb_near_dup_blocked",
-    "rp_bucket_hist",
-    "text_quality",
-    "dedup_exact_stats",
-    "text_langid",
-    "doc_quality_filter",
-    "minhash_near_dup",
-    "simhash_near_dup",
-    "evt_sessions",
-    "minhash_verified_dedup",
-    "dedup_canonical_groups",
-    "s11_upsert",
-    "prologue_report",
-    "m6_zscore_outliers",
-    "m7_percentile_outliers",
-    "m8_lof_outliers",
-    "m9_mahalanobis_outliers",
-]
-
-_REGISTRY = {
-    name: _REGISTRY[name]
-    for name in (
-        *_R11_FRONT,
-        *(k for k in _REGISTRY if k not in set(_R11_FRONT)),
-    )
-}
-
-# r12 window rotation (optimization round — no additions; the CLAUDE.md
-# r11 rule: r12-changed first, then oldest-audit-first). 17 r12-changed
-# entries lead: 9 plan-affecting (the jaccard verify restructure + its
-# four ngram_jaccard_pairs callers, the sketch pass merge, the two
-# driver-count→broadcast folds, split-leakage counts persist) + 8 whose
-# only change is the cache-release handle attachment (identical result
-# plans; execution now unpersists). The remaining 33 slots take the
-# head of the r6-audited cohort (the oldest remaining audit debt — the
-# latest-audit histogram after CORRECTNESS_r11 is r6:48 r7:49 r8:48
-# r9:48 r10:49 r11:50) in registry order. In r13 rotate forward
-# anything r13-new/changed, then the r6-audited remainder
-# (j11_anti_join onward), then r7.
-_R12_FRONT: list[str] = [
-    # r12-CHANGED (plan-affecting):
-    "split_leakage_audit",
-    "ngram_jaccard_dedup",
-    "evt_sketch_audit",
-    "basket_brand_rules",
-    "dedup_exact_stats",
-    "minhash_verified_dedup",
-    "incremental_corpus_dedup",
-    "dedup_keep_best",
-    "dedup_canonical_groups",
-    # r12-CHANGED (cache-release handles only):
-    "evt_funnel",
-    "evt_gap_fill",
-    "emb_near_dup_blocked",
-    "minhash_near_dup",
-    "simhash_near_dup",
-    "ep3_lloyd_audit",
-    "ep3_label_pipeline",
-    "semantic_dedup",
-    # oldest audit debt (r6 cohort head, registry order):
-    "evt_bitmap_rollup",
-    "nb_lang_confusion",
-    "customer_rfm_segments",
-    "doc_ngram_novelty",
-    "source_token_kl",
-    "evt_anomaly_mad",
-    "q6_forecast_revenue",
-    "q8_market_share",
-    "q12_late_shipment_priority",
-    "q14_promo_revenue",
-    "q13_order_count_distribution",
-    "q15_top_supplier",
-    "q16_supplier_variety",
-    "q19_disjunctive_revenue",
-    "q21_waiting_suppliers",
-    "q22_idle_balance",
+    "ann_matryoshka_topk",
+    "ann_quantized_topk",
+    "ann_recall_audit",
+    "hybrid_search_rrf",
     "mmr_diverse_topk",
-    "entity_resolution_clusters",
-    "scd2_orders_history",
-    "g5_triangle_count",
-    "evt_retention_cohorts",
-    "q4_order_priority",
-    "q10_returned_items",
-    "q17_small_qty_revenue",
-    "q18_large_orders",
-    "g3_pagerank",
-    "snapshot_diff_orders",
-    "evt_ks_drift",
-    "table_profile_orders",
-    "evt_cube",
-    "evt_trailing_window",
-    "text_hashing_features",
-    "j11_anti_join",
-]
+    "emb_near_dup_blocked",
+    # IVF index opened on the driver
+    "ann_ivf_topk",
+)
 
-_REGISTRY = {
-    name: _REGISTRY[name]
-    for name in (
-        *_R12_FRONT,
-        *(k for k in _REGISTRY if k not in set(_R12_FRONT)),
+
+def _latest_audit() -> dict[str, int]:
+    """Query name -> highest N of a CORRECTNESS_r<N>.json holding it."""
+    rounds = {
+        int(m[1]): path
+        for path in Path(__file__).parent.glob("CORRECTNESS_r*.json")
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name))
+    }
+    return {
+        name: n
+        for n, path in sorted(rounds.items())
+        for name in json.loads(path.read_text())
+    }
+
+
+def _audit_order() -> list[str]:
+    """The changed queries in their listed order, then every other query
+    by its latest audit round, oldest first; a query never audited counts
+    as round 0, and ties keep _QUERIES' order."""
+    latest = _latest_audit()
+    changed = set(_CHANGED_SINCE_AUDIT)
+    rest = sorted(
+        (name for name in _QUERIES if name not in changed),
+        key=lambda name: latest.get(name, 0),
     )
-}
+    return [*_CHANGED_SINCE_AUDIT, *rest]
+
+
+_REGISTRY = {name: _QUERIES[name] for name in _audit_order()}
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -366,7 +366,8 @@ def test_jaccard_similarity_join_no_false_negatives_randomized(spark):
 def test_semantic_dedup_planted_duplicates_min_id_survives(spark):
     """SemDeDup composition: exact duplicates land in the same cell and
     every copy except the minimum id is removed; unrelated vectors
-    survive. Kernel and declarative pair paths agree."""
+    survive. (The kernel pair path is pinned against the declarative
+    self-join in test_kernel_equivalence.)"""
     import numpy as np
 
     from vector_search_optimization_spark.operators import ann
@@ -384,12 +385,9 @@ def test_semantic_dedup_planted_duplicates_min_id_survives(spark):
     cents = ann.train_ivf_centroids(
         df.orderBy("vec_id"), num_cells=4, vector_col="embedding", seed=1
     )
-    for use_kernel in (True, False):
-        flagged = dedup.semantic_dedup(
-            df, cents, threshold=0.99, use_kernel=use_kernel
-        )
-        removed = {r.vec_id for r in flagged.where(~F.col("keep")).collect()}
-        assert removed == {100, 101, 200}, (use_kernel, removed)
+    flagged = dedup.semantic_dedup(df, cents, threshold=0.99)
+    removed = {r.vec_id for r in flagged.where(~F.col("keep")).collect()}
+    assert removed == {100, 101, 200}, removed
 
 
 def test_bloom_decontamination_matches_exact_path(spark, sf_small):

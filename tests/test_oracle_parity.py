@@ -70,6 +70,36 @@ def test_entry_smoke(spark):
     assert df.count() > 0
 
 
+def test_audit_order_is_changed_first_then_oldest_audit():
+    """queries() runs in audit order: the queries changed since the last
+    audit, as listed, then the rest by latest audit round (recomputed
+    here from the committed CORRECTNESS_r*.json; never audited = 0),
+    oldest first, ties in the registry literal's order."""
+    import json
+    from pathlib import Path
+
+    names = list(entrymod.queries())
+    literal = list(entrymod._QUERIES)
+    assert len(literal) == 292
+    assert sorted(names) == sorted(literal)
+    assert len(set(names)) == len(names)
+
+    changed = list(entrymod._CHANGED_SINCE_AUDIT)
+    assert names[: len(changed)] == changed
+
+    latest: dict[str, int] = {}
+    for path in Path(entrymod.__file__).parent.glob("CORRECTNESS_r*.json"):
+        n = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for name in json.loads(path.read_text()):
+            latest[name] = max(latest.get(name, 0), n)
+    assert latest, "no committed CORRECTNESS_r*.json"
+    rest = names[len(changed):]
+    rounds = [latest.get(name, 0) for name in rest]
+    assert rounds == sorted(rounds)
+    ties = [(latest.get(name, 0), literal.index(name)) for name in rest]
+    assert ties == sorted(ties)
+
+
 # Queries whose rounded means are over IRRATIONAL values (sqrt norms /
 # distances, silhouettes, Mahalanobis, -ln scores) — a decimal rounding
 # tie is measure-zero there, so round(avg(...)) is allowed. Everything

@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import timeseries as TS
 from vector_search_optimization_spark.sources import load_table
-from vector_search_optimization_spark.streaming.ewma_maintenance import (
-    stream_ewma_monitor,
+from vector_search_optimization_spark.streaming.grid_monitor import (
+    start_daily_cents_monitor,
 )
 
 
@@ -66,10 +66,11 @@ def test_stream_ewma_equals_batch_with_split_days(spark, sf_small, tmpdirs):
         .option("maxFilesPerTrigger", 1)
         .parquet(drop)
     )
-    q = stream_ewma_monitor(
+    q = start_daily_cents_monitor(
         stream,
         out_path=f"{tmpdirs}/level",
         checkpoint_dir=f"{tmpdirs}/ckpt",
+        combine=TS.ewma_from_daily,
     )
     try:
         q.processAllAvailable()
@@ -109,10 +110,11 @@ def test_stream_ewma_prefix_consistency(spark, tmpdirs):
     stream = spark.readStream.schema(
         "ts timestamp, event_type string, value double"
     ).parquet(drop)
-    q = stream_ewma_monitor(
+    q = start_daily_cents_monitor(
         stream,
         out_path=f"{tmpdirs}/level2",
         checkpoint_dir=f"{tmpdirs}/ckpt2",
+        combine=TS.ewma_from_daily,
     )
     try:
         q.processAllAvailable()

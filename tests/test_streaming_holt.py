@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import timeseries as TS
 from vector_search_optimization_spark.sources import load_table
-from vector_search_optimization_spark.streaming.holt_maintenance import (
-    stream_holt_monitor,
+from vector_search_optimization_spark.streaming.grid_monitor import (
+    start_daily_cents_monitor,
 )
 
 
@@ -77,10 +77,11 @@ def test_stream_holt_equals_batch_with_split_days(spark, sf_small, tmpdirs):
         .option("maxFilesPerTrigger", 1)
         .parquet(drop)
     )
-    q = stream_holt_monitor(
+    q = start_daily_cents_monitor(
         stream,
         out_path=f"{tmpdirs}/level",
         checkpoint_dir=f"{tmpdirs}/ckpt",
+        combine=TS.holt_from_daily,
     )
     try:
         q.processAllAvailable()
@@ -118,10 +119,11 @@ def test_stream_holt_prefix_and_known_series(spark, tmpdirs):
     stream = spark.readStream.schema(
         "ts timestamp, event_type string, value double"
     ).parquet(drop)
-    q = stream_holt_monitor(
+    q = start_daily_cents_monitor(
         stream,
         out_path=f"{tmpdirs}/level2",
         checkpoint_dir=f"{tmpdirs}/ckpt2",
+        combine=TS.holt_from_daily,
     )
     try:
         q.processAllAvailable()

@@ -15,8 +15,8 @@ from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import timeseries as TS
 from vector_search_optimization_spark.sources import load_table
-from vector_search_optimization_spark.streaming.isotonic_maintenance import (
-    stream_isotonic_monitor,
+from vector_search_optimization_spark.streaming.grid_monitor import (
+    start_daily_cents_monitor,
 )
 
 
@@ -64,10 +64,11 @@ def test_stream_isotonic_equals_batch_with_split_days(
         .option("maxFilesPerTrigger", 1)
         .parquet(drop)
     )
-    q = stream_isotonic_monitor(
+    q = start_daily_cents_monitor(
         stream,
         out_path=f"{tmpdirs}/blocks",
         checkpoint_dir=f"{tmpdirs}/ckpt",
+        combine=TS.isotonic_blocks,
     )
     try:
         q.processAllAvailable()
@@ -107,10 +108,11 @@ def test_stream_isotonic_late_row_merges_blocks(spark, tmpdirs):
         .option("maxFilesPerTrigger", 1)
         .parquet(drop)
     )
-    q = stream_isotonic_monitor(
+    q = start_daily_cents_monitor(
         stream,
         out_path=f"{tmpdirs}/blocks2",
         checkpoint_dir=f"{tmpdirs}/ckpt2",
+        combine=TS.isotonic_blocks,
     )
     try:
         q.processAllAvailable()

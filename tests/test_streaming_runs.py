@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import timeseries as TS
 from vector_search_optimization_spark.sources import load_table
-from vector_search_optimization_spark.streaming.runs_maintenance import (
-    stream_runs_monitor,
+from vector_search_optimization_spark.streaming.grid_monitor import (
+    start_daily_cents_monitor,
 )
 
 
@@ -73,10 +73,11 @@ def test_stream_runs_equals_batch_with_split_days(spark, sf_small, tmpdirs):
         .option("maxFilesPerTrigger", 1)
         .parquet(drop)
     )
-    q = stream_runs_monitor(
+    q = start_daily_cents_monitor(
         stream,
         out_path=f"{tmpdirs}/runs",
         checkpoint_dir=f"{tmpdirs}/ckpt",
+        combine=TS.runs_test_from_daily,
     )
     try:
         q.processAllAvailable()

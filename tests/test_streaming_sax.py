@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import timeseries as TS
 from vector_search_optimization_spark.sources import load_table
-from vector_search_optimization_spark.streaming.sax_maintenance import (
-    stream_sax_daily_monitor,
+from vector_search_optimization_spark.streaming.grid_monitor import (
+    start_daily_cents_monitor,
 )
 
 
@@ -64,10 +64,11 @@ def test_stream_sax_equals_batch_with_split_days(spark, sf_small, tmpdirs):
         .option("maxFilesPerTrigger", 1)
         .parquet(drop)
     )
-    q = stream_sax_daily_monitor(
+    q = start_daily_cents_monitor(
         stream,
         out_path=f"{tmpdirs}/daily",
         checkpoint_dir=f"{tmpdirs}/ckpt",
+        combine=lambda daily: daily,  # the monitor snapshots the grid itself
     )
     try:
         q.processAllAvailable()
@@ -115,10 +116,11 @@ def test_stream_sax_late_day_reshifts_quartiles(spark, tmpdirs):
         .option("maxFilesPerTrigger", 1)
         .parquet(drop)
     )
-    q = stream_sax_daily_monitor(
+    q = start_daily_cents_monitor(
         stream,
         out_path=f"{tmpdirs}/daily2",
         checkpoint_dir=f"{tmpdirs}/ckpt2",
+        combine=lambda daily: daily,  # the monitor snapshots the grid itself
     )
     try:
         q.processAllAvailable()

@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import timeseries as TS
 from vector_search_optimization_spark.sources import load_table
-from vector_search_optimization_spark.streaming.seasonal_maintenance import (
-    stream_seasonal_monitor,
+from vector_search_optimization_spark.streaming.grid_monitor import (
+    start_daily_cents_monitor,
 )
 
 
@@ -69,10 +69,11 @@ def test_stream_seasonal_equals_batch_with_split_days(
         .option("maxFilesPerTrigger", 1)
         .parquet(drop)
     )
-    q = stream_seasonal_monitor(
+    q = start_daily_cents_monitor(
         stream,
         out_path=f"{tmpdirs}/seasonal",
         checkpoint_dir=f"{tmpdirs}/ckpt",
+        combine=TS.seasonal_from_daily,
     )
     try:
         q.processAllAvailable()

@@ -15,8 +15,8 @@ from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import timeseries as TS
 from vector_search_optimization_spark.sources import load_table
-from vector_search_optimization_spark.streaming.spc_maintenance import (
-    stream_spc_monitor,
+from vector_search_optimization_spark.streaming.grid_monitor import (
+    start_daily_cents_monitor,
 )
 
 
@@ -61,10 +61,11 @@ def test_stream_spc_equals_batch_with_split_days(spark, sf_small, tmpdirs):
         .option("maxFilesPerTrigger", 1)
         .parquet(drop)
     )
-    q = stream_spc_monitor(
+    q = start_daily_cents_monitor(
         stream,
         out_path=f"{tmpdirs}/chart",
         checkpoint_dir=f"{tmpdirs}/ckpt",
+        combine=TS.spc_from_daily,
     )
     try:
         q.processAllAvailable()
@@ -110,10 +111,11 @@ def test_stream_spc_late_spike_reflags_days(spark, tmpdirs):
         .option("maxFilesPerTrigger", 1)
         .parquet(drop)
     )
-    q = stream_spc_monitor(
+    q = start_daily_cents_monitor(
         stream,
         out_path=f"{tmpdirs}/chart2",
         checkpoint_dir=f"{tmpdirs}/ckpt2",
+        combine=TS.spc_from_daily,
     )
     try:
         q.processAllAvailable()

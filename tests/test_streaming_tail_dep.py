@@ -16,8 +16,8 @@ from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import timeseries as TS
 from vector_search_optimization_spark.sources import load_table
-from vector_search_optimization_spark.streaming.tail_dep_maintenance import (
-    stream_tail_dep_monitor,
+from vector_search_optimization_spark.streaming.grid_monitor import (
+    start_daily_cents_monitor,
 )
 
 
@@ -67,10 +67,11 @@ def test_stream_tail_dep_equals_batch_with_split_days(
         .option("maxFilesPerTrigger", 1)
         .parquet(drop)
     )
-    q = stream_tail_dep_monitor(
+    q = start_daily_cents_monitor(
         stream,
         out_path=f"{tmpdirs}/pairs",
         checkpoint_dir=f"{tmpdirs}/ckpt",
+        combine=TS.tail_dependence_from_daily,
     )
     try:
         q.processAllAvailable()
@@ -111,10 +112,11 @@ def test_stream_tail_dep_late_row_moves_threshold(spark, tmpdirs):
         .option("maxFilesPerTrigger", 1)
         .parquet(drop)
     )
-    q = stream_tail_dep_monitor(
+    q = start_daily_cents_monitor(
         stream,
         out_path=f"{tmpdirs}/pairs2",
         checkpoint_dir=f"{tmpdirs}/ckpt2",
+        combine=TS.tail_dependence_from_daily,
     )
     try:
         q.processAllAvailable()

@@ -280,3 +280,56 @@ def test_folded_query_norm_matches_plan_norm(spark, dim):
                 (V.cosine_distance(q, "v"), V.cosine_distance(lit, "v")),
             ],
         )
+
+
+def _wide_rows(dim):
+    """Rows at the reference's width: a zero row, NaN, +inf and -inf each
+    at one position of an otherwise regular row, and a regular row."""
+    rng = np.random.RandomState(dim)
+    regular = rng.standard_normal(dim).tolist()
+    rows = [[0.0] * dim, list(regular)]
+    for pos, x in ((0, _NAN), (dim // 2, _INF), (dim - 1, -_INF)):
+        row = list(regular)
+        row[pos] = x
+        rows.append(row)
+    return rows
+
+
+def test_l2_normalize_bit_identical_at_reference_width(spark):
+    """The one-fold normalize equals the Column-built formula that
+    re-folds the norm per element, bit for bit, on 3,072-dim zero, NaN
+    and ±inf rows (double and float operands)."""
+    rows = _wide_rows(3072)
+    df = spark.createDataFrame(
+        [(i, v, v) for i, v in enumerate(rows)],
+        "id int, v array<double>, fv array<float>",
+    )
+    _assert_same(
+        df,
+        [
+            (V.l2_normalize("v"), _ref_l2_normalize("v")),
+            (V.l2_normalize("fv"), _ref_l2_normalize("fv")),
+        ],
+    )
+
+
+def test_l2_normalize_plan_folds_the_norm_once(pairs_df):
+    """One ``aggregate`` per row: the norm is not re-folded inside the
+    ``transform`` lambda."""
+    plan = (
+        pairs_df.select(V.l2_normalize("a").alias("u"))
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    assert plan.count("aggregate(") == 1, plan
+
+
+def test_l2_normalize_kernel_is_the_fold(spark):
+    """The former Arrow twin's name is the expression, so NaN stays NaN
+    (pandas -> Arrow conversion had turned it into NULL)."""
+    assert V.l2_normalize_kernel is V.l2_normalize
+    df = spark.createDataFrame([([_NAN, 1.0],)], "v array<double>")
+    (u,) = df.select(V.l2_normalize_kernel("v")).first()
+    assert u is not None and len(u) == 2
+    assert all(x is not None and math.isnan(x) for x in u)

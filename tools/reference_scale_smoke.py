@@ -106,7 +106,7 @@ def main():
 
     t0 = time.time()
     assigned = NC.nearest_centroid(
-        chunks.withColumn("content_vector", V.l2_normalize_kernel("content_vector")),
+        chunks.withColumn("content_vector", V.l2_normalize("content_vector")),
         cents,
     ).persist()
     assigned.count()

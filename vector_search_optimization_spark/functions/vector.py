@@ -159,38 +159,27 @@ def l2_normalize(v: Operand) -> Column:
     """F2 — safe-divide unit-normalisation.
 
     Mirrors ``normalizar_vector`` (main-script1.ipynb:269 c13): a zero
-    vector is returned unchanged rather than producing NaNs. The
-    ``transform`` body holds the operand's text (inside the norm), so its
-    lambda variable carries a name no column here uses.
+    vector is returned unchanged rather than producing NaNs. One
+    ``aggregate`` folds the squared norm and its finish lambda binds it
+    for the ``transform``, so a row costs O(d): Spark's interpreted
+    higher-order functions hoist nothing, and a norm written inside the
+    ``transform`` body would be re-folded per element (O(d²)). The fold
+    runs the same IEEE-754 operations in the same order as ``l2_norm``,
+    so the result is bit-identical to dividing by it. The lambda
+    variables carry names no column here uses, because the operand's
+    text appears inside them.
     """
-    norm = _norm_sql(v)
+    vec = _vec_sql(v)
     return F.expr(
-        f"CASE WHEN {norm} = 0.0D THEN {_vec_sql(v)} "
-        f"ELSE transform({_vec_sql(v)}, __x -> __x / {norm}) END"
+        f"aggregate({vec}, 0.0D, (__s, __x) -> __s + __x * __x, "
+        f"__s -> CASE WHEN sqrt(__s) = 0.0D THEN {vec} "
+        f"ELSE transform({vec}, __x -> __x / sqrt(__s)) END)"
     )
 
 
-def l2_normalize_kernel(col: Column | str) -> Column:
-    """F2 as an Arrow-batched pandas UDF — the high-dimension path.
-
-    The expression form (l2_normalize) runs interpreted per element in
-    Spark's higher-order functions; at dim ~3000 that is minutes per few
-    thousand rows, while one numpy pass per Arrow batch is milliseconds
-    (measured 344s -> <2s on the reference-shape workload). Semantics
-    identical incl. the zero-vector pass-through.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<double>")
-    def _norm(s: pd.Series) -> pd.Series:
-        import numpy as np
-
-        mat = stack_vectors(s)
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0.0] = 1.0  # zero vector passes through unchanged
-        return pd.Series(list(mat / norms))
-
-    return _norm(F.col(col) if isinstance(col, str) else col)
+# The name of a former Arrow pandas-UDF twin, which lost to the fold above
+# at 256 and 3,072 dims; kept because existing callers import it.
+l2_normalize_kernel = l2_normalize
 
 
 def euclidean(a: Operand, b: Operand) -> Column:

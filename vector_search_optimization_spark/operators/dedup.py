@@ -412,7 +412,6 @@ def minhash_near_duplicates(
     shingle_n: int = 3,
     jaccard_threshold: float = 0.7,
     seed: int = 42,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Full MinHash-LSH pipeline: candidates verified by signature-estimated
     jaccard (fraction of agreeing minhashes). Returns (id_a, id_b, est_jaccard).
@@ -422,8 +421,9 @@ def minhash_near_duplicates(
     # At lake scale this is the "write the signature table" stage.
     from pyspark import StorageLevel
 
-    sig_fn = minhash_signatures_kernel if use_kernel else minhash_signatures
-    sigs = sig_fn(df, text_col, id_col, num_hashes, shingle_n, seed)
+    sigs = minhash_signatures_kernel(
+        df, text_col, id_col, num_hashes, shingle_n, seed
+    )
     sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
     cands = minhash_lsh_candidates(sigs, id_col, num_bands, num_hashes=num_hashes)
     sa = sigs.select(F.col(id_col).alias("id_a"), F.col("signature").alias("__sa"))
@@ -563,7 +563,6 @@ def simhash_near_duplicates(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     shingle_n: int = 2,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """Candidate pairs with simhash hamming distance <= max_hamming.
 
@@ -576,8 +575,7 @@ def simhash_near_duplicates(
 
     n_seg = max_hamming + 1
     seg_bits = 64 // n_seg
-    hash_fn = simhash_kernel if use_kernel else simhash
-    hashed = hash_fn(df, text_col, id_col, shingle_n).persist(
+    hashed = simhash_kernel(df, text_col, id_col, shingle_n).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     mask = (1 << seg_bits) - 1
@@ -901,7 +899,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vector_col: str = "embedding",
     threshold: float = 0.9,
-    use_kernel: bool = True,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. '23: cluster
     the embedding space, then near-dedup WITHIN clusters only).
@@ -913,7 +910,7 @@ def semantic_dedup(
     2. intra-cell all-pairs cosine — ONE shuffle on the cell key; the
        hot path is the per-cell GEMM kernel
        (similarity.intra_group_pairs_kernel), the declarative self-join
-       stays as its equivalence-tested oracle (use_kernel=False);
+       stays as its equivalence-tested reference;
     3. a row is a duplicate iff some LOWER-id row in its cell reaches
        ``round(cos, 6) >= threshold`` — min-id per duplicate group
        survives (the deterministic variant of SemDeDup's keep-one rule;
@@ -932,7 +929,7 @@ def semantic_dedup(
     from pyspark import StorageLevel
 
     from .ann import assign_ivf_cells
-    from .similarity import intra_group_pairs, intra_group_pairs_kernel
+    from .similarity import intra_group_pairs_kernel
 
     # result-lifetime cache: the assignment feeds both the pair stage
     # and the final annotation join (without it the argmin pass runs
@@ -941,16 +938,12 @@ def semantic_dedup(
     assigned = assign_ivf_cells(
         df.select(id_col, vector_col), centroids, vector_col=vector_col
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    if use_kernel:
-        # conservative in-kernel cut (see intra_group_pairs_kernel):
-        # avoids materializing m²/2 Arrow rows per dense cell; the exact
-        # rounded comparison below remains the decision
-        pairs = intra_group_pairs_kernel(
-            assigned, "cell", id_col, vector_col,
-            min_sim=threshold - 1e-6,
-        )
-    else:
-        pairs = intra_group_pairs(assigned, "cell", id_col, vector_col)
+    # conservative in-kernel cut (see intra_group_pairs_kernel): avoids
+    # materializing m²/2 Arrow rows per dense cell; the exact rounded
+    # comparison below remains the decision
+    pairs = intra_group_pairs_kernel(
+        assigned, "cell", id_col, vector_col, min_sim=threshold - 1e-6
+    )
     dup_ids = (
         pairs.where(F.round("sim", 6) >= threshold)
         .select(F.col("id_b").alias(id_col))

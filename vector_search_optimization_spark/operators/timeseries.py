@@ -1,6 +1,13 @@
 """Time-series helpers shared by batch queries and their streaming
 maintenance twins (the operators.drift pattern: ONE combine definition,
-two execution paths)."""
+two execution paths).
+
+A ``*_from_daily`` combine (and ``isotonic_blocks``) runs continuously
+by handing it to ``streaming.grid_monitor.start_daily_cents_monitor``:
+the stream keeps the (group, day) cents grid and every micro-batch
+rewrites the export from the absorbed grid with the combine.  Each
+docstring says why the grid, not a folded running state, is the only
+valid incremental state for that statistic."""
 
 from __future__ import annotations
 
@@ -32,14 +39,17 @@ def sax_motifs_from_daily(
 ) -> DataFrame:
     """Top-k SAX motif words from a (group, day, exact-cents) frame —
     the SHARED combine behind the evt_sax_motifs batch query and
-    streaming/sax_maintenance.py (the seasonal_from_daily
+    its streaming monitor (the seasonal_from_daily
     one-combine-two-paths pattern). Quartile symbols via ntile(4)
     over the per-group (cents, day) total order, 3-day motif words
     via lead windows, top-k on (count desc, motif asc). Everything is
     exact integers and strings. NOTE for streaming: the state must be
     the DAILY GRID, not the motif counts — late data changes a day's
     cents, which can shift the ntile quartile CUTS and therefore every
-    symbol of the group, so motif counts are not an incremental fold."""
+    symbol of the group, so motif counts are not an incremental fold.
+    The monitor therefore snapshots the grid itself (an identity
+    combine) and this function turns any snapshot into the batch
+    query's exact top-k motifs."""
     from pyspark.sql import Window
 
     sym = daily.withColumn(
@@ -174,8 +184,8 @@ def seasonal_from_daily(
 ):
     """Additive seasonal decomposition from a (group, day, exact-integer
     cents) frame — the SHARED combine behind the evt_seasonal_decompose
-    batch query and streaming/seasonal_maintenance.py (the
-    holt_from_daily one-combine-two-paths pattern).
+    batch query and its streaming monitor (the holt_from_daily
+    one-combine-two-paths pattern).
 
     Densifies onto each group's own daily span (missing days = 0), takes
     the centered MA-7 trend on full windows only, and exports per
@@ -184,7 +194,9 @@ def seasonal_from_daily(
     sum-of-squares Σ(cnt·p−sp)²/(7·cnt)² — every float is ONE division
     of exact DECIMAL/BIGINT integers (bit-identical across engines;
     see the batch query's docstring for the algebra). |groups|×|days|
-    work wherever it runs."""
+    work wherever it runs. NOTE for streaming: the state must be the
+    DAILY GRID, not a folded per-dow running state — late data changes a
+    day's cents AND its ±3 neighbours' centered-MA-7 trend values."""
     from pyspark.sql import Window as _W
 
     bounds = daily.groupBy(group_col).agg(
@@ -259,8 +271,13 @@ def holt_from_daily(
     """Holt linear-trend (double exponential) smoothing at the series
     end from a (group, day, exact-integer cents) frame — the SHARED
     combine behind the evt_holt_linear batch query and
-    streaming/holt_maintenance.py (the ewma_from_daily
-    one-combine-two-paths pattern).
+    its streaming monitor (the ewma_from_daily one-combine-two-paths
+    pattern). NOTE for streaming: the state must be the DAILY GRID —
+    folding the (level, trend) pair forward would be wrong twice over: a
+    day's cents are not final until read time, and the recursion consumes
+    days in order while late data can append to PAST days. Unlike the
+    EWMA there is no decay horizon to age out against, so unbounded
+    retention keeps the full (dimension-table-sized) grid.
 
     The frame is densified onto each group's own daily span (missing
     days = 0 cents) and the level/trend recursion
@@ -352,10 +369,14 @@ def ewma_from_daily(
     The input is already the calendar-bounded daily grid, so this is
     |groups×days|-scale math wherever it runs — a batch query over the
     fact table's daily aggregate, or a per-micro-batch rewrite over a
-    streaming-maintained grid (streaming/ewma_maintenance.py). pow() is
-    not correctly-rounded IEEE and the weighted sums are order-
-    dependent, so ewma_cents rounds at 6dp (irrational — tie-free);
-    n_days and the last day's cents are exact integer anchors."""
+    streaming-maintained grid. pow() is not correctly-rounded IEEE and
+    the weighted sums are order-dependent, so ewma_cents rounds at 6dp
+    (irrational — tie-free); n_days and the last day's cents are exact
+    integer anchors. NOTE for streaming: the state must be the DAILY
+    GRID, not the decayed numerator folded forward — a day's cents are
+    not final until read time. For unbounded retention, age out days
+    older than the decay horizon (α^d < ulp ⇒ d ≳ 330 at α=0.9):
+    dropping them changes nothing representable in the result."""
     last = daily.groupBy(group_col).agg(F.max(day_col).alias("d_last"))
     wgt = daily.join(F.broadcast(last), group_col).select(
         group_col,
@@ -391,14 +412,17 @@ def runs_test_from_daily(
 ) -> DataFrame:
     """Wald-Wolfowitz runs test from a (group, day, exact-integer
     cents) frame — the SHARED combine behind the evt_runs_test batch
-    query and streaming/runs_maintenance.py (the ewma_from_daily
+    query and its streaming monitor (the ewma_from_daily
     one-combine-two-paths pattern). Days equal to the per-group median
     (F.percentile, cross-engine-stable interpolation) are excluded;
     E[R] and Var[R] are single IEEE divisions of exact integers and
     z = (R − E)/sqrt(V) chains only correctly-rounded ops, so every
     float is bit-identical cross-engine and exports UNROUNDED. Input is
     the calendar-bounded grid, so this is |groups × days| work wherever
-    it runs."""
+    it runs. NOTE for streaming: the state must be the DAILY GRID, not a
+    folded (last_sign, counters) state — late data flips a past day's
+    sign, and the median the signs compare against moves with every new
+    day."""
     from pyspark.sql import Window as W
 
     med = daily.groupBy(group_col).agg(
@@ -461,17 +485,15 @@ def tail_dependence_from_daily(
 ) -> DataFrame:
     """Empirical upper-tail dependence λ_U for every group pair from a
     (group, day, exact-cents) frame — the SHARED combine behind the
-    evt_tail_dependence batch query and
-    streaming/tail_dep_maintenance.py (the one-combine-two-paths
-    pattern).  Each side's 0.8 threshold is the exact type-1 order
-    statistic over the SHARED days (rank ceil(0.8n) = (8n+9) div 10,
-    (cents, day) tie-break), exceedance a strict integer compare,
+    evt_tail_dependence batch query and its streaming monitor (the
+    one-combine-two-paths pattern).  Each side's 0.8 threshold is the exact
+    type-1 order statistic over the SHARED days (rank ceil(0.8n) = (8n+9)
+    div 10, (cents, day) tie-break), exceedance a strict integer compare,
     λ̂_U = 2·n_joint/(n_exc1+n_exc2) ONE exact-int division UNROUNDED,
-    when()-gated.  NOTE for streaming: the state must be the DAILY
-    GRID, not folded exceedance counts — late data changes a day's
-    cents, which moves BOTH thresholds and can re-classify every
-    other day's exceedance flags.  Pair frame |groups|²/2 × days —
-    calendar²-bounded."""
+    when()-gated.  NOTE for streaming: the state must be the DAILY GRID, not
+    folded exceedance counts — late data changes a day's cents, which moves
+    BOTH thresholds and can re-classify every other day's exceedance flags.
+    Pair frame |groups|²/2 × days — calendar²-bounded."""
     from pyspark.sql import Window
 
     a = daily.select(
@@ -537,16 +559,15 @@ def spc_from_daily(
 ) -> DataFrame:
     """Shewhart individuals/moving-range control chart from a
     (group, day, exact-cents) frame — the SHARED combine behind the
-    evt_spc_individuals batch query and
-    streaming/spc_maintenance.py (the one-combine-two-paths pattern;
-    extracted as pure code motion, plan-identity verified).  Center =
-    S/n and MR̄ = ΣMR/(n−1) are single exact-integer divisions over
-    the zero-densified calendar spine, the ±2.66·MR̄ limits chain
-    bit-identical doubles, violations are exact counts.  NOTE for
-    streaming: the state must be the DAILY GRID, not folded
-    (center, MR̄, violation) stats — late data on ONE old day changes
-    its two adjacent moving ranges AND the center, which re-flags
-    every day of the group."""
+    evt_spc_individuals batch query and its streaming monitor (the
+    one-combine-two-paths pattern; extracted as pure code motion,
+    plan-identity verified).  Center = S/n and MR̄ = ΣMR/(n−1) are single
+    exact-integer divisions over the zero-densified calendar spine, the
+    ±2.66·MR̄ limits chain bit-identical doubles, violations are exact
+    counts.  NOTE for streaming: the state must be the DAILY GRID, not
+    folded (center, MR̄, violation) stats — late data on ONE old day changes
+    its two adjacent moving ranges AND the center, which re-flags every day
+    of the group."""
     from pyspark.sql import Window
 
     d_col, c_col = F.col(day_col), F.col(cents_col)
@@ -722,7 +743,14 @@ def isotonic_blocks(
     volume; applyInPandas shuffles once on the group key and the O(n)
     sequential sweep runs per group. Groups are event-type-scale (small
     cardinality) — for a high-cardinality group column the same shuffle
-    bounds hold per key."""
+    bounds hold per key.
+
+    NOTE for streaming: the state must be the DAILY GRID, not folded
+    blocks — PAVA blocks are the least incrementally maintainable state
+    of the grid family: a late row raising ONE old day's cents can
+    violate monotonicity against its successor and trigger a merge
+    cascade that rewrites every downstream block, and a raise can also
+    split a previously pooled run by lifting its left edge."""
     import numpy as np
 
     schema = (

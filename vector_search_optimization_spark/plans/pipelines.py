@@ -61,10 +61,7 @@ def analytics_prologue(
     is the within-cluster share — the chunks-per-cluster-and-category
     report behind main-script1.ipynb:1141 c41.
     """
-    # kernel normalize: identical semantics to the expression form, but
-    # Arrow-batched — at reference dims (3072) the interpreted HOF is
-    # minutes, the kernel milliseconds (see SCALING.md)
-    normalized = chunks.withColumn(vector_col, V.l2_normalize_kernel(vector_col))
+    normalized = chunks.withColumn(vector_col, V.l2_normalize(vector_col))
     assigned = nearest_centroid(
         normalized,
         centroids,

@@ -1,8 +1,9 @@
 """Shared scaffold for the GRID-REWRITE streaming monitors.
 
-The family (ewma / holt / runs / seasonal / sax / drawdown) all follow
-one discipline, extracted here (VERDICT r10 item 5): the maintained
-state is a CALENDAR-BOUNDED grid kept as a complete-mode streaming
+The family (ewma / holt / runs / seasonal / sax / spc / isotonic /
+tail-dependence / drawdown / turning points) all follow one
+discipline, extracted here (VERDICT r10 item 5): the maintained state
+is a CALENDAR-BOUNDED grid kept as a complete-mode streaming
 aggregate (|groups × days| rows — dimension-table-sized at any stream
 volume; each micro-batch shuffles only its own map-side-combined
 partials), and every micro-batch the sink rewrites the monitor's
@@ -64,11 +65,20 @@ def start_daily_cents_monitor(
     ts_col: str = "ts",
     value_col: str = "value",
 ) -> StreamingQuery:
-    """The cents-sum specialization shared by ewma/holt/runs/seasonal/
-    sax: state is the running (group, day) value-sum grid; per
-    micro-batch the absorbed grid rounds to exact integer cents
-    (columns ``group_col, d, cents``) and ``combine`` produces the
-    snapshot written to ``out_path``."""
+    """The cents-sum specialization: state is the running (group, day)
+    value-sum grid; per micro-batch the absorbed grid rounds to exact
+    integer cents (columns ``group_col, d, cents``) and ``combine``
+    produces the snapshot written to ``out_path``.
+
+    A batch query's combine is its monitor: passing
+    ``operators.timeseries.ewma_from_daily`` (or ``holt_from_daily``,
+    ``runs_test_from_daily``, ``seasonal_from_daily``, ``spc_from_daily``,
+    ``isotonic_blocks``, ``tail_dependence_from_daily``;
+    ``functools.partial`` binds non-default arguments) keeps that query's
+    export fresh, column-identical to the batch export over the same
+    rows (stream ≡ batch pinned in tests/test_streaming_*.py).  An
+    identity combine snapshots the grid itself, which
+    ``sax_motifs_from_daily`` turns into the batch motifs."""
     day = F.floor(F.unix_timestamp(F.col(ts_col)) / F.lit(86400.0)).cast(
         "long"
     )
