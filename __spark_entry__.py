@@ -13744,11 +13744,7 @@ def evt_poisson_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Theil-Sen rational-export discipline; magnitudes: daily counts
     ≤ ~1e6, n ≤ calendar days, all << 2^63). One combinable (type,
     day) count agg + one per-type agg — calendar-bounded."""
-    e = load_table(spark, sf_dir, "events")
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
+    daily = TS.daily_counts(load_table(spark, sf_dir, "events"))
     agg = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
         F.sum("x").cast("long").alias("s"),
@@ -15469,11 +15465,7 @@ def evt_quadratic_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     exported UNROUNDED. Plan: one (type, day) count shuffle, a
     calendar-bounded per-type grid explode, one combinable sums agg —
     fact-size-independent after the first shuffle."""
-    e = load_table(spark, sf_dir, "events")
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
+    daily = TS.daily_counts(load_table(spark, sf_dir, "events"))
     span = daily.groupBy("event_type").agg(
         F.min("d").alias("mn"), F.max("d").alias("mx")
     )
@@ -16121,8 +16113,9 @@ def evt_cms_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge shape — cells are a fixed 1 KB regardless of corpus size);
     the audit joins the exploded top-20 probe frame to the broadcast
     cell frame — at 100 TB the build stays a single shuffle of bounded
-    partial sketches. Sketch primitives shared with the streaming
-    maintenance twin via operators/sketches.py."""
+    partial sketches. The sketch build is also the streaming monitor:
+    operators/sketches.cms_cells over the stream, exported as-is by
+    streaming/grid_monitor.start_grid_rewrite_monitor."""
     from vector_search_optimization_spark.operators import sketches as SK
 
     e = load_table(spark, sf_dir, "events")
@@ -19204,23 +19197,16 @@ def evt_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     plateau days count as neither — documented, deterministic);
     expected exports as ONE exact-integer division (unrounded), z
     rounds 6dp (sqrt-derived irrational). Plan: one (type, day) count
-    shuffle, then the SHARED combine
-    operators/timeseries.turning_points_from_daily (also the
-    streaming twin's snapshot read —
-    streaming/turning_points_maintenance.py; extraction is pure code
-    motion, executedPlan verified identical): a calendar-bounded grid
-    explode, one lag/lead window over ≤|days| rows per type, one
-    combinable agg."""
-    from vector_search_optimization_spark.operators.timeseries import (
-        turning_points_from_daily,
+    shuffle (operators/timeseries.daily_counts), then the SHARED combine
+    operators/timeseries.turning_points_from_daily: a calendar-bounded
+    grid explode, one lag/lead window over ≤|days| rows per type, one
+    combinable agg. The same two functions are the streaming monitor —
+    ``daily_counts`` over the stream, the combine as the snapshot of
+    streaming/grid_monitor.start_grid_rewrite_monitor (stream ≡ batch
+    pinned in tests/test_streaming_turning.py)."""
+    return TS.turning_points_from_daily(
+        TS.daily_counts(load_table(spark, sf_dir, "events"))
     )
-
-    e = load_table(spark, sf_dir, "events")
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
-    return turning_points_from_daily(daily)
 
 
 _TURNING_POINTS_SQL = """
@@ -20777,14 +20763,11 @@ def evt_type_emd(spark: SparkSession, sf_dir: str) -> DataFrame:
     points), so the grid lead() window, the 5-row broadcast
     type×grid densification, the per-type cumulative windows, and the
     |pairs|×|grid| self-join are all constant-size at any corpus
-    size. The (type, cents) count frame is also a pure additive fold
-    — streaming/emd_maintenance.py maintains it continuously and
-    this same combine reads any snapshot."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    counts = e.groupBy(
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
+    size. The (type, cents) count frame (DIST.cents_counts) is also a
+    pure additive fold — the same function over the stream, run by
+    streaming/grid_monitor.start_grid_rewrite_monitor, maintains it
+    continuously and this same combine reads any snapshot."""
+    counts = DIST.cents_counts(load_table(spark, sf_dir, "events"))
     return (
         DIST.emd_pairs_from_counts(counts)
         .select(

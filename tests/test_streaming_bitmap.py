@@ -1,5 +1,6 @@
 """Incrementally-maintained exact bitmap distinct table
-(streaming/bitmap_maintenance.py)."""
+(streaming/bitmap_maintenance.py). The fold's exactly-once protocol is
+pinned for every merge in tests/test_agg_maintenance.py."""
 
 from __future__ import annotations
 
@@ -11,6 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.streaming import bitmap_maintenance as BM
+from vector_search_optimization_spark.streaming.agg_maintenance import (
+    stream_maintain_table,
+)
 
 
 @pytest.fixture()
@@ -62,7 +66,9 @@ def test_stream_fold_matches_batch_distincts(spark, scratch):
         .option("maxFilesPerTrigger", 1)
         .parquet(scratch["drop"] + "/*")
     )
-    q = BM.stream_maintain_bitmaps(stream, scratch["table"], scratch["ckpt"])
+    q = stream_maintain_table(
+        stream, scratch["table"], scratch["ckpt"], BM.merge_bitmaps
+    )
     try:
         q.processAllAvailable()
         b.coalesce(1).write.parquet(scratch["drop"] + "/b1")
@@ -94,29 +100,3 @@ def test_stream_fold_matches_batch_distincts(spark, scratch):
     # must NOT inflate dau (the additive-fold failure mode)
     d1 = min(got)
     assert got[d1][0] == 3
-
-
-def test_replayed_epoch_is_idempotent(spark, scratch):
-    df = _mkdf(spark, [(_ts(1), 1), (_ts(1), 2)])
-    assert BM.fold_batch_into_bitmaps(df, 0, scratch["table"])
-    assert BM.fold_batch_into_bitmaps(df, 1, scratch["table"])
-    before = {
-        (r.day_idx, r.bucket): (bytes(r.bm), r.n_events)
-        for r in spark.read.parquet(scratch["table"]).collect()
-    }
-    assert not BM.fold_batch_into_bitmaps(df, 1, scratch["table"])
-    after = {
-        (r.day_idx, r.bucket): (bytes(r.bm), r.n_events)
-        for r in spark.read.parquet(scratch["table"]).collect()
-    }
-    assert after == before
-    # n_events IS additive (2 events folded twice legitimately = 4);
-    # the replayed third fold added nothing
-    assert list(after.values())[0][1] == 4
-
-
-def test_foreign_checkpoint_lineage_refused(spark, scratch):
-    df = _mkdf(spark, [(_ts(1), 1)])
-    assert BM.fold_batch_into_bitmaps(df, 0, scratch["table"], scope="alpha")
-    with pytest.raises(ValueError, match="different"):
-        BM.fold_batch_into_bitmaps(df, 1, scratch["table"], scope="beta")

@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import sketches as SK
 from vector_search_optimization_spark.sources import load_table
-from vector_search_optimization_spark.streaming.cms_maintenance import (
-    stream_cms_monitor,
+from vector_search_optimization_spark.streaming.grid_monitor import (
+    start_grid_rewrite_monitor,
 )
 
 
@@ -53,10 +53,11 @@ def test_stream_cms_equals_batch_with_split_users(spark, sf_small, tmpdirs):
         .option("maxFilesPerTrigger", 1)
         .parquet(drop)
     )
-    q = stream_cms_monitor(
-        stream,
+    q = start_grid_rewrite_monitor(
+        SK.cms_cells(stream, "user_id"),
         out_path=f"{tmpdirs}/cells",
         checkpoint_dir=f"{tmpdirs}/ckpt",
+        snapshot=lambda cells: cells,
     )
     try:
         q.processAllAvailable()

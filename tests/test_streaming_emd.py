@@ -12,11 +12,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators.distribution import (
+    cents_counts,
     emd_pairs_from_counts,
 )
 from vector_search_optimization_spark.sources import load_table
-from vector_search_optimization_spark.streaming.emd_maintenance import (
-    stream_emd_counts_monitor,
+from vector_search_optimization_spark.streaming.grid_monitor import (
+    start_grid_rewrite_monitor,
 )
 
 
@@ -67,10 +68,11 @@ def test_stream_emd_counts_equal_batch_with_split_types(
         .option("maxFilesPerTrigger", 1)
         .parquet(drop)
     )
-    q = stream_emd_counts_monitor(
-        stream,
+    q = start_grid_rewrite_monitor(
+        cents_counts(stream),
         out_path=f"{tmpdirs}/counts",
         checkpoint_dir=f"{tmpdirs}/ckpt",
+        snapshot=lambda counts: counts,
     )
     try:
         q.processAllAvailable()

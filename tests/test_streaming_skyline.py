@@ -1,7 +1,8 @@
 """Streaming skyline maintenance must equal the batch two-phase
 skyline once the stream has absorbed the same points (the merge
-property skyline(A ∪ B) = skyline(skyline(A) ∪ B)), with exactly-once
-replay behavior on the epoch markers."""
+property skyline(A ∪ B) = skyline(skyline(A) ∪ B)). The fold's
+exactly-once protocol is pinned for every merge in
+tests/test_agg_maintenance.py."""
 
 from __future__ import annotations
 
@@ -13,9 +14,11 @@ from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import ranking_stats as RKS
 from vector_search_optimization_spark.sources import load_table
+from vector_search_optimization_spark.streaming.agg_maintenance import (
+    stream_maintain_table,
+)
 from vector_search_optimization_spark.streaming.skyline_maintenance import (
-    fold_batch_into_skyline,
-    stream_maintain_skyline,
+    merge_skyline,
 )
 
 
@@ -60,10 +63,11 @@ def test_stream_front_equals_batch(spark, sf_small, tmpdirs):
         .option("maxFilesPerTrigger", 1)
         .parquet(drop)
     )
-    q = stream_maintain_skyline(
+    q = stream_maintain_table(
         stream,
         table_path=f"{tmpdirs}/front",
-        checkpoint_dir=f"{tmpdirs}/ckpt",
+        checkpoint=f"{tmpdirs}/ckpt",
+        merge=merge_skyline,
     )
     try:
         q.processAllAvailable()
@@ -72,56 +76,3 @@ def test_stream_front_equals_batch(spark, sf_small, tmpdirs):
 
     got = _front(spark.read.parquet(f"{tmpdirs}/front"))
     assert got == want and len(got) > 0
-
-
-def test_fold_replay_is_idempotent(spark, tmpdirs):
-    """Replaying an epoch is a no-op; a dominated point arriving later
-    never enters the front, and a dominating one evicts."""
-    table = f"{tmpdirs}/front2"
-    b0 = spark.createDataFrame(
-        [(1, 100, 5), (2, 200, 9)], "p_partkey long, price_cents long, size long"
-    )
-    assert fold_batch_into_skyline(b0, 0, table) is True
-    assert fold_batch_into_skyline(b0, 0, table) is False  # replay no-op
-    first = _front(spark.read.parquet(table))
-    assert first == {(1, 100, 5), (2, 200, 9)}
-
-    # (3) dominated by (1); (4) dominates BOTH existing points
-    b1 = spark.createDataFrame(
-        [(3, 150, 4), (4, 90, 9)], "p_partkey long, price_cents long, size long"
-    )
-    assert fold_batch_into_skyline(b1, 1, table) is True
-    assert _front(spark.read.parquet(table)) == {(4, 90, 9)}
-
-
-def test_fold_refuses_foreign_lineage(spark, tmpdirs):
-    table = f"{tmpdirs}/front3"
-    b0 = spark.createDataFrame(
-        [(1, 100, 5)], "p_partkey long, price_cents long, size long"
-    )
-    fold_batch_into_skyline(b0, 0, table, scope="aaaa1111")
-    with pytest.raises(ValueError, match="lineage"):
-        fold_batch_into_skyline(b0, 1, table, scope="bbbb2222")
-
-
-def test_interrupted_swap_recovers_front(spark, tmpdirs):
-    """A kill between commit_swap's two renames leaves the front under
-    .__old__ — the replayed fold must restore and merge, not
-    re-initialize from one batch (which would resurrect dominated
-    points absent from the batch)."""
-    import os
-
-    table = f"{tmpdirs}/front4"
-    b0 = spark.createDataFrame(
-        [(1, 100, 5), (2, 300, 9)], "p_partkey long, price_cents long, size long"
-    )
-    fold_batch_into_skyline(b0, 0, table)
-    os.rename(table, table + ".__old__")  # crash window
-    b1 = spark.createDataFrame(
-        [(3, 200, 7)], "p_partkey long, price_cents long, size long"
-    )
-    assert fold_batch_into_skyline(b1, 1, table) is True
-    got = _front(spark.read.parquet(table))
-    # all three are mutually non-dominated; losing history would have
-    # dropped points 1 and 2
-    assert got == {(1, 100, 5), (3, 200, 7), (2, 300, 9)}

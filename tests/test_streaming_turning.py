@@ -15,8 +15,8 @@ from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import timeseries as TS
 from vector_search_optimization_spark.sources import load_table
-from vector_search_optimization_spark.streaming.turning_points_maintenance import (  # noqa: E501
-    stream_turning_points_monitor,
+from vector_search_optimization_spark.streaming.grid_monitor import (
+    start_grid_rewrite_monitor,
 )
 
 
@@ -61,10 +61,11 @@ def test_stream_turning_equals_batch_with_split_days(
         .option("maxFilesPerTrigger", 1)
         .parquet(drop)
     )
-    q = stream_turning_points_monitor(
-        stream,
+    q = start_grid_rewrite_monitor(
+        TS.daily_counts(stream),
         out_path=f"{tmpdirs}/test",
         checkpoint_dir=f"{tmpdirs}/ckpt",
+        snapshot=TS.turning_points_from_daily,
     )
     try:
         q.processAllAvailable()
@@ -111,10 +112,11 @@ def test_stream_turning_late_rows_flip_neighbor_extremum(spark, tmpdirs):
         .option("maxFilesPerTrigger", 1)
         .parquet(drop)
     )
-    q = stream_turning_points_monitor(
-        stream,
+    q = start_grid_rewrite_monitor(
+        TS.daily_counts(stream),
         out_path=f"{tmpdirs}/test2",
         checkpoint_dir=f"{tmpdirs}/ckpt2",
+        snapshot=TS.turning_points_from_daily,
     )
     try:
         q.processAllAvailable()

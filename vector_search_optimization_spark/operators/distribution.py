@@ -10,11 +10,12 @@ production row counts), then ONE cast-to-double division by
 n_a·n_b·100. Both engines run the identical exact-integer pipeline, so
 the export needs no rounding.
 
-The count frame (group, cents, n) is a pure ADDITIVE aggregate — the
-counts of a union are the sums of counts, the mergeable-sketch property
-— which makes this combine the batch half of a streaming monitor
-(streaming/emd_maintenance.py): the stream maintains the counts, this
-function turns any snapshot into pairwise distances.
+The count frame (group, cents, n) of ``cents_counts`` is a pure
+ADDITIVE aggregate — the counts of a union are the sums of counts, the
+mergeable-sketch property — so the same function run over a stream
+(``streaming.grid_monitor.start_grid_rewrite_monitor``) maintains it,
+and ``emd_pairs_from_counts`` turns any snapshot into pairwise
+distances.
 
 Scale posture: the support grid is DOMAIN-bounded (distinct cent values
 of a 2-decimal bounded measure — ≤ ~56k points for the events table),
@@ -35,7 +36,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["emd_pairs_from_counts"]
+__all__ = ["cents_counts", "emd_pairs_from_counts"]
+
+
+def cents_counts(
+    df: DataFrame, group_col: str = "event_type", value_col: str = "value"
+) -> DataFrame:
+    """(group, cents, n): rows per group and exact cent value, nulls
+    dropped — ONE definition for evt_type_emd and its streaming monitor.
+
+    Over a stream it is a valid incremental state as-is (additive
+    counts). Kept in complete mode, the state is DOMAIN-bounded
+    (distinct cent values of a 2-decimal bounded measure × |groups| —
+    ≤ ~280k rows for the events table at any stream volume); each
+    micro-batch shuffles only its map-side-combined partials, and
+    computing EMD on demand from a snapshot is the constant-size grid
+    pipeline of ``emd_pairs_from_counts``."""
+    return (
+        df.where(F.col(value_col).isNotNull())
+        .groupBy(
+            group_col,
+            F.round(F.col(value_col) * 100).cast("long").alias("cents"),
+        )
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+    )
 
 
 def emd_pairs_from_counts(

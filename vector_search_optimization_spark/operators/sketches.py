@@ -1,6 +1,7 @@
 """Count-min sketch primitives shared by the batch audit query
-(`__spark_entry__.evt_cms_audit`) and the streaming maintenance twin
-(streaming/cms_maintenance.py).
+(`__spark_entry__.evt_cms_audit`) and its streaming monitor
+(``cms_cells`` over a stream, run by
+``streaming.grid_monitor.start_grid_rewrite_monitor``).
 
 The sketch is d×w integer counters with d pairwise-independent
 universal hashes h_i(k) = ((a_i·(k mod KMOD) + b_i) mod P) mod w.
@@ -60,7 +61,15 @@ def cms_hash_rows(key: Column) -> Column:
 
 
 def cms_cells(df: DataFrame, key_col: str) -> DataFrame:
-    """Build the sketch: (i, bucket, cell) counts — one combinable agg."""
+    """Build the sketch: (i, bucket, cell) counts — one combinable agg.
+
+    Over a stream the cells ARE a valid incremental state: pure additive
+    counters, the sketch of a union is the element-wise sum. Kept in
+    complete mode the state is a FIXED d·w ≤ 1024 rows at any stream
+    volume, each micro-batch shuffles only map-side-combined partial
+    sketches, and an identity snapshot exports the readable cells frame
+    that ``cms_point_estimates`` broadcast-joins (stream ≡ batch pinned
+    in tests/test_streaming_cms.py)."""
     return (
         df.select(F.explode(cms_hash_rows(F.col(key_col))).alias("h"))
         .groupBy(F.col("h.i").alias("i"), F.col("h.bucket").alias("bucket"))

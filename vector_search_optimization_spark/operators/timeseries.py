@@ -5,7 +5,9 @@ two execution paths).
 A ``*_from_daily`` combine (and ``isotonic_blocks``) runs continuously
 by handing it to ``streaming.grid_monitor.start_daily_cents_monitor``:
 the stream keeps the (group, day) cents grid and every micro-batch
-rewrites the export from the absorbed grid with the combine.  Each
+rewrites the export from the absorbed grid with the combine
+(``turning_points_from_daily`` reads the ``daily_counts`` count grid
+instead, through ``start_grid_rewrite_monitor``).  Each
 docstring says why the grid, not a folded running state, is the only
 valid incremental state for that statistic."""
 
@@ -17,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
+    "daily_counts",
     "drawdown_from_daily",
     "ewma_from_daily",
     "holt_from_daily",
@@ -637,6 +640,19 @@ def spc_from_daily(
     )
 
 
+def daily_counts(
+    events: DataFrame, group_col: str = "event_type", ts_col: str = "ts"
+) -> DataFrame:
+    """(group, d, x): events per group and epoch day — the COUNT grid
+    behind evt_turning_points, and its streaming monitor's state when
+    run over a stream (calendar-bounded: |groups × days| rows, each
+    micro-batch shuffles only its map-side-combined count partials)."""
+    day = F.floor(F.unix_timestamp(F.col(ts_col)) / F.lit(86400.0)).cast("long")
+    return events.groupBy(F.col(group_col), day.alias("d")).agg(
+        F.count(F.lit(1)).cast("long").alias("x")
+    )
+
+
 def turning_points_from_daily(
     daily: DataFrame,
     group_col: str = "event_type",
@@ -645,11 +661,11 @@ def turning_points_from_daily(
 ) -> DataFrame:
     """Kendall-Stuart turning-point randomness test from a
     (group, day, exact-count) frame — the SHARED combine behind the
-    evt_turning_points batch query and
-    streaming/turning_points_maintenance.py (the one-combine-two-paths
-    pattern; extracted as pure code motion, plan-identity verified).
-    Note the grid is a COUNT grid, not cents — the scaffold's
-    count-grid member.  Strict local peaks/troughs on the
+    evt_turning_points batch query and its streaming monitor
+    (``daily_counts`` over the stream, this combine as the snapshot of
+    ``streaming.grid_monitor.start_grid_rewrite_monitor``; extracted as
+    pure code motion, plan-identity verified).  Note the grid is a
+    COUNT grid, not cents.  Strict local peaks/troughs on the
     zero-densified calendar spine vs E = 2(n−2)/3, V = (16n−29)/90;
     tallies exact ints, expected ONE exact-int division UNROUNDED,
     z 6dp.  NOTE for streaming: the state must be the DAILY GRID, not

@@ -14,7 +14,19 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def default_cpus() -> str:
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def default_driver_memory() -> str:
+    """``$SPARK_DRIVER_MEMORY``, else a quarter of physical memory
+    clamped to [4g, 32g] — the heap must leave room for the Python
+    workers and the OS on a small machine."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    quarter_gb = min(32, max(4, total // 4 // 2**30))
+    return os.environ.get("SPARK_DRIVER_MEMORY") or f"{quarter_gb}g"
 
 
 def get_spark(
@@ -25,12 +37,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    On a real cluster, pass ``master=None`` with external submit configs; in
-    tests we run ``local[$SPARK_GRAFT_CPUS]``. Shuffle partitions default to
-    the core count locally — on a cluster AQE coalesces from a higher initial
-    number, so callers should raise it (rule of thumb: 2-3x total cores).
+    On a real cluster, pass ``master=None`` with external submit configs;
+    locally we run ``local[default_cpus()]`` with a
+    ``default_driver_memory()`` heap. Shuffle partitions default to the core
+    count locally — on a cluster AQE coalesces from a higher initial number,
+    so callers should raise it (rule of thumb: 2-3x total cores).
     """
-    cpus = DEFAULT_CPUS
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
@@ -49,7 +62,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -11,12 +11,13 @@ needs (DAU, WAU, per-type actives, audience overlap) then reads the
 bitmap table, never the raw event history, and stays EXACT — the
 property approx sketches trade away.
 
-Exactly-once: reuses agg_maintenance's epoch-marker + atomic-swap
-protocol verbatim (an OR applied twice is idempotent at the CELL level,
-but the companion n_events count is additive, so replay protection is
-still required; sharing one protocol also keeps the recovery story
-uniform). Same local-filesystem contract — on a lake store this fold is
-a table-format MERGE with the txn log's batchId dedup.
+Exactly-once: ``merge_bitmaps`` runs under agg_maintenance's table fold
+(``stream_maintain_table(stream, table, checkpoint, merge_bitmaps)``)
+with its epoch-marker + atomic-swap protocol (an OR applied twice is
+idempotent at the CELL level, but the companion n_events count is
+additive, so replay protection is still required). Same local-filesystem
+contract — on a lake store this fold is a table-format MERGE with the
+txn log's batchId dedup.
 
 Scale notes (100 TB): each micro-batch shuffles only its own
 (day, bucket) bitmap partials — ≤ 4 KiB per cell regardless of how many
@@ -30,18 +31,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-
-from ..sources.writers import commit_swap
-from .agg_maintenance import (
-    _marker_scopes,
-    _require_local,
-    _scope_tag,
-    committed_epoch,
-    recover_interrupted_swap,
-)
-
-import os
 
 
 def day_bucket_bitmaps(events: DataFrame, id_col: str = "user_id") -> DataFrame:
@@ -63,69 +52,24 @@ def day_bucket_bitmaps(events: DataFrame, id_col: str = "user_id") -> DataFrame:
     )
 
 
-def fold_batch_into_bitmaps(
-    batch_df: DataFrame,
-    epoch_id: int,
-    table_path: str,
-    id_col: str = "user_id",
-    scope: str = "default",
-) -> bool:
-    """OR one micro-batch's (day, bucket) bitmaps into the table; returns
-    False when the epoch was already committed (replay). The merge is a
-    unionByName + re-aggregate (bitmap_or_agg over the ≤2 rows per cell)
-    — Spark exposes the bitmap OR only as an aggregate, and the union
-    form needs no join and no null-coalescing of binary columns."""
-    _require_local(table_path)
-    recover_interrupted_swap(table_path)
-    seen = _marker_scopes(table_path)
-    if seen and scope not in seen:
-        raise ValueError(
-            f"bitmap table {table_path} was built by a different "
-            "query/checkpoint lineage — reset the table together with the "
-            "checkpoint, or keep the original checkpoint"
-        )
-    if epoch_id <= committed_epoch(table_path, scope):
-        return False
-    spark = batch_df.sparkSession
+def merge_bitmaps(
+    base: DataFrame | None, batch_df: DataFrame, id_col: str = "user_id"
+) -> DataFrame:
+    """OR one micro-batch's (day, bucket) bitmaps into ``base``. The
+    merge is a unionByName + re-aggregate (bitmap_or_agg over the ≤2
+    rows per cell) — Spark exposes the bitmap OR only as an aggregate,
+    and the union form needs no join and no null-coalescing of binary
+    columns."""
     partial = day_bucket_bitmaps(batch_df, id_col)
-    if os.path.exists(table_path):
-        base = spark.read.parquet(table_path)
-        merged = (
-            base.unionByName(partial)
-            .groupBy("day_idx", "bucket")
-            .agg(
-                F.expr("bitmap_or_agg(bm)").alias("bm"),
-                F.sum("n_events").alias("n_events"),
-            )
-        )
-    else:
-        merged = partial
-    staging = table_path.rstrip("/") + ".__staging__"
-    merged.write.mode("overwrite").parquet(staging)
-    open(os.path.join(staging, f"_epoch-{scope}-{epoch_id}"), "w").write("ok")
-    commit_swap(spark, staging, table_path, require_base=False)
-    return True
-
-
-def stream_maintain_bitmaps(
-    stream_df: DataFrame,
-    table_path: str,
-    checkpoint: str,
-    id_col: str = "user_id",
-) -> StreamingQuery:
-    """Keep the (day, bucket) bitmap table current against an event
-    stream. Scope-bound to ``checkpoint`` like agg_maintenance."""
-    _require_local(table_path)
-    scope = _scope_tag(checkpoint)
+    if base is None:
+        return partial
     return (
-        stream_df.writeStream.foreachBatch(
-            lambda batch_df, epoch_id: fold_batch_into_bitmaps(
-                batch_df, epoch_id, table_path, id_col=id_col, scope=scope
-            )
+        base.unionByName(partial)
+        .groupBy("day_idx", "bucket")
+        .agg(
+            F.expr("bitmap_or_agg(bm)").alias("bm"),
+            F.sum("n_events").alias("n_events"),
         )
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .start()
     )
 
 

@@ -53,7 +53,6 @@ def stream_dedup_against_corpus(
     shingle_n: int = 3,
     seed: int = 42,
     checkpoint: str | None = None,
-    trigger_available_now: bool = False,
 ) -> StreamingQuery:
     """Start the maintenance stream. ``index_path`` must be pre-seeded
     with the existing corpus's band rows (dedup.minhash_band_rows,
@@ -94,6 +93,4 @@ def stream_dedup_against_corpus(
     writer = stream_docs.writeStream.foreachBatch(_fold).outputMode("append")
     if checkpoint is not None:
         writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
     return writer.start()

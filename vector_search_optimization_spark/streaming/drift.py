@@ -6,7 +6,9 @@ reference cohort's bucket profile is computed ONCE (batch), and the
 event stream maintains a running (group, bucket) count via the
 streaming state store; every micro-batch the tiny count frame joins the
 static reference profile and the SHARED ``psi_from_counts`` combine
-rewrites the latest per-group PSI scores. Batch and stream agree
+rewrites the latest per-group PSI scores (the KS monitor does the same
+with per-value counts). Both write through
+``grid_monitor.start_grid_rewrite_monitor``. Batch and stream agree
 exactly once the stream has absorbed the same rows
 (tests/test_streaming_drift.py).
 
@@ -24,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.drift import bucketize, ks_from_value_counts, psi_from_counts
+from .grid_monitor import start_grid_rewrite_monitor
 
 __all__ = ["stream_psi_monitor", "stream_ks_monitor"]
 
@@ -57,7 +60,7 @@ def stream_psi_monitor(
     )
     counts = bucketed.groupBy(group_col, "bucket").count()
 
-    def _sink(batch_df: DataFrame, _epoch: int) -> None:
+    def _snapshot(batch_df: DataFrame) -> DataFrame:
         cur = batch_df.withColumnRenamed("count", "n_cur")
         joined = ref_counts.join(cur, [group_col, "bucket"], "full").select(
             F.col(group_col),
@@ -65,16 +68,9 @@ def stream_psi_monitor(
             F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
             F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
         )
-        psi_from_counts(joined, group_col).orderBy(group_col).write.mode(
-            "overwrite"
-        ).parquet(out_path)
+        return psi_from_counts(joined, group_col).orderBy(group_col)
 
-    return (
-        counts.writeStream.outputMode("complete")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return start_grid_rewrite_monitor(counts, out_path, checkpoint_dir, _snapshot)
 
 
 def stream_ks_monitor(
@@ -96,39 +92,32 @@ def stream_ks_monitor(
     stream-after-absorbing-rows ≡ batch by construction
     (tests/test_streaming_drift.py pins it).
 
-    ``ref_counts``: (group_col, value_col, n_ref) from the reference
-    cohort — `ref.groupBy(group, value).count()`. Groups the stream has
-    not reached yet (or reference-only groups) are dropped by the
-    combine's n>0 guard, mirroring batch semantics. Continuous
-    high-cardinality value columns should be quantized upstream (the
-    statistic is then exact on the quantized grid — same contract as
-    batch)."""
+    ``ref_counts``: the reference cohort's per-value counts, columns
+    exactly (group_col, value_col, n_ref) —
+    ``ref.groupBy(group, value).count()`` with ``count`` renamed to
+    ``n_ref``. Groups the stream has not reached yet (or reference-only
+    groups) are dropped by the combine's n>0 guard, mirroring batch
+    semantics. Continuous high-cardinality value columns should be
+    quantized upstream (the statistic is then exact on the quantized
+    grid — same contract as batch)."""
     counts = (
         stream_df.select(group_col, value_col)
         .where(F.col(value_col).isNotNull())
         .groupBy(group_col, value_col)
         .count()
     )
-    ref = ref_counts.withColumnRenamed("count", "n_ref") if (
-        "count" in ref_counts.columns
-    ) else ref_counts
 
-    def _sink(batch_df: DataFrame, _epoch: int) -> None:
+    def _snapshot(batch_df: DataFrame) -> DataFrame:
         cur = batch_df.withColumnRenamed("count", "n_cur")
-        per_v = ref.join(cur, [group_col, value_col], "full").select(
+        per_v = ref_counts.join(cur, [group_col, value_col], "full").select(
             F.col(group_col),
             F.col(value_col),
             F.coalesce("n_ref", F.lit(0)).cast("long").alias("n_ref"),
             F.coalesce("n_cur", F.lit(0)).cast("long").alias("n_cur"),
         )
-        ks_from_value_counts(
+        return ks_from_value_counts(
             per_v, group_col, value_col, "n_ref", "n_cur",
             a_name="n_ref_total", b_name="n_cur_total",
-        ).orderBy(group_col).write.mode("overwrite").parquet(out_path)
+        ).orderBy(group_col)
 
-    return (
-        counts.writeStream.outputMode("complete")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return start_grid_rewrite_monitor(counts, out_path, checkpoint_dir, _snapshot)

@@ -1,27 +1,39 @@
-"""Shared scaffold for the GRID-REWRITE streaming monitors.
+"""The one snapshot writer behind every complete-mode streaming monitor.
 
-The family (ewma / holt / runs / seasonal / sax / spc / isotonic /
-tail-dependence / drawdown / turning points) all follow one
-discipline, extracted here (VERDICT r10 item 5): the maintained state
-is a CALENDAR-BOUNDED grid kept as a complete-mode streaming
-aggregate (|groups × days| rows — dimension-table-sized at any stream
-volume; each micro-batch shuffles only its own map-side-combined
-partials), and every micro-batch the sink rewrites the monitor's
-export from the ABSORBED grid via the monitor's batch combine
-(operators/timeseries.*_from_daily) — so stream-after-absorbing-rows
-≡ batch by construction.  A folded per-group running state would be
-wrong for every member: a day keeps receiving events across
-micro-batches (its sum is not final until read time), and late data
-landing on a PAST day can move the median/quartile-cuts/trend-
-neighbors/running-peak that downstream rows depend on — only the grid
-is a valid incremental state.
+A monitor is a streaming aggregate kept in complete mode plus a
+snapshot: every micro-batch ``start_grid_rewrite_monitor`` overwrites
+the monitor's export with ``snapshot(absorbed aggregate)``. Handing it
+a batch query's own aggregate over the stream, and that query's own
+combine as the snapshot, makes stream-after-absorbing-rows ≡ batch by
+construction. Complete mode is the right output mode for all of them:
+the state is bounded by a calendar, a value domain or a fixed sketch,
+never by stream volume, and the sink needs the WHOLE aggregate to
+rewrite a readable export (an update-mode delta would lose the
+unchanged rows on overwrite).
 
-Rounding to exact cents happens in the SINK (on the absorbed grid),
-never in the state fold — partial-batch roundings would not compose.
+Whether the aggregate may be read as-is or only through a rewrite is a
+property of the state, documented on the aggregate or the combine, not
+of this writer:
 
-The additive-fold monitors (cms/emd — where cells of a union ARE the
-sum of cells, so the aggregate itself is the state) are deliberately
-NOT this family and keep their own scaffolding.
+- additive state — cells of a union are the sum of cells, so the
+  aggregate itself is the export and the snapshot is the identity or a
+  join against a static reference: ``sketches.cms_cells`` (count-min
+  sketch), ``distribution.cents_counts`` (the EMD count frame),
+  streaming/drift.py's PSI and KS counts;
+- grid state — ewma / holt / runs / seasonal / sax / spc / isotonic /
+  tail-dependence / drawdown / turning points (VERDICT r10 item 5):
+  the state is a CALENDAR-BOUNDED (group, day) grid (|groups × days|
+  rows — dimension-table-sized at any stream volume; each micro-batch
+  shuffles only its own map-side-combined partials) and the snapshot
+  is the statistic's ``operators/timeseries.*_from_daily`` combine.
+  A folded per-group running state would be wrong for every member: a
+  day keeps receiving events across micro-batches (its sum is not
+  final until read time), and late data landing on a PAST day can move
+  the median/quartile-cuts/trend-neighbors/running-peak that
+  downstream rows depend on — only the grid is a valid incremental
+  state. Rounding to exact cents happens in the SNAPSHOT (on the
+  absorbed grid), never in the state fold — partial-batch roundings
+  would not compose.
 """
 
 from __future__ import annotations
@@ -41,9 +53,10 @@ def start_grid_rewrite_monitor(
     checkpoint_dir: str,
     snapshot: Callable[[DataFrame], DataFrame],
 ) -> StreamingQuery:
-    """Run ``grid`` (a streaming complete-mode aggregate) and, per
-    micro-batch, overwrite ``out_path`` with ``snapshot(absorbed
-    grid)`` — the monitor's batch-identical export."""
+    """Run ``grid`` (a streaming aggregate, kept in complete mode) and,
+    per micro-batch, overwrite ``out_path`` with ``snapshot(absorbed
+    grid)`` — the monitor's batch-identical export. An identity
+    snapshot (``lambda g: g``) exports the aggregate itself."""
 
     def _sink(batch_df: DataFrame, _epoch: int) -> None:
         snapshot(batch_df).write.mode("overwrite").parquet(out_path)

@@ -9,10 +9,13 @@ table. A point once dominated can never rejoin the front (dominance is
 monotone under insertion — this maintenance supports inserts, not
 deletes; deletions invalidate the pruning and need the full recompute).
 
-Exactly-once across foreachBatch replays via the same
-``_epoch-{scope}-N`` marker + commit_swap discipline as
-agg_maintenance (the marker installs atomically WITH the data, and a
-crash between commit_swap's renames recovers from ``.__old__``).
+Exactly-once across foreachBatch replays: ``merge_skyline`` runs
+under agg_maintenance's table fold
+(``stream_maintain_table(stream, table, checkpoint, merge_skyline)``),
+whose ``_epoch-{scope}-N`` marker installs atomically WITH the data
+and whose recovery restores the front from ``.__old__`` after a crash
+between commit_swap's renames. The stream itself is a stateless
+passthrough; the TABLE is the state.
 
 Scale notes: state is the FRONT (for a 2-D integer lattice it is
 bounded by the number of distinct price values — lattice-bounded, not
@@ -22,83 +25,25 @@ batch's local fronts parallelize) plus one union-sized survivors pass.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.ranking_stats import skyline_survivors_2d, two_phase_skyline
-from ..sources.writers import commit_swap
-from .agg_maintenance import (
-    _marker_scopes,
-    _require_local,
-    _scope_tag,
-    committed_epoch,
-    recover_interrupted_swap,
-)
 
-__all__ = ["fold_batch_into_skyline", "stream_maintain_skyline"]
+__all__ = ["merge_skyline"]
 
 
-def fold_batch_into_skyline(
+def merge_skyline(
+    base: DataFrame | None,
     batch_df: DataFrame,
-    epoch_id: int,
-    table_path: str,
     price_col: str = "price_cents",
     size_col: str = "size",
-    scope: str = "default",
-) -> bool:
-    """Merge one micro-batch's points into the maintained front;
-    returns False when the epoch was already committed (replay).
-    Raises if the table belongs to a different query lineage."""
-    _require_local(table_path)
-    recover_interrupted_swap(table_path)
-    seen = _marker_scopes(table_path)
-    if seen and scope not in seen:
-        raise ValueError(
-            f"skyline table {table_path} was built by a different "
-            "query/checkpoint lineage — reset the table together with the "
-            "checkpoint, or keep the original checkpoint"
-        )
-    if epoch_id <= committed_epoch(table_path, scope):
-        return False
-    spark = batch_df.sparkSession
+) -> DataFrame:
+    """Merge one micro-batch's points into the maintained front
+    (insert-only — see module docstring): the batch's own two-phase
+    front, then one survivors pass over its union with ``base``."""
     partial = two_phase_skyline(batch_df, price_col, size_col)
-    if os.path.exists(table_path):
-        base = spark.read.parquet(table_path).select(*batch_df.columns)
-        merged = skyline_survivors_2d(
-            base.unionByName(partial), price_col, size_col
-        )
-    else:
-        merged = partial
-    staging = table_path.rstrip("/") + ".__staging__"
-    merged.write.mode("overwrite").parquet(staging)
-    open(os.path.join(staging, f"_epoch-{scope}-{epoch_id}"), "w").write("ok")
-    commit_swap(spark, staging, table_path, require_base=False)
-    return True
-
-
-def stream_maintain_skyline(
-    stream_df: DataFrame,
-    table_path: str,
-    checkpoint_dir: str,
-    price_col: str = "price_cents",
-    size_col: str = "size",
-) -> StreamingQuery:
-    """Start the maintenance: each micro-batch folds its points into
-    the front at ``table_path`` (insert-only — see module docstring).
-    The stream itself is stateless (append passthrough); the TABLE is
-    the state, checkpoint-scoped for replay idempotence."""
-    scope = _scope_tag(checkpoint_dir)
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        fold_batch_into_skyline(
-            batch_df, epoch_id, table_path, price_col, size_col, scope
-        )
-
-    return (
-        stream_df.writeStream.outputMode("append")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    if base is None:
+        return partial
+    return skyline_survivors_2d(
+        base.select(*batch_df.columns).unionByName(partial), price_col, size_col
     )
