@@ -46,6 +46,29 @@ def _oracle_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
+# The daily grid's SQL twin, one text per CTE, spliced into every oracle
+# that reads it: ``daily`` is timeseries.daily_cents (event_type, d,
+# cents) and ``bounds``/``spine``/``grid`` is timeseries.gap_filled over
+# it (grid.x = cents, zero on the days no event covers).
+_DAILY_CENTS_CTE = """daily AS (
+  SELECT event_type,
+         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
+         CAST(round(sum(value) * 100) AS BIGINT) AS cents
+  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
+)"""
+_GAP_FILLED_CTE = """bounds AS (
+  SELECT event_type, min(d) AS lo, max(d) AS hi FROM daily GROUP BY 1
+), spine AS (
+  SELECT event_type,
+         CAST(unnest(generate_series(lo, hi)) AS BIGINT) AS d
+  FROM bounds
+), grid AS (
+  SELECT s.event_type, s.d, coalesce(a.cents, 0) AS x
+  FROM spine s LEFT JOIN daily a
+    ON s.event_type = a.event_type AND s.d = a.d
+)"""
+
+
 # ---------------------------------------------------------------------------
 # flagship
 # ---------------------------------------------------------------------------
@@ -8827,7 +8850,7 @@ def evt_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(epoch(ts)) — the project's cross-engine timestamp identity),
     so no date-type or timezone semantics cross engines."""
     e = load_table(spark, sf_dir, "events")
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0))
+    day = TS.epoch_day("ts")
     ev = e.select("user_id", day.alias("day_idx"))
     first = ev.groupBy("user_id").agg(F.min("day_idx").alias("cohort_day"))
     return (
@@ -8939,7 +8962,7 @@ def evt_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs int128/decimal once daily cent totals approach 2^63/n —
     document-level relaxation, ANSI errors loudly rather than wrapping."""
     e = load_table(spark, sf_dir, "events")
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
+    day = TS.epoch_day("ts")
     daily = e.groupBy(
         "event_type", day.alias("day_idx")
     ).agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("s_c"))
@@ -9173,10 +9196,10 @@ def evt_bitmap_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sketch-audit row's tolerance booleans. stickiness
     (avg DAU / WAU) derives from exact integers."""
     e = load_table(spark, sf_dir, "events")
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0))
+    day = TS.epoch_day("ts")
     ev = e.select(
         F.floor(day / F.lit(7.0)).cast("long").alias("week_idx"),
-        day.cast("long").alias("day_idx"),
+        day.alias("day_idx"),
         "user_id",
         "event_type",
     )
@@ -10368,7 +10391,7 @@ def evt_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Daily sums round 2dp pre-comparison (tie-free for decimal data) so
     both engines compare identical doubles."""
     e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
+    day = TS.epoch_day("ts")
     daily = (
         e.groupBy(F.col("event_type"), day.alias("day_idx"))
         .agg(F.round(F.sum("value"), 2).alias("v"))
@@ -11094,13 +11117,7 @@ def evt_lag_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines), so it exports at 6dp — tie-free for an irrational.
     Alignment is INNER on both days present (a hole in either series
     drops that pair-day)."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = (
-        e.groupBy(F.col("event_type"), day.alias("d"))
-        .agg(F.round(F.sum("value") * 100).cast("long").alias("cents"))
-        .persist()
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events")).persist()
     lags = spark.range(0, 4).select(F.col("id").cast("long").alias("lag"))
     a = daily.select(
         F.col("event_type").alias("t1"),
@@ -11144,13 +11161,8 @@ def evt_lag_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("t1", "t2", "lag")
 
 
-_LAG_CORR_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), lags AS (
+_LAG_CORR_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, lags AS (
   SELECT CAST(lag AS BIGINT) AS lag FROM (VALUES (0), (1), (2), (3)) t(lag)
 ), mom AS (
   SELECT a.event_type AS t1, b.event_type AS t2, lags.lag,
@@ -11194,11 +11206,7 @@ def evt_type_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     r2's variance term n·Σy²−(Σy)² exceeds BIGINT at scale, so it
     derives in double and exports at 6dp. One combinable fact-table
     pass + a per-type 6-sum aggregate over calendar-bounded rows."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
     d0 = daily.agg(F.min("d").alias("d0"))
     xy = daily.join(F.broadcast(d0)).select(
         "event_type",
@@ -11244,13 +11252,8 @@ def evt_type_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-_TREND_OLS_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), d0 AS (
+_TREND_OLS_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, d0 AS (
   SELECT min(d) AS d0 FROM daily
 ), mom AS (
   SELECT event_type,
@@ -11294,11 +11297,7 @@ def evt_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived-ratio rule, so it exports UNROUNDED bit-identical. One
     combinable fact pass onto the calendar-bounded daily grid; the
     dow/total aggregates are |types|×7 and |types| rows."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
     dowed = daily.select(
         "event_type", F.pmod(F.col("d") + 4, F.lit(7)).alias("dow"), "cents"
     )
@@ -11328,13 +11327,8 @@ def evt_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DOW_SEASONALITY_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), dowed AS (
+_DOW_SEASONALITY_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, dowed AS (
   SELECT event_type, (d + 4) % 7 AS dow, cents FROM daily
 ), per_dow AS (
   SELECT event_type, dow,
@@ -11526,21 +11520,12 @@ def evt_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     the weighted sums are order-dependent, so the EWMA exports at 6dp
     (irrational — tie-free); the day counts and the exact cents of
     the last day export as integer anchors."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
     return TS.ewma_from_daily(daily)
 
 
-_EWMA_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), last AS (
+_EWMA_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, last AS (
   SELECT event_type, max(d) AS d_last FROM daily GROUP BY 1
 ), wgt AS (
   SELECT daily.event_type, cents, d, d_last,
@@ -11803,13 +11788,13 @@ def customer_order_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     wcust = Window.partitionBy("o_custkey").orderBy(
         "o_orderdate", "o_orderkey"
     )
-    day = F.floor(F.unix_timestamp(F.col("o_orderdate")) / F.lit(86400.0))
-    nxt = F.lead(day.cast("long")).over(wcust)
+    day = TS.epoch_day("o_orderdate")
+    nxt = F.lead(day).over(wcust)
     spells = o.select(
-        day.cast("long").alias("d"),
+        day.alias("d"),
         nxt.alias("d_next"),
     )
-    mx = o.agg(F.max(day.cast("long")).alias("d_max"))
+    mx = o.agg(F.max(day).alias("d_max"))
     ev = spells.join(F.broadcast(mx)).select(
         F.when(
             F.col("d_next").isNotNull(),
@@ -11935,11 +11920,7 @@ def evt_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     the calendar-bounded daily grid (one combinable fact pass) + a
     type-partitioned 7-ROW window — bounded collect width, ordinary
     parallel window shuffle on event_type."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
     w = (
         Window.partitionBy("event_type")
         .orderBy("d")
@@ -11971,13 +11952,8 @@ def evt_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROLLING_MEDIAN_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-)
+_ROLLING_MEDIAN_SQL = f"""
+WITH {_DAILY_CENTS_CTE}
 SELECT event_type, d, cents,
        CAST(count(*) OVER w AS BIGINT) AS window_n,
        median(cents) OVER w AS rolling_median
@@ -12003,9 +11979,7 @@ def orders_backlog_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_shipdate").isNotNull()
     )
-    week = lambda c: (  # noqa: E731
-        F.floor(F.unix_timestamp(c) / F.lit(86400.0)) / F.lit(7)
-    ).cast("long")
+    week = lambda c: (TS.epoch_day(c) / F.lit(7)).cast("long")  # noqa: E731
     opens = o.select(week(F.col("o_orderdate")).alias("wk")).withColumn(
         "delta", F.lit(1).cast("long")
     )
@@ -12199,13 +12173,7 @@ def evt_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     exported integers. Pair volume is |days|²/2 per type — calendar-
     bounded, independent of event count (the Mann-Kendall join shape);
     the fact table is touched once (persisted daily aggregate)."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = (
-        e.groupBy(F.col("event_type"), day.alias("d"))
-        .agg(F.round(F.sum("value") * 100).cast("long").alias("cents"))
-        .persist()
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events")).persist()
     a = daily.select(
         "event_type", F.col("d").alias("d1"), F.col("cents").alias("y1")
     )
@@ -12260,13 +12228,8 @@ def evt_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-_THEIL_SEN_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), pairs AS (
+_THEIL_SEN_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, pairs AS (
   SELECT a.event_type,
          b.cents - a.cents AS num,
          b.d - a.d AS den
@@ -12502,23 +12465,12 @@ def evt_isotonic_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded doubles. Pair volume is |days|²/2 per type (the Mann-
     Kendall / Theil-Sen calendar-bounded join shape); the fact table
     is touched once."""
-    from vector_search_optimization_spark.operators import timeseries as TS
-
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
     return TS.isotonic_blocks(daily).orderBy("event_type", "block_start_day")
 
 
-_ISOTONIC_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), seq AS (
+_ISOTONIC_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, seq AS (
   SELECT event_type, d, cents,
          row_number() OVER (PARTITION BY event_type ORDER BY d) AS rn,
          CAST(sum(cents) OVER (PARTITION BY event_type ORDER BY d)
@@ -12697,21 +12649,12 @@ def evt_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays it per micro-batch over the maintained grid). Plan: one
     daily groupBy, one percentile agg joined back broadcast, one lag
     window, one combinable final agg — all calendar-bounded."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
     return TS.runs_test_from_daily(daily)
 
 
-_RUNS_TEST_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), med AS (
+_RUNS_TEST_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, med AS (
   SELECT event_type, quantile_cont(cents, 0.5) AS med
   FROM daily GROUP BY 1
 ), sgn AS (
@@ -12774,11 +12717,7 @@ def evt_spectral_dft(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one daily groupBy, a broadcast mean join, a 13-literal
     explode (map-side ×13 fan-out of the calendar-bounded grid), one
     combinable (type, period) agg."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
     stats = daily.groupBy("event_type").agg(
         F.sum("cents").cast("double").alias("s"),
         F.count(F.lit(1)).cast("double").alias("n"),
@@ -12832,12 +12771,7 @@ def evt_spectral_dft(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SPECTRAL_SQL = f"""
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), stats AS (
+WITH {_DAILY_CENTS_CTE}, stats AS (
   SELECT event_type, CAST(sum(cents) AS DOUBLE) AS s,
          CAST(count(*) AS DOUBLE) AS n
   FROM daily GROUP BY 1
@@ -12885,11 +12819,7 @@ def evt_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join between type pairs (|types|²·days rows — calendar- and
     cardinality-bounded), two rank windows over the pair-aligned
     series, one combinable final agg per pair."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
     a = daily.select(
         F.col("event_type").alias("type_a"), "d", F.col("cents").alias("ca")
     )
@@ -12934,13 +12864,8 @@ def evt_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SPEARMAN_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), j AS (
+_SPEARMAN_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, j AS (
   SELECT a.event_type AS type_a, b.event_type AS type_b, a.d,
          a.cents AS ca, b.cents AS cb
   FROM daily a JOIN daily b
@@ -12992,9 +12917,7 @@ def evt_kendalls_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable agg, one rank window over week cells, one type agg, one
     tiny final broadcast of (m, k)."""
     e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    week = (
-        F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0 * 7))
-    ).cast("long")
+    week = F.floor(TS.epoch_day("ts") / F.lit(7))
     weekly = e.groupBy(F.col("event_type"), week.alias("w")).agg(
         F.round(F.sum("value") * 100).cast("long").alias("cents")
     )
@@ -13991,11 +13914,7 @@ def evt_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one daily combinable agg, a 3-literal scale fan-out of the
     calendar-bounded grid, two windows over (type, scale, block)
     cells, two combinable rollups."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
     wt = Window.partitionBy("event_type").orderBy("d")
     seq = daily.withColumn("t", F.row_number().over(wt).cast("long"))
     scales = F.explode(
@@ -14086,12 +14005,7 @@ def evt_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _HURST_SQL = f"""
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), seq AS (
+WITH {_DAILY_CENTS_CTE}, seq AS (
   SELECT event_type, cents,
          CAST(row_number() OVER (PARTITION BY event_type ORDER BY d)
               AS BIGINT) AS t,
@@ -14168,9 +14082,7 @@ def orders_interpurchase_regularity(spark: SparkSession, sf_dir: str) -> DataFra
     onto the segment, one segment agg."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
-    day = F.floor(
-        F.unix_timestamp(F.col("o_orderdate")) / F.lit(86400.0)
-    ).cast("long")
+    day = TS.epoch_day("o_orderdate")
     wcu = Window.partitionBy("o_custkey").orderBy("day", "o_orderkey")
     gaps = (
         o.select("o_custkey", "o_orderkey", day.alias("day"))
@@ -14533,7 +14445,7 @@ def evt_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").where(
         F.col("value").isNotNull() & F.col("user_id").isNotNull()
     )
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
+    day = TS.epoch_day("ts")
     bucket = (F.abs(F.col("user_id")) % F.lit(8)).cast("int")
     daily = (
         e.groupBy(F.col("event_type"), bucket.alias("bucket"), day.alias("d"))
@@ -14749,11 +14661,7 @@ def evt_kruskal_dunn(spark: SparkSession, sf_dir: str) -> DataFrame:
     every window runs on the pooled daily frame — |types| x |days|
     rows, calendar-bounded at any corpus scale (the evt_spearman_corr
     contract), so the unpartitioned rank window is bounded by design."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
     wr = Window.orderBy("cents")
     wt = Window.partitionBy("cents")
     wall_daily = Window.partitionBy()
@@ -14803,13 +14711,8 @@ def evt_kruskal_dunn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KRUSKAL_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), ranked AS (
+_KRUSKAL_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, ranked AS (
   SELECT event_type,
          CAST(2 * rank() OVER (ORDER BY cents)
               + count(*) OVER (PARTITION BY cents) - 1 AS BIGINT) AS rank2,
@@ -14871,22 +14774,8 @@ def evt_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-size per-type stats join, and the lag pairs come from a
     7-way explode + (type, day+lag) equi-join on the tiny grid —
     |types| x |days| x 7 rows at ANY corpus scale."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = (
-        e.groupBy(F.col("event_type"), day.alias("d"))
-        .agg(F.round(F.sum("value") * 100).cast("long").alias("cents"))
-        .persist()
-    )
-    bounds = daily.groupBy("event_type").agg(
-        F.min("d").alias("lo"), F.max("d").alias("hi")
-    )
-    spine = bounds.select(
-        "event_type", F.explode(F.sequence("lo", "hi")).alias("d")
-    )
-    grid = spine.join(daily, ["event_type", "d"], "left").select(
-        "event_type", "d", F.coalesce("cents", F.lit(0)).alias("x")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events")).persist()
+    grid = TS.gap_filled(daily)
     stats = grid.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("s"),
@@ -14948,23 +14837,8 @@ def evt_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LJUNG_BOX_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), bounds AS (
-  SELECT event_type, min(d) AS lo, max(d) AS hi FROM daily GROUP BY 1
-), spine AS (
-  SELECT event_type,
-         CAST(unnest(generate_series(lo, hi)) AS BIGINT) AS d
-  FROM bounds
-), grid AS (
-  SELECT s.event_type, s.d, coalesce(a.cents, 0) AS x
-  FROM spine s LEFT JOIN daily a
-    ON s.event_type = a.event_type AND s.d = a.d
-), stats AS (
+_LJUNG_BOX_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, {_GAP_FILLED_CTE}, stats AS (
   SELECT event_type, CAST(count(*) AS BIGINT) AS n,
          CAST(sum(x) AS BIGINT) AS s
   FROM grid GROUP BY 1
@@ -15142,35 +15016,13 @@ def evt_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming.grid_monitor.start_daily_cents_monitor replays per
     micro-batch over its maintained grid (the ewma_from_daily
     one-combine-two-paths pattern)."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = (
-        e.groupBy(F.col("event_type"), day.alias("d"))
-        .agg(F.round(F.sum("value") * 100).cast("long").alias("cents"))
-        .persist()
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events")).persist()
     return TS.holt_from_daily(daily)
 
 
-_HOLT_SQL = """
-WITH RECURSIVE daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), bounds AS (
-  SELECT event_type, min(d) AS lo, max(d) AS hi FROM daily GROUP BY 1
-), spine AS (
-  SELECT event_type,
-         CAST(unnest(generate_series(lo, hi)) AS BIGINT) AS d
-  FROM bounds
-), grid AS (
-  SELECT s.event_type, s.d,
-         CAST(coalesce(a.cents, 0) AS DOUBLE) AS x
-  FROM spine s LEFT JOIN daily a
-    ON s.event_type = a.event_type AND s.d = a.d
-), idx AS (
-  SELECT event_type, x,
+_HOLT_SQL = f"""
+WITH RECURSIVE {_DAILY_CENTS_CTE}, {_GAP_FILLED_CTE}, idx AS (
+  SELECT event_type, CAST(x AS DOUBLE) AS x,
          CAST(row_number() OVER (PARTITION BY event_type ORDER BY d)
               AS BIGINT) AS i,
          CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
@@ -15466,18 +15318,9 @@ def evt_quadratic_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded per-type grid explode, one combinable sums agg —
     fact-size-independent after the first shuffle."""
     daily = TS.daily_counts(load_table(spark, sf_dir, "events"))
-    span = daily.groupBy("event_type").agg(
-        F.min("d").alias("mn"), F.max("d").alias("mx")
-    )
-    grid = span.select(
-        "event_type",
-        "mn",
-        F.explode(F.sequence(F.col("mn"), F.col("mx"))).alias("d"),
-    )
-    dense = grid.join(daily, ["event_type", "d"], "left").select(
-        "event_type",
-        (F.col("d") - F.col("mn")).alias("t"),
-        F.coalesce(F.col("x"), F.lit(0).cast("long")).alias("x"),
+    origin = F.min("d").over(Window.partitionBy("event_type"))
+    dense = TS.gap_filled(daily).select(
+        "event_type", (F.col("d") - origin).alias("t"), "x"
     )
     t, x = F.col("t"), F.col("x")
     s = dense.groupBy("event_type").agg(
@@ -16041,31 +15884,12 @@ def evt_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     decomposition itself is the SHARED timeseries.seasonal_from_daily
     combine (also driven continuously by
     streaming.grid_monitor.start_daily_cents_monitor)."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
     return TS.seasonal_from_daily(daily)
 
 
-_SEASONAL_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), bounds AS (
-  SELECT event_type, min(d) AS lo, max(d) AS hi FROM daily GROUP BY 1
-), spine AS (
-  SELECT event_type,
-         CAST(unnest(generate_series(lo, hi)) AS BIGINT) AS d
-  FROM bounds
-), grid AS (
-  SELECT s.event_type, s.d, coalesce(a.cents, 0) AS x
-  FROM spine s LEFT JOIN daily a
-    ON s.event_type = a.event_type AND s.d = a.d
-), tr AS (
+_SEASONAL_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, {_GAP_FILLED_CTE}, tr AS (
   SELECT event_type, d, x,
          CAST(sum(x) OVER (PARTITION BY event_type ORDER BY d
               ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT) AS tnum,
@@ -16282,20 +16106,8 @@ def evt_pacf_durbin(spark: SparkSession, sf_dir: str) -> DataFrame:
     on identical inputs (identical expression trees both engines);
     exports round 6dp (irrational). Plan: identical to evt_ljung_box
     with a 3-way lag explode — |types|×|days|×3 rows at any scale."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
-    bounds = daily.groupBy("event_type").agg(
-        F.min("d").alias("lo"), F.max("d").alias("hi")
-    )
-    spine = bounds.select(
-        "event_type", F.explode(F.sequence("lo", "hi")).alias("d")
-    )
-    grid = spine.join(daily, ["event_type", "d"], "left").select(
-        "event_type", "d", F.coalesce("cents", F.lit(0)).alias("x")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
+    grid = TS.gap_filled(daily)
     stats = grid.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("s"),
@@ -16361,23 +16173,8 @@ def evt_pacf_durbin(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-_PACF_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), bounds AS (
-  SELECT event_type, min(d) AS lo, max(d) AS hi FROM daily GROUP BY 1
-), spine AS (
-  SELECT event_type,
-         CAST(unnest(generate_series(lo, hi)) AS BIGINT) AS d
-  FROM bounds
-), grid AS (
-  SELECT s.event_type, s.d, coalesce(a.cents, 0) AS x
-  FROM spine s LEFT JOIN daily a
-    ON s.event_type = a.event_type AND s.d = a.d
-), stats AS (
+_PACF_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, {_GAP_FILLED_CTE}, stats AS (
   SELECT event_type, CAST(count(*) AS BIGINT) AS n,
          CAST(sum(x) AS BIGINT) AS s
   FROM grid GROUP BY 1
@@ -16443,21 +16240,9 @@ def evt_gumbel_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
     ops on bit-identical inputs; β̂/μ̂/RL round 6dp (sqrt/ln-derived).
     Plan: one combinable daily agg → calendar-bounded spine → one
     per-(type, week) max agg → one per-type moments agg."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
-    bounds = daily.groupBy("event_type").agg(
-        F.min("d").alias("lo"), F.max("d").alias("hi")
-    )
-    spine = bounds.select(
-        "event_type", F.explode(F.sequence("lo", "hi")).alias("d")
-    )
-    grid = spine.join(daily, ["event_type", "d"], "left").select(
-        "event_type",
-        F.floor(F.col("d") / 7).cast("long").alias("wk"),
-        F.coalesce("cents", F.lit(0)).alias("x"),
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
+    grid = TS.gap_filled(daily).select(
+        "event_type", F.floor(F.col("d") / 7).cast("long").alias("wk"), "x"
     )
     blocks = grid.groupBy("event_type", "wk").agg(
         F.max("x").cast("long").alias("mx")
@@ -16493,26 +16278,10 @@ def evt_gumbel_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-_GUMBEL_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), bounds AS (
-  SELECT event_type, min(d) AS lo, max(d) AS hi FROM daily GROUP BY 1
-), spine AS (
-  SELECT event_type,
-         CAST(unnest(generate_series(lo, hi)) AS BIGINT) AS d
-  FROM bounds
-), grid AS (
-  SELECT s.event_type,
-         CAST(floor(s.d / 7) AS BIGINT) AS wk,
-         coalesce(a.cents, 0) AS x
-  FROM spine s LEFT JOIN daily a
-    ON s.event_type = a.event_type AND s.d = a.d
-), blocks AS (
-  SELECT event_type, wk, CAST(max(x) AS BIGINT) AS mx
+_GUMBEL_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, {_GAP_FILLED_CTE}, blocks AS (
+  SELECT event_type, CAST(floor(d / 7) AS BIGINT) AS wk,
+         CAST(max(x) AS BIGINT) AS mx
   FROM grid GROUP BY 1, 2
 ), agg AS (
   SELECT event_type,
@@ -17143,24 +16912,10 @@ def evt_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     day's own dow (d+7 ≡ d mod 7). Plan: the holt_from_daily contract
     — one combinable daily agg, |types|×|days| fold work, grid size
     independent of fact rows."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
-    bounds = daily.groupBy("event_type").agg(
-        F.min("d").alias("lo"), F.max("d").alias("hi")
-    )
-    spine = bounds.select(
-        "event_type", "hi", F.explode(F.sequence("lo", "hi")).alias("d")
-    )
-    grid = spine.join(daily, ["event_type", "d"], "left").select(
-        "event_type",
-        "hi",
-        "d",
-        F.coalesce("cents", F.lit(0)).cast("double").alias("x"),
-    )
-    ser = grid.groupBy("event_type", "hi").agg(
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
+    grid = TS.gap_filled(daily).withColumn("x", F.col("x").cast("double"))
+    ser = grid.groupBy("event_type").agg(
+        F.max("d").alias("hi"),
         F.transform(
             F.array_sort(F.collect_list(F.struct("d", "x"))),
             lambda s: F.struct((s.d % 7).alias("dow"), s.x.alias("x")),
@@ -17248,12 +17003,7 @@ def _holt_winters_sql() -> str:
         "ELSE 0.0 END"
     )
     return f"""
-WITH RECURSIVE daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), bounds AS (
+WITH RECURSIVE {_DAILY_CENTS_CTE}, bounds AS (
   SELECT event_type, min(d) AS lo, max(d) AS hi FROM daily GROUP BY 1
 ), spine AS (
   SELECT event_type, hi,
@@ -17321,11 +17071,11 @@ def orders_ship_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     by |priorities| groups."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
-    sday = F.floor(F.unix_timestamp(F.col("l_shipdate")) / F.lit(86400.0))
-    oday = F.floor(F.unix_timestamp(F.col("o_orderdate")) / F.lit(86400.0))
-    j = li.select("l_orderkey", sday.cast("long").alias("sd")).join(
+    sday = TS.epoch_day("l_shipdate")
+    oday = TS.epoch_day("o_orderdate")
+    j = li.select("l_orderkey", sday.alias("sd")).join(
         o.select(
-            "o_orderkey", "o_orderpriority", oday.cast("long").alias("od")
+            "o_orderkey", "o_orderpriority", oday.alias("od")
         ),
         li["l_orderkey"] == o["o_orderkey"],
     )
@@ -18176,7 +17926,7 @@ def evt_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     first full 28-day window are flagged partial (exact semantics,
     documented) via the 1-row global-min-day broadcast."""
     e = load_table(spark, sf_dir, "events")
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
+    day = TS.epoch_day("ts")
     ud = e.select(F.col("user_id").alias("u"), day.alias("d")).distinct()
     dau = ud.groupBy("d").agg(F.countDistinct("u").cast("long").alias("dau"))
     span = ud.agg(F.min("d").alias("mn"), F.max("d").alias("mx"))
@@ -18628,20 +18378,8 @@ def evt_binseg_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one combinable daily agg → spine → one cumulative window +
     one rank window, both on the calendar-bounded |types|×|days|
     frame."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
-    bounds = daily.groupBy("event_type").agg(
-        F.min("d").alias("lo"), F.max("d").alias("hi")
-    )
-    spine = bounds.select(
-        "event_type", F.explode(F.sequence("lo", "hi")).alias("d")
-    )
-    grid = spine.join(daily, ["event_type", "d"], "left").select(
-        "event_type", "d", F.coalesce("cents", F.lit(0)).alias("x")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
+    grid = TS.gap_filled(daily)
     wo = Window.partitionBy("event_type").orderBy("d")
     pre = grid.select(
         "event_type",
@@ -18708,23 +18446,8 @@ def evt_binseg_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BINSEG_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), bounds AS (
-  SELECT event_type, min(d) AS lo, max(d) AS hi FROM daily GROUP BY 1
-), spine AS (
-  SELECT event_type,
-         CAST(unnest(generate_series(lo, hi)) AS BIGINT) AS d
-  FROM bounds
-), grid AS (
-  SELECT s.event_type, s.d, coalesce(a.cents, 0) AS x
-  FROM spine s LEFT JOIN daily a
-    ON s.event_type = a.event_type AND s.d = a.d
-), pre AS (
+_BINSEG_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, {_GAP_FILLED_CTE}, pre AS (
   SELECT event_type, d,
          CAST(row_number() OVER (PARTITION BY event_type ORDER BY d)
               AS BIGINT) AS t,
@@ -18768,35 +18491,12 @@ def evt_spc_individuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     read through streaming.grid_monitor.start_daily_cents_monitor; the
     extraction is pure code motion, executedPlan verified identical): spine
     → one lag window + one moments agg on the calendar-bounded grid."""
-    from vector_search_optimization_spark.operators.timeseries import (
-        spc_from_daily,
-    )
-
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
-    return spc_from_daily(daily)
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
+    return TS.spc_from_daily(daily)
 
 
-_SPC_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), bounds AS (
-  SELECT event_type, min(d) AS lo, max(d) AS hi FROM daily GROUP BY 1
-), spine AS (
-  SELECT event_type,
-         CAST(unnest(generate_series(lo, hi)) AS BIGINT) AS d
-  FROM bounds
-), grid AS (
-  SELECT s.event_type, s.d, coalesce(a.cents, 0) AS x
-  FROM spine s LEFT JOIN daily a
-    ON s.event_type = a.event_type AND s.d = a.d
-), mr AS (
+_SPC_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, {_GAP_FILLED_CTE}, mr AS (
   SELECT event_type, x,
          CAST(abs(x - lag(x) OVER (PARTITION BY event_type ORDER BY d))
               AS BIGINT) AS mr
@@ -19115,18 +18815,12 @@ def evt_dau_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     day) distinct-count shuffle, a calendar-bounded grid explode, two
     per-type windows over ≤|days| rows, one combinable final agg —
     fact-size-independent after the first shuffle."""
-    from vector_search_optimization_spark.operators.timeseries import (
-        drawdown_from_daily,
-    )
-
     e = load_table(spark, sf_dir, "events")
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
+    day = TS.epoch_day("ts")
     daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
         F.countDistinct("user_id").cast("long").alias("dau")
     )
-    return drawdown_from_daily(
-        daily, group_col="event_type", day_col="d", value_col="dau"
-    ).withColumnRenamed("peak", "peak_dau")
+    return TS.drawdown_from_daily(daily).withColumnRenamed("peak", "peak_dau")
 
 
 _DAU_DRAWDOWN_SQL = """
@@ -19393,11 +19087,7 @@ def evt_granger_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     (type, day) cents shuffle, a calendar-bounded grid, one lag
     window per type, a |types|²-bounded day equi-join, one combinable
     moments agg — fact-size-independent after the first shuffle."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
     span = daily.agg(F.min("d").alias("mn"), F.max("d").alias("mx"))
     types = daily.select("event_type").distinct()
     grid = types.crossJoin(F.broadcast(span)).select(
@@ -19554,13 +19244,8 @@ def evt_granger_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("y_type", "x_type")
 
 
-_GRANGER_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), span AS (
+_GRANGER_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, span AS (
   SELECT min(d) AS mn, max(d) AS mx FROM daily
 ), grid AS (
   SELECT t.event_type, CAST(unnest(generate_series(mn, mx)) AS BIGINT) AS d
@@ -19914,22 +19599,8 @@ def evt_peak_over_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     6dp (pow-derived). Plan: one (type, day) cents shuffle, a rank
     window on the ≤|types|×|days| dense grid, one combinable moments
     agg — fact-size-independent after the first shuffle."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
-    span = daily.groupBy("event_type").agg(
-        F.min("d").alias("mn"), F.max("d").alias("mx")
-    )
-    grid = span.select(
-        "event_type", F.explode(F.sequence("mn", "mx")).alias("d")
-    )
-    dense = grid.join(daily, ["event_type", "d"], "left").select(
-        "event_type",
-        "d",
-        F.coalesce("cents", F.lit(0).cast("long")).alias("c"),
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
+    dense = TS.gap_filled(daily).withColumnRenamed("x", "c")
     wrank = Window.partitionBy("event_type").orderBy("c", "d")
     nd = dense.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_days")
@@ -19997,13 +19668,8 @@ def evt_peak_over_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-_POT_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), span AS (
+_POT_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, span AS (
   SELECT event_type, min(d) AS mn, max(d) AS mx FROM daily GROUP BY 1
 ), spine AS (
   SELECT event_type, CAST(unnest(generate_series(mn, mx)) AS BIGINT) AS d
@@ -20075,9 +19741,7 @@ def customer_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     join on custkey + one ≤25-row count agg; the quartile cuts are
     1-row broadcasts."""
     o = load_table(spark, sf_dir, "orders")
-    day = F.floor(
-        F.unix_timestamp(F.col("o_orderdate")) / F.lit(86400.0)
-    ).cast("long")
+    day = TS.epoch_day("o_orderdate")
     od = o.select(
         "o_custkey",
         day.alias("d"),
@@ -20658,7 +20322,7 @@ def evt_icc_day_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type agg over ≤|types|×|days| rows — fact-size-independent
     after the first shuffle."""
     e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
+    day = TS.epoch_day("ts")
     cents = F.round(F.col("value") * 100).cast("long")
     per_day = e.groupBy(F.col("event_type"), day.alias("d")).agg(
         F.count(F.lit(1)).cast("long").alias("ni"),
@@ -20835,11 +20499,7 @@ def evt_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented). Plan: one (type, day) combinable agg, one per-day
     rank window, two tiny rollups; k and the cross-type moment attach
     via 1-row broadcasts (whitelisted)."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy("event_type", day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
     k1 = (
         daily.select("event_type")
         .distinct()
@@ -20891,13 +20551,8 @@ def evt_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FRIEDMAN_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), k1 AS (
+_FRIEDMAN_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, k1 AS (
   SELECT CAST(count(DISTINCT event_type) AS BIGINT) AS k FROM daily
 ), complete AS (
   SELECT d, k FROM (
@@ -20946,21 +20601,12 @@ def evt_sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming.grid_monitor.start_daily_cents_monitor maintains (grid
     state, NOT motif counts: late data shifts the quartile cuts, see
     the combine's note)."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy("event_type", day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
     return TS.sax_motifs_from_daily(daily).orderBy("event_type", "rnk")
 
 
-_SAX_MOTIFS_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), sym AS (
+_SAX_MOTIFS_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, sym AS (
   SELECT event_type, d,
          chr(CAST(96 + ntile(4) OVER (PARTITION BY event_type
                                       ORDER BY cents, d) AS INT)) AS s
@@ -21302,11 +20948,7 @@ def evt_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     incomplete trailing blocks are dropped exactly. Plan: one (type,
     day) shuffle, a 3-literal scale fan-out of the calendar-bounded
     grid, two combinable rollups, one 3-row-partition share window."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy("event_type", day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
     wt = Window.partitionBy("event_type").orderBy("d")
     seq = daily.withColumn("t", (F.row_number().over(wt) - 1).cast("long"))
     fan = seq.select(
@@ -21356,13 +20998,8 @@ def evt_haar_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HAAR_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(floor(floor(epoch(ts)) / 86400.0) AS BIGINT) AS d,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-), seq AS (
+_HAAR_SQL = f"""
+WITH {_DAILY_CENTS_CTE}, seq AS (
   SELECT event_type, cents,
          CAST(row_number() OVER (PARTITION BY event_type ORDER BY d) - 1
               AS BIGINT) AS t
@@ -21549,11 +21186,9 @@ def evt_rqa_determinism(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join (pairs ≤ |days|²/2 per type — fact-size-independent
     after the first shuffle; the same bound class as the theil-sen
     pair grid), one islands window, two tiny rollups."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy("event_type", day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("c")
-    )
+    daily = TS.daily_cents(
+        load_table(spark, sf_dir, "events")
+    ).withColumnRenamed("cents", "c")
     wt = Window.partitionBy("event_type").orderBy("d")
     seq = daily.withColumn("t", F.row_number().over(wt).cast("long"))
     nd = seq.groupBy("event_type").agg(
@@ -21708,11 +21343,9 @@ def evt_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding the numerator. Plan: one (type, day) combinable agg, two
     lead windows over the calendar-bounded series, one ≤|types|×6
     rollup."""
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy("event_type", day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("c")
-    )
+    daily = TS.daily_cents(
+        load_table(spark, sf_dir, "events")
+    ).withColumnRenamed("cents", "c")
     wd = Window.partitionBy("event_type").orderBy("d")
     tri = daily.select(
         "event_type",
@@ -21836,16 +21469,8 @@ def evt_tail_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
     join (|types|^2/2 x days -- calendar^2-bounded, fact-size-independent
     after the first shuffle), two rank windows on the pair frame, one
     broadcast threshold attach, one combinable reduce."""
-    from vector_search_optimization_spark.operators.timeseries import (
-        tail_dependence_from_daily,
-    )
-
-    e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = e.groupBy("event_type", day.alias("d")).agg(
-        F.round(F.sum("value") * 100).cast("long").alias("cents")
-    )
-    return tail_dependence_from_daily(daily)
+    daily = TS.daily_cents(load_table(spark, sf_dir, "events"))
+    return TS.tail_dependence_from_daily(daily)
 
 
 _TAIL_DEP_SQL = """
@@ -22300,17 +21925,17 @@ def lineitem_weibull_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment agg over |priorities| groups."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
-    sday = F.floor(F.unix_timestamp(F.col("l_shipdate")) / F.lit(86400.0))
-    oday = F.floor(F.unix_timestamp(F.col("o_orderdate")) / F.lit(86400.0))
+    sday = TS.epoch_day("l_shipdate")
+    oday = TS.epoch_day("o_orderdate")
     j = (
         li.select(
-            "l_orderkey", "l_linenumber", sday.cast("long").alias("sd")
+            "l_orderkey", "l_linenumber", sday.alias("sd")
         )
         .join(
             o.select(
                 "o_orderkey",
                 "o_orderpriority",
-                oday.cast("long").alias("od"),
+                oday.alias("od"),
             ),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
@@ -22883,6 +22508,16 @@ _CHANGED_SINCE_AUDIT: tuple[str, ...] = (
     "emb_near_dup_blocked",
     # IVF index opened on the driver
     "ann_ivf_topk",
+    # the daily grid defined once: timeseries.gap_filled names the spine
+    # bounds lo/hi and the filled value x; holt-winters takes hi from its
+    # series aggregate, the quadratic trend its day origin from a window
+    # min, and kendalls_w's week key derives from epoch_day
+    "evt_dau_drawdown",
+    "evt_turning_points",
+    "evt_peak_over_threshold",
+    "evt_holt_winters",
+    "evt_quadratic_trend",
+    "evt_kendalls_w",
 )
 
 

@@ -1,7 +1,9 @@
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import tempfile
 
 import pytest
 
@@ -25,3 +27,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_small() -> str:
     return SF_SMALL
+
+
+@pytest.fixture()
+def tmpdirs():
+    """A fresh scratch root for a streaming test's drop zone, sink and
+    checkpoint, removed afterwards."""
+    root = tempfile.mkdtemp(prefix="stream_")
+    yield root
+    shutil.rmtree(root, ignore_errors=True)

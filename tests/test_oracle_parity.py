@@ -14,6 +14,7 @@ import pandas as pd
 import pytest
 
 from tests.conftest import SF_SMALL
+from vector_search_optimization_spark.session import release_caches
 
 # generated (data-dependent) oracles must derive their literals from the
 # sf this gate evaluates against — set before oracle_sql() is called
@@ -45,7 +46,11 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
 @pytest.mark.parametrize("name", sorted(entrymod.queries()))
 def test_query_matches_oracle(spark, duck, name):
     fn = entrymod.queries()[name]
-    sdf = _canon(fn(spark, SF_SMALL).toPandas())
+    try:
+        sdf = _canon(fn(spark, SF_SMALL).toPandas())
+    finally:
+        # every query pays for its own caches, as in bench.py
+        release_caches(spark.range(1))
     sql = entrymod.oracle_sql().get(name)
     if sql is None:
         assert len(sdf) >= 0  # rows-only contract

@@ -434,16 +434,10 @@ def test_theil_sen_exact_rational_median(spark, sf_small):
 
     day_rows = {}
     import __spark_entry__ as _m
-    from pyspark.sql import functions as FF
+    from vector_search_optimization_spark.operators import timeseries as TS
     from vector_search_optimization_spark.sources import load_table
 
-    e = load_table(spark, sf_small, "events").where(FF.col("value").isNotNull())
-    day = FF.floor(FF.unix_timestamp(FF.col("ts")) / FF.lit(86400.0)).cast("long")
-    daily = (
-        e.groupBy(FF.col("event_type"), day.alias("d"))
-        .agg(FF.round(FF.sum("value") * 100).cast("long").alias("cents"))
-        .collect()
-    )
+    daily = TS.daily_cents(load_table(spark, sf_small, "events")).collect()
     for r in daily:
         day_rows.setdefault(r["event_type"], []).append((r["d"], r["cents"]))
 

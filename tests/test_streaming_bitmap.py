@@ -11,6 +11,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from vector_search_optimization_spark.operators import timeseries as TS
 from vector_search_optimization_spark.streaming import bitmap_maintenance as BM
 from vector_search_optimization_spark.streaming.agg_maintenance import (
     stream_maintain_table,
@@ -81,10 +82,9 @@ def test_stream_fold_matches_batch_distincts(spark, scratch):
         for r in BM.actives_from_bitmap_table(spark, scratch["table"]).collect()
     }
     both = a.union(b)
-    day = F.floor(F.unix_timestamp("ts") / F.lit(86400.0)).cast("long")
     want_daily = {
         r.day_idx: (r.dau, r.n)
-        for r in both.select(day.alias("day_idx"), "user_id")
+        for r in both.select(TS.epoch_day("ts").alias("day_idx"), "user_id")
         .groupBy("day_idx")
         .agg(
             F.countDistinct("user_id").alias("dau"),

@@ -6,10 +6,6 @@ micro-batches."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
-import pytest
 from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import sketches as SK
@@ -17,13 +13,6 @@ from vector_search_optimization_spark.sources import load_table
 from vector_search_optimization_spark.streaming.grid_monitor import (
     start_grid_rewrite_monitor,
 )
-
-
-@pytest.fixture()
-def tmpdirs():
-    root = tempfile.mkdtemp(prefix="cms_stream_")
-    yield root
-    shutil.rmtree(root, ignore_errors=True)
 
 
 def test_stream_cms_equals_batch_with_split_users(spark, sf_small, tmpdirs):

@@ -7,34 +7,21 @@ peak could never be revised)."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
-from vector_search_optimization_spark.operators.timeseries import (
-    drawdown_from_daily,
-)
+from vector_search_optimization_spark.operators import timeseries as TS
 from vector_search_optimization_spark.sources import load_table
 from vector_search_optimization_spark.streaming.drawdown_maintenance import (
     stream_drawdown_monitor,
 )
 
 
-@pytest.fixture()
-def tmpdirs():
-    root = tempfile.mkdtemp(prefix="drawdown_stream_")
-    yield root
-    shutil.rmtree(root, ignore_errors=True)
-
-
 def _batch_profile(events):
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = events.groupBy(F.col("event_type"), day.alias("d")).agg(
+    daily = events.groupBy("event_type", TS.epoch_day("ts").alias("d")).agg(
         F.countDistinct("user_id").cast("long").alias("dau")
     )
-    return drawdown_from_daily(daily)
+    return TS.drawdown_from_daily(daily)
 
 
 def _rows(df):

@@ -4,22 +4,11 @@ bucketize/psi_from_counts definition for both paths)."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
-import pytest
 from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import drift as DR
 from vector_search_optimization_spark.sources import load_table
 from vector_search_optimization_spark.streaming.drift import stream_psi_monitor
-
-
-@pytest.fixture()
-def tmpdirs():
-    root = tempfile.mkdtemp(prefix="drift_stream_")
-    yield root
-    shutil.rmtree(root, ignore_errors=True)
 
 
 def test_stream_psi_equals_batch(spark, sf_small, tmpdirs):

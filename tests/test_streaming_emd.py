@@ -5,10 +5,6 @@ epoch, and the shared combine turns both into identical pairwise EMDs."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
-import pytest
 from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators.distribution import (
@@ -19,13 +15,6 @@ from vector_search_optimization_spark.sources import load_table
 from vector_search_optimization_spark.streaming.grid_monitor import (
     start_grid_rewrite_monitor,
 )
-
-
-@pytest.fixture()
-def tmpdirs():
-    root = tempfile.mkdtemp(prefix="emd_stream_")
-    yield root
-    shutil.rmtree(root, ignore_errors=True)
 
 
 def test_stream_emd_counts_equal_batch_with_split_types(

@@ -1,38 +1,16 @@
 """Streaming Holt maintenance must equal the evt_holt_linear batch
-combine once the stream has absorbed the same rows — including when a
-DAY is split across micro-batches (the case that forbids folding the
-(level, trend) pair forward and forces grid-state maintenance)."""
+combine over the absorbed prefix, and hand-checkable series pin its
+recursion. The split-day case is pinned with every other cents monitor
+in test_streaming_cents_monitors.py."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
-import pytest
 from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import timeseries as TS
-from vector_search_optimization_spark.sources import load_table
 from vector_search_optimization_spark.streaming.grid_monitor import (
     start_daily_cents_monitor,
 )
-
-
-@pytest.fixture()
-def tmpdirs():
-    root = tempfile.mkdtemp(prefix="holt_stream_")
-    yield root
-    shutil.rmtree(root, ignore_errors=True)
-
-
-def _batch_holt(events):
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    daily = (
-        events.where(F.col("value").isNotNull())
-        .groupBy(F.col("event_type"), day.alias("d"))
-        .agg(F.round(F.sum("value") * 100).cast("long").alias("cents"))
-    )
-    return TS.holt_from_daily(daily)
 
 
 def _keyed(rows):
@@ -46,50 +24,6 @@ def _keyed(rows):
         )
         for r in rows
     }
-
-
-def test_stream_holt_equals_batch_with_split_days(spark, sf_small, tmpdirs):
-    """Two drop-zone files split by event_id parity — every day's rows
-    straddle BOTH micro-batches, so any day-finality (or fold-forward)
-    assumption in the state would break. After full absorption the sink
-    output must equal the batch combine row-for-row (cents are exact
-    after absorption and the fold order is fixed, so equality is
-    exact)."""
-    events = load_table(spark, sf_small, "events").select(
-        "event_id", "ts", "event_type", "value"
-    )
-    want = _keyed(_batch_holt(events).collect())
-
-    drop = f"{tmpdirs}/drop"
-    cols = ["ts", "event_type", "value"]
-    ts_type = dict(events.dtypes)["ts"]
-    events.where(F.col("event_id") % 2 == 0).select(cols).write.mode(
-        "overwrite"
-    ).parquet(drop)
-    events.where(F.col("event_id") % 2 == 1).select(cols).write.mode(
-        "append"
-    ).parquet(drop)
-
-    stream = (
-        spark.readStream.schema(
-            f"ts {ts_type}, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
-    q = start_daily_cents_monitor(
-        stream,
-        out_path=f"{tmpdirs}/level",
-        checkpoint_dir=f"{tmpdirs}/ckpt",
-        combine=TS.holt_from_daily,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = _keyed(spark.read.parquet(f"{tmpdirs}/level").collect())
-    assert got == want
 
 
 def test_stream_holt_prefix_and_known_series(spark, tmpdirs):
@@ -110,7 +44,7 @@ def test_stream_holt_prefix_and_known_series(spark, tmpdirs):
         F.col("epoch").cast("timestamp").alias("ts"),
         "value",
     )
-    want = _keyed(_batch_holt(df).collect())
+    want = _keyed(TS.holt_from_daily(TS.daily_cents(df)).collect())
 
     drop = f"{tmpdirs}/drop2"
     df.select("ts", "event_type", "value").write.mode("overwrite").parquet(

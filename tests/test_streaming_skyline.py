@@ -6,10 +6,6 @@ tests/test_agg_maintenance.py."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
-import pytest
 from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import ranking_stats as RKS
@@ -20,13 +16,6 @@ from vector_search_optimization_spark.streaming.agg_maintenance import (
 from vector_search_optimization_spark.streaming.skyline_maintenance import (
     merge_skyline,
 )
-
-
-@pytest.fixture()
-def tmpdirs():
-    root = tempfile.mkdtemp(prefix="skyline_stream_")
-    yield root
-    shutil.rmtree(root, ignore_errors=True)
 
 
 def _points(spark, sf_small):

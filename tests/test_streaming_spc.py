@@ -7,75 +7,11 @@ stats)."""
 from __future__ import annotations
 
 import datetime as dt
-import shutil
-import tempfile
-
-import pytest
-from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import timeseries as TS
-from vector_search_optimization_spark.sources import load_table
 from vector_search_optimization_spark.streaming.grid_monitor import (
     start_daily_cents_monitor,
 )
-
-
-@pytest.fixture()
-def tmpdirs():
-    root = tempfile.mkdtemp(prefix="spc_stream_")
-    yield root
-    shutil.rmtree(root, ignore_errors=True)
-
-
-def _batch_daily(events):
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    return (
-        events.where(F.col("value").isNotNull())
-        .groupBy(F.col("event_type"), day.alias("d"))
-        .agg(F.round(F.sum("value") * 100).cast("long").alias("cents"))
-    )
-
-
-def test_stream_spc_equals_batch_with_split_days(spark, sf_small, tmpdirs):
-    events = load_table(spark, sf_small, "events").select(
-        "event_id", "ts", "event_type", "value"
-    )
-    want = sorted(
-        tuple(r) for r in TS.spc_from_daily(_batch_daily(events)).collect()
-    )
-
-    drop = f"{tmpdirs}/drop"
-    cols = ["ts", "event_type", "value"]
-    ts_type = dict(events.dtypes)["ts"]
-    events.where(F.col("event_id") % 2 == 0).select(cols).write.mode(
-        "overwrite"
-    ).parquet(drop)
-    events.where(F.col("event_id") % 2 == 1).select(cols).write.mode(
-        "append"
-    ).parquet(drop)
-
-    stream = (
-        spark.readStream.schema(
-            f"ts {ts_type}, event_type string, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(drop)
-    )
-    q = start_daily_cents_monitor(
-        stream,
-        out_path=f"{tmpdirs}/chart",
-        checkpoint_dir=f"{tmpdirs}/ckpt",
-        combine=TS.spc_from_daily,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = sorted(
-        tuple(r) for r in spark.read.parquet(f"{tmpdirs}/chart").collect()
-    )
-    assert got == want  # every day straddled both micro-batches
 
 
 def test_stream_spc_late_spike_reflags_days(spark, tmpdirs):
@@ -94,7 +30,7 @@ def test_stream_spc_late_spike_reflags_days(spark, tmpdirs):
         b1, schema="ts timestamp, event_type string, value double"
     )
     # chart on batch 1 alone: the 2.00 day must be out of control
-    first = TS.spc_from_daily(_batch_daily(df1)).collect()[0]
+    first = TS.spc_from_daily(TS.daily_cents(df1)).collect()[0]
     assert first.n_violations >= 1
 
     b2 = [(base + dt.timedelta(days=4), "A", 99.00)]
@@ -127,7 +63,7 @@ def test_stream_spc_late_spike_reflags_days(spark, tmpdirs):
     got = rows[0]
     # maintained read equals the all-rows batch combine exactly
     batch = TS.spc_from_daily(
-        _batch_daily(
+        TS.daily_cents(
             spark.createDataFrame(
                 b1 + b2,
                 schema="ts timestamp, event_type string, value double",

@@ -7,10 +7,7 @@ maintenance instead of a folded tally)."""
 from __future__ import annotations
 
 import datetime as dt
-import shutil
-import tempfile
 
-import pytest
 from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import timeseries as TS
@@ -18,20 +15,6 @@ from vector_search_optimization_spark.sources import load_table
 from vector_search_optimization_spark.streaming.grid_monitor import (
     start_grid_rewrite_monitor,
 )
-
-
-@pytest.fixture()
-def tmpdirs():
-    root = tempfile.mkdtemp(prefix="turning_stream_")
-    yield root
-    shutil.rmtree(root, ignore_errors=True)
-
-
-def _batch_daily(events):
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0)).cast("long")
-    return events.groupBy(F.col("event_type"), day.alias("d")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
 
 
 def test_stream_turning_equals_batch_with_split_days(
@@ -43,7 +26,7 @@ def test_stream_turning_equals_batch_with_split_days(
     want = sorted(
         tuple(r)
         for r in TS.turning_points_from_daily(
-            _batch_daily(events)
+            TS.daily_counts(events)
         ).collect()
     )
 
@@ -101,7 +84,7 @@ def test_stream_turning_late_rows_flip_neighbor_extremum(spark, tmpdirs):
 
     # batch sanity on b1 alone: 3 turning points
     tp1 = TS.turning_points_from_daily(
-        _batch_daily(
+        TS.daily_counts(
             spark.createDataFrame(b1, "ts timestamp, event_type string")
         )
     ).collect()[0]
@@ -129,7 +112,7 @@ def test_stream_turning_late_rows_flip_neighbor_extremum(spark, tmpdirs):
     assert r.n_days == 5
     assert r.n_turning == 1  # neighbors of the boosted day both flipped
     batch = TS.turning_points_from_daily(
-        _batch_daily(
+        TS.daily_counts(
             spark.createDataFrame(
                 b1 + b2, "ts timestamp, event_type string"
             )

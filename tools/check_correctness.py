@@ -21,7 +21,7 @@ import numpy as np
 import pandas as pd
 
 import __spark_entry__ as entrymod
-from vector_search_optimization_spark.session import get_spark
+from vector_search_optimization_spark.session import get_spark, release_caches
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 # generated (data-dependent) oracles must derive their literals from the
@@ -106,6 +106,9 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: spark error {type(e).__name__}: {e}")
             continue
+        finally:
+            # every query pays for its own caches, as in bench.py
+            release_caches(spark.range(1))
         if name not in oracles:
             print(f"rows  {name}: {len(sdf)} rows (no oracle) [{time.time()-t0:.1f}s]")
             continue

@@ -1,10 +1,25 @@
-"""Time-series helpers shared by batch queries and their streaming
-maintenance twins (the operators.drift pattern: ONE combine definition,
-two execution paths).
+"""The daily grid, and the time-series combines that read it, shared by
+the batch queries and their streaming monitors (the operators.drift
+pattern: ONE definition, two execution paths).
+
+The grid is defined here once, for every time-series query, oracle
+twin and monitor:
+
+- ``epoch_day``: the day bucket, days since 1970-01-01 UTC through
+  ``unix_timestamp`` (= DuckDB ``floor(epoch(ts))``);
+- ``daily_cents``: ``(event_type, d, cents)``, the exact-cents value
+  sum per type and day; ``daily_counts``: ``(event_type, d, x)``, the
+  event count per type and day;
+- ``gap_filled``: a grid densified onto each type's own
+  ``[min(d), max(d)]`` span, its value zero-filled as ``x``.
+
+Every grid keys by ``event_type`` and ``d``; a combine reads those
+columns and the grid's value column by name, so the grid's shape is
+one decision, not a parameter.
 
 A ``*_from_daily`` combine (and ``isotonic_blocks``) runs continuously
 by handing it to ``streaming.grid_monitor.start_daily_cents_monitor``:
-the stream keeps the (group, day) cents grid and every micro-batch
+the stream keeps ``daily_cents`` of the stream and every micro-batch
 rewrites the export from the absorbed grid with the combine
 (``turning_points_from_daily`` reads the ``daily_counts`` count grid
 instead, through ``start_grid_rewrite_monitor``).  Each
@@ -15,13 +30,16 @@ from __future__ import annotations
 
 import pandas as pd  # module level: pandas_udf type-hint resolution
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
+    "daily_cents",
     "daily_counts",
     "drawdown_from_daily",
+    "epoch_day",
     "ewma_from_daily",
+    "gap_filled",
     "holt_from_daily",
     "isotonic_blocks",
     "runs_test_from_daily",
@@ -33,135 +51,165 @@ __all__ = [
 ]
 
 
-def sax_motifs_from_daily(
-    daily: DataFrame,
-    group_col: str = "event_type",
-    day_col: str = "d",
-    cents_col: str = "cents",
-    top_k: int = 3,
-) -> DataFrame:
-    """Top-k SAX motif words from a (group, day, exact-cents) frame —
+def epoch_day(col: Column | str) -> Column:
+    """Days since 1970-01-01 UTC of a timestamp or date column, as a
+    long — the project's one day bucket. ``unix_timestamp`` is the
+    cross-engine timestamp identity (DuckDB ``floor(epoch(ts))``);
+    never ``cast(ts as long)``, which ANSI mode rejects for NTZ."""
+    return F.floor(F.unix_timestamp(col) / F.lit(86400.0)).cast("long")
+
+
+def daily_cents(events: DataFrame) -> DataFrame:
+    """(event_type, d, cents): the exact-cents value sum per event type
+    and epoch day, null values dropped — the grid every cents-series
+    query reads, and its monitor's state when run over a stream.
+
+    ``round(sum(value) * 100)`` is the aggregate's result expression:
+    over a stream it is evaluated on the absorbed sum each time the
+    grid is emitted, never on one micro-batch's partial sum, so the
+    monitor's grid equals the batch grid over the same rows.
+    Calendar-bounded: |types × days| rows, each shuffle carries only
+    map-side-combined sum partials."""
+    return (
+        events.where(F.col("value").isNotNull())
+        .groupBy(F.col("event_type"), epoch_day("ts").alias("d"))
+        .agg(F.round(F.sum("value") * 100).cast("long").alias("cents"))
+    )
+
+
+def daily_counts(events: DataFrame) -> DataFrame:
+    """(event_type, d, x): events per type and epoch day — the COUNT grid
+    behind evt_turning_points, and its streaming monitor's state when
+    run over a stream (calendar-bounded: |types × days| rows, each
+    micro-batch shuffles only its map-side-combined count partials)."""
+    return events.groupBy(F.col("event_type"), epoch_day("ts").alias("d")).agg(
+        F.count(F.lit(1)).cast("long").alias("x")
+    )
+
+
+def gap_filled(daily: DataFrame) -> DataFrame:
+    """(event_type, d, x): a daily grid densified onto each type's own
+    ``[min(d), max(d)]`` calendar span — the grid's one value column
+    (``cents``, the count grid's ``x`` or drawdown's ``dau``) with the
+    days no row covers filled with 0, so lags and windows align on
+    calendar days rather than on observation indices. The spine is
+    |types × days| rows at any fact volume."""
+    (value,) = [c for c in daily.columns if c not in ("event_type", "d")]
+    bounds = daily.groupBy("event_type").agg(
+        F.min("d").alias("lo"), F.max("d").alias("hi")
+    )
+    spine = bounds.select(
+        "event_type", F.explode(F.sequence("lo", "hi")).alias("d")
+    )
+    return spine.join(daily, ["event_type", "d"], "left").select(
+        "event_type", "d", F.coalesce(value, F.lit(0)).alias("x")
+    )
+
+
+def sax_motifs_from_daily(daily: DataFrame) -> DataFrame:
+    """Top-3 SAX motif words from a ``daily_cents`` grid —
     the SHARED combine behind the evt_sax_motifs batch query and
     its streaming monitor (the seasonal_from_daily
     one-combine-two-paths pattern). Quartile symbols via ntile(4)
     over the per-group (cents, day) total order, 3-day motif words
-    via lead windows, top-k on (count desc, motif asc). Everything is
+    via lead windows, top 3 on (count desc, motif asc). Everything is
     exact integers and strings. NOTE for streaming: the state must be
     the DAILY GRID, not the motif counts — late data changes a day's
     cents, which can shift the ntile quartile CUTS and therefore every
     symbol of the group, so motif counts are not an incremental fold.
     The monitor therefore snapshots the grid itself (an identity
     combine) and this function turns any snapshot into the batch
-    query's exact top-k motifs."""
-    from pyspark.sql import Window
-
+    query's exact top-3 motifs."""
     sym = daily.withColumn(
         "s",
         F.expr(
-            f"chr(96 + ntile(4) OVER (PARTITION BY {group_col} "
-            f"ORDER BY {cents_col}, {day_col}))"
+            "chr(96 + ntile(4) OVER (PARTITION BY event_type "
+            "ORDER BY cents, d))"
         ),
     )
-    wd = Window.partitionBy(group_col).orderBy(day_col)
+    wd = Window.partitionBy("event_type").orderBy("d")
     motifs = (
         sym.select(
-            group_col,
+            "event_type",
             F.concat(
                 F.col("s"), F.lead("s", 1).over(wd), F.lead("s", 2).over(wd)
             ).alias("motif"),
         )
         .where(F.col("motif").isNotNull())
-        .groupBy(group_col, "motif")
+        .groupBy("event_type", "motif")
         .agg(F.count(F.lit(1)).cast("long").alias("n_windows"))
     )
-    wr = Window.partitionBy(group_col).orderBy(
+    wr = Window.partitionBy("event_type").orderBy(
         F.col("n_windows").desc(), F.col("motif").asc()
     )
     return (
         motifs.withColumn("rnk", F.row_number().over(wr))
-        .where(F.col("rnk") <= top_k)
-        .select(group_col, "rnk", "motif", "n_windows")
+        .where(F.col("rnk") <= 3)
+        .select("event_type", "rnk", "motif", "n_windows")
     )
 
 
-def drawdown_from_daily(
-    daily: DataFrame,
-    group_col: str = "event_type",
-    day_col: str = "d",
-    value_col: str = "dau",
-) -> DataFrame:
-    """Peak-decline-recovery (drawdown) analytics from a (group, day,
-    exact-integer value) frame — the SHARED combine behind the
+def drawdown_from_daily(daily: DataFrame) -> DataFrame:
+    """Peak-decline-recovery (drawdown) analytics from a (event_type, d,
+    dau) distinct-user grid — the SHARED combine behind the
     evt_dau_drawdown batch query and streaming/drawdown_maintenance.py
     (the ewma_from_daily one-combine-two-paths pattern).
 
     Days inside the observed [min, max] span with no rows fill to 0
-    (the dense-calendar contract) via a calendar-bounded spine; the
+    (the dense-calendar contract, ``gap_filled``); the
     running-peak window, max depth (exact int), first trough day,
     depth as a fraction of the running peak at the trough (ONE exact-
     integer division, unrounded) and the longest consecutive underwater
     spell (d − row_number islands) all run on the |groups×days| grid —
     fact-size-independent wherever this executes."""
-    from pyspark.sql import Window
-
-    span = daily.groupBy(group_col).agg(
-        F.min(day_col).alias("mn"), F.max(day_col).alias("mx")
-    )
-    grid = span.select(
-        group_col, F.explode(F.sequence("mn", "mx")).alias(day_col)
-    )
-    dense = grid.join(daily, [group_col, day_col], "left").select(
-        group_col,
-        day_col,
-        F.coalesce(value_col, F.lit(0).cast("long")).alias("v"),
-    )
+    dense = gap_filled(daily)
     wrun = (
-        Window.partitionBy(group_col)
-        .orderBy(day_col)
+        Window.partitionBy("event_type")
+        .orderBy("d")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     dd = dense.select(
-        group_col,
-        day_col,
-        "v",
-        (F.max("v").over(wrun) - F.col("v")).alias("dd"),
+        "event_type",
+        "d",
+        "x",
+        (F.max("x").over(wrun) - F.col("x")).alias("dd"),
     )
-    wrow = Window.partitionBy(group_col).orderBy(day_col)
+    wrow = Window.partitionBy("event_type").orderBy("d")
     under = dd.where(F.col("dd") > 0).select(
-        group_col,
-        (F.col(day_col) - F.row_number().over(wrow)).alias("grp"),
+        "event_type",
+        (F.col("d") - F.row_number().over(wrow)).alias("grp"),
     )
     spell = (
-        under.groupBy(group_col, "grp")
+        under.groupBy("event_type", "grp")
         .agg(F.count(F.lit(1)).cast("long").alias("len"))
-        .groupBy(group_col)
+        .groupBy("event_type")
         .agg(F.max("len").cast("long").alias("longest_underwater_days"))
     )
-    agg = dd.groupBy(group_col).agg(
+    agg = dd.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.max("v").cast("long").alias("peak"),
+        F.max("x").cast("long").alias("peak"),
         F.max("dd").cast("long").alias("max_drawdown"),
     )
     troughs = (
         dd.join(
-            F.broadcast(agg.select(group_col, "max_drawdown")), group_col
+            F.broadcast(agg.select("event_type", "max_drawdown")), "event_type"
         )
         .where(F.col("dd") == F.col("max_drawdown"))
-        .groupBy(group_col, "max_drawdown")
-        .agg(F.min(F.struct(day_col, "v")).alias("_td"))
+        .groupBy("event_type", "max_drawdown")
+        .agg(F.min(F.struct("d", "x")).alias("_td"))
         .select(
-            group_col,
-            F.col(f"_td.{day_col}").cast("long").alias("trough_day"),
-            (F.col("_td.v") + F.col("max_drawdown"))
+            "event_type",
+            F.col("_td.d").cast("long").alias("trough_day"),
+            (F.col("_td.x") + F.col("max_drawdown"))
             .cast("long")
             .alias("peak_at_trough"),
         )
     )
     return (
-        agg.join(troughs, group_col)
-        .join(spell, group_col, "left")
+        agg.join(troughs, "event_type")
+        .join(spell, "event_type", "left")
         .select(
-            group_col,
+            "event_type",
             "n_days",
             "peak",
             "max_drawdown",
@@ -175,22 +223,18 @@ def drawdown_from_daily(
                 "longest_underwater_days", F.lit(0).cast("long")
             ).alias("longest_underwater_days"),
         )
-        .orderBy(group_col)
+        .orderBy("event_type")
     )
 
 
-def seasonal_from_daily(
-    daily,
-    group_col: str = "event_type",
-    day_col: str = "d",
-    cents_col: str = "cents",
-):
-    """Additive seasonal decomposition from a (group, day, exact-integer
-    cents) frame — the SHARED combine behind the evt_seasonal_decompose
-    batch query and its streaming monitor (the holt_from_daily
-    one-combine-two-paths pattern).
+def seasonal_from_daily(daily: DataFrame) -> DataFrame:
+    """Additive seasonal decomposition from a ``daily_cents`` grid — the
+    SHARED combine behind the evt_seasonal_decompose batch query and its
+    streaming monitor (the holt_from_daily one-combine-two-paths
+    pattern).
 
-    Densifies onto each group's own daily span (missing days = 0), takes
+    Densifies onto each group's own daily span (``gap_filled``: missing
+    days = 0), takes
     the centered MA-7 trend on full windows only, and exports per
     (group, dow): coverage, the exact detrended-sum numerator
     sp = Σ(7x−T), the seasonal component sp/(7·cnt) and the residual
@@ -200,52 +244,40 @@ def seasonal_from_daily(
     work wherever it runs. NOTE for streaming: the state must be the
     DAILY GRID, not a folded per-dow running state — late data changes a
     day's cents AND its ±3 neighbours' centered-MA-7 trend values."""
-    from pyspark.sql import Window as _W
-
-    bounds = daily.groupBy(group_col).agg(
-        F.min(day_col).alias("lo"), F.max(day_col).alias("hi")
-    )
-    spine = bounds.select(
-        group_col, F.explode(F.sequence("lo", "hi")).alias(day_col)
-    )
-    grid = spine.join(daily, [group_col, day_col], "left").select(
-        group_col,
-        day_col,
-        F.coalesce(cents_col, F.lit(0)).alias("x"),
-    )
-    w7 = _W.partitionBy(group_col).orderBy(day_col).rowsBetween(-3, 3)
+    grid = gap_filled(daily)
+    w7 = Window.partitionBy("event_type").orderBy("d").rowsBetween(-3, 3)
     tr = grid.select(
-        group_col,
-        day_col,
+        "event_type",
+        "d",
         "x",
         F.sum("x").over(w7).cast("long").alias("tnum"),
         F.count(F.lit(1)).over(w7).alias("wn"),
     ).where(F.col("wn") == 7)
     p = tr.select(
-        group_col,
-        (F.col(day_col) % 7).alias("dow"),
+        "event_type",
+        (F.col("d") % 7).alias("dow"),
         (7 * F.col("x") - F.col("tnum")).cast("long").alias("p"),
     )
-    sg = p.groupBy(group_col, "dow").agg(
+    sg = p.groupBy("event_type", "dow").agg(
         F.count(F.lit(1)).cast("long").alias("cnt"),
         F.sum("p").cast("long").alias("sp"),
     )
     r = (
-        p.join(F.broadcast(sg), [group_col, "dow"])
+        p.join(F.broadcast(sg), ["event_type", "dow"])
         .select(
-            group_col,
+            "event_type",
             "dow",
             (F.col("cnt") * F.col("p") - F.col("sp"))
             .cast("decimal(18,0)")
             .alias("rn"),
         )
-        .groupBy(group_col, "dow")
+        .groupBy("event_type", "dow")
         .agg(F.sum(F.col("rn") * F.col("rn")).alias("rss_num"))
     )
     return (
-        sg.join(r, [group_col, "dow"])
+        sg.join(r, ["event_type", "dow"])
         .select(
-            group_col,
+            "event_type",
             "dow",
             F.col("cnt").alias("n_days"),
             F.col("sp").alias("detrended_sum_num"),
@@ -261,18 +293,13 @@ def seasonal_from_daily(
                 ).cast("double")
             ).alias("resid_ss"),
         )
-        .orderBy(group_col, "dow")
+        .orderBy("event_type", "dow")
     )
 
 
-def holt_from_daily(
-    daily: DataFrame,
-    group_col: str = "event_type",
-    day_col: str = "d",
-    cents_col: str = "cents",
-) -> DataFrame:
+def holt_from_daily(daily: DataFrame) -> DataFrame:
     """Holt linear-trend (double exponential) smoothing at the series
-    end from a (group, day, exact-integer cents) frame — the SHARED
+    end from a ``daily_cents`` grid — the SHARED
     combine behind the evt_holt_linear batch query and
     its streaming monitor (the ewma_from_daily one-combine-two-paths
     pattern). NOTE for streaming: the state must be the DAILY GRID —
@@ -282,8 +309,8 @@ def holt_from_daily(
     EWMA there is no decay horizon to age out against, so unbounded
     retention keeps the full (dimension-table-sized) grid.
 
-    The frame is densified onto each group's own daily span (missing
-    days = 0 cents) and the level/trend recursion
+    The grid is densified onto each group's own daily span
+    (``gap_filled``: missing days = 0 cents) and the level/trend recursion
     l_t = 0.5*x_t + 0.5*(l+b), b_t = 0.25*(l_t-l) + 0.75*b (repr-exact
     dyadic constants) folds SEQUENTIALLY over the sorted series with
     F.aggregate — a fixed op order, so results are bit-identical to
@@ -294,20 +321,10 @@ def holt_from_daily(
 
     Input is already the calendar-bounded daily grid, so this is
     |groups| x |days| work wherever it runs."""
-    bounds = daily.groupBy(group_col).agg(
-        F.min(day_col).alias("lo"), F.max(day_col).alias("hi")
-    )
-    spine = bounds.select(
-        group_col, F.explode(F.sequence("lo", "hi")).alias(day_col)
-    )
-    grid = spine.join(daily, [group_col, day_col], "left").select(
-        group_col,
-        day_col,
-        F.coalesce(cents_col, F.lit(0)).cast("double").alias("x"),
-    )
-    ser = grid.groupBy(group_col).agg(
+    grid = gap_filled(daily).withColumn("x", F.col("x").cast("double"))
+    ser = grid.groupBy("event_type").agg(
         F.transform(
-            F.array_sort(F.collect_list(F.struct(day_col, "x"))),
+            F.array_sort(F.collect_list(F.struct("d", "x"))),
             lambda s: s.x,
         ).alias("xs")
     )
@@ -334,12 +351,12 @@ def holt_from_daily(
     return (
         ser.where(F.size(xs) >= 2)
         .select(
-            group_col,
+            "event_type",
             F.size(xs).cast("long").alias("n_days"),
             acc.alias("acc"),
         )
         .select(
-            group_col,
+            "event_type",
             "n_days",
             F.round(F.col("acc.l"), 6).alias("level_cents"),
             F.round(F.col("acc.b"), 6).alias("trend_cents"),
@@ -353,19 +370,13 @@ def holt_from_daily(
                 6,
             ).alias("rmse_cents"),
         )
-        .orderBy(group_col)
+        .orderBy("event_type")
     )
 
 
-def ewma_from_daily(
-    daily: DataFrame,
-    alpha: float = 0.9,
-    group_col: str = "event_type",
-    day_col: str = "d",
-    cents_col: str = "cents",
-) -> DataFrame:
+def ewma_from_daily(daily: DataFrame) -> DataFrame:
     """Normalized exponentially-weighted moving average at the series
-    end from a (group, day, exact-integer cents) frame:
+    end from a ``daily_cents`` grid, α = 0.9:
 
         EWMA = Σ xᵢ·α^(d_last−dᵢ) / Σ α^(d_last−dᵢ)
 
@@ -380,43 +391,38 @@ def ewma_from_daily(
     not final until read time. For unbounded retention, age out days
     older than the decay horizon (α^d < ulp ⇒ d ≳ 330 at α=0.9):
     dropping them changes nothing representable in the result."""
-    last = daily.groupBy(group_col).agg(F.max(day_col).alias("d_last"))
-    wgt = daily.join(F.broadcast(last), group_col).select(
-        group_col,
-        cents_col,
-        day_col,
+    last = daily.groupBy("event_type").agg(F.max("d").alias("d_last"))
+    wgt = daily.join(F.broadcast(last), "event_type").select(
+        "event_type",
+        "cents",
+        "d",
         "d_last",
         F.pow(
-            F.lit(alpha), (F.col("d_last") - F.col(day_col)).cast("double")
+            F.lit(0.9), (F.col("d_last") - F.col("d")).cast("double")
         ).alias("w"),
     )
     return (
-        wgt.groupBy(group_col)
+        wgt.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_days"),
             F.max(
-                F.when(F.col(day_col) == F.col("d_last"), F.col(cents_col))
+                F.when(F.col("d") == F.col("d_last"), F.col("cents"))
             )
             .cast("long")
             .alias("last_day_cents"),
             F.round(
-                F.sum(F.col(cents_col) * F.col("w")) / F.sum("w"), 6
+                F.sum(F.col("cents") * F.col("w")) / F.sum("w"), 6
             ).alias("ewma_cents"),
         )
-        .orderBy(group_col)
+        .orderBy("event_type")
     )
 
 
-def runs_test_from_daily(
-    daily: DataFrame,
-    group_col: str = "event_type",
-    day_col: str = "d",
-    cents_col: str = "cents",
-) -> DataFrame:
-    """Wald-Wolfowitz runs test from a (group, day, exact-integer
-    cents) frame — the SHARED combine behind the evt_runs_test batch
-    query and its streaming monitor (the ewma_from_daily
-    one-combine-two-paths pattern). Days equal to the per-group median
+def runs_test_from_daily(daily: DataFrame) -> DataFrame:
+    """Wald-Wolfowitz runs test from a ``daily_cents`` grid — the SHARED
+    combine behind the evt_runs_test batch query and its streaming
+    monitor (the ewma_from_daily one-combine-two-paths pattern). Days
+    equal to the per-group median
     (F.percentile, cross-engine-stable interpolation) are excluded;
     E[R] and Var[R] are single IEEE divisions of exact integers and
     z = (R − E)/sqrt(V) chains only correctly-rounded ops, so every
@@ -426,26 +432,24 @@ def runs_test_from_daily(
     folded (last_sign, counters) state — late data flips a past day's
     sign, and the median the signs compare against moves with every new
     day."""
-    from pyspark.sql import Window as W
-
-    med = daily.groupBy(group_col).agg(
-        F.percentile(F.col(cents_col), F.lit(0.5)).alias("med")
+    med = daily.groupBy("event_type").agg(
+        F.percentile(F.col("cents"), F.lit(0.5)).alias("med")
     )
     sgn = (
-        daily.join(F.broadcast(med), group_col)
-        .where(F.col(cents_col).cast("double") != F.col("med"))
+        daily.join(F.broadcast(med), "event_type")
+        .where(F.col("cents").cast("double") != F.col("med"))
         .select(
-            group_col,
-            day_col,
-            (F.col(cents_col).cast("double") > F.col("med"))
+            "event_type",
+            "d",
+            (F.col("cents").cast("double") > F.col("med"))
             .cast("int")
             .alias("sign"),
         )
     )
-    wlag = W.partitionBy(group_col).orderBy(day_col)
+    wlag = Window.partitionBy("event_type").orderBy("d")
     runs = (
         sgn.withColumn("prev", F.lag("sign").over(wlag))
-        .groupBy(group_col)
+        .groupBy("event_type")
         .agg(
             F.sum(
                 F.when(
@@ -468,7 +472,7 @@ def runs_test_from_daily(
         "double"
     ) / (n * n * (n - F.lit(1))).cast("double")
     return runs.select(
-        group_col,
+        "event_type",
         "n_runs",
         "n_above",
         "n_below",
@@ -477,17 +481,12 @@ def runs_test_from_daily(
             v_runs > 0,
             (F.col("n_runs").cast("double") - e_runs) / F.sqrt(v_runs),
         ).alias("z_stat"),
-    ).orderBy(group_col)
+    ).orderBy("event_type")
 
 
-def tail_dependence_from_daily(
-    daily: DataFrame,
-    group_col: str = "event_type",
-    day_col: str = "d",
-    cents_col: str = "cents",
-) -> DataFrame:
+def tail_dependence_from_daily(daily: DataFrame) -> DataFrame:
     """Empirical upper-tail dependence λ_U for every group pair from a
-    (group, day, exact-cents) frame — the SHARED combine behind the
+    ``daily_cents`` grid — the SHARED combine behind the
     evt_tail_dependence batch query and its streaming monitor (the
     one-combine-two-paths pattern).  Each side's 0.8 threshold is the exact
     type-1 order statistic over the SHARED days (rank ceil(0.8n) = (8n+9)
@@ -497,17 +496,15 @@ def tail_dependence_from_daily(
     folded exceedance counts — late data changes a day's cents, which moves
     BOTH thresholds and can re-classify every other day's exceedance flags.
     Pair frame |groups|²/2 × days — calendar²-bounded."""
-    from pyspark.sql import Window
-
     a = daily.select(
-        F.col(group_col).alias("t1"),
-        F.col(day_col).alias("d"),
-        F.col(cents_col).alias("c1"),
+        F.col("event_type").alias("t1"),
+        F.col("d").alias("d"),
+        F.col("cents").alias("c1"),
     )
     b = daily.select(
-        F.col(group_col).alias("t2"),
-        F.col(day_col).alias("d"),
-        F.col(cents_col).alias("c2"),
+        F.col("event_type").alias("t2"),
+        F.col("d").alias("d"),
+        F.col("cents").alias("c2"),
     )
     pr = a.join(b, "d").where(F.col("t1") < F.col("t2"))
     w1 = Window.partitionBy("t1", "t2").orderBy("c1", "d")
@@ -554,14 +551,9 @@ def tail_dependence_from_daily(
     ).orderBy("t1", "t2")
 
 
-def spc_from_daily(
-    daily: DataFrame,
-    group_col: str = "event_type",
-    day_col: str = "d",
-    cents_col: str = "cents",
-) -> DataFrame:
+def spc_from_daily(daily: DataFrame) -> DataFrame:
     """Shewhart individuals/moving-range control chart from a
-    (group, day, exact-cents) frame — the SHARED combine behind the
+    ``daily_cents`` grid — the SHARED combine behind the
     evt_spc_individuals batch query and its streaming monitor (the
     one-combine-two-paths pattern; extracted as pure code motion,
     plan-identity verified).  Center = S/n and MR̄ = ΣMR/(n−1) are single
@@ -571,23 +563,7 @@ def spc_from_daily(
     folded (center, MR̄, violation) stats — late data on ONE old day changes
     its two adjacent moving ranges AND the center, which re-flags every day
     of the group."""
-    from pyspark.sql import Window
-
-    d_col, c_col = F.col(day_col), F.col(cents_col)
-    base = daily.select(
-        F.col(group_col).alias("event_type"),
-        d_col.alias("d"),
-        c_col.alias("cents"),
-    )
-    bounds = base.groupBy("event_type").agg(
-        F.min("d").alias("lo"), F.max("d").alias("hi")
-    )
-    spine = bounds.select(
-        "event_type", F.explode(F.sequence("lo", "hi")).alias("d")
-    )
-    grid = spine.join(base, ["event_type", "d"], "left").select(
-        "event_type", "d", F.coalesce("cents", F.lit(0)).alias("x")
-    )
+    grid = gap_filled(daily)
     wo = Window.partitionBy("event_type").orderBy("d")
     mr = grid.select(
         "event_type",
@@ -640,27 +616,9 @@ def spc_from_daily(
     )
 
 
-def daily_counts(
-    events: DataFrame, group_col: str = "event_type", ts_col: str = "ts"
-) -> DataFrame:
-    """(group, d, x): events per group and epoch day — the COUNT grid
-    behind evt_turning_points, and its streaming monitor's state when
-    run over a stream (calendar-bounded: |groups × days| rows, each
-    micro-batch shuffles only its map-side-combined count partials)."""
-    day = F.floor(F.unix_timestamp(F.col(ts_col)) / F.lit(86400.0)).cast("long")
-    return events.groupBy(F.col(group_col), day.alias("d")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
-
-
-def turning_points_from_daily(
-    daily: DataFrame,
-    group_col: str = "event_type",
-    day_col: str = "d",
-    count_col: str = "x",
-) -> DataFrame:
+def turning_points_from_daily(daily: DataFrame) -> DataFrame:
     """Kendall-Stuart turning-point randomness test from a
-    (group, day, exact-count) frame — the SHARED combine behind the
+    ``daily_counts`` grid — the SHARED combine behind the
     evt_turning_points batch query and its streaming monitor
     (``daily_counts`` over the stream, this combine as the snapshot of
     ``streaming.grid_monitor.start_grid_rewrite_monitor``; extracted as
@@ -671,23 +629,7 @@ def turning_points_from_daily(
     z 6dp.  NOTE for streaming: the state must be the DAILY GRID, not
     a folded tally — late data changing ONE day's count can flip the
     local-extremum status of BOTH its neighbors."""
-    from pyspark.sql import Window
-
-    base = daily.select(
-        F.col(group_col).alias("event_type"),
-        F.col(day_col).alias("d"),
-        F.col(count_col).alias("x"),
-    )
-    span = base.groupBy("event_type").agg(
-        F.min("d").alias("mn"), F.max("d").alias("mx")
-    )
-    grid = span.select(
-        "event_type",
-        F.explode(F.sequence(F.col("mn"), F.col("mx"))).alias("d"),
-    )
-    dense = grid.join(base, ["event_type", "d"], "left").select(
-        "event_type", "d", F.coalesce("x", F.lit(0).cast("long")).alias("x")
-    )
+    dense = gap_filled(daily)
     w = Window.partitionBy("event_type").orderBy("d")
     tp = dense.select(
         "event_type",
@@ -728,12 +670,7 @@ def turning_points_from_daily(
     ).orderBy("event_type")
 
 
-def isotonic_blocks(
-    daily: DataFrame,
-    group_col: str = "event_type",
-    day_col: str = "d",
-    cents_col: str = "cents",
-) -> DataFrame:
+def isotonic_blocks(daily: DataFrame) -> DataFrame:
     """Isotonic (non-decreasing least-squares) regression of a daily
     exact-integer series per group — pool-adjacent-violators (PAVA),
     the monotone-trend / calibration primitive (MLlib ships the same
@@ -742,7 +679,7 @@ def isotonic_blocks(
     block decomposition is bit-deterministic and oracle-comparable).
 
     Output is one row per fitted BLOCK (maximal run of constant fit):
-    ``(group, block_start_day, block_end_day, block_days, block_cents,
+    ``(event_type, block_start_day, block_end_day, block_days, block_cents,
     iso_fit_cents)`` — the first five are exact integers (tie-free for
     the oracle hash); ``iso_fit_cents = block_cents / block_days``
     derives UNROUNDED from the two exact integers (identical single
@@ -758,8 +695,7 @@ def isotonic_blocks(
     each group holds at most a few thousand rows regardless of fact
     volume; applyInPandas shuffles once on the group key and the O(n)
     sequential sweep runs per group. Groups are event-type-scale (small
-    cardinality) — for a high-cardinality group column the same shuffle
-    bounds hold per key.
+    cardinality).
 
     NOTE for streaming: the state must be the DAILY GRID, not folded
     blocks — PAVA blocks are the least incrementally maintainable state
@@ -770,15 +706,15 @@ def isotonic_blocks(
     import numpy as np
 
     schema = (
-        f"{group_col} string, block_start_day long, block_end_day long, "
+        "event_type string, block_start_day long, block_end_day long, "
         "block_days long, block_cents long, iso_fit_cents double"
     )
 
     def _pava(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(day_col)
-        days = pdf[day_col].to_numpy(dtype=np.int64)
-        ys = pdf[cents_col].to_numpy(dtype=np.int64)
-        key = pdf[group_col].iloc[0]
+        pdf = pdf.sort_values("d")
+        days = pdf["d"].to_numpy(dtype=np.int64)
+        ys = pdf["cents"].to_numpy(dtype=np.int64)
+        key = pdf["event_type"].iloc[0]
         # stack of (start_index, n_days, cents_sum) in exact Python ints;
         # merge while the previous block mean >= the incoming mean
         # (s_prev/n_prev >= s/n  <=>  s_prev*n >= s*n_prev, dens > 0)
@@ -791,7 +727,7 @@ def isotonic_blocks(
             stack.append((start, n, s))
         return pd.DataFrame(
             {
-                group_col: [key] * len(stack),
+                "event_type": [key] * len(stack),
                 "block_start_day": [int(days[st]) for st, n, _ in stack],
                 "block_end_day": [int(days[st + n - 1]) for st, n, _ in stack],
                 "block_days": [n for _, n, _ in stack],
@@ -800,4 +736,4 @@ def isotonic_blocks(
             }
         )
 
-    return daily.groupBy(group_col).applyInPandas(_pava, schema=schema)
+    return daily.groupBy("event_type").applyInPandas(_pava, schema=schema)

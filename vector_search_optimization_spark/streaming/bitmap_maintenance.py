@@ -32,14 +32,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.timeseries import epoch_day
+
 
 def day_bucket_bitmaps(events: DataFrame, id_col: str = "user_id") -> DataFrame:
     """ONE definition of the (day_idx, bucket, bm, n_events) pre-agg for
     both the batch rollup and the streaming fold — epoch-day indices via
-    the project's cross-engine timestamp identity (unix_timestamp)."""
-    day = F.floor(F.unix_timestamp(F.col("ts")) / F.lit(86400.0))
+    ``timeseries.epoch_day``."""
     return (
-        events.select(day.cast("long").alias("day_idx"), id_col)
+        events.select(epoch_day("ts").alias("day_idx"), id_col)
         .groupBy(
             "day_idx", F.expr(f"bitmap_bucket_number({id_col})").alias("bucket")
         )

@@ -29,42 +29,32 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.timeseries import drawdown_from_daily
+from ..operators.timeseries import drawdown_from_daily, epoch_day
 from .grid_monitor import start_grid_rewrite_monitor
 
 __all__ = ["stream_drawdown_monitor"]
 
 
 def stream_drawdown_monitor(
-    stream_df: DataFrame,
-    out_path: str,
-    checkpoint_dir: str,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
+    stream_df: DataFrame, out_path: str, checkpoint_dir: str
 ) -> StreamingQuery:
-    """Start the monitor: distinct (group, day, user) activity grid
-    over the stream; per micro-batch the absorbed grid collapses to
-    per-day DAU and the shared drawdown combine overwrites
-    ``out_path`` with the latest per-group profile — column-identical
+    """Start the monitor: distinct (event_type, day, user_id) activity
+    grid over the stream; per micro-batch the absorbed grid collapses
+    to per-day DAU and the shared drawdown combine overwrites
+    ``out_path`` with the latest per-type profile — column-identical
     to the evt_dau_drawdown batch export (with the combine's generic
     ``peak`` name; the batch query aliases it to ``peak_dau``)."""
-    day = F.floor(F.unix_timestamp(F.col(ts_col)) / F.lit(86400.0)).cast(
-        "long"
-    )
     grid = (
-        stream_df.select(F.col(group_col), day.alias("d"), F.col(user_col))
-        .groupBy(group_col, "d", user_col)
+        stream_df.select("event_type", epoch_day("ts").alias("d"), "user_id")
+        .groupBy("event_type", "d", "user_id")
         .agg(F.count(F.lit(1)).alias("_seen"))
     )
 
     def _snapshot(batch_df: DataFrame) -> DataFrame:
-        daily = batch_df.groupBy(group_col, "d").agg(
+        daily = batch_df.groupBy("event_type", "d").agg(
             F.count(F.lit(1)).cast("long").alias("dau")
         )
-        return drawdown_from_daily(
-            daily, group_col=group_col, day_col="d", value_col="dau"
-        )
+        return drawdown_from_daily(daily)
 
     return start_grid_rewrite_monitor(
         grid, out_path, checkpoint_dir, _snapshot

@@ -31,9 +31,11 @@ of this writer:
   final until read time), and late data landing on a PAST day can move
   the median/quartile-cuts/trend-neighbors/running-peak that
   downstream rows depend on — only the grid is a valid incremental
-  state. Rounding to exact cents happens in the SNAPSHOT (on the
-  absorbed grid), never in the state fold — partial-batch roundings
-  would not compose.
+  state. The grid is the batch queries' own ``daily_cents`` or
+  ``daily_counts`` aggregate run over the stream: its state holds the
+  running sums, and rounding to exact cents is the aggregate's result
+  expression, evaluated on the absorbed sum, never on one batch's
+  partial sum (partial roundings would not compose).
 """
 
 from __future__ import annotations
@@ -41,8 +43,9 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from ..operators.timeseries import daily_cents
 
 __all__ = ["start_grid_rewrite_monitor", "start_daily_cents_monitor"]
 
@@ -74,42 +77,19 @@ def start_daily_cents_monitor(
     out_path: str,
     checkpoint_dir: str,
     combine: Callable[[DataFrame], DataFrame],
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
 ) -> StreamingQuery:
-    """The cents-sum specialization: state is the running (group, day)
-    value-sum grid; per micro-batch the absorbed grid rounds to exact
-    integer cents (columns ``group_col, d, cents``) and ``combine``
-    produces the snapshot written to ``out_path``.
+    """The cents-grid monitor: state is ``timeseries.daily_cents`` of
+    the stream, the batch queries' own grid, and per micro-batch
+    ``combine`` of the absorbed grid is written to ``out_path``.
 
     A batch query's combine is its monitor: passing
     ``operators.timeseries.ewma_from_daily`` (or ``holt_from_daily``,
     ``runs_test_from_daily``, ``seasonal_from_daily``, ``spc_from_daily``,
-    ``isotonic_blocks``, ``tail_dependence_from_daily``;
-    ``functools.partial`` binds non-default arguments) keeps that query's
-    export fresh, column-identical to the batch export over the same
-    rows (stream ≡ batch pinned in tests/test_streaming_*.py).  An
-    identity combine snapshots the grid itself, which
-    ``sax_motifs_from_daily`` turns into the batch motifs."""
-    day = F.floor(F.unix_timestamp(F.col(ts_col)) / F.lit(86400.0)).cast(
-        "long"
-    )
-    grid = (
-        stream_df.where(F.col(value_col).isNotNull())
-        .select(F.col(group_col), day.alias("d"), F.col(value_col))
-        .groupBy(group_col, "d")
-        .agg(F.sum(value_col).alias("_vsum"))
-    )
-
-    def _snapshot(batch_df: DataFrame) -> DataFrame:
-        daily = batch_df.select(
-            group_col,
-            "d",
-            F.round(F.col("_vsum") * 100).cast("long").alias("cents"),
-        )
-        return combine(daily)
-
+    ``isotonic_blocks``, ``tail_dependence_from_daily``,
+    ``sax_motifs_from_daily``) keeps that query's export fresh,
+    column-identical to ``combine(daily_cents(events))`` over the same
+    rows (stream ≡ batch pinned in tests/test_streaming_cents_monitors.py).
+    An identity combine snapshots the grid itself."""
     return start_grid_rewrite_monitor(
-        grid, out_path, checkpoint_dir, _snapshot
+        daily_cents(stream_df), out_path, checkpoint_dir, combine
     )
