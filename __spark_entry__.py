@@ -1859,7 +1859,7 @@ def j9_distance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (squareform(pdist(centroids)), main-script1.ipynb:1009 c35)."""
     e = load_table(spark, sf_dir, "embeddings")
     cents = VA.group_vector_mean(e, "label", "embedding")
-    m = SIM.distance_matrix(cents, "label", "centroid", metric="euclidean")
+    m = SIM.distance_matrix(cents, "label", "centroid")
     return m.select("id_a", "id_b", F.round("dist", 6).alias("dist"))
 
 
@@ -1885,7 +1885,7 @@ def j8_similarity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed at 0.8 (chunk_similarities.ipynb:447 c21 report shape)."""
     e = load_table(spark, sf_dir, "embeddings")
     pairs = SIM.intra_group_pairs_kernel(e, "label", "vec_id", "embedding")
-    return SIM.similarity_buckets(pairs, "sim", threshold=0.8)
+    return SIM.similarity_buckets(pairs, "sim")
 
 
 _J8_SQL = """
@@ -1909,7 +1909,7 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN baseline — exact top-10 by cosine to the min-vec_id vector."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.orderBy("vec_id").select("embedding").first()[0]
-    return ann.brute_force_topk(e, q, k=10)
+    return ann.brute_force_topk(e, q)
 
 
 _ANN_SQL = """
@@ -1964,7 +1964,7 @@ def ann_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary included — on rounded scores with id tie-breaks."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.orderBy("vec_id").select("embedding").first()[0]
-    return ann.matryoshka_topk(e, q, k=10, prefix_dim=16, rerank=50)
+    return ann.matryoshka_topk(e, q, rerank=50)
 
 
 def _mrl_cos_sql(a: str, b: str) -> str:
@@ -2005,7 +2005,7 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     q = e.orderBy("vec_id").select("embedding").first()[0]
-    return RET.mmr_rerank(e, q, k=10, shortlist=50, lam=0.5)
+    return RET.mmr_rerank(e, q)
 
 
 def _mmr_sql() -> str:
@@ -2040,7 +2040,7 @@ def _mmr_sql() -> str:
         ).fetchall()
     )
     con.close()
-    picks = mmr_select(ids, [vmap[i] for i in ids], qvec, k=10, lam=0.5)
+    picks = mmr_select(ids, [vmap[i] for i in ids], qvec)
     sel_vals = ", ".join(f"({r}, {i})" for r, i, _, _ in picks)
     return f"""
 WITH q AS (SELECT embedding AS qv FROM embeddings ORDER BY vec_id LIMIT 1),
@@ -2091,10 +2091,8 @@ def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
         e = load_table(spark, sf_dir, "embeddings")
         # vec_id-ordered training sample: the seeded quantizer is then a
         # pure function of the data, reproducible by the oracle generator
-        cents = ann.train_ivf_centroids(
-            e.orderBy("vec_id"), num_cells=16, vector_col="embedding", seed=42
-        )
-        ann.write_ivf_index(e, cents, path, vector_col="embedding")
+        cents = ann.train_ivf_centroids(e.orderBy("vec_id"), num_cells=16)
+        ann.write_ivf_index(e, cents, path)
     return path
 
 
@@ -2121,7 +2119,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed, cents = ann.load_ivf_index(spark, path)
     e = load_table(spark, sf_dir, "embeddings")
     q = e.orderBy("vec_id").select("embedding").first()[0]
-    return ann.ivf_topk(indexed, cents, q, k=10, nprobe=4)
+    return ann.ivf_topk(indexed, cents, q)
 
 
 def _ivf_oracle_parts() -> tuple:
@@ -2202,7 +2200,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = e.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    return ann.ivf_recall_audit(indexed, cents, queries_df, k=10, nprobes=(1, 4))
+    return ann.ivf_recall_audit(indexed, cents, queries_df)
 
 
 def _ivf_recall_sql() -> str:
@@ -2274,7 +2272,7 @@ def emb_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tasks. The driver-bounded all_pairs_topk kernel survives as the pytest
     equivalence oracle."""
     e = load_table(spark, sf_dir, "embeddings")
-    return ann.all_pairs_topk_distributed(e, k=20, num_blocks=8)
+    return ann.all_pairs_topk_distributed(e)
 
 
 _EMB_TOP_SQL = """
@@ -2298,7 +2296,7 @@ def emb_near_dup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     are seeded literals, so the DuckDB oracle reproduces the exact same
     candidate set."""
     e = load_table(spark, sf_dir, "embeddings")
-    return ann.rp_blocked_top_pairs(e, k=20, num_planes=8, num_tables=4, seed=42)
+    return ann.rp_blocked_top_pairs(e)
 
 
 _EMB_DIM = 64  # synthetic embeddings table dimension (TESTDATA.md)
@@ -2352,12 +2350,8 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
     )
     corpus = e.unionByName(planted)
-    cents = ann.train_ivf_centroids(
-        corpus.orderBy("vec_id"), num_cells=8, vector_col="embedding", seed=42
-    )
-    flagged = dedup.semantic_dedup(
-        corpus, cents, id_col="vec_id", vector_col="embedding", threshold=0.9
-    )
+    cents = ann.train_ivf_centroids(corpus.orderBy("vec_id"), num_cells=8)
+    flagged = dedup.semantic_dedup(corpus, cents, threshold=0.9)
     return (
         flagged.groupBy("cell")
         .agg(
@@ -2444,7 +2438,7 @@ _RP_PLANES = np.random.RandomState(42).normal(size=(8, 64))
 def rp_bucket_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SRP-LSH bucket histogram (the blocking stage for embedding dedup)."""
     e = load_table(spark, sf_dir, "embeddings")
-    b = ann.random_projection_buckets(e, num_planes=8, seed=42)
+    b = ann.random_projection_buckets(e, num_planes=8)
     return b.groupBy("rp_bucket").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -2478,7 +2472,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         TX.char_count("text").alias("n_chars_actual"),
         TX.mean_word_length("text").alias("mean_word_len"),
         TX.digit_ratio("text").alias("digit_ratio"),
-        TX.stopword_ratio("text", "en").alias("stopword_ratio"),
+        TX.stopword_ratio("text").alias("stopword_ratio"),
     )
 
 
@@ -2575,9 +2569,7 @@ def text_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Gopher-ish thresholds. Ratio and rounding math stays JVM-side for
     oracle bit-parity (same contract as text_repetition)."""
     d = load_table(spark, sf_dir, "documents")
-    st = d.select(
-        "doc_id", TX.word_gram_stats_multi_expr("text", (2, 3, 4)).alias("__st")
-    )
+    st = d.select("doc_id", TX.word_gram_stats_multi_expr("text").alias("__st"))
     nw = F.col("__st.n_words")
     dup = F.when(nw <= 0, F.lit(0.0)).otherwise(
         F.round(1.0 - F.col("__st.n_distinct_words") / nw.cast("double"), 6)
@@ -2749,7 +2741,7 @@ def dedup_exact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # survivor total as a 1-row broadcast instead of a driver count
     # (r12, guide §5: the eager count was a whole extra job)
-    surv = dedup.dedup_exact(d, "text", "doc_id").agg(
+    surv = dedup.dedup_exact(d).agg(
         F.count(F.lit(1)).alias("n_survivors")
     )
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
@@ -2872,12 +2864,8 @@ WITH toks AS (
 )"""
 
 
-def _minhash_sigs_sql(
-    num_hashes: int = 64,
-    seed: int = 42,
-    pair_on: str = "a.doc_id < b.doc_id",
-) -> str:
-    a, b = dedup.minhash_coeffs(num_hashes, seed)
+def _minhash_sigs_sql(pair_on: str = "a.doc_id < b.doc_id") -> str:
+    a, b = dedup.minhash_coeffs(64)
     poly = _POLY_SQL.format(s="s", base=TX.POLY_BASE)
     return (
         _MINHASH_SHINGLE_SQL.format(n=3, nm1=2)
@@ -2893,7 +2881,7 @@ def _minhash_sigs_sql(
   FROM sigs a JOIN sigs b ON {pair_on}
 ), banded AS (
   SELECT id_a, id_b,
-         round(CAST(len(list_filter(list_zip(sa, sb), p -> p[1] = p[2])) AS DOUBLE) / {num_hashes}, 6) AS est_jaccard,
+         round(CAST(len(list_filter(list_zip(sa, sb), p -> p[1] = p[2])) AS DOUBLE) / 64, 6) AS est_jaccard,
          len(list_filter(range(0, 16), bb -> list_slice(sa, bb*4 + 1, bb*4 + 4) = list_slice(sb, bb*4 + 1, bb*4 + 4))) AS nbands
   FROM pairs
 )"""
@@ -2912,10 +2900,11 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-bit segments. The synthetic corpus draws from a ~30-word
     vocabulary, so most documents ARE simhash-near-duplicates — returned
     as a hamming histogram rather than the multi-million-row pair list;
-    pytest covers pair-level recall on planted duplicates. Poly hash_mode
-    makes the 62-bit simhash reproducible in DuckDB (_simhash_sql)."""
+    pytest covers pair-level recall on planted duplicates. The poly
+    shingle hash makes the 62-bit simhash reproducible in DuckDB
+    (_simhash_sql)."""
     d = load_table(spark, sf_dir, "documents")
-    pairs = dedup.simhash_near_duplicates(d, max_hamming=3)
+    pairs = dedup.simhash_near_duplicates(d)
     return pairs.groupBy("hamming").agg(F.count(F.lit(1)).alias("n_pairs"))
 
 
@@ -3042,7 +3031,7 @@ def m6_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_dist = e.join(
         F.broadcast(cents), e.label == cents.cluster_label
     ).withColumn("dist", V.euclidean("embedding", "centroid"))
-    flagged = OUT.zscore_outliers(with_dist, "label", "dist", threshold=3.0)
+    flagged = OUT.zscore_outliers(with_dist, "label", "dist")
     return flagged.groupBy("label").agg(
         F.sum(F.col("is_outlier").cast("long")).alias("n_outliers"),
         F.count(F.lit(1)).alias("n"),
@@ -3079,7 +3068,7 @@ def m7_percentile_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_dist = e.join(
         F.broadcast(cents), e.label == cents.cluster_label
     ).withColumn("dist", V.cosine_distance("embedding", "centroid"))
-    flagged = OUT.percentile_outliers(with_dist, "label", "dist", pct=0.95)
+    flagged = OUT.percentile_outliers(with_dist, "label", "dist")
     return flagged.groupBy("label").agg(
         F.sum(F.col("is_outlier").cast("long")).alias("n_outliers"),
         F.count(F.lit(1)).alias("n"),
@@ -3114,9 +3103,7 @@ def m8_lof_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_search_optimization_spark.operators import outliers as OUT
 
     e = load_table(spark, sf_dir, "embeddings")
-    flagged = OUT.lof_outliers(
-        e, "label", "embedding", "vec_id", n_neighbors_frac=0.05, contamination=0.02
-    )
+    flagged = OUT.lof_outliers(e, "label", "embedding", "vec_id")
     return flagged.groupBy("label").agg(
         F.sum(F.col("is_outlier").cast("long")).alias("n_outliers"),
         F.round(F.max("lof"), 4).alias("max_lof"),
@@ -3233,9 +3220,7 @@ def m9_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     e2 = e.withColumn("p3", p3)
-    flagged = OUT.mahalanobis_outliers(
-        e2, "label", "p3", "vec_id", pct=95.0, method="mcd", seed=_M9_SEED
-    )
+    flagged = OUT.mahalanobis_outliers(e2, "label", "p3", "vec_id", seed=_M9_SEED)
     return (
         flagged.groupBy("label")
         .agg(
@@ -3274,7 +3259,7 @@ def _m9_sql() -> str:
     for lbl in sorted(set(labels.tolist())):
         Pl = P[labels == lbl]  # already vec_id-ordered
         assert len(Pl) >= 3, "oracle assumes every cluster has >= 3 rows at the oracle sf"
-        mu_c, cov_c = location_covariance(Pl, method="mcd", seed=_M9_SEED)
+        mu_c, cov_c = location_covariance(Pl, seed=_M9_SEED)
         prec = np.linalg.pinv(cov_c)
         q = [prec[0, 0], prec[1, 1], prec[2, 2],
              prec[0, 1] + prec[1, 0], prec[0, 2] + prec[2, 0],
@@ -3340,9 +3325,7 @@ def m1_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram (reference: main-script1.ipynb KMeans(n_clusters, seed)
     cluster-size table)."""
     e = load_table(spark, sf_dir, "embeddings")
-    cents = ann.train_ivf_centroids(
-        e.orderBy("vec_id"), num_cells=8, vector_col="embedding", seed=42
-    )
+    cents = ann.train_ivf_centroids(e.orderBy("vec_id"), num_cells=8)
     assigned = ann.assign_ivf_cells(e, cents)
     return (
         assigned.groupBy(F.col("cell").alias("cluster"))
@@ -3398,10 +3381,8 @@ def m10_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation: the deterministic eigh basis (same driver-bounded sample
     helper as m9) is applied as plan-literal projections and the ratio is
     computed DISTRIBUTEDLY as var_pop(projection) / total variance, with
-    total variance = E||x||² - ||E x||² in one pass over the table.
-    MLlib's pca_project stays the operator API (same math, SVD-based —
-    pytest-equivalence in tests/test_reduction_graph_multimodal.py); this
-    declarative form is what DuckDB can recompute independently."""
+    total variance = E||x||² - ||E x||² in one pass over the table, a
+    declarative form DuckDB can recompute independently."""
     from vector_search_optimization_spark.operators import vector_agg as VA
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -3589,14 +3570,16 @@ def m4_grid_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _m4_grid_sql() -> str:
     """Generated oracle for m4_grid_sweep: one shared all-pairs distance
-    CTE, then per combo the full DBSCAN derivation (degree → core →
-    recursive transitive closure → min-label clusters → border
-    assignment) and the exact pairwise silhouette over that combo's
-    clustered subset (singletons score 0, sklearn convention — same
-    formulation as _M2_SQL)."""
+    CTE (MATERIALIZED: DuckDB inlines a plain CTE at every reference, and
+    this one is read by every combo's neighbour and silhouette CTEs),
+    then per combo the full DBSCAN derivation (degree → core → recursive
+    transitive closure → min-label clusters → border assignment) and the
+    exact pairwise silhouette over that combo's clustered subset
+    (singletons score 0, sklearn convention — same formulation as
+    _M2_SQL)."""
     ctes = [
         "pts AS (SELECT vec_id, embedding FROM embeddings)",
-        f"alldist AS (\n"
+        f"alldist AS MATERIALIZED (\n"
         f"  SELECT a.vec_id AS i, b.vec_id AS j, sqrt({_M4_D2}) AS dist\n"
         f"  FROM pts a JOIN pts b ON a.vec_id <> b.vec_id\n"
         f")",
@@ -3729,7 +3712,7 @@ def g2_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events")
     verts, edges = G.build_cluster_graph(e, "user_id", "event_type")
-    res = G.detect_communities(edges, weighted=True, vertices_df=verts)
+    res = G.detect_communities(edges, vertices_df=verts)
     rows = [
         (i, len(c), ",".join(map(str, c)), round(res["modularity"], 4))
         for i, c in enumerate(res["communities"])
@@ -3763,7 +3746,7 @@ def _g2_sql() -> str:
         zip(epdf["src"].tolist(), epdf["dst"].tolist(), epdf["weight"].tolist())
     )
     nodes = set(vpdf["id"].tolist())
-    res = detect_communities_kernel(nodes, edges, weighted=True)
+    res = detect_communities_kernel(nodes, edges)
     assign = ",\n".join(
         f"('{n}', {i})"
         for i, c in enumerate(res["communities"])
@@ -3868,11 +3851,9 @@ def ep3_lloyd_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("doc "), F.col("vec_id")).alias("content"),
         F.col("embedding"),
     )
-    cents = ann.train_ivf_centroids(
-        e.orderBy("vec_id"), num_cells=8, vector_col="embedding", seed=42
-    )
+    cents = ann.train_ivf_centroids(e.orderBy("vec_id"), num_cells=8)
     assigned = nearest_centroid(
-        docs, cents, vector_col="embedding", centroid_col="centroid",
+        docs, cents, vector_col="embedding",
         label_col="cell", metric="sqeuclidean",
         out_label="cluster", out_dist="dist",
     ).persist()
@@ -4090,9 +4071,7 @@ def m2_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_search_optimization_spark.operators import clustering as C
 
     e = load_table(spark, sf_dir, "embeddings")
-    sil = C.silhouette_exact_distributed(
-        e, "embedding", "label", sample_size=2000, seed=42, id_cols=["vec_id"]
-    )
+    sil = C.silhouette_exact_distributed(e, "embedding", "label", id_cols=["vec_id"])
     return spark.createDataFrame(
         [(round(sil, 4),)], schema="silhouette double"
     )
@@ -4251,7 +4230,7 @@ def minhash_verified_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     sigs = dedup.minhash_signatures_kernel(d)
     cands = dedup.minhash_lsh_candidates(sigs, num_hashes=64)
-    return dedup.ngram_jaccard_pairs(d, cands, ngram_n=5, threshold=0.5)
+    return dedup.ngram_jaccard_pairs(d, cands)
 
 
 # LSH candidates (>=1 agreeing band, no estimate threshold) verified by
@@ -4306,7 +4285,7 @@ def incremental_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup.minhash_signatures_kernel(corpus), num_hashes=64
     )
     cands = dedup.minhash_probe_corpus(batch, corpus_bands)
-    verified = dedup.ngram_jaccard_pairs(d, cands, ngram_n=5, threshold=0.5)
+    verified = dedup.ngram_jaccard_pairs(d, cands)
     return verified.select(
         F.col("id_a").alias("batch_id"),
         F.col("id_b").alias("corpus_id"),
@@ -4334,9 +4313,7 @@ def ngram_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     just precision. Shingle hash is the shared SQL-expressible poly
     hash (functions.text.poly_hash)."""
     d = load_table(spark, sf_dir, "documents")
-    return dedup.jaccard_similarity_join(
-        d, shingle_n=3, threshold=0.5
-    )
+    return dedup.jaccard_similarity_join(d)
 
 
 # all-pairs exact-jaccard CTEs over the word-3-shingle hash sets —
@@ -4371,7 +4348,7 @@ def dedup_canonical_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     sigs = dedup.minhash_signatures_kernel(d)
     cands = dedup.minhash_lsh_candidates(sigs, num_hashes=64)
-    verified = dedup.ngram_jaccard_pairs(d, cands, ngram_n=5, threshold=0.5)
+    verified = dedup.ngram_jaccard_pairs(d, cands)
     return dedup.canonical_duplicate_groups(verified)
 
 
@@ -5014,14 +4991,11 @@ def m3_k_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     per_k = []
     for k in _M3_KS:
-        cents = ann.train_ivf_centroids(
-            e.orderBy("vec_id"), num_cells=k, vector_col="embedding", seed=42
-        )
+        cents = ann.train_ivf_centroids(e.orderBy("vec_id"), num_cells=k)
         assigned = NC.nearest_centroid(
             e,
             cents,
             vector_col="embedding",
-            centroid_col="centroid",
             label_col="cell",
             metric="sqeuclidean",
             out_label="cell",
@@ -5672,7 +5646,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(shingles × sources²) worst-case and typically far less; the same
     family as the decontamination join, no all-pairs-of-docs anywhere."""
     d = load_table(spark, sf_dir, "documents")
-    toks = dedup.shingle_hash_rows(d, shingle_n=3)
+    toks = dedup.shingle_hash_rows(d)
     src = (
         toks.join(d.select("doc_id", "source"), "doc_id")
         .select("source", "g")
@@ -6033,9 +6007,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     element_at lookups per row and no vector math. The DuckDB oracle
     re-derives the same codebooks, codes, and LUT sums from literals."""
     e = load_table(spark, sf_dir, "embeddings")
-    books = ann.train_pq_codebooks(
-        e.orderBy("vec_id"), _PQ_M, _PQ_KSUB, seed=42
-    )
+    books = ann.train_pq_codebooks(e.orderBy("vec_id"), _PQ_M, _PQ_KSUB)
     qvec = e.orderBy("vec_id").select("embedding").first()[0]
     enc = ann.pq_encode_kernel(e.select("vec_id", "embedding"), books)
     return (
@@ -6114,12 +6086,10 @@ def ann_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus). Oracle: the shared literal-LUT ADC CTE + exact re-rank
     recomputed by DuckDB over the identical candidate cut."""
     e = load_table(spark, sf_dir, "embeddings")
-    books = ann.train_pq_codebooks(
-        e.orderBy("vec_id"), _PQ_M, _PQ_KSUB, seed=42
-    )
+    books = ann.train_pq_codebooks(e.orderBy("vec_id"), _PQ_M, _PQ_KSUB)
     qvec = e.orderBy("vec_id").select("embedding").first()[0]
     enc = ann.pq_encode_kernel(e.select("vec_id", "embedding"), books)
-    top = ann.pq_refined_topk(enc, books, qvec, k=10, rerank=100)
+    top = ann.pq_refined_topk(enc, books, qvec)
     return top.select(
         "vec_id",
         F.round("exact_dist", 6).alias("exact_dist"),
@@ -6156,16 +6126,14 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the vec_id-ordered data (shared _lloyd_kmeans), DuckDB
     recomputes cell assignment, codes, and literal LUT sums."""
     e = load_table(spark, sf_dir, "embeddings")
-    books = ann.train_pq_codebooks(
-        e.orderBy("vec_id"), _PQ_M, _PQ_KSUB, seed=42
-    )
+    books = ann.train_pq_codebooks(e.orderBy("vec_id"), _PQ_M, _PQ_KSUB)
     path = _ivf_index_dir(spark, sf_dir)
     indexed, cents = ann.load_ivf_index(spark, path)
     qvec = e.orderBy("vec_id").select("embedding").first()[0]
     enc = ann.pq_encode_kernel(
         indexed.select("vec_id", "embedding", "cell"), books
     ).drop("embedding")
-    top = ann.ivfpq_topk(enc, cents, books, qvec, k=20, nprobe=4)
+    top = ann.ivfpq_topk(enc, cents, books, qvec, k=20)
     return top.select("vec_id", F.round(F.col("adc_dist"), 6).alias("adc_dist"))
 
 
@@ -6268,18 +6236,14 @@ def ann_ivfpq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     IN-list pushed to the parquet scan) for the exact top-10. Oracle:
     the shared cell/LUT literal parts + an exact re-rank CTE."""
     e = load_table(spark, sf_dir, "embeddings")
-    books = ann.train_pq_codebooks(
-        e.orderBy("vec_id"), _PQ_M, _PQ_KSUB, seed=42
-    )
+    books = ann.train_pq_codebooks(e.orderBy("vec_id"), _PQ_M, _PQ_KSUB)
     path = _ivf_index_dir(spark, sf_dir)
     indexed, cents = ann.load_ivf_index(spark, path)
     qvec = e.orderBy("vec_id").select("embedding").first()[0]
     enc = ann.pq_encode_kernel(
         indexed.select("vec_id", "embedding", "cell"), books
     ).drop("embedding")
-    top = ann.ivfpq_refined_topk(
-        enc, indexed, cents, books, qvec, k=10, rerank=100, nprobe=4
-    )
+    top = ann.ivfpq_refined_topk(enc, indexed, cents, books, qvec)
     return top.select(
         "vec_id",
         F.round("exact_dist", 6).alias("exact_dist"),
@@ -7175,7 +7139,7 @@ def doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the export is still exact. novelty derives from the two exact
     integers."""
     d = load_table(spark, sf_dir, "documents")
-    rows = dedup.shingle_hash_rows(d, shingle_n=3)
+    rows = dedup.shingle_hash_rows(d)
     df_counts = rows.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     return (
         rows.join(df_counts, "g")
@@ -7377,7 +7341,7 @@ def boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit("")),
         ).alias("text"),
     )
-    out = CUR.strip_boilerplate_lines(aug, min_doc_freq=10)
+    out = CUR.strip_boilerplate_lines(aug)
     return out.select(
         "doc_id",
         "n_lines_before",
@@ -7512,7 +7476,7 @@ def skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     return (
-        SK.salted_agg(ev, "event_type", salt_key="event_id", salts=16,
+        SK.salted_agg(ev, "event_type", salt_key="event_id",
                       value_col="value")
         .select(
             "event_type",
@@ -7549,9 +7513,7 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_partkey").alias("l_partkey"), "p_brand"
     )
     return (
-        SK.salted_shuffle_join(
-            li, part, key="l_partkey", salt_key="l_orderkey", salts=16
-        )
+        SK.salted_shuffle_join(li, part, key="l_partkey", salt_key="l_orderkey")
         .groupBy("p_brand")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -7659,7 +7621,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join-back) re-run the stateless projection; at lake scale this
     # stage is a MATERIALIZED curated table (write once, read by every
     # downstream), which is also why no session cache is held here.
-    gated = curate_columns(d, min_tokens=10, keep_cols=())
+    gated = curate_columns(d, keep_cols=())
     vocab = LM.train_unigram_lm(gated, "clean")
     scored = LM.unigram_surprisal(gated, vocab, text_col="clean").select(
         "doc_id", "n_tokens", F.round("avg_surprisal", 4).alias("s")
@@ -7764,7 +7726,7 @@ def m11_spectral_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ids = [int(r[0]) for r in sample]
     X = np.asarray([r[1] for r in sample], dtype=np.float64)
-    emb = np.round(spectral_embedding_numpy(X, n_components=2, n_neighbors=15), 6)
+    emb = np.round(spectral_embedding_numpy(X), 6)
     coords = spark.createDataFrame(
         [(i, float(x), float(y)) for i, (x, y) in zip(ids, emb)],
         schema="vec_id long, sx double, sy double",
@@ -7801,7 +7763,7 @@ def _m11_sql() -> str:
     ).df()
     ids = pdf["vec_id"].tolist()
     X = np.asarray(pdf["embedding"].tolist(), dtype=np.float64)
-    emb = np.round(spectral_embedding_numpy(X, n_components=2, n_neighbors=15), 6)
+    emb = np.round(spectral_embedding_numpy(X), 6)
     values = ", ".join(
         # float() first: numpy>=2 repr of np.float64 is 'np.float64(x)',
         # which is not SQL
@@ -8345,14 +8307,14 @@ def g3_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     verts = e.select(F.col("event_type").alias("id")).distinct()
     edges = SIM.cooccurrence_edges(e, "user_id", "event_type")
-    pr = GR.pagerank(edges, verts, damping=0.85, iterations=8)
+    pr = GR.pagerank(edges, verts)
     return pr.select(
         F.col("id").alias("event_type"),
         F.round("rank", 6).alias("pagerank"),
     ).orderBy("event_type")
 
 
-def _g3_pagerank_sql(damping: float = 0.85, iterations: int = 8) -> str:
+def _g3_pagerank_sql() -> str:
     """Unrolled fixed-iteration PageRank: one CTE pair (contribution +
     rank) per round — no recursion-with-aggregate, and every float
     literal is the 17-significant-digit scientific form of the exact
@@ -8370,11 +8332,11 @@ e0 AS (
 nodes AS (SELECT DISTINCT event_type AS id FROM events)"""
     return _pagerank_cte_sql(
         graph,
-        f"""
+        """
 SELECT id AS event_type, round(rank, 6) AS pagerank
-FROM r{iterations} ORDER BY event_type""",
-        damping,
-        iterations,
+FROM r8 ORDER BY event_type""",
+        0.85,
+        8,
     )
 
 
@@ -8476,7 +8438,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("double").alias("weight")
     )
     verts = cand.select(F.col("tok").alias("id")).distinct()
-    pr = GR.pagerank(edges, verts, damping=0.85, iterations=8)
+    pr = GR.pagerank(edges, verts)
     return (
         pr.select(
             F.col("id").alias("token"), F.round("rank", 6).alias("textrank")
@@ -8486,7 +8448,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _textrank_sql(damping: float = 0.85, iterations: int = 8) -> str:
+def _textrank_sql() -> str:
     from vector_search_optimization_spark.functions.text import _STOPWORDS
 
     stop = ", ".join(f"'{w}'" for w in sorted(_STOPWORDS["en"]))
@@ -8510,11 +8472,11 @@ e0 AS (
 nodes AS (SELECT DISTINCT tok AS id FROM cand)"""
     return _pagerank_cte_sql(
         graph,
-        f"""
+        """
 SELECT id AS token, round(rank, 6) AS textrank
-FROM r{iterations} ORDER BY textrank DESC, token LIMIT 20""",
-        damping,
-        iterations,
+FROM r8 ORDER BY textrank DESC, token LIMIT 20""",
+        0.85,
+        8,
     )
 
 
@@ -8535,7 +8497,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     sigs = dedup.minhash_signatures_kernel(d)
     cands = dedup.minhash_lsh_candidates(sigs, num_hashes=64)
-    verified = dedup.ngram_jaccard_pairs(d, cands, ngram_n=5, threshold=0.5)
+    verified = dedup.ngram_jaccard_pairs(d, cands)
     quality = d.select(
         "doc_id", F.length(F.trim(F.col("text"))).cast("long").alias("q")
     )
@@ -9352,7 +9314,6 @@ def scd2_orders_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         snaps,
         ["o_orderkey"],
         ["status", "price_cents"],
-        "version",
         latest_version=4,
     )
     return (
@@ -9509,9 +9470,7 @@ def evt_ab_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "event_id",
     )
-    ci = BS.poisson_bootstrap_mean_diff(
-        tagged, "event_id", "is_a", "v", n_boot=64, alpha=0.05
-    )
+    ci = BS.poisson_bootstrap_mean_diff(tagged, "event_id", "is_a", "v")
     pt = tagged.agg(
         F.sum(F.when(F.col("is_a"), 1).otherwise(0))
         .cast("long")
@@ -9611,7 +9570,7 @@ def zorder_events_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") % 1024).alias("uq"),
         (F.floor("value").cast("long") % 1024).alias("vq"),
     )
-    z = LO.z_value(["uq", "vq"], bits=10)
+    z = LO.z_value(["uq", "vq"])
     return (
         q.select("uq", "vq", F.shiftright(z, 12).alias("z_bucket"))
         .groupBy("z_bucket")
@@ -9629,7 +9588,7 @@ def zorder_events_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _zorder_sql() -> str:
     from vector_search_optimization_spark.operators.layout import z_value_sql
 
-    zexpr = z_value_sql(["uq", "vq"], bits=10)
+    zexpr = z_value_sql(["uq", "vq"])
     return f"""
 WITH q AS (
   SELECT user_id % 1024 AS uq,
@@ -9732,7 +9691,7 @@ def entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = fuzzy_name_pairs(spark, sf_dir)
     edges = pairs.select(F.col("name_a").alias("src"), F.col("name_b").alias("dst"))
     comp = GR.connected_components(
-        edges, nodes=names.select(F.col("p_name").alias("pid")), id_col="pid"
+        edges, nodes=names.select(F.col("p_name").alias("pid"))
     )
     return (
         comp.join(names, comp.pid == names.p_name)
@@ -10082,7 +10041,7 @@ def text_hashing_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_search_optimization_spark.operators import features as FE
 
     d = load_table(spark, sf_dir, "documents")
-    return FE.hashing_trick_features(d, num_buckets=64).orderBy("doc_id")
+    return FE.hashing_trick_features(d).orderBy("doc_id")
 
 
 def _hashing_features_sql() -> str:
@@ -10768,7 +10727,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs) + a pure-projection split hash: adds two map-side
     projections and one 6-key aggregate to the dedup plan."""
     d = load_table(spark, sf_dir, "documents")
-    pairs = dedup.jaccard_similarity_join(d, shingle_n=3, threshold=0.5)
+    pairs = dedup.jaccard_similarity_join(d)
 
     def split_of(idc: F.Column) -> F.Column:
         h = F.pmod(idc * F.lit(_SPLIT_A) + F.lit(_SPLIT_B), F.lit(1000))
@@ -14210,7 +14169,7 @@ def g8_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-def _g8_kcore_sql(k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> str:
+def _g8_kcore_sql() -> str:
     """Unrolled fixed-round peel: per round, degrees among survivors →
     the round's removals → the next survivor set. `degree` exports the
     ORIGINAL degree for peeled nodes and the within-core degree for
@@ -14222,7 +14181,7 @@ def _g8_kcore_sql(k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> str:
     ctes = [
         "a0 AS MATERIALIZED (SELECT DISTINCT src AS node FROM sym)",
     ]
-    for r in range(1, rounds + 1):
+    for r in range(1, _KCORE_ROUNDS + 1):
         p = r - 1
         ctes.append(
             f"e{p} AS MATERIALIZED (\n"
@@ -14239,7 +14198,7 @@ def _g8_kcore_sql(k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> str:
         )
         ctes.append(
             f"rm{r} AS MATERIALIZED "
-            f"(SELECT node, {r} AS rnd FROM d{p} WHERE deg < {k})"
+            f"(SELECT node, {r} AS rnd FROM d{p} WHERE deg < {_KCORE_K})"
         )
         ctes.append(
             f"a{r} AS MATERIALIZED (SELECT node FROM a{p}\n"
@@ -14247,7 +14206,7 @@ def _g8_kcore_sql(k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> str:
         )
     chain = ",\n".join(ctes)
     removed_union = "\nUNION ALL ".join(
-        f"SELECT node, rnd FROM rm{r}" for r in range(1, rounds + 1)
+        f"SELECT node, rnd FROM rm{r}" for r in range(1, _KCORE_ROUNDS + 1)
     )
     return f"""
 WITH pairs AS (SELECT DISTINCT user_id, event_type FROM events),
@@ -14271,10 +14230,10 @@ orig AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
          FROM sym GROUP BY 1),
 core_deg AS (
   SELECT x.node, CAST(coalesce(g.c, 0) AS BIGINT) AS deg
-  FROM a{rounds} x
+  FROM a{_KCORE_ROUNDS} x
   LEFT JOIN (SELECT s.src AS node, count(*) AS c FROM sym s
-             JOIN a{rounds} p ON s.src = p.node
-             JOIN a{rounds} q ON s.dst = q.node
+             JOIN a{_KCORE_ROUNDS} p ON s.src = p.node
+             JOIN a{_KCORE_ROUNDS} q ON s.dst = q.node
              GROUP BY 1) g ON g.node = x.node
 )
 SELECT o.node AS event_type,
@@ -14356,13 +14315,13 @@ def evt_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("state")
 
 
-def _markov_stationary_sql(iters: int = _MARKOV_ITERS) -> str:
+def _markov_stationary_sql() -> str:
     """Unrolled fixed-iteration power method (the g3_pagerank SQL
     pattern): one CTE per round; round 0 is uniform over source
     states. Edges into never-source states are dropped BEFORE row
     normalization so both engines normalize the same matrix."""
     rounds = []
-    for k in range(1, iters + 1):
+    for k in range(1, _MARKOV_ITERS + 1):
         rounds.append(
             f"r{k} AS (\n"
             f"  SELECT p.to_type AS state, sum(r{k - 1}.pi * p.prob) AS pi\n"
@@ -14405,7 +14364,7 @@ SELECT s.state, coalesce(n.n_out, 0) AS n_out,
        round(coalesce(r.pi, 0.0) * coalesce(h.h, 0.0), 6)
          AS entropy_contrib
 FROM srcs s
-LEFT JOIN r{iters} r ON r.state = s.state
+LEFT JOIN r{_MARKOV_ITERS} r ON r.state = s.state
 LEFT JOIN n_out_t n ON n.from_type = s.state
 LEFT JOIN hrow h ON h.state = s.state
 ORDER BY s.state
@@ -14937,12 +14896,12 @@ def g7_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("state")
 
 
-def _g7_hits_sql(iters: int = _HITS_ITERS) -> str:
+def _g7_hits_sql() -> str:
     """Unrolled HITS rounds; every CTE is MATERIALIZED because each
     round's frame is referenced twice (score + L1-total) — the
     g8_kcore_peel inlining rule."""
     rounds = []
-    for k in range(1, iters + 1):
+    for k in range(1, _HITS_ITERS + 1):
         rounds.append(
             f"a{k}r AS MATERIALIZED (\n"
             f"  SELECT e.to_type AS state, sum(e.n * h{k - 1}.score) AS s\n"
@@ -14981,8 +14940,8 @@ SELECT n.state,
        round(coalesce(h.score, 0.0), 6) AS hub_score,
        round(coalesce(a.score, 0.0), 6) AS auth_score
 FROM nodes n
-LEFT JOIN h{iters} h ON h.state = n.state
-LEFT JOIN a{iters} a ON a.state = n.state
+LEFT JOIN h{_HITS_ITERS} h ON h.state = n.state
+LEFT JOIN a{_HITS_ITERS} a ON a.state = n.state
 LEFT JOIN (SELECT from_type, CAST(sum(n) AS BIGINT) AS n_out
            FROM edges GROUP BY 1) o ON o.from_type = n.state
 LEFT JOIN (SELECT to_type, CAST(sum(n) AS BIGINT) AS n_in
@@ -17148,7 +17107,7 @@ def g11_component_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("common") >= 2)
         .select("src", "dst")
     )
-    cc = GR.connected_components(und, id_col="pid")
+    cc = GR.connected_components(und)
     sizes = cc.groupBy("component").agg(
         F.count(F.lit(1)).cast("long").alias("size")
     )
@@ -17698,9 +17657,7 @@ def _loo_knn_pair_join(emb: DataFrame) -> DataFrame:
     )
 
 
-def _loo_knn_ivf_cells(
-    spark: SparkSession, emb: DataFrame, n_rows: int
-) -> DataFrame:
+def _loo_knn_ivf_cells(spark: SparkSession, emb: DataFrame, n_rows: int) -> DataFrame:
     """At-scale LOO 1-NN route (VERDICT r9 item 3, mechanized): assign
     every vector to an IVF cell (sample-trained seeded quantizer,
     broadcast argmin — no shuffle) and run the GEMM kernel WITHIN each
@@ -17718,10 +17675,8 @@ def _loo_knn_ivf_cells(
     if num_cells == 1:
         assigned = sel.withColumn("cell", F.lit(0))
     else:
-        cents = ann.train_ivf_centroids(
-            sel, num_cells=num_cells, vector_col="embedding", seed=42
-        )
-        assigned = ann.assign_ivf_cells(sel, cents, vector_col="embedding")
+        cents = ann.train_ivf_centroids(sel, num_cells=num_cells)
+        assigned = ann.assign_ivf_cells(sel, cents)
         # surface the singleton-drop volume (ADVICE r10 item 4): a
         # pathological quantizer split would otherwise silently shrink
         # the accuracy denominator.  One cheap cell-size rollup on the
@@ -22518,6 +22473,9 @@ _CHANGED_SINCE_AUDIT: tuple[str, ...] = (
     "evt_holt_winters",
     "evt_quadratic_trend",
     "evt_kendalls_w",
+    # oracle text changed: the shared all-pairs distance CTE is
+    # MATERIALIZED (DuckDB inlined it at each of its 12 references)
+    "m4_grid_sweep",
 )
 
 

@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from vector_search_optimization_spark.functions import vector as V
 from vector_search_optimization_spark.operators import ann
 from vector_search_optimization_spark.sources import load_table
 from tests.fixtures import jobs_in_group
@@ -23,7 +24,7 @@ def test_brute_force_matches_numpy(emb):
     sims = X @ q / (np.linalg.norm(X, axis=1) * np.linalg.norm(q))
     order = np.lexsort((pdf.vec_id.values, -np.round(sims, 6)))[:10]
     expect = pdf.vec_id.values[order]
-    got = [r.vec_id for r in ann.brute_force_topk(emb, q.tolist(), k=10).collect()]
+    got = [r.vec_id for r in ann.brute_force_topk(emb, q.tolist()).collect()]
     assert got == list(expect)
 
 
@@ -31,13 +32,13 @@ def test_ivf_recall_at_10(emb):
     """nprobe=8/16 cells must recover >=70% of the exact top-10 on the
     clustered synthetic corpus (standard IVF recall sanity bound)."""
     q = emb.where(F.col("vec_id") == 0).first()["embedding"]
-    cents = ann.train_ivf_centroids(emb, num_cells=16, seed=42)
-    idx = ann.assign_ivf_cells(emb, cents, "embedding").cache()
-    exact = {r.vec_id for r in ann.brute_force_topk(emb, q, k=10).collect()}
-    approx = {r.vec_id for r in ann.ivf_topk(idx, cents, q, k=10, nprobe=8).collect()}
+    cents = ann.train_ivf_centroids(emb, num_cells=16)
+    idx = ann.assign_ivf_cells(emb, cents).cache()
+    exact = {r.vec_id for r in ann.brute_force_topk(emb, q).collect()}
+    approx = {r.vec_id for r in ann.ivf_topk(idx, cents, q, nprobe=8).collect()}
     assert len(approx & exact) >= 7
     # full probe = exact
-    full = {r.vec_id for r in ann.ivf_topk(idx, cents, q, k=10, nprobe=16).collect()}
+    full = {r.vec_id for r in ann.ivf_topk(idx, cents, q, nprobe=16).collect()}
     assert full == exact
 
 
@@ -46,11 +47,11 @@ def test_all_pairs_distributed_equals_kernel(emb):
     collect) must produce the exact same top-20 as the driver-bounded
     all_pairs_topk kernel — same values, same tie-breaks."""
     exact = [
-        (r.id_a, r.id_b, r.cos_sim) for r in ann.all_pairs_topk(emb, k=20).collect()
+        (r.id_a, r.id_b, r.cos_sim) for r in ann.all_pairs_topk(emb).collect()
     ]
     dist = [
         (r.id_a, r.id_b, r.cos_sim)
-        for r in ann.all_pairs_topk_distributed(emb, k=20, num_blocks=4).collect()
+        for r in ann.all_pairs_topk_distributed(emb, num_blocks=4).collect()
     ]
     assert dist == exact
 
@@ -75,9 +76,7 @@ def test_rp_blocked_recall_on_planted_near_dups(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = {
         (r.id_a, r.id_b)
-        for r in ann.rp_blocked_top_pairs(
-            df, k=40, num_planes=8, num_tables=4, seed=42
-        ).collect()
+        for r in ann.rp_blocked_top_pairs(df, k=40).collect()
     }
     assert len(got & expect) >= 36
 
@@ -88,7 +87,7 @@ def test_rp_blocked_no_driver_collect(emb):
     kernel stage (rp_table_buckets_kernel); everything after it is a
     pure DataFrame plan, and nothing collects the corpus."""
     plan = (
-        ann.rp_blocked_top_pairs(emb, k=20)
+        ann.rp_blocked_top_pairs(emb)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -104,8 +103,8 @@ def test_rp_blocked_no_driver_collect(emb):
 def test_ivf_partitioned_layout_prunes(spark, emb, tmp_path):
     """The 100 TB layout: corpus written partitionBy(cell) → probing reads
     only the probed cells' files (PartitionFilters in the scan)."""
-    cents = ann.train_ivf_centroids(emb, num_cells=8, seed=42)
-    idx = ann.assign_ivf_cells(emb, cents, "embedding")
+    cents = ann.train_ivf_centroids(emb, num_cells=8)
+    idx = ann.assign_ivf_cells(emb, cents)
     path = str(tmp_path / "ivf_corpus")
     idx.write.partitionBy("cell").parquet(path)
     corpus = spark.read.parquet(path)
@@ -123,24 +122,24 @@ def test_ivf_index_lifecycle_and_nprobe_recall_curve(spark, emb, tmp_path):
     """Build once (write_ivf_index), probe many: the loaded corpus prunes
     partitions, and recall@10 grows monotonically with nprobe, reaching
     1.0 when every cell is probed (nprobe = num_cells ⇒ exact)."""
-    cents = ann.train_ivf_centroids(emb, num_cells=16, seed=42)
+    cents = ann.train_ivf_centroids(emb, num_cells=16)
     path = str(tmp_path / "ivf_index")
     ann.write_ivf_index(emb, cents, path)
     indexed, loaded_cents = ann.load_ivf_index(spark, path)
     assert loaded_cents.count() == cents.count()
 
     q = emb.where(F.col("vec_id") == 0).first()["embedding"]
-    probe = ann.ivf_topk(indexed, loaded_cents, q, k=10, nprobe=4)
+    probe = ann.ivf_topk(indexed, loaded_cents, q)
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan
     assert "cell" in plan.split("PartitionFilters")[1][:200]
 
-    exact = {r.vec_id for r in ann.brute_force_topk(emb, q, k=10).collect()}
+    exact = {r.vec_id for r in ann.brute_force_topk(emb, q).collect()}
     recalls = []
     for nprobe in (1, 2, 4, 8, 16):
         got = {
             r.vec_id
-            for r in ann.ivf_topk(indexed, loaded_cents, q, k=10, nprobe=nprobe).collect()
+            for r in ann.ivf_topk(indexed, loaded_cents, q, nprobe=nprobe).collect()
         }
         recalls.append(len(got & exact) / len(exact))
     assert recalls == sorted(recalls)  # monotone non-decreasing in nprobe
@@ -152,14 +151,14 @@ def test_ivf_probe_build_fires_no_spark_job(spark, emb, tmp_path):
     corpus schema comes from a parquet footer, the centroids are read on
     the driver, the query is one literal. Schemas and top-k rows equal a
     probe over frames opened with plain spark.read.parquet."""
-    cents = ann.train_ivf_centroids(emb, num_cells=8, seed=42)
+    cents = ann.train_ivf_centroids(emb, num_cells=8)
     path = str(tmp_path / "ivf_index")
     ann.write_ivf_index(emb, cents, path)
     q = emb.orderBy("vec_id").first().embedding
 
     def build():
         indexed, loaded_cents = ann.load_ivf_index(spark, path)
-        probe = ann.ivf_topk(indexed, loaded_cents, q, k=10, nprobe=4)
+        probe = ann.ivf_topk(indexed, loaded_cents, q)
         return indexed, loaded_cents, probe
 
     jobs, (indexed, loaded_cents, probe) = jobs_in_group(
@@ -180,7 +179,7 @@ def test_ivf_probe_build_fires_no_spark_job(spark, emb, tmp_path):
 
     assert indexed.schema == plain_idx.schema
     assert loaded_cents.schema == plain_cents.schema
-    want = ann.ivf_topk(plain_idx, plain_cents, q, k=10, nprobe=4).collect()
+    want = ann.ivf_topk(plain_idx, plain_cents, q).collect()
     assert len(want) == 10
     assert probe.collect() == want
 
@@ -198,7 +197,7 @@ def test_probe_score_builds_in_few_py4j_calls(spark):
     from py4j.java_gateway import GatewayClient
 
     q = np.random.RandomState(7).standard_normal(3072).tolist()
-    ann._score("embedding", q, "cosine")  # first call loads JVM classes
+    V.cosine_similarity("embedding", q)  # first call loads JVM classes
     me = threading.get_ident()
     calls = []
     original = GatewayClient.send_command  # the Py4J client classes share it
@@ -208,30 +207,30 @@ def test_probe_score_builds_in_few_py4j_calls(spark):
             calls.append(args[0])
         return original(self_, *args, **kwargs)
 
-    for sim in ("cosine", "dot"):
+    for score in (V.cosine_similarity, V.dot):
         gc.collect()
         gc.disable()  # no finalizer of an unrelated Java handle in the count
         GatewayClient.send_command = send_command
         try:
             calls.clear()
-            ann._score("embedding", q, sim)
+            score("embedding", q)
         finally:
             GatewayClient.send_command = original
             gc.enable()
-        assert len(calls) <= 10, (sim, calls)
+        assert len(calls) <= 10, (score.__name__, calls)
 
 
 def test_ivf_probe_plan_holds_query_once(spark, emb, tmp_path):
     """The optimized plan of a cosine probe carries the query literal once
     (its norm is a driver-folded constant) and two aggregates: the row
     norm and the dot product."""
-    cents = ann.train_ivf_centroids(emb, num_cells=8, seed=42)
+    cents = ann.train_ivf_centroids(emb, num_cells=8)
     path = str(tmp_path / "ivf_index")
     ann.write_ivf_index(emb, cents, path)
     indexed, loaded_cents = ann.load_ivf_index(spark, path)
     # eighths print the same in Python and Java, so the literal's text is known
     q = [round(x * 8) / 8 for x in emb.orderBy("vec_id").first().embedding]
-    probe = ann.ivf_topk(indexed, loaded_cents, q, k=10, nprobe=4)
+    probe = ann.ivf_topk(indexed, loaded_cents, q)
     plan = probe._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("[" + ",".join(map(repr, q)) + "]") == 1
     assert plan.count("aggregate(") == 2
@@ -288,8 +287,6 @@ def test_vector_lit_bit_identical_to_per_element_lits(spark):
     the per-element F.lit form does, non-finite and extreme values too."""
     import struct
 
-    from vector_search_optimization_spark.functions import vector as V
-
     vals = [
         float("nan"), float("inf"), float("-inf"), -0.0, 0.0,
         5e-324, 1.7976931348623157e308, -1.7976931348623157e308,
@@ -318,7 +315,7 @@ def test_ivf_append_is_incremental(spark, emb, tmp_path):
 
     old = emb.where(F.col("vec_id") % 2 == 0)
     new = emb.where(F.col("vec_id") % 2 == 1)
-    cents = ann.train_ivf_centroids(old, num_cells=8, seed=42)
+    cents = ann.train_ivf_centroids(old, num_cells=8)
     path = str(tmp_path / "ivf_index")
     ann.write_ivf_index(old, cents, path)
 
@@ -380,9 +377,9 @@ def test_int8_quantization_recall_and_reconstruction(spark, emb):
     assert max(abs(v) for v in row.q8) <= 127
 
     qvec = emb.where(F.col("vec_id") == 0).first()["embedding"]
-    exact = {r.vec_id for r in ann.brute_force_topk(emb, qvec, k=10).collect()}
+    exact = {r.vec_id for r in ann.brute_force_topk(emb, qvec).collect()}
     deq = q.select("vec_id", F.col("deq").alias("embedding"))
-    approx = {r.vec_id for r in ann.brute_force_topk(deq, qvec, k=10).collect()}
+    approx = {r.vec_id for r in ann.brute_force_topk(deq, qvec).collect()}
     assert len(exact & approx) / len(exact) >= 0.8
 
 
@@ -391,7 +388,7 @@ def test_pq_codes_storage_and_recall(spark, emb):
     reconstruction distances correlate — PQ-ADC top-10 recall >= 0.6 vs
     exact euclidean (16 centroids x 8 subspaces on a 64-dim corpus; PQ
     is the coarsest tier, IVF/SQ cover higher-recall regimes)."""
-    books = ann.train_pq_codebooks(emb.orderBy("vec_id"), 8, 16, seed=42)
+    books = ann.train_pq_codebooks(emb.orderBy("vec_id"), 8, 16)
     assert books.shape == (8, 16, 8)
     enc = ann.pq_encode_kernel(emb.select("vec_id", "embedding"), books)
     row = enc.first()
@@ -426,9 +423,9 @@ def test_ivfpq_composition_recall_and_pruning(spark, emb):
     composition must equal pure PQ-ADC ranking (coarse pruning adds no
     error when nothing is pruned); with nprobe=8/16 the candidate set is
     cell-bounded and recall vs pure ADC stays high."""
-    books = ann.train_pq_codebooks(emb.orderBy("vec_id"), 8, 16, seed=42)
-    cents = ann.train_ivf_centroids(emb, num_cells=16, seed=42)
-    idx = ann.assign_ivf_cells(emb, cents, "embedding")
+    books = ann.train_pq_codebooks(emb.orderBy("vec_id"), 8, 16)
+    cents = ann.train_ivf_centroids(emb, num_cells=16)
+    idx = ann.assign_ivf_cells(emb, cents)
     enc = ann.pq_encode_kernel(idx.select("vec_id", "embedding", "cell"), books).cache()
     qvec = emb.where(F.col("vec_id") == 0).first()["embedding"]
 
@@ -441,13 +438,13 @@ def test_ivfpq_composition_recall_and_pruning(spark, emb):
     ]
     full = [
         r.vec_id
-        for r in ann.ivfpq_topk(enc, cents, books, qvec, k=10, nprobe=16).collect()
+        for r in ann.ivfpq_topk(enc, cents, books, qvec, nprobe=16).collect()
     ]
     assert full == pure_adc  # no pruning → identical ranking
 
     probed = [
         r.vec_id
-        for r in ann.ivfpq_topk(enc, cents, books, qvec, k=10, nprobe=8).collect()
+        for r in ann.ivfpq_topk(enc, cents, books, qvec, nprobe=8).collect()
     ]
     assert 0 in probed  # query's own cell is always probed first
     assert len(set(probed) & set(pure_adc)) >= 6
@@ -468,7 +465,7 @@ def test_streaming_ivf_index_maintenance(spark, emb, tmp_path):
 
     old = emb.where(F.col("vec_id") % 2 == 0)
     new = emb.where(F.col("vec_id") % 2 == 1)
-    cents = ann.train_ivf_centroids(old, num_cells=8, seed=42)
+    cents = ann.train_ivf_centroids(old, num_cells=8)
     path = str(tmp_path / "ivf_index")
     ann.write_ivf_index(old, cents, path)
     before = {
@@ -526,7 +523,7 @@ def test_compact_ivf_cells_preserves_rows_and_prunes_files(spark, emb, tmp_path)
     import os
 
     old = emb.where(F.col("vec_id") % 2 == 0)
-    cents = ann.train_ivf_centroids(old, num_cells=4, seed=42)
+    cents = ann.train_ivf_centroids(old, num_cells=4)
     path = str(tmp_path / "ivf_index")
     ann.write_ivf_index(old, cents, path)
     # fragment the index: six tiny appends
@@ -548,7 +545,7 @@ def test_compact_ivf_cells_preserves_rows_and_prunes_files(spark, emb, tmp_path)
     compliant = {d for d, fs in before.items() if len(fs) <= 4}
     mtimes = {f: os.path.getmtime(f) for d in compliant for f in before[d]}
 
-    compacted = ann.compact_ivf_cells(spark, path, max_files_per_cell=4)
+    compacted = ann.compact_ivf_cells(spark, path)
     assert compacted  # something was actually rewritten
 
     after = files_per_cell()
@@ -563,7 +560,7 @@ def test_compact_ivf_cells_preserves_rows_and_prunes_files(spark, emb, tmp_path)
 
     indexed, loaded_cents = ann.load_ivf_index(spark, path)
     q = emb.orderBy("vec_id").first().embedding
-    got = [r.vec_id for r in ann.ivf_topk(indexed, loaded_cents, q, k=5, nprobe=4).collect()]
+    got = [r.vec_id for r in ann.ivf_topk(indexed, loaded_cents, q, k=5).collect()]
     assert len(got) == 5
 
 
@@ -583,7 +580,7 @@ def test_pq_refined_topk_recovers_exact_ranking(spark, emb):
     )[:5]
     want = [vid for _, vid in exact_order]
 
-    books = ann.train_pq_codebooks(emb.orderBy("vec_id"), 8, 16, seed=42)
+    books = ann.train_pq_codebooks(emb.orderBy("vec_id"), 8, 16)
     enc = ann.pq_encode_kernel(emb.select("vec_id", "embedding"), books)
 
     full = ann.pq_refined_topk(enc, books, q, k=5, rerank=len(rows)).collect()
@@ -599,11 +596,11 @@ def test_ivfpq_refined_topk_exact_when_unconstrained(spark, emb, tmp_path):
     ranking; the refine fetch must read only shortlist ids."""
     import numpy as np
 
-    cents = ann.train_ivf_centroids(emb, num_cells=4, seed=42)
+    cents = ann.train_ivf_centroids(emb, num_cells=4)
     path = str(tmp_path / "ivf")
     ann.write_ivf_index(emb, cents, path)
     indexed, loaded_cents = ann.load_ivf_index(spark, path)
-    books = ann.train_pq_codebooks(emb.orderBy("vec_id"), 8, 16, seed=42)
+    books = ann.train_pq_codebooks(emb.orderBy("vec_id"), 8, 16)
     enc = ann.pq_encode_kernel(
         indexed.select("vec_id", "embedding", "cell"), books
     ).drop("embedding")
@@ -621,7 +618,7 @@ def test_ivfpq_refined_topk_exact_when_unconstrained(spark, emb, tmp_path):
 
     got = ann.ivfpq_refined_topk(
         enc, indexed, loaded_cents, books, q,
-        k=5, rerank=len(rows), nprobe=4,
+        k=5, rerank=len(rows),
     ).collect()
     assert [r.vec_id for r in got] == want
     assert got[0].exact_dist == 0.0  # the query vector itself
@@ -634,13 +631,13 @@ def test_compact_ivf_cells_repeated_rounds_unique_names(spark, emb, tmp_path):
     import glob
 
     old = emb.where(F.col("vec_id") % 2 == 0)
-    cents = ann.train_ivf_centroids(old, num_cells=4, seed=42)
+    cents = ann.train_ivf_centroids(old, num_cells=4)
     path = str(tmp_path / "ivf_index")
     ann.write_ivf_index(old, cents, path)
     rest = emb.where(F.col("vec_id") % 2 == 1)
     for i in range(6):
         ann.append_to_ivf_index(rest.where(F.col("vec_id") % 12 == 2 * i + 1), path)
-    assert ann.compact_ivf_cells(spark, path, max_files_per_cell=4)
+    assert ann.compact_ivf_cells(spark, path)
     rows_mid = sorted(r.vec_id for r in spark.read.parquet(f"{path}/corpus").collect())
 
     # re-fragment and compact again: previous compacted-* files are now
@@ -656,9 +653,7 @@ def test_compact_ivf_cells_repeated_rounds_unique_names(spark, emb, tmp_path):
         assert len(glob.glob(f"{d}/*.parquet")) <= 1
 
 
-def test_compact_ivf_cells_rewrites_fragmented_cells_in_one_write(
-    spark, emb, tmp_path
-):
+def test_compact_ivf_cells_rewrites_fragmented_cells_in_one_write(spark, emb, tmp_path):
     """Compacting four fragmented cells is one Spark write (at most 2
     jobs under AQE: the shuffle by cell and the write), not a write per
     cell. The row set is exact, each compacted cell holds one file,
@@ -670,7 +665,7 @@ def test_compact_ivf_cells_rewrites_fragmented_cells_in_one_write(
     import shutil
 
     old = emb.where(F.col("vec_id") % 2 == 0)
-    cents = ann.train_ivf_centroids(old, num_cells=8, seed=42)
+    cents = ann.train_ivf_centroids(old, num_cells=8)
     path = str(tmp_path / "ivf_index")
     ann.write_ivf_index(old.coalesce(1), cents, path)  # one file per cell
     # fragment the four fullest cells: three one-file appends into each
@@ -741,7 +736,7 @@ def test_ivf_append_fires_one_spark_job(spark, emb, tmp_path):
     """An append is its write and nothing more: the quantizer is read
     and sorted on the driver, so the cell assignment adds no job."""
     old = emb.where(F.col("vec_id") % 2 == 0)
-    cents = ann.train_ivf_centroids(old, num_cells=8, seed=42)
+    cents = ann.train_ivf_centroids(old, num_cells=8)
     path = str(tmp_path / "ivf_index")
     ann.write_ivf_index(old, cents, path)
     new = emb.where(F.col("vec_id") % 2 == 1)
@@ -761,7 +756,7 @@ def test_ivf_empty_append_lands_no_file(spark, emb, tmp_path):
     the _SUCCESS marker, so an empty micro-batch needs no guard."""
     import os
 
-    cents = ann.train_ivf_centroids(emb, num_cells=8, seed=42)
+    cents = ann.train_ivf_centroids(emb, num_cells=8)
     path = str(tmp_path / "ivf_index")
     ann.write_ivf_index(emb, cents, path)
 
@@ -790,7 +785,7 @@ def test_stream_micro_batch_fires_one_spark_job(spark, emb, tmp_path):
 
     old = emb.where(F.col("vec_id") % 2 == 0)
     new = emb.where(F.col("vec_id") % 2 == 1)
-    cents = ann.train_ivf_centroids(old, num_cells=8, seed=42)
+    cents = ann.train_ivf_centroids(old, num_cells=8)
     path = str(tmp_path / "ivf_index")
     ann.write_ivf_index(old, cents, path)
     src = str(tmp_path / "arrivals")
@@ -816,7 +811,7 @@ def test_recall_at_k_harness(spark, emb):
     """recall_at_k: 1.0 against itself, correct fraction on a planted
     overlap, 0.0 on an empty exact set."""
     q = emb.orderBy("vec_id").first().embedding
-    exact = ann.brute_force_topk(emb, q, k=10)
+    exact = ann.brute_force_topk(emb, q)
     assert ann.recall_at_k(exact, exact) == 1.0
     far = (
         emb.orderBy(F.col("vec_id").desc())
@@ -833,7 +828,7 @@ def test_recall_at_k_harness(spark, emb):
 def test_ivf_cell_stats_flags_imbalance(spark, emb):
     """Even assignment ~ imbalance near 1; piling everything into one
     cell drives imbalance to n_cells."""
-    cents = ann.train_ivf_centroids(emb, num_cells=8, seed=42)
+    cents = ann.train_ivf_centroids(emb, num_cells=8)
     assigned = ann.assign_ivf_cells(emb, cents)
     st = ann.ivf_cell_stats(assigned)
     assert st["n_cells"] >= 2
@@ -854,11 +849,11 @@ def test_matryoshka_rerank_full_equals_exact(spark, emb):
     q = rows[0]
     n = emb.count()
     exact = ann.brute_force_topk(emb, q, k=5).collect()
-    mrl = ann.matryoshka_topk(emb, q, k=5, prefix_dim=16, rerank=n).collect()
+    mrl = ann.matryoshka_topk(emb, q, k=5, rerank=n).collect()
     assert [r.vec_id for r in mrl] == [r.vec_id for r in exact]
     assert [r.score for r in mrl] == [r.score for r in exact]
 
-    tight = ann.matryoshka_topk(emb, q, k=3, prefix_dim=16, rerank=10).collect()
+    tight = ann.matryoshka_topk(emb, q, k=3, rerank=10).collect()
     assert len(tight) == 3
     # the query vector itself must survive any shortlist: its prefix
     # cosine is exactly 1.0 (the maximum)
@@ -868,14 +863,12 @@ def test_matryoshka_rerank_full_equals_exact(spark, emb):
 def test_ivf_recall_audit_monotone_and_full_probe_exact(emb):
     """ivf_recall_audit: recall is non-decreasing in nprobe per query,
     and probing every cell recovers the exact top-10 (recall 1.0)."""
-    cents_df = ann.train_ivf_centroids(emb, num_cells=16, seed=42)
-    idx = ann.assign_ivf_cells(emb, cents_df, "embedding").cache()
+    cents_df = ann.train_ivf_centroids(emb, num_cells=16)
+    idx = ann.assign_ivf_cells(emb, cents_df).cache()
     queries = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    rows = ann.ivf_recall_audit(
-        idx, cents_df, queries, k=10, nprobes=(1, 4, 16)
-    ).collect()
+    rows = ann.ivf_recall_audit(idx, cents_df, queries, nprobes=(1, 4, 16)).collect()
     by_q = {}
     for r in rows:
         by_q.setdefault(r.query_id, {})[r.nprobe] = r.recall_at_10
@@ -888,8 +881,8 @@ def test_ivf_recall_audit_generic_query_id_type(emb):
     """The probe frame's id type derives from the queries frame — string
     query ids must work end to end (the signature is generic, so the
     internal literal frame cannot hardcode long)."""
-    cents_df = ann.train_ivf_centroids(emb, num_cells=8, seed=42)
-    idx = ann.assign_ivf_cells(emb, cents_df, "embedding")
+    cents_df = ann.train_ivf_centroids(emb, num_cells=8)
+    idx = ann.assign_ivf_cells(emb, cents_df)
     queries = emb.where(F.col("vec_id") < 2).select(
         F.concat(F.lit("q-"), F.col("vec_id")).alias("query_id"),
         F.col("embedding").alias("query_vec"),

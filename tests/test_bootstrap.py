@@ -43,9 +43,7 @@ def test_ci_covers_planted_shift_and_is_deterministic(spark):
     df = spark.createDataFrame(rows, "k long, g boolean, v double")
 
     def run():
-        [r] = BS.poisson_bootstrap_mean_diff(
-            df, "k", "g", "v", n_boot=64
-        ).collect()
+        [r] = BS.poisson_bootstrap_mean_diff(df, "k", "g", "v").collect()
         return r
 
     r1, r2 = run(), run()

@@ -238,7 +238,7 @@ def test_spectral_embedding_separates_two_blobs():
     a = rng.normal(0.0, 0.05, size=(30, 8))
     b = rng.normal(5.0, 0.05, size=(30, 8)) * np.array([1] + [0] * 7)
     X = np.vstack([a, b + rng.normal(0.0, 0.05, size=(30, 8))])
-    emb = spectral_embedding_numpy(X, n_components=2, n_neighbors=10)
+    emb = spectral_embedding_numpy(X, n_neighbors=10)
     assert emb.shape == (60, 2)
     # first non-trivial eigenvector splits the two components
     left, right = emb[:30, 0], emb[30:, 0]
@@ -269,7 +269,7 @@ def test_umap_project_falls_back_to_spectral(spark, sf_small):
     from vector_search_optimization_spark.sources import load_table
 
     e = load_table(spark, sf_small, "embeddings")
-    out = RED.umap_project(e, n_components=2, max_rows=200)
+    out = RED.umap_project(e, max_rows=200)
     rows = out.collect()
     assert len(rows) == 200
     assert all(len(r.umap) == 2 for r in rows)

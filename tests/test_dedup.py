@@ -71,8 +71,8 @@ def test_simhash_identical_and_near(docs):
 
 
 def test_minhash_expression_and_kernel_poly_identical(docs):
-    """poly hash_mode makes the Catalyst expression path and the Arrow
-    kernel bit-identical (and both equal to the DuckDB oracle family)."""
+    """The poly shingle hash makes the Catalyst expression path and the
+    Arrow kernel bit-identical (and both equal to the DuckDB oracle family)."""
     expr = {
         r.doc_id: list(r.signature)
         for r in dedup.minhash_signatures(docs, num_hashes=16).collect()
@@ -328,9 +328,7 @@ def _brute_jaccard_pairs(docs_rows, shingle_n, threshold):
 def test_jaccard_similarity_join_matches_brute_force(docs, spark, threshold):
     got = {
         (r.id_a, r.id_b): r.jaccard
-        for r in dedup.jaccard_similarity_join(
-            docs, shingle_n=3, threshold=threshold
-        ).collect()
+        for r in dedup.jaccard_similarity_join(docs, threshold=threshold).collect()
     }
     want = _brute_jaccard_pairs(
         [(r.doc_id, r.text) for r in docs.collect()], 3, threshold
@@ -355,9 +353,7 @@ def test_jaccard_similarity_join_no_false_negatives_randomized(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         (r.id_a, r.id_b)
-        for r in dedup.jaccard_similarity_join(
-            df, shingle_n=3, threshold=0.6
-        ).collect()
+        for r in dedup.jaccard_similarity_join(df, threshold=0.6).collect()
     }
     want = set(_brute_jaccard_pairs(rows, 3, 0.6))
     assert got == want
@@ -382,9 +378,7 @@ def test_semantic_dedup_planted_duplicates_min_id_survives(spark):
         (200, rows[7][1]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cents = ann.train_ivf_centroids(
-        df.orderBy("vec_id"), num_cells=4, vector_col="embedding", seed=1
-    )
+    cents = ann.train_ivf_centroids(df.orderBy("vec_id"), num_cells=4, seed=1)
     flagged = dedup.semantic_dedup(df, cents, threshold=0.99)
     removed = {r.vec_id for r in flagged.where(~F.col("keep")).collect()}
     assert removed == {100, 101, 200}, removed
@@ -429,8 +423,8 @@ def test_bloom_bitmap_build_and_probe_units(spark):
     df = spark.range(0, 1000).select(
         (F.col("id") * 2654435761 % 982451653).alias("g")
     )
-    bm1 = dedup.build_bloom_bitmap(df, "g", n_bits=1 << 16, k=4)
-    bm2 = dedup.build_bloom_bitmap(df.repartition(7), "g", n_bits=1 << 16, k=4)
+    bm1 = dedup.build_bloom_bitmap(df, n_bits=1 << 16)
+    bm2 = dedup.build_bloom_bitmap(df.repartition(7), n_bits=1 << 16)
     assert np.array_equal(bm1, bm2)  # partitioning-invariant
     contains = dedup.bloom_contains_expr(spark, bm1, 1 << 16, 4)
     n_hit = df.where(contains(F.col("g"))).count()
@@ -515,7 +509,7 @@ def test_jaccard_similarity_join_releases_caches(spark):
     rdds = spark.sparkContext._jsc.getPersistentRDDs
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     release_caches(uniq)  # start from an empty session
-    out = dedup.jaccard_similarity_join(uniq, shingle_n=3, threshold=0.5)
+    out = dedup.jaccard_similarity_join(uniq)
     out.collect()
     # exactly the three result-lifetime persists outlive the call
     assert rdds().size() == 3

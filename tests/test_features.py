@@ -32,7 +32,7 @@ def test_hand_hashed_doc_and_empty_drop(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: (r["n_buckets"], r["n_tokens"], r["features"])
-        for r in hashing_trick_features(df, num_buckets=64).collect()
+        for r in hashing_trick_features(df).collect()
     }
     assert set(got) == {1, 4}
     assert got[1] == _expected(rows[0][1], 64)
@@ -55,6 +55,6 @@ def test_case_and_whitespace_normalization(spark):
     df = spark.createDataFrame(
         [(1, "Foo\tFOO \n foo")], "doc_id long, text string"
     )
-    [r] = hashing_trick_features(df, num_buckets=64).collect()
+    [r] = hashing_trick_features(df).collect()
     b = poly_hash_py("foo") % 64
     assert (r["n_buckets"], r["n_tokens"], r["features"]) == (1, 3, f"{b}:3")

@@ -29,7 +29,7 @@ def test_two_clique_communities(spark):
     df = spark.createDataFrame(rows, "doc string, cluster int")
     verts, edges = graph.build_cluster_graph(df, "doc", "cluster")
     assert verts.count() == 6
-    res = graph.detect_communities(edges, weighted=True)
+    res = graph.detect_communities(edges)
     assert res["n_communities"] == 2
     assert sorted(map(sorted, res["communities"])) == [[1, 2, 3], [4, 5, 6]]
     assert res["modularity"] > 0.3
@@ -166,7 +166,7 @@ def test_streaming_session_windows(spark, sf_small):
 
     ev = S.read_events_stream(spark, sf_small)
     got = S.run_stream_to_memory(
-        S.sessionized_counts_stream(ev, gap="30 minutes"),
+        S.sessionized_counts_stream(ev),
         "t_sessions",
         output_mode="complete",
     )
@@ -182,9 +182,7 @@ def test_streaming_asof_matches_batch(spark, sf_small):
     import __spark_entry__ as m
 
     ev = S.read_events_stream(spark, sf_small)
-    rows = S.run_stream_to_memory(
-        S.asof_click_purchase_stream(ev), "t_asof", output_mode="append"
-    )
+    rows = S.run_stream_to_memory(S.asof_click_purchase_stream(ev), "t_asof")
     got = rows.agg(
         F.count(F.lit(1)).alias("n_purchases"),
         F.count("lag_s").alias("n_matched"),
@@ -260,7 +258,7 @@ def test_resize_plan_caps_at_768(assets):
 
 
 def test_frame_sample_plan(assets):
-    frames = multimodal.frame_sample_plan(assets, every_ms=1000).collect()
+    frames = multimodal.frame_sample_plan(assets).collect()
     assert [(r.frame_idx, r.frame_ts_ms) for r in frames] == [(0, 0), (1, 1000), (2, 2000), (3, 3000)]
 
 
@@ -334,7 +332,7 @@ def test_streaming_first_seen_dedup_matches_batch(spark, sf_small):
     got = {
         (r.fp, r.event_id)
         for r in S.run_stream_to_memory(
-            S.first_seen_dedup_stream(ev), "t_dedup", output_mode="append"
+            S.first_seen_dedup_stream(ev), "t_dedup"
         ).collect()
     }
     want = {
@@ -381,7 +379,7 @@ def test_watermark_drops_late_events_in_append_mode(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    agg = tumbling_window_agg(stream, window="1 hour", watermark="2 hours")
+    agg = tumbling_window_agg(stream)
     q = (
         agg.writeStream.outputMode("append")
         .format("memory")

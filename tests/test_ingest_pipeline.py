@@ -62,34 +62,30 @@ def test_end_to_end_ingest_convert_chunk_embed_index_probe(
 
     # 3. embed: deterministic surrogate kernel
     embedded = chunks.withColumn(
-        "embedding", V.hash_embedding_kernel("chunk_text", dim=16)
+        "embedding", V.hash_embedding_kernel("chunk_text")
     ).persist()
     assert embedded.where(F.size("embedding") != 16).count() == 0
 
     # 4. index: train coarse quantizer, materialize the IVF layout
-    cents = ann.train_ivf_centroids(
-        embedded, num_cells=4, seed=42, vector_col="embedding"
-    )
+    cents = ann.train_ivf_centroids(embedded, num_cells=4)
     path = str(tmp_path / "ivf")
-    ann.write_ivf_index(embedded, cents, path, vector_col="embedding")
+    ann.write_ivf_index(embedded, cents, path)
     indexed, loaded_cents = ann.load_ivf_index(spark, path)
     assert indexed.count() == n_chunks
 
     # 5. probe: querying with a chunk's own text must return that chunk
     #    at rank 1 with cosine ~1 (identical text -> identical embedding)
     target = embedded.orderBy("chunk_id").first()
-    top = ann.ivf_topk(
-        indexed, loaded_cents, target.embedding, k=3, nprobe=4
-    ).collect()
+    top = ann.ivf_topk(indexed, loaded_cents, target.embedding, k=3).collect()
     assert top[0].vec_id == target.vec_id
     assert top[0].score == pytest.approx(1.0, abs=1e-5)
 
     # 6. and the same text re-embedded independently lands in the same
     #    cell (determinism across jobs -- the incremental-append contract)
     re_embedded = chunks.where(F.col("chunk_id") == target.chunk_id).withColumn(
-        "embedding", V.hash_embedding_kernel("chunk_text", dim=16)
+        "embedding", V.hash_embedding_kernel("chunk_text")
     )
-    re_cell = ann.assign_ivf_cells(re_embedded, loaded_cents, "embedding").first()
+    re_cell = ann.assign_ivf_cells(re_embedded, loaded_cents).first()
     orig_cell = (
         indexed.where(F.col("vec_id") == target.vec_id).select("cell").first()
     )

@@ -91,13 +91,11 @@ def test_rp_table_buckets_kernel_matches_expression(spark, sf_small):
     e = load_table(spark, sf_small, "embeddings")
     expr = {
         r.vec_id: r.rp_buckets
-        for r in ann.rp_table_buckets(e, 8, 4).select("vec_id", "rp_buckets").collect()
+        for r in ann.rp_table_buckets(e).select("vec_id", "rp_buckets").collect()
     }
     kern = {
         r.vec_id: r.rp_buckets
-        for r in ann.rp_table_buckets_kernel(
-            e.select("vec_id", "embedding"), 8, 4
-        ).collect()
+        for r in ann.rp_table_buckets_kernel(e.select("vec_id", "embedding")).collect()
     }
     assert kern == expr
 
@@ -135,7 +133,7 @@ def test_word_gram_stats_kernel_matches_expression(spark, sf_small):
         F.size(F.array_distinct(words)).alias("n_distinct_words"),
     )
     gram_stats = (
-        d.select("doc_id", F.explode(TX.word_ngrams("text", 2)).alias("g"))
+        d.select("doc_id", F.explode(TX.word_ngrams("text")).alias("g"))
         .groupBy("doc_id", "g")
         .agg(F.count(F.lit(1)).alias("c"))
         .groupBy("doc_id")
@@ -277,7 +275,7 @@ def test_word_gram_stats_multi_matches_single(spark, sf_small):
     multi = {
         r.doc_id: r.st
         for r in d.select(
-            "doc_id", TX.word_gram_stats_multi_expr("text", (2, 3, 4)).alias("st")
+            "doc_id", TX.word_gram_stats_multi_expr("text").alias("st")
         ).collect()
     }
     for n in (2, 3, 4):

@@ -36,13 +36,13 @@ def with_dist(clustered):
 
 
 def test_zscore_outliers_flag_planted(with_dist):
-    out = outliers.zscore_outliers(with_dist, "cluster", "dist", threshold=3.0)
+    out = outliers.zscore_outliers(with_dist, "cluster", "dist")
     flagged = {r.id for r in out.where("is_outlier").collect()}
     assert flagged == {60, 121}  # exactly the planted points
 
 
 def test_percentile_outliers_rate(with_dist):
-    out = outliers.percentile_outliers(with_dist, "cluster", "dist", pct=0.95)
+    out = outliers.percentile_outliers(with_dist, "cluster", "dist")
     per = out.groupBy("cluster").agg(
         F.sum(F.col("is_outlier").cast("int")).alias("n_out"),
         F.count(F.lit(1)).alias("n"),
@@ -54,9 +54,7 @@ def test_percentile_outliers_rate(with_dist):
 
 
 def test_lof_flags_planted(clustered):
-    out = outliers.lof_outliers(
-        clustered, "cluster", "v", "id", n_neighbors_frac=0.25, contamination=0.02
-    )
+    out = outliers.lof_outliers(clustered, "cluster", "v", "id", n_neighbors_frac=0.25)
     flagged = {r.id for r in out.where("is_outlier").collect()}
     assert {60, 121} <= flagged
     lof_scores = {r.id: r.lof for r in out.collect()}
@@ -66,7 +64,7 @@ def test_lof_flags_planted(clustered):
 
 
 def test_mahalanobis_flags_planted(clustered):
-    out = outliers.mahalanobis_outliers(clustered, "cluster", "v", "id", pct=95.0)
+    out = outliers.mahalanobis_outliers(clustered, "cluster", "v", "id")
     flagged = {r.id for r in out.where("is_outlier").collect()}
     assert {60, 121} <= flagged
 
@@ -86,7 +84,7 @@ def test_fast_mcd_resists_masking(spark):
 
     def scores(method):
         out = outliers.mahalanobis_outliers(
-            df, "cluster", "v", "id", pct=95.0, method=method
+            df, "cluster", "v", "id", method=method
         ).toPandas().set_index("id").sort_index()
         return out["mahal"]
 
@@ -96,7 +94,7 @@ def test_fast_mcd_resists_masking(spark):
     assert emp[60:].min() < emp[:60].max()  # empirical masks the cluster
     # and the registered default (mcd) flags only planted points at 95th pct
     flagged = outliers.mahalanobis_outliers(
-        df, "cluster", "v", "id", pct=95.0, method="mcd"
+        df, "cluster", "v", "id"
     ).where("is_outlier").toPandas()
     assert set(flagged["id"]) <= set(range(60, 70))
 
@@ -183,7 +181,7 @@ def test_eps_neighbor_pairs_complete_vs_brute_force(spark):
     eps = 1.8
     got = {
         (r.src, r.dst)
-        for r in dbscan.eps_neighbor_pairs(df, eps, num_lines=2).collect()
+        for r in dbscan.eps_neighbor_pairs(df, eps).collect()
     }
     X = np.asarray([r[1] for r in rows], dtype=np.float64)
     # same GEMM formula as the kernels

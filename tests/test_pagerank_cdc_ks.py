@@ -50,9 +50,7 @@ def test_pagerank_matches_numpy_power_method(spark, node_limit):
     edges = [("a", "b", 2.0), ("a", "c", 1.0), ("b", "c", 1.0), ("c", "d", 3.0)]
     vdf = spark.createDataFrame([(n,) for n in nodes], "id string")
     edf = spark.createDataFrame(edges, "src string, dst string, weight double")
-    pr = GR.pagerank(
-        edf, vdf, damping=0.85, iterations=8, driver_node_limit=node_limit
-    )
+    pr = GR.pagerank(edf, vdf, driver_node_limit=node_limit)
     got = {r["id"]: r["rank"] for r in pr.collect()}
     want = _numpy_pagerank(nodes, edges)
     assert set(got) == set(want)
@@ -67,7 +65,7 @@ def test_pagerank_star_center_dominates_and_isolated_gets_base(spark):
     nodes = ["x", "z"] + [f"l{i}" for i in range(4)]
     vdf = spark.createDataFrame([(n,) for n in nodes], "id string")
     edf = spark.createDataFrame(edges, "src string, dst string, weight double")
-    pr = GR.pagerank(edf, vdf, damping=0.85, iterations=8)
+    pr = GR.pagerank(edf, vdf)
     got = {r["id"]: r["rank"] for r in pr.collect()}
     assert got["x"] == max(got.values())
     # isolated node receives no contributions: exactly the base term
@@ -233,13 +231,11 @@ def test_bfs_distances_paths_agree_and_bound_unreached(spark):
     edf = spark.createDataFrame(edges, "src string, dst string, weight double")
     fast = {
         r["id"]: r["hop_dist"]
-        for r in GR.bfs_distances(edf, vdf, "a", max_hops=6).collect()
+        for r in GR.bfs_distances(edf, vdf, "a").collect()
     }
     dist = {
         r["id"]: r["hop_dist"]
-        for r in GR.bfs_distances(
-            edf, vdf, "a", max_hops=6, driver_node_limit=0
-        ).collect()
+        for r in GR.bfs_distances(edf, vdf, "a", driver_node_limit=0).collect()
     }
     assert fast == dist == {"a": 0, "b": 1, "c": 2, "d": 3, "z": -1}
 

@@ -222,7 +222,7 @@ def test_split_leakage_flags_planted_cross_pair(spark):
         [(a_id, base), (t_id, base + "iota")],
         "doc_id long, text string",
     )
-    pairs = dedup.jaccard_similarity_join(docs, shingle_n=3, threshold=0.5)
+    pairs = dedup.jaccard_similarity_join(docs)
     assert pairs.count() == 1
     release_caches(pairs)
 

@@ -214,7 +214,7 @@ def test_poisson_dispersion_identities(spark, sf_small):
             )
 
 
-def test_burstiness_bounds(spark, sf_small):
+def test_word_burstiness_bounds(spark, sf_small):
     rows = m.queries()["text_word_burstiness"](spark, sf_small).collect()
     assert rows
     cfs = [r.cf for r in rows]

@@ -402,9 +402,7 @@ def test_skyline_randomized_equivalence_batched(spark):
         rows, "case long, i long, price_cents long, size long"
     )
     got = {}
-    out = RKS.skyline_survivors_2d(
-        df, "price_cents", "size", part_cols=("case",)
-    ).collect()
+    out = RKS.skyline_survivors_2d(df, part_cols=("case",)).collect()
     for r in out:
         got.setdefault(r["case"], set()).add(r["i"])
     for case in want:

@@ -110,10 +110,10 @@ def test_golden_3_outlier_suite_consistency(fixture_data):
     with_dist = chunks.join(
         F.broadcast(centroids), chunks.true_cluster == centroids.cluster_label
     ).withColumn("dist", V.euclidean("content_vector", "centroid"))
-    z = OUT.zscore_outliers(with_dist, "true_cluster", "dist", 3.0)
+    z = OUT.zscore_outliers(with_dist, "true_cluster", "dist")
     z_rate = z.where("is_outlier").count() / z.count()
     assert z_rate < 0.02  # gaussian tails: ~0.1-0.3% beyond 3 sigma
-    p = OUT.percentile_outliers(with_dist, "true_cluster", "dist", 0.95)
+    p = OUT.percentile_outliers(with_dist, "true_cluster", "dist")
     p_rate = p.where("is_outlier").count() / p.count()
     assert 0.02 < p_rate < 0.08  # ~5% by construction
 
@@ -126,7 +126,7 @@ def test_golden_4_cluster_graph(fixture_data, chunks_pdf):
         nearest_centroid,
     )
 
-    assigned = nearest_centroid(chunks, centroids, metric="euclidean")
+    assigned = nearest_centroid(chunks, centroids)
     verts, edges = G.build_cluster_graph(assigned, "document_id", "assigned_label")
     got = {(r.src, r.dst): r.weight for r in edges.collect()}
 
@@ -143,7 +143,7 @@ def test_golden_4_cluster_graph(fixture_data, chunks_pdf):
                 expect[(cl[i], cl[j])] = expect.get((cl[i], cl[j]), 0) + 1
     assert got == expect
 
-    res = G.detect_communities(edges, weighted=True, vertices_df=verts)
+    res = G.detect_communities(edges, vertices_df=verts)
     assert sum(len(c) for c in res["communities"]) == K
 
 

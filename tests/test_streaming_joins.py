@@ -18,7 +18,7 @@ def test_stream_stream_interval_join_equals_batch(spark, sf_small, tmp_path):
 
     expected = sorted(
         (r.user_id, r.purchase_id, r.view_id)
-        for r in SJ.interval_join_batch(views, purchases, 3600).collect()
+        for r in SJ.interval_join_batch(views, purchases).collect()
     )
     assert expected, "fixture should produce at least one attribution pair"
 
@@ -47,7 +47,7 @@ def test_stream_stream_interval_join_equals_batch(spark, sf_small, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(pdir)
     )
-    out = SJ.interval_join_stream(vs, ps, 3600, watermark_delay="10 years")
+    out = SJ.interval_join_stream(vs, ps, watermark_delay="10 years")
     q = (
         out.writeStream.format("memory")
         .queryName("ss_join_out")
@@ -107,7 +107,7 @@ def test_interval_join_watermark_advances_and_same_batch_pairs_join(spark, tmp_p
         .option("maxFilesPerTrigger", 1)
         .parquet(pdir)
     )
-    out = SJ.interval_join_stream(vs, ps, 3600, watermark_delay="10 minutes")
+    out = SJ.interval_join_stream(vs, ps, watermark_delay="10 minutes")
     q = (
         out.writeStream.format("memory")
         .queryName("ss_join_late")

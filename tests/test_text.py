@@ -100,7 +100,7 @@ def test_bpe_merges_table_reproducible():
     )
     from vector_search_optimization_spark.functions.bpe_merges import MERGES
 
-    assert train_bpe(SEED_CORPUS, 512) == MERGES
+    assert train_bpe(SEED_CORPUS) == MERGES
 
 
 def test_bpe_exact_count_and_truncate_semantics():
@@ -241,7 +241,7 @@ def test_word_ngrams_and_repetition_metrics(spark):
         r.doc_id: r
         for r in df.select(
             "doc_id",
-            TX.word_ngrams("text", 2).alias("grams"),
+            TX.word_ngrams("text").alias("grams"),
             F.round(TX.dup_word_fraction("text"), 6).alias("dup"),
         ).collect()
     }

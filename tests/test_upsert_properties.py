@@ -60,7 +60,7 @@ class TestScd2Intervals:
         snaps = spark.createDataFrame(
             rows, "k string, attr string, version int"
         )
-        out = scd2_intervals(snaps, ["k"], ["attr"], "version")
+        out = scd2_intervals(snaps, ["k"], ["attr"])
         return {
             (r["k"], r["valid_from"]): (
                 r["attr"], r["valid_to"], r["is_current"]

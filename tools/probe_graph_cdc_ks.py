@@ -59,7 +59,7 @@ def _probe(spark, scale: int) -> dict:
     )
     verts = spark.range(n_nodes).select(F.col("id"))
     t0 = time.time()
-    pr = GR.pagerank(edges, verts, damping=0.85, iterations=8)
+    pr = GR.pagerank(edges, verts)
     # sum(rank), not count(): count lets Catalyst prune the rank column
     # and with it most of the iteration math
     out["pagerank_mass"] = round(pr.agg(F.sum("rank")).first()[0], 6)

@@ -132,25 +132,23 @@ def main():
     ).count()
     OUT.lof_outliers(
         assigned, "assigned_label", "content_vector", "id",
-        n_neighbors_frac=0.05, contamination=0.02,
     ).where("is_outlier").count()
     stages["outlier_suite_s"] = round(time.time() - t0, 2)
 
     t0 = time.time()
-    res = C.kmeans_fit(chunks, k=K, n_init=1, max_iter=100, seed=42,
+    res = C.kmeans_fit(chunks, k=K, max_iter=100,
                        vector_col="content_vector")
     stages["kmeans_k37_s"] = round(time.time() - t0, 2)
 
     t0 = time.time()
     sil = C.silhouette_exact(
         res.assign(chunks, "content_vector"), "content_vector", "cluster",
-        sample_size=2000,
     )
     stages["silhouette_sampled_s"] = round(time.time() - t0, 2)
 
     t0 = time.time()
     _, edges = G.build_cluster_graph(assigned, "document_id", "assigned_label")
-    comm = G.detect_communities(edges, weighted=True)
+    comm = G.detect_communities(edges)
     stages["graph_stage_s"] = round(time.time() - t0, 2)
 
     print(

@@ -150,9 +150,9 @@ def main() -> None:
     stage("exact_dedup", lambda: dedup.dedup_exact(docs).count())
 
     def _minhash_verified():
-        sigs = dedup.minhash_signatures_kernel(docs, num_hashes=64).persist()
+        sigs = dedup.minhash_signatures_kernel(docs).persist()
         sigs.count()
-        cands = dedup.minhash_lsh_candidates(sigs, num_bands=16, num_hashes=64)
+        cands = dedup.minhash_lsh_candidates(sigs, num_hashes=64)
         pairs = dedup.ngram_jaccard_pairs(docs, cands, threshold=0.7)
         n = pairs.count()
         sigs.unpersist()
@@ -165,7 +165,7 @@ def main() -> None:
             curate_columns,
         )
 
-        clean = curate_columns(docs, min_tokens=10, keep_cols=())
+        clean = curate_columns(docs, keep_cols=())
         vocab = LM.train_unigram_lm(clean, "clean")
         return LM.unigram_surprisal(clean, vocab, text_col="clean").count()
 
@@ -177,14 +177,14 @@ def main() -> None:
     )
 
     def _ivf():
-        cents = ann.train_ivf_centroids(emb, num_cells=32, seed=42)
+        cents = ann.train_ivf_centroids(emb, num_cells=32)
         assigned = ann.assign_ivf_cells(emb, cents)
         q = emb.where(F.col("vec_id") == 0).first().embedding
-        return ann.ivf_topk(assigned, cents, q, k=10, nprobe=4).count()
+        return ann.ivf_topk(assigned, cents, q).count()
 
     stage("ivf_build_probe", _ivf)
     q = emb.where(F.col("vec_id") == 0).first().embedding
-    stage("brute_topk", lambda: ann.brute_force_topk(emb, q, k=10).count())
+    stage("brute_topk", lambda: ann.brute_force_topk(emb, q).count())
 
     # r3 operator families (VERDICT r3 #8): Deequ-style constraint pass,
     # the repetition gram-stats kernel, and the exact-threshold jaccard
@@ -230,7 +230,7 @@ def main() -> None:
             .cast("int")
             .alias("source"),
         )
-        toks = dedup.shingle_hash_rows(src, shingle_n=3)
+        toks = dedup.shingle_hash_rows(src)
         sg = (
             toks.join(src.select("doc_id", "source"), "doc_id")
             .select("source", "g")
@@ -308,9 +308,7 @@ def main() -> None:
         ~2.5k rows/cell; doubling SCALE doubles K, holding cell size —
         cost should grow ~linearly."""
         k_cells = max(8, 32 * SCALE // 40)
-        cents = ann.train_ivf_centroids(
-            emb.orderBy("vec_id"), num_cells=k_cells, seed=42
-        )
+        cents = ann.train_ivf_centroids(emb.orderBy("vec_id"), num_cells=k_cells)
         flagged = dedup.semantic_dedup(emb, cents, threshold=0.95)
         n = flagged.where(~F.col("keep")).count()
         release_caches(flagged)
@@ -334,9 +332,7 @@ def main() -> None:
 
     stage(
         "jaccard_prefix_join",
-        lambda: dedup.jaccard_similarity_join(
-            docs, shingle_n=3, threshold=0.7
-        ).count(),
+        lambda: dedup.jaccard_similarity_join(docs, threshold=0.7).count(),
     )
 
     def _token_kl():
@@ -375,7 +371,7 @@ def main() -> None:
         """doc_ngram_novelty: df-count shuffle on the shingle hash + one
         equi-join back — O(corpus shingles) with no pair term, so growth
         must stay ~linear even as the planted dup tail pushes df>1."""
-        rows = dedup.shingle_hash_rows(docs, shingle_n=3)
+        rows = dedup.shingle_hash_rows(docs)
         dfc = rows.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
         return (
             rows.join(dfc, "g")
@@ -401,7 +397,7 @@ def main() -> None:
         anchor's own rows. A super-linear reading means the anchor
         fan-out regressed into pair materialization."""
         return (
-            dedup.dup_span_coverage_frame(docs, n=20, w=8)
+            dedup.dup_span_coverage_frame(docs)
             .where(F.col("covered_chars") > 0)
             .count()
         )
@@ -421,9 +417,7 @@ def main() -> None:
             (F.col("id") % 2 == 0).alias("is_a"),
             (F.pmod(F.col("id") * 7919, 10000) / 100.0).alias("v"),
         )
-        return BS.poisson_bootstrap_mean_diff(
-            tagged, "event_id", "is_a", "v", n_boot=64, alpha=0.05
-        ).count()
+        return BS.poisson_bootstrap_mean_diff(tagged, "event_id", "is_a", "v").count()
 
     stage("ab_bootstrap_64rep", _ab_bootstrap)
 

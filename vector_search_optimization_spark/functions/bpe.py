@@ -76,7 +76,7 @@ def pretokenize(text: str) -> list[str]:
     return _PRETOK.findall(text)
 
 
-def train_bpe(corpus: str, num_merges: int = 512) -> list[tuple[bytes, bytes]]:
+def train_bpe(corpus: str) -> list[tuple[bytes, bytes]]:
     """Textbook BPE training: count adjacent symbol pairs over the
     pre-token frequency table, repeatedly merge the most frequent pair
     (ties broken lexicographically so the table is deterministic)."""
@@ -86,7 +86,7 @@ def train_bpe(corpus: str, num_merges: int = 512) -> list[tuple[bytes, bytes]]:
         if len(key) > 1:
             freqs[key] = freqs.get(key, 0) + 1
     merges: list[tuple[bytes, bytes]] = []
-    for _ in range(num_merges):
+    for _ in range(512):
         pair_counts: dict[tuple[bytes, bytes], int] = {}
         for sym, n in freqs.items():
             for a, b in zip(sym, sym[1:]):

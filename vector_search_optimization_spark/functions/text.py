@@ -81,13 +81,6 @@ def bpe_truncate_exact(text: Column | str, budget_tokens: int) -> Column:
     return _t(_c(text))
 
 
-def truncate_by_token_budget(text: Column | str, budget_tokens: int, chars_per_token: float = 4.0) -> Column:
-    """F11 — token-budget truncation (update-etiquetas.ipynb:171 c9 caps the
-    labeling prompt at 125,000 tokens). Char-budget approximation; exact
-    budgets belong in the (driver-side) LLM stage."""
-    return F.substring(_c(text), 1, int(budget_tokens * chars_per_token))
-
-
 # --- quality scoring ---------------------------------------------------------
 
 def word_chunks(
@@ -138,13 +131,6 @@ def punct_ratio(text: Column | str) -> Column:
     return F.when(n == 0, F.lit(None)).otherwise(F.round(punct / n, 6))
 
 
-def upper_ratio(text: Column | str) -> Column:
-    t = _c(text)
-    n = F.length(t).cast("double")
-    upper = (n - F.length(F.regexp_replace(t, r"[A-Z]", ""))).cast("double")
-    return F.when(n == 0, F.lit(None)).otherwise(F.round(upper / n, 6))
-
-
 def digit_ratio(text: Column | str) -> Column:
     t = _c(text)
     n = F.length(t).cast("double")
@@ -176,13 +162,13 @@ def stopword_hits(text: Column | str, lang: str) -> Column:
     return F.size(F.filter(words, lambda w: F.array_contains(sw, w)))
 
 
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
+def stopword_ratio(text: Column | str) -> Column:
     """Fraction of tokens that are stopwords (quality signal: natural prose
     sits around 0.3-0.5; keyword soup and boilerplate sit near 0)."""
     t = F.trim(_c(text))
     words = F.split(F.lower(t), r"\s+")
     return F.when(t == "", F.lit(None)).otherwise(
-        F.round(stopword_hits(text, lang) / F.size(words), 6)
+        F.round(stopword_hits(text, "en") / F.size(words), 6)
     )
 
 
@@ -272,7 +258,7 @@ POLY_BASE = 131
 POLY_BASE2 = 137
 
 
-def poly_hash(text: Column | str, base: int = POLY_BASE, mod: int = POLY_MOD) -> Column:
+def poly_hash(text: Column | str, base: int = POLY_BASE) -> Column:
     """SQL-expressible polynomial rolling hash (Horner over codepoints).
 
     ``h = fold(chars, 0, (acc, ch) -> (acc*base + codepoint(ch)) mod p)``
@@ -286,7 +272,7 @@ def poly_hash(text: Column | str, base: int = POLY_BASE, mod: int = POLY_MOD) ->
     return F.aggregate(
         chars,
         F.lit(0).cast("long"),
-        lambda acc, ch: F.pmod(acc * F.lit(base) + F.ascii(ch), F.lit(mod)),
+        lambda acc, ch: F.pmod(acc * F.lit(base) + F.ascii(ch), F.lit(POLY_MOD)),
     )
 
 
@@ -320,7 +306,6 @@ def poly_hash_shingles_np(
     toks: list[str],
     shingle_n: int,
     base: int = POLY_BASE,
-    mod: int = POLY_MOD,
 ) -> "np.ndarray":
     """Vectorized :func:`poly_hash_py` of every word ``shingle_n``-gram of
     ``toks`` — bit-identical to
@@ -335,9 +320,7 @@ def poly_hash_shingles_np(
     import numpy as np
 
     if len(toks) < shingle_n:
-        return np.array(
-            [poly_hash_py(" ".join(toks), base, mod)], dtype=np.int64
-        )
+        return np.array([poly_hash_py(" ".join(toks), base, POLY_MOD)], dtype=np.int64)
     full = " ".join(toks)
     codes = np.frombuffer(full.encode("utf-32-le"), dtype=np.uint32).astype(
         np.int64
@@ -362,16 +345,14 @@ def poly_hash_shingles_np(
         ls, ll = starts[lo:hi, None], length[lo:hi, None]
         valid = j < ll
         sub = codes[np.where(valid, ls + j, 0)]
-        pw = _poly_pows(base, mod, maxw)
+        pw = _poly_pows(base, POLY_MOD, maxw)
         p = pw[np.where(valid, ll - 1 - j, 0)]
-        out[lo:hi] = ((sub * p) % mod * valid).sum(axis=1) % mod
+        out[lo:hi] = ((sub * p) % POLY_MOD * valid).sum(axis=1) % POLY_MOD
         lo = hi
     return out
 
 
-def char_gram_hashes_np(
-    s: str, n: int, base: int = POLY_BASE, mod: int = POLY_MOD
-) -> "np.ndarray":
+def char_gram_hashes_np(s: str, n: int) -> "np.ndarray":
     """Positional char n-gram polynomial hashes, vectorized — the
     character-level analog of poly_hash_shingles_np. Bit-identical to
     ``[poly_hash_py(s[i:i+n]) for i in range(len(s)-n+1)]`` (whole-string
@@ -381,14 +362,16 @@ def char_gram_hashes_np(
     per-step Horner mod)."""
     import numpy as np
 
-    if n * 0x110000 * mod >= 2**63:  # pragma: no cover — absurd-n guard
+    if n * 0x110000 * POLY_MOD >= 2**63:  # pragma: no cover — absurd-n guard
         raise ValueError("n too large for exact int64 window hashing")
     if len(s) < n:
-        return np.array([poly_hash_py(s, base, mod)], dtype=np.int64)
+        return np.array([poly_hash_py(s, POLY_BASE, POLY_MOD)], dtype=np.int64)
     codes = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
-    pows = np.array([pow(base, n - 1 - j, mod) for j in range(n)], dtype=np.int64)
+    pows = np.array(
+        [pow(POLY_BASE, n - 1 - j, POLY_MOD) for j in range(n)], dtype=np.int64
+    )
     windows = np.lib.stride_tricks.sliding_window_view(codes, n)
-    return (windows @ pows) % mod
+    return (windows @ pows) % POLY_MOD
 
 
 def winnow_positions_np(s: str, n: int, w: int) -> "np.ndarray":
@@ -427,17 +410,17 @@ def char_ngrams(text: Column | str, n: int = 5) -> Column:
     return F.when(k <= 0, F.array(t)).otherwise(F.array_distinct(grams))
 
 
-def word_ngrams(text: Column | str, n: int = 2) -> Column:
+def word_ngrams(text: Column | str) -> Column:
     """Array of word n-grams WITH multiplicity (unlike word_shingles,
     which dedups for MinHash): the input for repetition metrics, where
     the whole signal is how often grams repeat. Texts with fewer than n
     words yield an empty array."""
     words = F.filter(F.split(F.lower(F.trim(_c(text))), r"\s+"), lambda w: w != "")
-    k = F.size(words) - (n - 1)
+    k = F.size(words) - 1
     return F.when(k <= 0, F.array().cast("array<string>")).otherwise(
         F.transform(
             F.sequence(F.lit(0), k - 1),
-            lambda i: F.array_join(F.slice(words, i + 1, n), " "),
+            lambda i: F.array_join(F.slice(words, i + 1, 2), " "),
         )
     )
 
@@ -452,17 +435,17 @@ def dup_word_fraction(text: Column | str) -> Column:
     )
 
 
-def compressed_size_py(text: str | None, level: int = 6) -> int | None:
+def compressed_size_py(text: str | None) -> int | None:
     """Deflate-compressed byte size of the utf-8 text (stdlib zlib,
     fixed level — deterministic for a given zlib build). NULL → NULL."""
     import zlib
 
     if text is None:
         return None
-    return len(zlib.compress(text.encode("utf-8"), level))
+    return len(zlib.compress(text.encode("utf-8"), 6))
 
 
-def compressed_size_expr(text: Column | str, level: int = 6) -> Column:
+def compressed_size_expr(text: Column | str) -> Column:
     """Arrow-batched deflate size per document — the input to the
     compression-ratio quality signal (highly repetitive or templated
     text compresses far below natural prose; the Gopher-family
@@ -471,7 +454,7 @@ def compressed_size_expr(text: Column | str, level: int = 6) -> Column:
 
     @F.pandas_udf("long")
     def _u(s: pd.Series) -> pd.Series:
-        return s.map(lambda x: compressed_size_py(x, level))
+        return s.map(lambda x: compressed_size_py(x))
 
     return _u(_c(text))
 
@@ -513,9 +496,7 @@ def _gram_counts(toks: list[str], n: int) -> tuple[int, int]:
     return nw - n + 1, max(counts.values())
 
 
-def word_gram_stats_multi_expr(
-    text: Column | str, ns: tuple[int, ...] = (2, 3, 4)
-) -> Column:
+def word_gram_stats_multi_expr(text: Column | str) -> Column:
     """Multi-n sibling of :func:`word_gram_stats_expr`: ONE tokenization
     pass feeding gram stats for every n in ``ns`` (the Gopher-style
     repetition gate reads several gram orders per document; three
@@ -523,10 +504,10 @@ def word_gram_stats_multi_expr(
     struct<n_words, n_distinct_words, n_grams_{n}, max_gram_count_{n}…>
     with the same NULL-propagation contract as the single-n kernel."""
     fields = ["n_words: long", "n_distinct_words: long"]
-    for n in ns:
+    for n in (2, 3, 4):
         fields += [f"n_grams_{n}: long", f"max_gram_count_{n}: long"]
     cols = ["n_words", "n_distinct_words"] + [
-        c for n in ns for c in (f"n_grams_{n}", f"max_gram_count_{n}")
+        c for n in (2, 3, 4) for c in (f"n_grams_{n}", f"max_gram_count_{n}")
     ]
 
     @F.pandas_udf("struct<" + ", ".join(fields) + ">")
@@ -538,7 +519,7 @@ def word_gram_stats_multi_expr(
                 continue
             toks = word_tokens_py(x)
             row: list = [len(toks), len(set(toks))]
-            for n in ns:
+            for n in (2, 3, 4):
                 row.extend(_gram_counts(toks, n))
             rows.append(tuple(row))
         return pd.DataFrame(rows, columns=cols, dtype="object")

@@ -39,16 +39,6 @@ from pyspark.sql import types as T
 from ..functions import vector as V
 from .nearest_centroid import nearest_centroid
 
-_SIMS = ("cosine", "dot")
-
-
-def _score(vector_col: str, query: Sequence[float], sim: str) -> F.Column:
-    if sim == "cosine":
-        return V.cosine_similarity(vector_col, query)
-    if sim == "dot":
-        return V.dot(vector_col, query)
-    raise ValueError(f"unknown similarity {sim!r}; one of {_SIMS}")
-
 
 def brute_force_topk(
     df: DataFrame,
@@ -56,16 +46,18 @@ def brute_force_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vector_col: str = "embedding",
-    sim: str = "cosine",
 ) -> DataFrame:
-    """Exact top-k rows by similarity to one query vector.
+    """Exact top-k rows by cosine similarity to one query vector.
 
     The query is a plan literal — the scan computes the score map-side and
     Spark's TakeOrderedAndProject keeps k rows per partition, so the
     shuffle is k*num_partitions rows regardless of corpus size.
     """
     return (
-        df.select(F.col(id_col), F.round(_score(vector_col, query, sim), 6).alias("score"))
+        df.select(
+            F.col(id_col),
+            F.round(V.cosine_similarity(vector_col, query), 6).alias("score"),
+        )
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -75,13 +67,8 @@ def brute_force_topk_batch(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vector_col: str = "query_vec",
-    sim: str = "cosine",
 ) -> DataFrame:
-    """Exact top-k per query for a table of queries.
+    """Exact cosine top-k per query for a table of queries.
 
     Broadcast the (small) query table against the corpus — the corpus does
     not shuffle; the window's rank-limit pushdown keeps k rows per query per
@@ -90,19 +77,14 @@ def brute_force_topk_batch(
     from pyspark.sql import Window
 
     scored = corpus.crossJoin(
-        F.broadcast(queries.select(query_id_col, query_vector_col))
+        F.broadcast(queries.select("query_id", "query_vec"))
     ).select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(
-            V.cosine_similarity(vector_col, query_vector_col)
-            if sim == "cosine"
-            else V.dot(vector_col, query_vector_col),
-            6,
-        ).alias("score"),
+        F.col("query_id"),
+        F.col("vec_id"),
+        F.round(V.cosine_similarity("embedding", "query_vec"), 6).alias("score"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("vec_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -114,51 +96,39 @@ def matryoshka_topk(
     df: DataFrame,
     query: Sequence[float],
     k: int = 10,
-    prefix_dim: int = 16,
     rerank: int = 100,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
 ) -> DataFrame:
     """Two-stage Matryoshka retrieval (Kusupati et al. '22 MRL; the
     adaptive-retrieval recipe from the public paper): shortlist
-    ``rerank`` candidates by cosine over the FIRST ``prefix_dim``
+    ``rerank`` candidates by cosine over the FIRST 16
     dimensions — MRL-trained embeddings concentrate signal in the
     prefix — then re-rank only the shortlist at full dimension.
 
     Scale shape mirrors pq_refined_topk: the prefix stage is a map-side
     slice + TakeOrdered (k·partitions rows shuffle; with the prefix
-    stored as a truncated sibling column the scan reads prefix_dim/dim
+    stored as a truncated sibling column the scan reads 16/dim
     of the vector bytes), and the full-precision math touches ``rerank``
     rows total. Both stage scores are rounded to 6dp BEFORE ordering
     with an id tie-break, so the shortlist boundary is deterministic and
     engine-independent (the oracle-parity rounding rule)."""
     pre = F.round(
-        V.cosine_similarity(
-            F.slice(vector_col, 1, prefix_dim), query[:prefix_dim]
-        ),
+        V.cosine_similarity(F.slice("embedding", 1, 16), query[:16]),
         6,
     )
     cand = (
-        df.select(F.col(id_col), F.col(vector_col), pre.alias("pre_score"))
-        .orderBy(F.col("pre_score").desc(), F.col(id_col).asc())
+        df.select(F.col("vec_id"), F.col("embedding"), pre.alias("pre_score"))
+        .orderBy(F.col("pre_score").desc(), F.col("vec_id").asc())
         .limit(rerank)
     )
     return (
-        cand.withColumn(
-            "score", F.round(V.cosine_similarity(vector_col, query), 6)
-        )
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
+        cand.withColumn("score", F.round(V.cosine_similarity("embedding", query), 6))
+        .orderBy(F.col("score").desc(), F.col("vec_id").asc())
         .limit(k)
-        .select(id_col, "score", "pre_score")
+        .select("vec_id", "score", "pre_score")
     )
 
 
-def quantize_int8(
-    df: DataFrame,
-    vector_col: str = "embedding",
-    out_col: str = "q8",
-    scale_col: str = "q8_scale",
-) -> DataFrame:
+def quantize_int8(df: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 scalar quantization: scale = max|x|/127,
     q = round(x / scale) ∈ [-127, 127]. 4× smaller storage + int8 GEMM
     on real hardware; zero vectors get scale 0 and all-zero codes.
@@ -167,36 +137,25 @@ def quantize_int8(
     SQL-expressible), so quantized search carries a full DuckDB oracle —
     the accuracy/storage trade is measurable by value, not by trust.
     """
-    v = F.col(vector_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     amax = F.array_max(F.transform(v, lambda x: F.abs(x)))
     # materialize the scale as a COLUMN first: embedding amax inside the
     # quantize lambda re-evaluates the full array_max subtree per element
     # (interpreted HOFs hoist nothing -> O(dim^2) per row at high dim)
-    out = df.withColumn(scale_col, amax / F.lit(127.0))
+    out = df.withColumn("q8_scale", amax / F.lit(127.0))
     q = F.when(
-        F.col(scale_col) == 0.0,
+        F.col("q8_scale") == 0.0,
         F.transform(v, lambda x: F.lit(0).cast("int")),
-    ).otherwise(
-        F.transform(v, lambda x: F.round(x / F.col(scale_col)).cast("int"))
-    )
-    return out.withColumn(out_col, q)
+    ).otherwise(F.transform(v, lambda x: F.round(x / F.col("q8_scale")).cast("int")))
+    return out.withColumn("q8", q)
 
 
-def dequantize_int8(
-    q_col: str = "q8", scale_col: str = "q8_scale"
-) -> F.Column:
+def dequantize_int8() -> F.Column:
     """Reconstruction: x̂ = q * scale (array<double>)."""
-    return F.transform(
-        F.col(q_col), lambda q: q.cast("double") * F.col(scale_col)
-    )
+    return F.transform(F.col("q8"), lambda q: q.cast("double") * F.col("q8_scale"))
 
 
-def all_pairs_topk(
-    df: DataFrame,
-    k: int = 20,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-) -> DataFrame:
+def all_pairs_topk(df: DataFrame, k: int = 20) -> DataFrame:
     """Global top-k most-similar pairs (cosine), BLAS formulation.
 
     The corpus matrix is collected once (n x d floats) and shipped to
@@ -212,7 +171,7 @@ def all_pairs_topk(
     import pandas as pd
     from pyspark.sql import types as T
 
-    rows = df.select(id_col, vector_col).collect()
+    rows = df.select("vec_id", "embedding").collect()
     # id order on the driver (the collect is already n rows): a Spark
     # orderBy would add a range-partition sampling job and a shuffle
     ids = np.array([r[0] for r in rows])
@@ -223,7 +182,7 @@ def all_pairs_topk(
     norms[norms == 0.0] = np.nan
     unit = mat / norms[:, None]
 
-    id_field = df.schema[id_col]
+    id_field = df.schema["vec_id"]
     out_schema = T.StructType(
         [
             T.StructField("id_a", id_field.dataType),
@@ -236,11 +195,11 @@ def all_pairs_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            bm = V.stack_vectors(pdf[vector_col])
+            bm = V.stack_vectors(pdf["embedding"])
             bn = np.linalg.norm(bm, axis=1)
             bn[bn == 0.0] = np.nan
             sims = (bm / bn[:, None]) @ unit.T                  # (b, n)
-            bids = pdf[id_col].to_numpy()
+            bids = pdf["vec_id"].to_numpy()
             mask = ids[None, :] <= bids[:, None]                 # keep id_a < id_b
             sims[mask] = -np.inf
             kk = min(k, sims.shape[1])
@@ -261,13 +220,7 @@ def all_pairs_topk(
     )
 
 
-def all_pairs_topk_distributed(
-    df: DataFrame,
-    k: int = 20,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    num_blocks: int = 8,
-) -> DataFrame:
+def all_pairs_topk_distributed(df: DataFrame, num_blocks: int = 8) -> DataFrame:
     """Exact global top-k most-similar pairs with NO driver-side collect.
 
     2-D grid decomposition: rows hash into num_blocks blocks; every
@@ -285,16 +238,16 @@ def all_pairs_topk_distributed(
     import pandas as pd
 
     B = int(num_blocks)
-    blk = F.pmod(F.hash(F.col(id_col)), F.lit(B))
-    rows = df.select(F.col(id_col), F.col(vector_col), blk.alias("__blk"))
+    blk = F.pmod(F.hash(F.col("vec_id")), F.lit(B))
+    rows = df.select(F.col("vec_id"), F.col("embedding"), blk.alias("__blk"))
     cells = rows.select(
-        id_col,
-        vector_col,
+        "vec_id",
+        "embedding",
         "__blk",
         F.explode(F.sequence(F.lit(0), F.lit(B - 1))).alias("__other"),
     ).select(
-        F.col(id_col),
-        F.col(vector_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         F.col("__blk"),
         F.least("__blk", "__other").alias("bi"),
         F.greatest("__blk", "__other").alias("bj"),
@@ -306,22 +259,22 @@ def all_pairs_topk_distributed(
         right = pdf[pdf["__blk"] == j]
         if len(left) == 0 or len(right) == 0:
             return pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
-        A = V.stack_vectors(left[vector_col])
-        Bm = V.stack_vectors(right[vector_col])
+        A = V.stack_vectors(left["embedding"])
+        Bm = V.stack_vectors(right["embedding"])
         an = np.linalg.norm(A, axis=1)
         bn = np.linalg.norm(Bm, axis=1)
         an[an == 0.0] = np.nan
         bn[bn == 0.0] = np.nan
         sims = (A / an[:, None]) @ (Bm / bn[:, None]).T
-        ia = left[id_col].to_numpy()
-        ib = right[id_col].to_numpy()
+        ia = left["vec_id"].to_numpy()
+        ib = right["vec_id"].to_numpy()
         if i == j:
             # left == right: keep one orientation of each unordered pair
             sims = np.where(ia[:, None] < ib[None, :], sims, -np.inf)
         # cross cells already see each unordered pair exactly once
         sims = np.where(np.isfinite(sims), sims, -np.inf)
         flat = sims.ravel()
-        kk = min(k, flat.size)
+        kk = min(20, flat.size)
         idx = np.argpartition(-flat, kk - 1)[:kk]
         idx = idx[flat[idx] > -np.inf]
         r, c = np.unravel_index(idx, sims.shape)
@@ -333,14 +286,14 @@ def all_pairs_topk_distributed(
             }
         )
 
-    id_type = df.schema[id_col].dataType.simpleString()
+    id_type = df.schema["vec_id"].dataType.simpleString()
     cands = cells.groupBy("bi", "bj").applyInPandas(
         gemm, schema=f"id_a {id_type}, id_b {id_type}, cos_sim double"
     )
     return (
         cands.select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), "id_a", "id_b")
-        .limit(k)
+        .limit(20)
     )
 
 
@@ -349,43 +302,23 @@ def train_ivf_centroids(
     num_cells: int = 64,
     vector_col: str = "embedding",
     seed: int = 42,
-    sample_fraction: float | None = None,
-    max_iter: int = 20,
-    max_train_rows: int = 100_000,
-    method: str = "sample",
 ) -> DataFrame:
     """Coarse quantizer for IVF: k-means cells over a sample of the corpus.
 
     Returns a small DataFrame (cell int, centroid array<float>).
 
-    method="sample" (default) is the standard IVF recipe (Faiss trains its
-    quantizer the same way): draw a seeded sample capped at max_train_rows,
-    collect it to the driver, and run Lloyd's k-means in numpy — at 100 TB
-    you still train on ~1e5 vectors, so the training set is driver-bounded
-    by construction and the fit costs no Spark jobs beyond the one sample
-    scan. method="mllib" keeps the fully-distributed fit for callers whose
-    training sample genuinely can't fit on the driver.
+    The standard IVF recipe (Faiss trains its quantizer the same way):
+    take the first 100,000 vectors, collect them to the driver, and run 20
+    Lloyd iterations of k-means in numpy — at 100 TB you still train on
+    ~1e5 vectors, so the training set is driver-bounded by construction
+    and the fit costs no Spark jobs beyond the one sample scan.
     """
-    if method == "mllib":
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        sample = df.select(vector_col)
-        if sample_fraction:
-            sample = sample.sample(fraction=sample_fraction, seed=seed)
-        train = sample.select(array_to_vector(F.col(vector_col)).alias("features"))
-        model = KMeans(k=num_cells, seed=seed, maxIter=max_iter).fit(train)
-        centers = [list(map(float, c)) for c in model.clusterCenters()]
-    else:
-        sample = df.select(vector_col)
-        if sample_fraction:
-            sample = sample.sample(fraction=sample_fraction, seed=seed)
-        bounded = sample.limit(max_train_rows).persist()
-        bounded.count()  # materialize once; bare limit-collect scales up serially
-        rows = bounded.collect()
-        bounded.unpersist()
-        x = np.array([r[0] for r in rows], dtype=np.float64)
-        centers = [list(map(float, c)) for c in _lloyd_kmeans(x, num_cells, seed, max_iter)]
+    bounded = df.select(vector_col).limit(100_000).persist()
+    bounded.count()  # materialize once; bare limit-collect scales up serially
+    rows = bounded.collect()
+    bounded.unpersist()
+    x = np.array([r[0] for r in rows], dtype=np.float64)
+    centers = [list(map(float, c)) for c in _lloyd_kmeans(x, num_cells, seed, 20)]
     spark = df.sparkSession
     return spark.createDataFrame(
         [(i, c) for i, c in enumerate(centers)],
@@ -430,18 +363,13 @@ def _lloyd_kmeans(x: np.ndarray, k: int, seed: int, max_iter: int) -> np.ndarray
     return centers
 
 
-def assign_ivf_cells(
-    df: DataFrame,
-    centroids: DataFrame,
-    vector_col: str = "embedding",
-) -> DataFrame:
+def assign_ivf_cells(df: DataFrame, centroids: DataFrame) -> DataFrame:
     """Attach the IVF cell id to every corpus row (no shuffle — broadcast
     matrix argmin via the nearest-centroid operator)."""
     return nearest_centroid(
         df,
         centroids,
-        vector_col=vector_col,
-        centroid_col="centroid",
+        vector_col="embedding",
         label_col="cell",
         metric="sqeuclidean",
         out_label="cell",
@@ -449,7 +377,7 @@ def assign_ivf_cells(
     ).drop("cell_dist")
 
 
-def ivf_cell_stats(assigned: DataFrame, cell_col: str = "cell") -> dict:
+def ivf_cell_stats(assigned: DataFrame) -> dict:
     """Index-health summary for quantizer-drift monitoring: cell
     occupancy spread as {n_cells, min, max, mean, imbalance} where
     imbalance = max/mean (1.0 = perfectly even).
@@ -461,7 +389,7 @@ def ivf_cell_stats(assigned: DataFrame, cell_col: str = "cell") -> dict:
     toward a full scan of the hot cells.
     """
     rows = (
-        assigned.groupBy(cell_col)
+        assigned.groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
         .agg(
             F.count(F.lit(1)).alias("n_cells"),
@@ -482,12 +410,7 @@ def ivf_cell_stats(assigned: DataFrame, cell_col: str = "cell") -> dict:
     }
 
 
-def write_ivf_index(
-    df: DataFrame,
-    centroids: DataFrame,
-    path: str,
-    vector_col: str = "embedding",
-) -> None:
+def write_ivf_index(df: DataFrame, centroids: DataFrame, path: str) -> None:
     """Materialize the IVF layout (the SCALING.md design): the corpus
     written ``partitionBy("cell")`` so a probe's IN-list filter becomes
     *partition pruning* (whole directories skipped, visible as
@@ -496,16 +419,12 @@ def write_ivf_index(
     At 100 TB this is the index-build job — run once, incrementally
     refreshed; probes are then cheap scans of nprobe/num_cells of the data.
     """
-    indexed = assign_ivf_cells(df, centroids, vector_col)
+    indexed = assign_ivf_cells(df, centroids)
     indexed.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/corpus")
     centroids.write.mode("overwrite").parquet(f"{path}/centroids")
 
 
-def append_to_ivf_index(
-    df_new: DataFrame,
-    path: str,
-    vector_col: str = "embedding",
-) -> None:
+def append_to_ivf_index(df_new: DataFrame, path: str) -> None:
     """Incremental index maintenance: assign the NEW vectors to their
     cells (broadcast argmin against the stored quantizer — the quantizer
     is immutable; re-training would invalidate existing cells) and append
@@ -525,16 +444,11 @@ def append_to_ivf_index(
     full write_ivf_index handles quantizer drift."""
     spark = df_new.sparkSession
     centroids = _read_centroids(spark, path)
-    assigned = assign_ivf_cells(df_new, centroids, vector_col)
+    assigned = assign_ivf_cells(df_new, centroids)
     assigned.write.mode("append").partitionBy("cell").parquet(f"{path}/corpus")
 
 
-def compact_ivf_cells(
-    spark,
-    path: str,
-    max_files_per_cell: int = 4,
-    id_col: str = "vec_id",
-) -> list[int]:
+def compact_ivf_cells(spark, path: str, max_files_per_cell: int = 4) -> list[int]:
     """Index maintenance half #2: compact cells whose file count exceeds
     ``max_files_per_cell`` — the small-file debt a streaming ingest
     (streaming.index_maintenance) accrues, since every micro-batch lands
@@ -587,7 +501,7 @@ def compact_ivf_cells(
         )
         .where(F.col("cell").isin(cells))
         .repartition("cell")
-        .dropDuplicates(["cell", id_col])
+        .dropDuplicates(["cell", "vec_id"])
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(staging)
@@ -615,9 +529,7 @@ def compact_ivf_cells(
     return cells
 
 
-def recall_at_k(
-    approx: DataFrame, exact: DataFrame, id_col: str = "vec_id"
-) -> float:
+def recall_at_k(approx: DataFrame, exact: DataFrame) -> float:
     """Recall@k of an approximate result set vs the exact top-k:
     |approx ∩ exact| / |exact| over the id column.
 
@@ -626,7 +538,7 @@ def recall_at_k(
     nbits, rerank) changes. Both inputs are k-row result frames, so the
     semi-join is trivially small; returns 0.0 for an empty exact set.
     """
-    exact_ids = exact.select(id_col).distinct()
+    exact_ids = exact.select("vec_id").distinct()
     n_exact = exact_ids.count()
     if n_exact == 0:
         return 0.0
@@ -634,7 +546,7 @@ def recall_at_k(
     # crash-recovered index before its next compaction) must not inflate
     # recall past 1.0
     hit = (
-        approx.select(id_col).distinct().join(exact_ids, id_col, "left_semi").count()
+        approx.select("vec_id").distinct().join(exact_ids, "vec_id", "left_semi").count()
     )
     return hit / n_exact
 
@@ -699,9 +611,6 @@ def ivf_topk(
     query: Sequence[float],
     k: int = 10,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    sim: str = "cosine",
 ) -> DataFrame:
     """Approximate top-k: probe only the nprobe nearest IVF cells.
 
@@ -726,9 +635,6 @@ def ivf_topk(
         indexed.where(F.col("cell").isin(probe)),
         query,
         k=k,
-        id_col=id_col,
-        vector_col=vector_col,
-        sim=sim,
     )
 
 
@@ -738,10 +644,6 @@ def ivf_recall_audit(
     queries: DataFrame,
     k: int = 10,
     nprobes: Sequence[int] = (1, 4),
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vector_col: str = "query_vec",
 ) -> DataFrame:
     """Recall@k of the IVF probe against the exact scan, per
     (nprobe, query) — the quantitative answer to "what does nprobe
@@ -760,10 +662,10 @@ def ivf_recall_audit(
     from pyspark.sql import Window
 
     cents = centroids.collect()
-    qrows = queries.select(query_id_col, query_vector_col).collect()
+    qrows = queries.select("query_id", "query_vec").collect()
     probe_rows = []
     for qr in qrows:
-        qv = np.asarray(qr[query_vector_col], dtype=np.float64)
+        qv = np.asarray(qr["query_vec"], dtype=np.float64)
         order = sorted(
             cents,
             key=lambda r: float(
@@ -772,54 +674,48 @@ def ivf_recall_audit(
         )
         for npb in nprobes:
             for r in order[:npb]:
-                probe_rows.append((int(npb), qr[query_id_col], int(r["cell"])))
+                probe_rows.append((int(npb), qr["query_id"], int(r["cell"])))
     # probe-frame id type derives from the caller's queries frame — the
     # signature is generic over query_id_col, so its type must be too
-    qid_type = dict(queries.dtypes)[query_id_col]
+    qid_type = dict(queries.dtypes)["query_id"]
     probe_df = spark.createDataFrame(
-        probe_rows, f"nprobe int, {query_id_col} {qid_type}, cell int"
+        probe_rows, f"nprobe int, query_id {qid_type}, cell int"
     )
     exact = brute_force_topk_batch(
-        indexed.select(id_col, vector_col),
+        indexed.select("vec_id", "embedding"),
         queries,
         k=k,
-        id_col=id_col,
-        vector_col=vector_col,
-        query_id_col=query_id_col,
-        query_vector_col=query_vector_col,
     )
     cand = indexed.join(F.broadcast(probe_df), "cell").join(
-        F.broadcast(queries.select(query_id_col, query_vector_col)),
-        query_id_col,
+        F.broadcast(queries.select("query_id", "query_vec")),
+        "query_id",
     )
     scored = cand.select(
         "nprobe",
-        query_id_col,
-        id_col,
-        F.round(
-            V.cosine_similarity(vector_col, query_vector_col), 6
-        ).alias("score"),
+        "query_id",
+        "vec_id",
+        F.round(V.cosine_similarity("embedding", "query_vec"), 6).alias("score"),
     )
-    w = Window.partitionBy("nprobe", query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("nprobe", "query_id").orderBy(
+        F.col("score").desc(), F.col("vec_id").asc()
     )
     ivf = scored.withColumn("rk", F.row_number().over(w)).where(
         F.col("rk") <= k
     )
-    ex_ids = exact.select(query_id_col, id_col).withColumn("__hit", F.lit(1))
+    ex_ids = exact.select("query_id", "vec_id").withColumn("__hit", F.lit(1))
     return (
-        ivf.join(F.broadcast(ex_ids), [query_id_col, id_col], "left")
-        .groupBy("nprobe", query_id_col)
+        ivf.join(F.broadcast(ex_ids), ["query_id", "vec_id"], "left")
+        .groupBy("nprobe", "query_id")
         .agg(
             F.sum(F.coalesce("__hit", F.lit(0))).cast("long").alias("n_overlap")
         )
         .select(
             "nprobe",
-            query_id_col,
+            "query_id",
             "n_overlap",
             F.round(F.col("n_overlap") / float(k), 2).alias(f"recall_at_{k}"),
         )
-        .orderBy("nprobe", query_id_col)
+        .orderBy("nprobe", "query_id")
     )
 
 
@@ -827,10 +723,6 @@ def train_pq_codebooks(
     df: DataFrame,
     num_subspaces: int = 8,
     num_centroids: int = 16,
-    vector_col: str = "embedding",
-    seed: int = 42,
-    max_train_rows: int = 100_000,
-    max_iter: int = 20,
 ) -> np.ndarray:
     """Product-quantization codebooks (Jégou et al.): the vector splits
     into m contiguous subspaces and each gets its own k-sub Lloyd
@@ -843,7 +735,7 @@ def train_pq_codebooks(
     256 B → 8 B, 32×). Pass the input pre-ordered (e.g. orderBy(vec_id))
     so training — and any generated oracle literals — are a pure
     function of the data, like train_ivf_centroids."""
-    bounded = df.select(vector_col).limit(max_train_rows).persist()
+    bounded = df.select("embedding").limit(100_000).persist()
     bounded.count()  # materialize once; bare limit-collect scales up serially
     rows = bounded.collect()
     bounded.unpersist()
@@ -854,21 +746,14 @@ def train_pq_codebooks(
     dsub = dim // num_subspaces
     books = np.stack(
         [
-            _lloyd_kmeans(
-                X[:, j * dsub : (j + 1) * dsub], num_centroids, seed + j, max_iter
-            )
+            _lloyd_kmeans(X[:, j * dsub : (j + 1) * dsub], num_centroids, 42 + j, 20)
             for j in range(num_subspaces)
         ]
     )
     return books.astype(np.float32).astype(np.float64)
 
 
-def pq_encode_kernel(
-    df: DataFrame,
-    books: np.ndarray,
-    vector_col: str = "embedding",
-    out_col: str = "pq_codes",
-) -> DataFrame:
+def pq_encode_kernel(df: DataFrame, books: np.ndarray) -> DataFrame:
     """Arrow encode stage: per-subspace argmin against the codebook (one
     GEMM per subspace per batch); ties take the lowest code, matching
     both np.argmin and the oracle's struct-min."""
@@ -881,7 +766,7 @@ def pq_encode_kernel(
 
     def batches(it):
         for pdf in it:
-            X = stack_vectors(pdf[vector_col])
+            X = stack_vectors(pdf["embedding"])
             codes = np.empty((len(X), m), dtype=np.int32)
             for j in range(m):
                 sub = X[:, j * dsub : (j + 1) * dsub]
@@ -893,20 +778,16 @@ def pq_encode_kernel(
                 )
                 codes[:, j] = np.argmin(d, axis=1)
             out = pdf[cols].copy()
-            out[out_col] = list(codes)
+            out["pq_codes"] = list(codes)
             yield out
 
     schema = T.StructType(
-        df.schema.fields + [T.StructField(out_col, T.ArrayType(T.IntegerType()))]
+        df.schema.fields + [T.StructField("pq_codes", T.ArrayType(T.IntegerType()))]
     )
     return df.mapInPandas(batches, schema=schema)
 
 
-def pq_adc_score(
-    books: np.ndarray,
-    query: Sequence[float],
-    codes_col: str = "pq_codes",
-) -> F.Column:
+def pq_adc_score(books: np.ndarray, query: Sequence[float]) -> F.Column:
     """Asymmetric-distance column: the per-subspace squared distances of
     the query to every codebook centroid become m literal lookup tables,
     so scoring a row is m element_at lookups + a sum — no vector math in
@@ -919,7 +800,7 @@ def pq_adc_score(
         qs = q[j * dsub : (j + 1) * dsub]
         lut = ((books[j] - qs[None, :]) ** 2).sum(axis=1)
         lut_lit = V.vector_lit(lut)
-        total = total + F.element_at(lut_lit, F.col(codes_col)[j] + 1)
+        total = total + F.element_at(lut_lit, F.col("pq_codes")[j] + 1)
     return total
 
 
@@ -929,8 +810,6 @@ def pq_refined_topk(
     query: Sequence[float],
     k: int = 10,
     rerank: int = 100,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
 ) -> DataFrame:
     """Two-stage PQ retrieval (Jégou et al. '11 §V: ADC shortlist +
     exact re-ranking — Faiss IndexRefineFlat): the compressed scan
@@ -946,14 +825,14 @@ def pq_refined_topk(
     """
     cand = (
         enc.withColumn("adc_dist", pq_adc_score(books, query))
-        .orderBy("adc_dist", id_col)
+        .orderBy("adc_dist", "vec_id")
         .limit(rerank)
     )
     return (
-        cand.withColumn("exact_dist", V.sq_euclidean(vector_col, query))
-        .orderBy("exact_dist", id_col)
+        cand.withColumn("exact_dist", V.sq_euclidean("embedding", query))
+        .orderBy("exact_dist", "vec_id")
         .limit(k)
-        .select(id_col, "exact_dist", "adc_dist")
+        .select("vec_id", "exact_dist", "adc_dist")
     )
 
 
@@ -964,8 +843,6 @@ def ivfpq_topk(
     query: Sequence[float],
     k: int = 10,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    codes_col: str = "pq_codes",
 ) -> DataFrame:
     """IVF-PQ with ADC scoring — the Faiss lake-scale layout (IndexIVFPQ):
     the coarse quantizer picks the nprobe nearest cells (an IN-list
@@ -979,7 +856,7 @@ def ivfpq_topk(
     stage, the append path, and generated oracles stay cell-independent.
 
     ``indexed_codes`` must carry ``cell`` (assign_ivf_cells) and
-    ``codes_col`` (pq_encode_kernel). At 100 TB both are materialized at
+    ``pq_codes`` (pq_encode_kernel). At 100 TB both are materialized at
     index-build time; a probe then scans nprobe/num_cells of an
     m-bytes-per-row table — the full-precision vectors are never read."""
     cents = centroids.collect()
@@ -990,8 +867,8 @@ def ivfpq_topk(
     probe = [r["cell"] for r in order[:nprobe]]
     return (
         indexed_codes.where(F.col("cell").isin(probe))
-        .select(id_col, pq_adc_score(books, query, codes_col).alias("adc_dist"))
-        .orderBy("adc_dist", id_col)
+        .select("vec_id", pq_adc_score(books, query).alias("adc_dist"))
+        .orderBy("adc_dist", "vec_id")
         .limit(k)
     )
 
@@ -1004,10 +881,6 @@ def ivfpq_refined_topk(
     query: Sequence[float],
     k: int = 10,
     rerank: int = 100,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    codes_col: str = "pq_codes",
-    vector_col: str = "embedding",
 ) -> DataFrame:
     """The full production retrieval stack (Faiss IndexIVFPQ +
     IndexRefineFlat): coarse cell pruning picks nprobe cells, the PQ-ADC
@@ -1025,27 +898,27 @@ def ivfpq_refined_topk(
     # implementation of the coarse-probe/ADC block, not a third copy
     cand_rows = ivfpq_topk(
         indexed_codes, centroids, books, query,
-        k=rerank, nprobe=nprobe, id_col=id_col, codes_col=codes_col,
+        k=rerank,
     ).collect()
     spark = indexed_codes.sparkSession
-    id_type = indexed_codes.schema[id_col].dataType
+    id_type = indexed_codes.schema["vec_id"].dataType
     cand_df = spark.createDataFrame(
         [(r[0], float(r[1])) for r in cand_rows],
         T.StructType(
             [
-                T.StructField(id_col, id_type),
+                T.StructField("vec_id", id_type),
                 T.StructField("adc_dist", T.DoubleType()),
             ]
         ),
     )
     ids = [r[0] for r in cand_rows]
     return (
-        vectors_df.where(F.col(id_col).isin(ids))
-        .select(id_col, V.sq_euclidean(vector_col, query).alias("exact_dist"))
-        .join(F.broadcast(cand_df), id_col)
-        .orderBy("exact_dist", id_col)
+        vectors_df.where(F.col("vec_id").isin(ids))
+        .select("vec_id", V.sq_euclidean("embedding", query).alias("exact_dist"))
+        .join(F.broadcast(cand_df), "vec_id")
+        .orderBy("exact_dist", "vec_id")
         .limit(k)
-        .select(id_col, "exact_dist", "adc_dist")
+        .select("vec_id", "exact_dist", "adc_dist")
     )
 
 
@@ -1064,13 +937,7 @@ def rp_planes(num_planes: int, dim: int, seed: int = 42) -> np.ndarray:
     return np.random.RandomState(seed).normal(size=(num_planes, dim))
 
 
-def random_projection_buckets(
-    df: DataFrame,
-    num_planes: int = 12,
-    vector_col: str = "embedding",
-    seed: int = 42,
-    out_col: str = "rp_bucket",
-) -> DataFrame:
+def random_projection_buckets(df: DataFrame, num_planes: int = 12) -> DataFrame:
     """Sign-pattern LSH bucket id (SRP-LSH, Charikar '02) as a long.
 
     num_planes seeded random hyperplanes; bit i = sign(<v, plane_i>).
@@ -1078,46 +945,32 @@ def random_projection_buckets(
     Pure column expressions over plan-literal plane vectors — scan-speed,
     no UDF. Output feeds dedup.embedding_near_duplicates(group_col=...).
     """
-    dim = len(df.select(vector_col).first()[0])
-    planes = rp_planes(num_planes, dim, seed)
-    return df.withColumn(out_col, _rp_bucket_expr(vector_col, planes))
+    dim = len(df.select("embedding").first()[0])
+    planes = rp_planes(num_planes, dim, 42)
+    return df.withColumn("rp_bucket", _rp_bucket_expr("embedding", planes))
 
 
-def rp_table_buckets(
-    df: DataFrame,
-    num_planes: int = 8,
-    num_tables: int = 4,
-    vector_col: str = "embedding",
-    seed: int = 42,
-    out_col: str = "rp_buckets",
-) -> DataFrame:
-    """Per-row array of num_tables independent SRP bucket ids.
+def rp_table_buckets(df: DataFrame) -> DataFrame:
+    """Per-row array of 4 independent SRP bucket ids (8 planes each).
 
     Multi-table LSH: a near-dup pair is a candidate if it collides in ANY
     table, so recall is 1 - (1 - p^b)^L instead of p^b — the standard fix
     for single-table SRP's recall loss. Still pure column expressions.
     """
-    dim = len(df.select(vector_col).first()[0])
+    dim = len(df.select("embedding").first()[0])
     return df.withColumn(
-        out_col,
+        "rp_buckets",
         F.array(
             *[
-                _rp_bucket_expr(vector_col, rp_planes(num_planes, dim, seed + t))
-                for t in range(num_tables)
+                _rp_bucket_expr("embedding", rp_planes(8, dim, 42 + t))
+                for t in range(4)
             ]
         ),
     )
 
 
-def rp_table_buckets_kernel(
-    df: DataFrame,
-    num_planes: int = 8,
-    num_tables: int = 4,
-    vector_col: str = "embedding",
-    seed: int = 42,
-    out_col: str = "rp_buckets",
-) -> DataFrame:
-    """Arrow twin of rp_table_buckets: all num_tables × num_planes sign
+def rp_table_buckets_kernel(df: DataFrame) -> DataFrame:
+    """Arrow twin of rp_table_buckets: all 4 tables × 8 planes sign
     bits in one (n, dim) × (dim, T·P) GEMM per batch instead of T·P
     interpreted fold-dots per row (equivalence-tested; the expression
     path remains the oracle formulation)."""
@@ -1125,38 +978,28 @@ def rp_table_buckets_kernel(
 
     from ..functions.vector import stack_vectors
 
-    dim = len(df.select(vector_col).first()[0])
-    planes = np.vstack(
-        [rp_planes(num_planes, dim, seed + t) for t in range(num_tables)]
-    )  # (T*P, dim)
-    weights = (1 << np.arange(num_planes)).astype(np.int64)
+    dim = len(df.select("embedding").first()[0])
+    planes = np.vstack([rp_planes(8, dim, 42 + t) for t in range(4)])  # (T*P, dim)
+    weights = (1 << np.arange(8)).astype(np.int64)
 
     cols = df.columns
 
     def batches(it):
         for pdf in it:
-            X = stack_vectors(pdf[vector_col])
+            X = stack_vectors(pdf["embedding"])
             bits = (X @ planes.T) > 0  # (n, T*P)
-            bks = bits.reshape(len(X), num_tables, num_planes) @ weights
+            bks = bits.reshape(len(X), 4, 8) @ weights
             out = pdf[cols].copy()
-            out[out_col] = list(bks.astype(np.int64))
+            out["rp_buckets"] = list(bks.astype(np.int64))
             yield out
 
     schema = T.StructType(
-        df.schema.fields + [T.StructField(out_col, T.ArrayType(T.LongType()))]
+        df.schema.fields + [T.StructField("rp_buckets", T.ArrayType(T.LongType()))]
     )
     return df.mapInPandas(batches, schema=schema)
 
 
-def rp_blocked_top_pairs(
-    df: DataFrame,
-    k: int = 20,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-    num_planes: int = 8,
-    num_tables: int = 4,
-    seed: int = 42,
-) -> DataFrame:
+def rp_blocked_top_pairs(df: DataFrame, k: int = 20) -> DataFrame:
     """Scale path for global top-k most-similar pairs: multi-table SRP-LSH
     blocking instead of all_pairs_topk's driver-side matrix collect.
 
@@ -1174,34 +1017,32 @@ def rp_blocked_top_pairs(
 
     # kernel twin for the T·P interpreted fold-dots (equivalence-tested
     # vs rp_table_buckets, which stays the declarative/oracle form)
-    b = rp_table_buckets_kernel(
-        df.select(id_col, vector_col), num_planes, num_tables, vector_col, seed
-    )
+    b = rp_table_buckets_kernel(df.select("vec_id", "embedding"))
     # bucketed rows feed both join sides: persist instead of re-deriving
     # (at lake scale this is the "write the bucketed table" stage).
     b = b.persist(StorageLevel.MEMORY_AND_DISK)
     e = b.select(
-        F.col(id_col),
-        F.col(vector_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         F.col("rp_buckets"),
         F.posexplode("rp_buckets").alias("tbl", "bucket"),
     )
     a = e.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vector_col).alias("__va"),
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("__va"),
         F.col("rp_buckets").alias("__ba"),
         "tbl",
         "bucket",
     )
     bb = e.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vector_col).alias("__vb"),
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("__vb"),
         F.col("rp_buckets").alias("__bb"),
         "tbl",
         "bucket",
     )
     first_match = F.lit(True)
-    for j in range(num_tables - 1):
+    for j in range(3):
         first_match = first_match & (
             (F.col("tbl") <= j) | (F.col("__ba")[j] != F.col("__bb")[j])
         )

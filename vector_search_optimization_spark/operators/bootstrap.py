@@ -28,12 +28,12 @@ from pyspark.sql import functions as F
 POW52 = float(1 << 52)
 
 
-def poisson1_thresholds(max_k: int = 7) -> list[float]:
-    """Cumulative P(X <= k), k = 0..max_k-1, for Poisson(1) — the
+def poisson1_thresholds() -> list[float]:
+    """Cumulative P(X <= k), k = 0..6, for Poisson(1) — the
     inverse-CDF thresholds. Python doubles, embedded as 17-digit
     literals on the SQL side so both engines compare the same values."""
     cum, term, out = 0.0, math.exp(-1.0), []
-    for k in range(max_k):
+    for k in range(7):
         cum += term
         out.append(cum)
         term /= k + 1
@@ -86,20 +86,18 @@ def poisson_bootstrap_mean_diff(
     key_col: str,
     group_col: str,
     value_col: str,
-    n_boot: int = 64,
-    alpha: float = 0.05,
 ) -> DataFrame:
     """Bootstrap CI for the difference in means between two cohorts
     (``group_col`` boolean: true = cohort A). Returns ONE row:
-    per-replicate weighted mean difference quantiles at alpha/2 and
-    1-alpha/2 plus the replicate count. Point estimates are for the
+    the 2.5% and 97.5% quantiles of the per-replicate weighted mean
+    difference over 64 replicates, plus the replicate count. Point estimates are for the
     CALLER (derive them tie-free from exact sums — this operator only
     owns the resampling distribution).
 
     Plan: explode a generated replicate index (never materialized), one
     combinable (replicate, cohort) aggregate, a B-row pivot, one exact
     percentile over B values."""
-    b = F.explode(F.sequence(F.lit(0), F.lit(n_boot - 1))).alias("b")
+    b = F.explode(F.sequence(F.lit(0), F.lit(63))).alias("b")
     rep = df.select(
         F.col(key_col).alias("__k"),
         F.col(group_col).alias("__g"),
@@ -122,8 +120,8 @@ def poisson_bootstrap_mean_diff(
     )
     return per_b.agg(
         F.count(F.lit(1)).alias("n_boot"),
-        F.percentile("__d", F.lit(alpha / 2)).alias("__lo"),
-        F.percentile("__d", F.lit(1 - alpha / 2)).alias("__hi"),
+        F.percentile("__d", F.lit(0.025)).alias("__lo"),
+        F.percentile("__d", F.lit(0.975)).alias("__hi"),
     ).select(
         "n_boot",
         F.round("__lo", 6).alias("ci_lo"),

@@ -94,32 +94,11 @@ def kmeans_fit(
         feats.unpersist()
 
 
-def silhouette_mllib(
-    assigned: DataFrame,
-    vector_col: str = "embedding",
-    cluster_col: str = "cluster",
-    distance: str = "squaredEuclidean",
-) -> float:
-    """M2 — distributed silhouette via ClusteringEvaluator.
-
-    NOTE: supports squaredEuclidean (default) and cosine only; for parity
-    with sklearn's euclidean silhouette use silhouette_exact on a sample.
-    """
-    from pyspark.ml.evaluation import ClusteringEvaluator
-
-    feats = _to_features(assigned, vector_col)
-    ev = ClusteringEvaluator(
-        predictionCol=cluster_col, featuresCol="features", distanceMeasure=distance
-    )
-    return float(ev.evaluate(feats))
-
-
 def silhouette_exact(
     assigned: DataFrame,
     vector_col: str = "embedding",
     cluster_col: str = "cluster",
     sample_size: int | None = 2000,
-    seed: int = 42,
 ) -> float:
     """M2 — euclidean silhouette, numpy, on a (seeded) sample.
 
@@ -128,20 +107,18 @@ def silhouette_exact(
     (nuevo-kmeans-pre.ipynb:284 c14). Distances from the sampled rows to
     ALL rows are required by the definition; sampling keeps this a
     (s x n) matrix. Collect is bounded to the sample + corpus vectors —
-    use only at reference scale (<=1e5 rows); at lake scale use
-    silhouette_mllib.
+    use only at reference scale (<=1e5 rows).
     """
     pdf = assigned.select(cluster_col, vector_col).toPandas()
     X = V.stack_vectors(pdf[vector_col])
     labels = pdf[cluster_col].to_numpy()
-    return silhouette_numpy(X, labels, sample_size=sample_size, seed=seed)
+    return silhouette_numpy(X, labels, sample_size=sample_size)
 
 
 def silhouette_numpy(
     X: np.ndarray,
     labels: np.ndarray,
     sample_size: int | None = 2000,
-    seed: int = 42,
 ) -> float:
     """The numpy silhouette core shared by silhouette_exact (DataFrame
     collect) and the DBSCAN grid sweep's single-task regime (matrix
@@ -150,7 +127,7 @@ def silhouette_numpy(
     n = len(X)
     idx = np.arange(n)
     if sample_size is not None and sample_size < n:
-        idx = np.random.RandomState(seed).choice(n, sample_size, replace=False)
+        idx = np.random.RandomState(42).choice(n, sample_size, replace=False)
 
     # vectorized: one (s, n) distance GEMM + one (s, k) per-label mean GEMM
     S = X[idx]
@@ -185,7 +162,6 @@ def silhouette_exact_distributed(
     vector_col: str = "embedding",
     cluster_col: str = "cluster",
     sample_size: int | None = 2000,
-    seed: int = 42,
     id_cols: list[str] | None = None,
 ) -> float:
     """M2 — euclidean silhouette (sklearn semantics) with NO full-table
@@ -222,7 +198,7 @@ def silhouette_exact_distributed(
     sdf = assigned.select(
         F.col(cluster_col).alias("__lbl"),
         F.col(vector_col).alias("__vec"),
-        F.xxhash64(F.lit(seed), *hcols).alias("__h"),
+        F.xxhash64(F.lit(42), *hcols).alias("__h"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     # the input is typically an unpersisted KMeans transform over the
     # full table; without this persist the count, the sample fetch, and
@@ -309,10 +285,7 @@ def silhouette_exact_distributed(
 def k_sweep(
     df: DataFrame,
     ks: range,
-    n_init: int = 1,
     max_iter: int = 100,
-    seed: int = 42,
-    vector_col: str = "embedding",
     silhouette_sample: int | None = 2000,
 ) -> list[dict]:
     """M3 — model selection sweep: per-k inertia + silhouette.
@@ -323,11 +296,10 @@ def k_sweep(
     """
     out = []
     for k in ks:
-        res = kmeans_fit(df, k, n_init=n_init, max_iter=max_iter, seed=seed,
-                         vector_col=vector_col)
-        assigned = res.assign(df, vector_col)
+        res = kmeans_fit(df, k, max_iter=max_iter)
+        assigned = res.assign(df, "embedding")
         sil = silhouette_exact_distributed(
-            assigned, vector_col, "cluster", sample_size=silhouette_sample, seed=seed
+            assigned, "embedding", "cluster", sample_size=silhouette_sample
         )
         out.append({"k": k, "inertia": res.inertia, "silhouette": sil})
     return out
@@ -339,7 +311,6 @@ def fit_and_evaluate(
     n_runs: int = 5,
     max_iter: int = 300,
     seed: int = 42,
-    vector_col: str = "embedding",
 ) -> dict:
     """M5 — the reference's timing harness (nuevo-kmeans-pre.ipynb:284 c14):
     per-seed wall time mean±std + silhouette of the last fit."""
@@ -347,14 +318,13 @@ def fit_and_evaluate(
     res = None
     for i in range(n_runs):
         t0 = time.time()
-        res = kmeans_fit(df, k, n_init=1, max_iter=max_iter, seed=seed + i,
-                         vector_col=vector_col)
+        res = kmeans_fit(df, k, max_iter=max_iter, seed=seed + i)
         times.append(time.time() - t0)
-    assigned = res.assign(df, vector_col)
+    assigned = res.assign(df, "embedding")
     return {
         "k": k,
         "mean_s": float(np.mean(times)),
         "std_s": float(np.std(times)),
         "inertia": res.inertia,
-        "silhouette": silhouette_exact_distributed(assigned, vector_col, "cluster"),
+        "silhouette": silhouette_exact_distributed(assigned, "embedding", "cluster"),
     }

@@ -16,26 +16,21 @@ from .lm_quality import tokenize
 
 
 def curate_columns(
-    df: DataFrame, min_tokens: int = 10, keep_cols: tuple[str, ...] = ("source",)
+    df: DataFrame, keep_cols: tuple[str, ...] = ("source",)
 ) -> DataFrame:
     """Adds ``clean`` (PII-redacted text) and ``n_tokens``; keeps rows
-    with non-null text and at least ``min_tokens`` whitespace tokens.
+    with non-null text and at least 10 whitespace tokens.
     ``keep_cols`` must exist on df (the documents table carries source)."""
     return (
         df.where(F.col("text").isNotNull())
         .withColumn("clean", RD.redact_pii("text"))
         .withColumn("n_tokens", F.size(tokenize("clean")))
-        .where(F.col("n_tokens") >= min_tokens)
+        .where(F.col("n_tokens") >= 10)
         .select("doc_id", "lang", *keep_cols, "clean", "n_tokens")
     )
 
 
-def strip_boilerplate_lines(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_doc_freq: int = 10,
-) -> DataFrame:
+def strip_boilerplate_lines(df: DataFrame, min_doc_freq: int = 10) -> DataFrame:
     """Corpus-level boilerplate-line removal (the CCNet/RefinedWeb
     curation stage): a LINE that appears in >= ``min_doc_freq`` DISTINCT
     documents is boilerplate (cookie banners, copyright footers,
@@ -64,20 +59,20 @@ def strip_boilerplate_lines(
     """
     trimmed = F.regexp_replace("line", r"^[ \t\r]+|[ \t\r]+$", "")
     lines = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
     ).withColumn("key", trimmed)
     freq = (
         lines.where(F.col("key") != "")
         .groupBy("key")
-        .agg(F.countDistinct(id_col).alias("__df"))
+        .agg(F.countDistinct("doc_id").alias("__df"))
         .where(F.col("__df") >= min_doc_freq)
         .select("key")
     )
     # plain equi anti-join: freq contains no empty keys (filtered), so
     # empty-trim (structure) lines can never match and are always kept
     kept = lines.join(F.broadcast(freq), "key", "left_anti")
-    rebuilt = kept.groupBy(id_col).agg(
+    rebuilt = kept.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_lines_after"),
         F.concat_ws(
             "\n",
@@ -87,13 +82,13 @@ def strip_boilerplate_lines(
             ),
         ).alias("clean_text"),
     )
-    totals = lines.groupBy(id_col).agg(
+    totals = lines.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_lines_before")
     )
     return (
-        totals.join(rebuilt, id_col, "left")
+        totals.join(rebuilt, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_lines_before",
             (
                 F.col("n_lines_before")

@@ -54,31 +54,26 @@ def _dbscan_numpy(X: np.ndarray, eps: float, min_samples: int) -> np.ndarray:
     return labels
 
 
-def dbscan_kernel(
-    df: DataFrame,
-    eps: float,
-    min_samples: int,
-    vector_col: str = "embedding",
-    id_col: str = "vec_id",
-    out_col: str = "dbscan_label",
-) -> DataFrame:
+def dbscan_kernel(df: DataFrame, eps: float, min_samples: int) -> DataFrame:
     """Single-task exact DBSCAN (reference scale). The whole table is
     coalesced into one group — use only when m^2 doubles fit a task."""
-    id_field = df.schema[id_col]
+    id_field = df.schema["vec_id"]
     schema = T.StructType(
         [
-            T.StructField(id_col, id_field.dataType),
-            T.StructField(out_col, T.LongType()),
+            T.StructField("vec_id", id_field.dataType),
+            T.StructField("dbscan_label", T.LongType()),
         ]
     )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, ignore_index=True)
-        X = V.stack_vectors(pdf[vector_col])
-        return pd.DataFrame({id_col: pdf[id_col], out_col: _dbscan_numpy(X, eps, min_samples)})
+        pdf = pdf.sort_values("vec_id", ignore_index=True)
+        X = V.stack_vectors(pdf["embedding"])
+        return pd.DataFrame(
+            {"vec_id": pdf["vec_id"], "dbscan_label": _dbscan_numpy(X, eps, min_samples)}
+        )
 
     return (
-        df.select(F.lit(1).alias("__g"), id_col, vector_col)
+        df.select(F.lit(1).alias("__g"), "vec_id", "embedding")
         .groupBy("__g")
         .applyInPandas(kernel, schema=schema)
     )
@@ -304,7 +299,7 @@ def dbscan_distributed(
     from .graph import connected_components
 
     labels = connected_components(
-        core_edges, nodes=core, id_col="pid", max_iter=max_iter,
+        core_edges, nodes=core, max_iter=max_iter,
         symmetrize=False,
     ).withColumnRenamed("component", "lbl")
 
@@ -378,9 +373,7 @@ def dbscan_grid_search(
                 n_clustered = int(mask.sum())
                 sil = None
                 if n_clusters >= 2:
-                    sil = silhouette_numpy(
-                        X[mask], labels[mask], sample_size=2000
-                    )
+                    sil = silhouette_numpy(X[mask], labels[mask])
                 results.append(
                     {"eps": eps, "min_samples": ms,
                      "n_clusters": n_clusters, "n_noise": n - n_clustered,
@@ -408,7 +401,7 @@ def dbscan_grid_search(
             if n_clusters >= 2:
                 sil = silhouette_exact_distributed(
                     clustered, vector_col, "dbscan_label",
-                    sample_size=2000, id_cols=[id_col],
+                    id_cols=[id_col],
                 )
             results.append(
                 {"eps": eps, "min_samples": ms, "n_clusters": n_clusters,

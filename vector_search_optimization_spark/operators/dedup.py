@@ -44,41 +44,37 @@ from ..sources.readers import spread_scan
 
 # --- exact -------------------------------------------------------------------
 
-def exact_duplicates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_duplicates(df: DataFrame) -> DataFrame:
     """Groups of exact duplicates (by normalized-text fingerprint).
 
     Returns one row per duplicate group: fingerprint, size, member ids,
     and the keeper (min id). Only groups with >1 member.
     """
     return (
-        df.select(F.col(id_col), TX.fingerprint(text_col).alias("fp"))
+        df.select(F.col("doc_id"), TX.fingerprint("text").alias("fp"))
         .groupBy("fp")
         .agg(
             F.count(F.lit(1)).alias("group_size"),
-            F.min(id_col).alias("keeper"),
-            F.sort_array(F.collect_list(id_col)).alias("members"),
+            F.min("doc_id").alias("keeper"),
+            F.sort_array(F.collect_list("doc_id")).alias("members"),
         )
         .where(F.col("group_size") > 1)
     )
 
 
-def dedup_exact(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def dedup_exact(df: DataFrame) -> DataFrame:
     """Keep exactly one row (min id) per normalized-text fingerprint.
 
     min_by-based: one partial-aggregating shuffle on the fingerprint, no
     window, no sort.
     """
     keep = (
-        df.select(F.col(id_col).alias("__id"), TX.fingerprint(text_col).alias("__fp"))
+        df.select(F.col("doc_id").alias("__id"), TX.fingerprint("text").alias("__fp"))
         .groupBy("__fp")
-        .agg(F.min("__id").alias(id_col))
+        .agg(F.min("__id").alias("doc_id"))
         .drop("__fp")
     )
-    return df.join(keep, id_col, "left_semi")
+    return df.join(keep, "doc_id", "left_semi")
 
 
 # --- minhash + LSH -----------------------------------------------------------
@@ -88,46 +84,31 @@ def dedup_exact(
 _MERSENNE = (1 << 31) - 1
 
 
-def minhash_coeffs(num_hashes: int = 64, seed: int = 42) -> tuple[list[int], list[int]]:
+def minhash_coeffs(num_hashes: int = 64) -> tuple[list[int], list[int]]:
     """The seeded (a_i, b_i) universal-hash coefficients, as plain ints.
 
     Single source for the Spark expression path, the Arrow kernel, and the
     generated DuckDB oracle SQL — all three must draw the identical family.
     """
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(42)
     a = rng.randint(1, _MERSENNE, size=num_hashes, dtype=np.int64)
     b = rng.randint(0, _MERSENNE, size=num_hashes, dtype=np.int64)
     return [int(x) for x in a], [int(x) for x in b]
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-    seed: int = 42,
-    hash_mode: str = "poly",
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, num_hashes: int = 64) -> DataFrame:
     """(id, signature array<long>) — minhash over word-shingle sets.
 
     Universal-hash family h_i(x) = (a_i * x + b_i) mod p over the shingle
     hash. Built entirely from Catalyst expressions: the per-row cost is
     num_hashes * |shingles| multiply-mods; no UDF, no shuffle. a_i/b_i are
-    seeded driver-side constants (deterministic plan).
-
-    hash_mode: "poly" (default) hashes shingles with the SQL-expressible
-    polynomial rolling hash (DuckDB-oracle-able, and bit-identical to the
-    kernel path); "xxhash" uses JVM xxhash64 (fastest expression path,
-    engine-specific values).
+    seeded driver-side constants (deterministic plan). Shingles hash with
+    the SQL-expressible polynomial rolling hash, so the signatures are
+    bit-identical to the kernel path and the DuckDB oracle.
     """
-    a, b = minhash_coeffs(num_hashes, seed)
+    a, b = minhash_coeffs(num_hashes)
 
-    if hash_mode == "poly":
-        shingle_hash = lambda s: TX.poly_hash(s)  # noqa: E731
-    else:
-        shingle_hash = lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE))  # noqa: E731
-    shingle_hashes = F.transform(TX.word_shingles(text_col, shingle_n), shingle_hash)
+    shingle_hashes = F.transform(TX.word_shingles("text", 3), lambda s: TX.poly_hash(s))
     sig = F.array(
         *[
             F.array_min(
@@ -142,74 +123,50 @@ def minhash_signatures(
         ]
     )
     return (
-        df.where(F.col(text_col).isNotNull())
-        .select(F.col(id_col), shingle_hashes.alias("__sh"))
-        .select(id_col, sig.alias("signature"))
+        df.where(F.col("text").isNotNull())
+        .select(F.col("doc_id"), shingle_hashes.alias("__sh"))
+        .select("doc_id", sig.alias("signature"))
     )
 
 
-def minhash_signatures_kernel(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    shingle_n: int = 3,
-    seed: int = 42,
-    hash_mode: str = "poly",
-) -> DataFrame:
+def minhash_signatures_kernel(df: DataFrame, num_hashes: int = 64) -> DataFrame:
     """Arrow-batched numpy formulation of minhash_signatures.
 
     Spark's higher-order array functions run interpreted (no codegen), so
     the expression path costs ~2ms/doc at 64 hashes; this kernel flattens a
     batch's shingles once and does the (num_hashes x m) permute-min as two
-    numpy ops — measured ~10x faster at sf0.1.
-
-    hash_mode: "poly" (default) — shingle hash is the polynomial rolling
-    hash, bit-identical to minhash_signatures(hash_mode="poly") and to the
-    generated DuckDB oracle; "pandas" — pandas' SipHash (fast, but
-    signatures are engine-specific).
+    numpy ops — measured ~10x faster at sf0.1. The shingle hash is the
+    polynomial rolling hash, bit-identical to minhash_signatures and to
+    the generated DuckDB oracle.
     """
     import pandas as pd
 
-    a_l, b_l = minhash_coeffs(num_hashes, seed)
+    a_l, b_l = minhash_coeffs(num_hashes)
     a, b = np.array(a_l, dtype=np.int64), np.array(b_l, dtype=np.int64)
 
     def batches(it):
         for pdf in it:
             sigs = []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 toks = TX.word_tokens_py(text)
-                if hash_mode == "poly":
-                    # distinct-shingle min == all-windows min, so the
-                    # vectorized window hash needs no string set; unique
-                    # just shrinks the permute-min matrix
-                    h = np.unique(TX.poly_hash_shingles_np(toks, shingle_n))
-                else:
-                    if len(toks) >= shingle_n:
-                        sh = {
-                            " ".join(toks[i : i + shingle_n])
-                            for i in range(len(toks) - shingle_n + 1)
-                        }
-                    else:
-                        sh = {" ".join(toks)}
-                    h = (
-                        pd.util.hash_array(np.array(sorted(sh), dtype=object))
-                        % _MERSENNE
-                    ).astype(np.int64)
+                # distinct-shingle min == all-windows min, so the
+                # vectorized window hash needs no string set; unique just
+                # shrinks the permute-min matrix
+                h = np.unique(TX.poly_hash_shingles_np(toks, 3))
                 sig = ((a[:, None] * h[None, :] + b[:, None]) % _MERSENNE).min(axis=1)
                 sigs.append(sig.tolist())
-            yield pd.DataFrame({id_col: pdf[id_col], "signature": sigs})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "signature": sigs})
 
-    id_type = df.schema[id_col].dataType.simpleString()
+    id_type = df.schema["doc_id"].dataType.simpleString()
     # spread before the kernel: a single-row-group parquet scan is
     # unsplittable, so without this the whole permute-min pass runs in
     # ONE task (guide §2.5); no-op whenever the input already has
     # >= default-parallelism partitions (any lake-scale scan, any
     # post-shuffle frame)
     return spread_scan(
-        df.where(F.col(text_col).isNotNull()).select(id_col, text_col),
-        id_col,
-    ).mapInPandas(batches, schema=f"{id_col} {id_type}, signature array<long>")
+        df.where(F.col("text").isNotNull()).select("doc_id", "text"),
+        "doc_id",
+    ).mapInPandas(batches, schema=f"doc_id {id_type}, signature array<long>")
 
 
 def lsh_collision_probability(s: float, num_bands: int, rows_per_band: int) -> float:
@@ -220,20 +177,15 @@ def lsh_collision_probability(s: float, num_bands: int, rows_per_band: int) -> f
     return 1.0 - (1.0 - s**rows_per_band) ** num_bands
 
 
-def tune_lsh_bands(
-    num_hashes: int,
-    threshold: float,
-    fp_weight: float = 0.5,
-) -> tuple[int, int]:
+def tune_lsh_bands(num_hashes: int, threshold: float) -> tuple[int, int]:
     """Pick (num_bands, rows_per_band) for a target jaccard threshold.
 
     Standard S-curve optimization (the public datasketch recipe):
     over every divisor banding of the signature, minimize
-    fp_weight·∫₀ᵗ P(candidate|s) ds + (1-fp_weight)·∫ₜ¹ (1-P) ds —
-    weighted false-positive area below the threshold plus false-negative
-    area above it (numeric integration; exact enough at 1e-3 steps).
-    Returns the banding for minhash_lsh_candidates; a lower fp_weight
-    tolerates more candidates to miss fewer true pairs.
+    ∫₀ᵗ P(candidate|s) ds + ∫ₜ¹ (1-P) ds — false-positive area below
+    the threshold plus false-negative area above it, equally weighted
+    (numeric integration; exact enough at 1e-3 steps). Returns the
+    banding for minhash_lsh_candidates.
     """
     if not 0.0 < threshold < 1.0:
         raise ValueError(f"threshold must be in (0, 1), got {threshold}")
@@ -251,7 +203,7 @@ def tune_lsh_bands(
                 fp += p
             else:
                 fn += 1.0 - p
-        err = (fp_weight * fp + (1.0 - fp_weight) * fn) / steps
+        err = (0.5 * fp + 0.5 * fn) / steps
         if best is None or err < best[0]:
             best = (err, b, r)
     assert best is not None
@@ -260,9 +212,7 @@ def tune_lsh_bands(
 
 def minhash_band_rows(
     signatures: DataFrame,
-    id_col: str = "doc_id",
     num_bands: int = 16,
-    sig_col: str = "signature",
     num_hashes: int | None = None,
 ) -> DataFrame:
     """Exploded LSH band keys per document: (id, band, bucket) where
@@ -284,51 +234,38 @@ def minhash_band_rows(
             f"num_bands={num_bands} must divide num_hashes={num_hashes} "
             f"(and be within [1, {num_hashes}])"
         )
-    n_hashes_col = F.size(F.col(sig_col))
+    n_hashes_col = F.size(F.col("signature"))
     rows_per_band = (n_hashes_col / num_bands).cast("int")
     return signatures.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(num_bands - 1)),
                 lambda band: F.struct(
                     band.alias("band"),
                     F.xxhash64(
-                        F.slice(F.col(sig_col), band * rows_per_band + 1, rows_per_band)
+                        F.slice("signature", band * rows_per_band + 1, rows_per_band)
                     ).alias("bucket"),
                 ),
             )
         ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.bucket")
+    ).select("doc_id", "bb.band", "bb.bucket")
 
 
-def minhash_probe_corpus(
-    batch: DataFrame,
-    corpus_bands: DataFrame,
-    corpus_sigs: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    num_bands: int = 16,
-    shingle_n: int = 3,
-    seed: int = 42,
-    est_threshold: float | None = None,
-) -> DataFrame:
+def minhash_probe_corpus(batch: DataFrame, corpus_bands: DataFrame) -> DataFrame:
     """Incremental (nightly-ingest) corpus dedup: band-probe a NEW batch
     against a persisted corpus index instead of re-deduping the corpus.
 
     ``corpus_bands`` is the (id, band, bucket) table minhash_band_rows
     produced for the existing corpus (at lake scale: a bucketed table so
     the probe join never shuffles the index — the batch side broadcasts).
-    The batch's signatures/bands are computed here with the SAME
-    (num_hashes, num_bands, shingle_n, seed) — pass the index's
-    parameters or the buckets won't collide.
+    The batch's signatures/bands are computed here with the index's
+    parameters (64 hashes, 16 bands, word 3-shingles, seed 42), or the
+    buckets wouldn't collide.
 
     Returns candidate pairs (id_a = batch id, id_b = corpus id),
-    distinct. With ``corpus_sigs`` and ``est_threshold`` set, candidates
-    are additionally filtered by signature-estimated jaccard (fraction
-    of agreeing minhashes); verify exactly with ngram_jaccard_pairs over
-    the union of corpus and batch texts either way.
+    distinct; verify exactly with ngram_jaccard_pairs over the union of
+    corpus and batch texts.
 
     Scale: one map-side signature pass over the BATCH only, one
     broadcast-hash probe over the index scan (no corpus shuffle), and
@@ -336,45 +273,24 @@ def minhash_probe_corpus(
     band/sig rows to the index afterwards keeps tomorrow's probe
     consistent (append→probe pytest in tests/test_dedup.py).
     """
-    sig_b = minhash_signatures_kernel(
-        batch, text_col, id_col, num_hashes, shingle_n, seed
-    )
+    sig_b = minhash_signatures_kernel(batch, 64)
     from pyspark import StorageLevel
 
     sig_b = sig_b.persist(StorageLevel.MEMORY_AND_DISK)
-    bands_b = minhash_band_rows(
-        sig_b, id_col, num_bands, num_hashes=num_hashes
-    ).select(F.col(id_col).alias("id_a"), "band", "bucket")
-    cands = (
-        corpus_bands.select(F.col(id_col).alias("id_b"), "band", "bucket")
+    bands_b = minhash_band_rows(sig_b, 16, num_hashes=64).select(
+        F.col("doc_id").alias("id_a"), "band", "bucket"
+    )
+    return (
+        corpus_bands.select(F.col("doc_id").alias("id_b"), "band", "bucket")
         .join(F.broadcast(bands_b), ["band", "bucket"])
         .select("id_a", "id_b")
         .distinct()
-    )
-    if corpus_sigs is None or est_threshold is None:
-        return cands
-    sa = sig_b.select(F.col(id_col).alias("id_a"), F.col("signature").alias("__sa"))
-    sb = corpus_sigs.select(
-        F.col(id_col).alias("id_b"), F.col("signature").alias("__sb")
-    )
-    est = F.aggregate(
-        F.zip_with("__sa", "__sb", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.size("__sa")
-    return (
-        cands.join(F.broadcast(sa), "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", F.round(est, 6).alias("est_jaccard"))
-        .where(F.col("est_jaccard") >= est_threshold)
     )
 
 
 def minhash_lsh_candidates(
     signatures: DataFrame,
-    id_col: str = "doc_id",
     num_bands: int = 16,
-    sig_col: str = "signature",
     num_hashes: int | None = None,
 ) -> DataFrame:
     """LSH banding: equal band-slices → candidate pairs (id_a < id_b).
@@ -389,12 +305,10 @@ def minhash_lsh_candidates(
     product. Pass ``num_hashes`` for a free static check (no job; the
     length is not in the schema).
     """
-    bands = minhash_band_rows(
-        signatures, id_col, num_bands, sig_col=sig_col, num_hashes=num_hashes
-    )
+    bands = minhash_band_rows(signatures, num_bands, num_hashes=num_hashes)
 
-    a = bands.select(F.col(id_col).alias("id_a"), "band", "bucket")
-    b = bands.select(F.col(id_col).alias("id_b"), "band", "bucket")
+    a = bands.select(F.col("doc_id").alias("id_a"), "band", "bucket")
+    b = bands.select(F.col("doc_id").alias("id_b"), "band", "bucket")
     return (
         a.join(b, ["band", "bucket"])
         .where(F.col("id_a") < F.col("id_b"))
@@ -405,13 +319,9 @@ def minhash_lsh_candidates(
 
 def minhash_near_duplicates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 64,
     num_bands: int = 16,
-    shingle_n: int = 3,
     jaccard_threshold: float = 0.7,
-    seed: int = 42,
 ) -> DataFrame:
     """Full MinHash-LSH pipeline: candidates verified by signature-estimated
     jaccard (fraction of agreeing minhashes). Returns (id_a, id_b, est_jaccard).
@@ -421,13 +331,11 @@ def minhash_near_duplicates(
     # At lake scale this is the "write the signature table" stage.
     from pyspark import StorageLevel
 
-    sigs = minhash_signatures_kernel(
-        df, text_col, id_col, num_hashes, shingle_n, seed
-    )
+    sigs = minhash_signatures_kernel(df, num_hashes)
     sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    cands = minhash_lsh_candidates(sigs, id_col, num_bands, num_hashes=num_hashes)
-    sa = sigs.select(F.col(id_col).alias("id_a"), F.col("signature").alias("__sa"))
-    sb = sigs.select(F.col(id_col).alias("id_b"), F.col("signature").alias("__sb"))
+    cands = minhash_lsh_candidates(sigs, num_bands, num_hashes=num_hashes)
+    sa = sigs.select(F.col("doc_id").alias("id_a"), F.col("signature").alias("__sa"))
+    sb = sigs.select(F.col("doc_id").alias("id_b"), F.col("signature").alias("__sb"))
     est = F.aggregate(
         F.zip_with("__sa", "__sb", lambda x, y: (x == y).cast("int")),
         F.lit(0),
@@ -443,13 +351,7 @@ def minhash_near_duplicates(
 
 # --- simhash ------------------------------------------------------------------
 
-def simhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 2,
-    hash_mode: str = "poly",
-) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """64-bit SimHash over word shingles (Charikar '02).
 
     For each of the 64 bit positions, sum +1/-1 votes of each shingle's
@@ -457,24 +359,18 @@ def simhash(
     unrolled sum expressions: one pass over the shingles, map-side partial
     aggregation, bit positions are plan literals (shiftright needs them).
 
-    hash_mode: "poly" (default) — shingle hash packs two 31-bit polynomial
-    hashes (bases 131/137) into bits 0..61 (bits 62/63 are always 0), so
-    the value is reproducible in DuckDB and in the Arrow kernel;
-    "xxhash" — full-width JVM xxhash64.
+    The shingle hash packs two 31-bit polynomial hashes (bases 131/137)
+    into bits 0..61 (bits 62/63 are always 0), so the value is
+    reproducible in DuckDB and in the Arrow kernel.
     """
-    if hash_mode == "poly":
-        shingle_hash = lambda s: F.shiftleft(  # noqa: E731
-            TX.poly_hash(s, TX.POLY_BASE), 31
-        ).bitwiseOR(TX.poly_hash(s, TX.POLY_BASE2))
-    else:
-        shingle_hash = lambda s: F.xxhash64(s)  # noqa: E731
-    exploded = df.where(F.col(text_col).isNotNull()).select(
-        F.col(id_col),
-        F.explode(
-            F.transform(TX.word_shingles(text_col, shingle_n), shingle_hash)
-        ).alias("__h"),
+    shingle_hash = lambda s: F.shiftleft(  # noqa: E731
+        TX.poly_hash(s, TX.POLY_BASE), 31
+    ).bitwiseOR(TX.poly_hash(s, TX.POLY_BASE2))
+    exploded = df.where(F.col("text").isNotNull()).select(
+        F.col("doc_id"),
+        F.explode(F.transform(TX.word_shingles("text", 2), shingle_hash)).alias("__h"),
     )
-    votes = exploded.groupBy(id_col).agg(
+    votes = exploded.groupBy("doc_id").agg(
         *[
             F.sum(
                 F.shiftright(F.col("__h"), b).bitwiseAND(F.lit(1)) * 2 - 1
@@ -487,20 +383,14 @@ def simhash(
         packed = packed.bitwiseOR(
             F.shiftleft((F.col(f"__b{b}") > 0).cast("long"), b)
         )
-    return votes.select(F.col(id_col), packed.alias("simhash"))
+    return votes.select(F.col("doc_id"), packed.alias("simhash"))
 
 
-def simhash_kernel(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 2,
-    hash_mode: str = "poly",
-) -> DataFrame:
+def simhash_kernel(df: DataFrame) -> DataFrame:
     """Arrow-batched numpy formulation of simhash (see
     minhash_signatures_kernel for why: interpreted HOFs lose to one
-    (m x 64) bit-vote matrix per doc). hash_mode "poly" is bit-identical
-    to simhash(hash_mode="poly") and the DuckDB oracle."""
+    (m x 64) bit-vote matrix per doc), bit-identical to simhash and the
+    DuckDB oracle."""
     import pandas as pd
 
     shifts = np.arange(64, dtype=np.uint64)
@@ -508,28 +398,16 @@ def simhash_kernel(
     def batches(it):
         for pdf in it:
             out = []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 toks = TX.word_tokens_py(text)
-                if hash_mode == "poly":
-                    # votes are per DISTINCT shingle (word_shingles is
-                    # array_distinct): dedupe on the packed 62-bit pair,
-                    # which identifies the shingle string up to a 2^-62
-                    # collision
-                    h1 = TX.poly_hash_shingles_np(toks, shingle_n, TX.POLY_BASE)
-                    h2 = TX.poly_hash_shingles_np(toks, shingle_n, TX.POLY_BASE2)
-                    h = np.unique(
-                        (h1.astype(np.uint64) << np.uint64(31))
-                        | h2.astype(np.uint64)
-                    )
-                else:
-                    if len(toks) >= shingle_n:
-                        sh = {
-                            " ".join(toks[i : i + shingle_n])
-                            for i in range(len(toks) - shingle_n + 1)
-                        }
-                    else:
-                        sh = {" ".join(toks)}
-                    h = pd.util.hash_array(np.array(sorted(sh), dtype=object))
+                # votes are per DISTINCT shingle (word_shingles is
+                # array_distinct): dedupe on the packed 62-bit pair, which
+                # identifies the shingle string up to a 2^-62 collision
+                h1 = TX.poly_hash_shingles_np(toks, 2, TX.POLY_BASE)
+                h2 = TX.poly_hash_shingles_np(toks, 2, TX.POLY_BASE2)
+                h = np.unique(
+                    (h1.astype(np.uint64) << np.uint64(31)) | h2.astype(np.uint64)
+                )
                 # signed votes: uint64 would wrap the -1 votes and turn the
                 # majority test into votes != 0 (diverging from simhash())
                 votes = (
@@ -539,15 +417,15 @@ def simhash_kernel(
                     dtype=np.uint64
                 )
                 out.append(np.int64(packed.astype(np.int64)))
-            yield pd.DataFrame({id_col: pdf[id_col], "simhash": out})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": out})
 
-    id_type = df.schema[id_col].dataType.simpleString()
+    id_type = df.schema["doc_id"].dataType.simpleString()
     # spread before the kernel (single-row-group scans are unsplittable —
     # guide §2.5; no-op at lake scale / post-shuffle)
     return spread_scan(
-        df.where(F.col(text_col).isNotNull()).select(id_col, text_col),
-        id_col,
-    ).mapInPandas(batches, schema=f"{id_col} {id_type}, simhash long")
+        df.where(F.col("text").isNotNull()).select("doc_id", "text"),
+        "doc_id",
+    ).mapInPandas(batches, schema=f"doc_id {id_type}, simhash long")
 
 
 def hamming_distance(a, b):
@@ -557,13 +435,7 @@ def hamming_distance(a, b):
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def simhash_near_duplicates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    shingle_n: int = 2,
-) -> DataFrame:
+def simhash_near_duplicates(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Candidate pairs with simhash hamming distance <= max_hamming.
 
     Bucketing: split the 64-bit hash into (max_hamming + 1) segments — a
@@ -575,7 +447,7 @@ def simhash_near_duplicates(
 
     n_seg = max_hamming + 1
     seg_bits = 64 // n_seg
-    hashed = simhash_kernel(df, text_col, id_col, shingle_n).persist(
+    hashed = simhash_kernel(df).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     mask = (1 << seg_bits) - 1
@@ -584,7 +456,7 @@ def simhash_near_duplicates(
         return F.shiftright(col, j * seg_bits).bitwiseAND(F.lit(mask))
 
     segs = hashed.select(
-        id_col,
+        "doc_id",
         "simhash",
         F.explode(
             F.array(
@@ -596,13 +468,13 @@ def simhash_near_duplicates(
                 ]
             )
         ).alias("s"),
-    ).select(id_col, "simhash", "s.seg", "s.segval")
+    ).select("doc_id", "simhash", "s.seg", "s.segval")
 
     a = segs.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("__ha"), "seg", "segval"
+        F.col("doc_id").alias("id_a"), F.col("simhash").alias("__ha"), "seg", "segval"
     )
     b = segs.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("__hb"), "seg", "segval"
+        F.col("doc_id").alias("id_b"), F.col("simhash").alias("__hb"), "seg", "segval"
     )
     # dedup without a distinct-shuffle: a pair is emitted only by its FIRST
     # matching segment (keep at segment s iff no segment j < s also matches)
@@ -624,12 +496,7 @@ def simhash_near_duplicates(
 
 # --- n-gram jaccard ------------------------------------------------------------
 
-def shingle_hash_rows(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-) -> DataFrame:
+def shingle_hash_rows(df: DataFrame) -> DataFrame:
     """Exploded (id, g) rows of the distinct word-shingle poly hashes per
     document — the fingerprint table for decontamination / overlap joins.
 
@@ -641,34 +508,29 @@ def shingle_hash_rows(
     """
     import pandas as pd
 
-    id_type = df.schema[id_col].dataType.simpleString()
+    id_type = df.schema["doc_id"].dataType.simpleString()
 
     def batches(it):
         for pdf in it:
             ids: list = []
             gs: list = []
-            for i, text in zip(pdf[id_col].tolist(), pdf[text_col]):
-                h = np.unique(
-                    TX.poly_hash_shingles_np(TX.word_tokens_py(text), shingle_n)
-                )
+            for i, text in zip(pdf["doc_id"].tolist(), pdf["text"]):
+                h = np.unique(TX.poly_hash_shingles_np(TX.word_tokens_py(text), 3))
                 ids.extend([i] * len(h))
                 gs.extend(h.tolist())
-            yield pd.DataFrame({id_col: ids, "g": gs})
+            yield pd.DataFrame({"doc_id": ids, "g": gs})
 
     # spread before the kernel (single-row-group scans are unsplittable —
     # guide §2.5; no-op at lake scale / post-shuffle)
     return spread_scan(
-        df.where(F.col(text_col).isNotNull()).select(id_col, text_col),
-        id_col,
-    ).mapInPandas(batches, schema=f"{id_col} {id_type}, g long")
+        df.where(F.col("text").isNotNull()).select("doc_id", "text"),
+        "doc_id",
+    ).mapInPandas(batches, schema=f"doc_id {id_type}, g long")
 
 
 def ngram_jaccard_pairs(
     df: DataFrame,
     candidates: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ngram_n: int = 5,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Exact char-n-gram jaccard for a candidate pair table (id_a, id_b).
@@ -690,18 +552,18 @@ def ngram_jaccard_pairs(
     # (broadcast preserves the spread partitioning), and persist the
     # expanded grams so the two join sides don't each re-expand.
     cand_ids = (
-        candidates.select(F.col("id_a").alias(id_col))
-        .unionByName(candidates.select(F.col("id_b").alias(id_col)))
+        candidates.select(F.col("id_a").alias("doc_id"))
+        .unionByName(candidates.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
     grams = (
-        spread_scan(df.select(id_col, text_col), id_col)
-        .join(F.broadcast(cand_ids), id_col, "left_semi")
-        .select(F.col(id_col), TX.char_ngrams(text_col, ngram_n).alias("__g"))
+        spread_scan(df.select("doc_id", "text"), "doc_id")
+        .join(F.broadcast(cand_ids), "doc_id", "left_semi")
+        .select(F.col("doc_id"), TX.char_ngrams("text", 5).alias("__g"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    ga = grams.select(F.col(id_col).alias("id_a"), F.col("__g").alias("__ga"))
-    gb = grams.select(F.col(id_col).alias("id_b"), F.col("__g").alias("__gb"))
+    ga = grams.select(F.col("doc_id").alias("id_a"), F.col("__g").alias("__ga"))
+    gb = grams.select(F.col("doc_id").alias("id_b"), F.col("__g").alias("__gb"))
     inter = F.size(F.array_intersect("__ga", "__gb")).cast("double")
     union = F.size(F.array_union("__ga", "__gb")).cast("double")
     return (
@@ -720,12 +582,7 @@ def ngram_jaccard_pairs(
 
 # --- canonicalization ---------------------------------------------------------
 
-def canonical_duplicate_groups(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    min_group_size: int = 2,
-) -> DataFrame:
+def canonical_duplicate_groups(pairs: DataFrame) -> DataFrame:
     """Near-duplicate canonicalization: connected components over the
     verified pair graph, keeping the min doc id as each group's canonical
     representative — the "pick one survivor per dup cluster" step that
@@ -741,11 +598,11 @@ def canonical_duplicate_groups(
     """
     from .graph import connected_components
 
-    comps = connected_components(pairs, src=id_a, dst=id_b, id_col="doc_id")
+    comps = connected_components(pairs, src="id_a", dst="id_b", id_col="doc_id")
     return (
         comps.groupBy(F.col("component").alias("canonical_id"))
         .agg(F.count(F.lit(1)).alias("group_size"))
-        .where(F.col("group_size") >= min_group_size)
+        .where(F.col("group_size") >= 2)
         .orderBy(F.desc("group_size"), "canonical_id")
     )
 
@@ -754,8 +611,6 @@ def canonical_duplicate_groups(
 
 def embedding_near_duplicates(
     df: DataFrame,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
     threshold: float = 0.95,
     group_col: str | None = None,
 ) -> DataFrame:
@@ -768,13 +623,13 @@ def embedding_near_duplicates(
     """
     a = df.select(
         *( [F.col(group_col)] if group_col else [] ),
-        F.col(id_col).alias("id_a"),
-        F.col(vector_col).alias("__va"),
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("__va"),
     )
     b = df.select(
         *( [F.col(group_col)] if group_col else [] ),
-        F.col(id_col).alias("id_b"),
-        F.col(vector_col).alias("__vb"),
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("__vb"),
     )
     joined = a.join(b, group_col) if group_col else a.crossJoin(b)
     return (
@@ -802,9 +657,7 @@ def _bloom_positions(h: np.ndarray, n_bits: int, k: int) -> np.ndarray:
     return ((h1[:, None] + i * h2[:, None]) % nb).astype(np.int64)
 
 
-def build_bloom_bitmap(
-    hashes: DataFrame, hash_col: str = "g", n_bits: int = 1 << 23, k: int = 4
-) -> np.ndarray:
+def build_bloom_bitmap(hashes: DataFrame, n_bits: int = 1 << 23) -> np.ndarray:
     """Distributed Bloom-filter build over a 64-bit hash column.
 
     Spark 4 does not expose bloom_filter_agg/might_contain as SQL
@@ -823,13 +676,13 @@ def build_bloom_bitmap(
     def partial(it):
         bm = np.zeros(nbytes, dtype=np.uint8)
         for pdf in it:
-            h = pdf[hash_col].to_numpy(dtype=np.int64)
+            h = pdf["g"].to_numpy(dtype=np.int64)
             if len(h):
-                pos = _bloom_positions(h, n_bits, k).ravel()
+                pos = _bloom_positions(h, n_bits, 4).ravel()
                 np.bitwise_or.at(bm, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
         yield pd.DataFrame({"bm": [bm.tobytes()]})
 
-    rows = hashes.select(hash_col).mapInPandas(
+    rows = hashes.select("g").mapInPandas(
         partial, schema="bm binary"
     ).collect()
     out = np.zeros(nbytes, dtype=np.uint8)
@@ -860,11 +713,7 @@ def bloom_contains_expr(spark, bitmap: np.ndarray, n_bits: int, k: int):
 def decontaminate_with_bloom(
     df: DataFrame,
     is_benchmark,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
     n_bits: int = 1 << 23,
-    k: int = 4,
 ) -> DataFrame:
     """Benchmark decontamination with a Bloom prefilter — EXACT results.
 
@@ -883,21 +732,17 @@ def decontaminate_with_bloom(
 
     Returns the distinct flagged (non-benchmark) ids as ``id_col``.
     """
-    grams = shingle_hash_rows(df, text_col, id_col, shingle_n)
+    grams = shingle_hash_rows(df)
     bench_g = grams.where(is_benchmark).select("g").distinct()
-    bitmap = build_bloom_bitmap(bench_g, "g", n_bits, k)
-    contains = bloom_contains_expr(df.sparkSession, bitmap, n_bits, k)
+    bitmap = build_bloom_bitmap(bench_g, n_bits)
+    contains = bloom_contains_expr(df.sparkSession, bitmap, n_bits, 4)
     cand = grams.where(~is_benchmark).where(contains(F.col("g")))
-    return (
-        cand.join(bench_g, "g", "left_semi").select(id_col).distinct()
-    )
+    return (cand.join(bench_g, "g", "left_semi").select("doc_id").distinct())
 
 
 def semantic_dedup(
     df: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
     threshold: float = 0.9,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. '23: cluster
@@ -936,22 +781,22 @@ def semantic_dedup(
     # twice); freed by the session-wide release_caches. At lake scale
     # this is the materialized cell-partitioned table (the IVF layout).
     assigned = assign_ivf_cells(
-        df.select(id_col, vector_col), centroids, vector_col=vector_col
+        df.select("vec_id", "embedding"), centroids
     ).persist(StorageLevel.MEMORY_AND_DISK)
     # conservative in-kernel cut (see intra_group_pairs_kernel): avoids
     # materializing m²/2 Arrow rows per dense cell; the exact rounded
     # comparison below remains the decision
     pairs = intra_group_pairs_kernel(
-        assigned, "cell", id_col, vector_col, min_sim=threshold - 1e-6
+        assigned, "cell", "vec_id", "embedding", min_sim=threshold - 1e-6
     )
     dup_ids = (
         pairs.where(F.round("sim", 6) >= threshold)
-        .select(F.col("id_b").alias(id_col))
+        .select(F.col("id_b").alias("vec_id"))
         .distinct()
         .withColumn("__dup", F.lit(True))
     )
     return (
-        assigned.join(dup_ids, id_col, "left")
+        assigned.join(dup_ids, "vec_id", "left")
         .withColumn("keep", F.col("__dup").isNull())
         .drop("__dup")
     )
@@ -959,17 +804,11 @@ def semantic_dedup(
 
 # --- exact-threshold set-similarity join (AllPairs / PPJoin prefix filter) -----
 
-def jaccard_similarity_join(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
+def jaccard_similarity_join(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact-threshold n-gram Jaccard self-join via prefix filtering.
 
     Unlike the MinHash/SimHash paths (probabilistic candidates), this is
-    the EXACT set-similarity join: every pair with word-``shingle_n``-gram
+    the EXACT set-similarity join: every pair with word-3-gram
     Jaccard >= ``threshold`` is returned, no false negatives — the
     AllPairs / PPJoin prefix-filtering scheme (Bayardo WWW'07, Xiao
     WWW'08; the same candidate family as the reference's threshold-based
@@ -1002,14 +841,12 @@ def jaccard_similarity_join(
     O(Σ_g df(g)²) over prefix tokens, which natural (Zipfian) corpora
     keep near-linear but LOW-DIVERSITY corpora do not (a 30-word
     synthetic vocabulary at 200k docs spilled ~10⁸ candidates in the
-    r4 scale probe). On such corpora raise ``shingle_n`` (the shingle
-    space grows as vocab^n, restoring rarity) or the threshold (shorter
-    prefixes); dropping high-df tokens from prefixes is NOT an option —
+    r4 scale probe). On such corpora longer shingles (the shingle space
+    grows as vocab^n, restoring rarity) or a higher threshold (shorter
+    prefixes) help; dropping high-df tokens from prefixes is NOT an option —
     it would break the no-false-negative guarantee.
     """
-    toks = shingle_hash_rows(
-        df, text_col=text_col, id_col=id_col, shingle_n=shingle_n
-    )
+    toks = shingle_hash_rows(df)
     from pyspark import StorageLevel
 
     # Cache lifecycle (r12 restructure — guide §5 caching rule applied
@@ -1032,7 +869,7 @@ def jaccard_similarity_join(
     dfreq = toks.groupBy("g").agg(F.count(F.lit(1)).alias("__df"))
     per_doc = (
         toks.join(dfreq, "g")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list(F.struct("__df", "g"))).alias("__ts"))
         .withColumn("__n", F.size("__ts"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1045,7 +882,7 @@ def jaccard_similarity_join(
     # both sides of the prefix self-join read this projection of the
     # per_doc cache (no second aggregation — the cache is the reuse)
     pref = per_doc.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("__n"),
         F.explode(
             F.transform(
@@ -1053,8 +890,8 @@ def jaccard_similarity_join(
             )
         ).alias("g"),
     )
-    a = pref.select(F.col(id_col).alias("id_a"), F.col("__n").alias("__na"), "g")
-    b = pref.select(F.col(id_col).alias("id_b"), F.col("__n").alias("__nb"), "g")
+    a = pref.select(F.col("doc_id").alias("id_a"), F.col("__n").alias("__na"), "g")
+    b = pref.select(F.col("doc_id").alias("id_b"), F.col("__n").alias("__nb"), "g")
     cand = (
         a.join(b, "g")
         .where(
@@ -1068,25 +905,25 @@ def jaccard_similarity_join(
     )
 
     cand_ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .unionByName(cand.select(F.col("id_b").alias(id_col)))
+        cand.select(F.col("id_a").alias("doc_id"))
+        .unionByName(cand.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
     # verification sets: a projection of per_doc (sorted-by-(df,g)
     # struct array -> numerically sorted hash array — identical to the
     # old sort_array(collect_list(g)) because each (doc, g) is distinct)
     sets = (
-        per_doc.join(F.broadcast(cand_ids), id_col, "left_semi")
+        per_doc.join(F.broadcast(cand_ids), "doc_id", "left_semi")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.array_sort(
                 F.transform(F.col("__ts"), lambda s: s["g"])
             ).alias("__s"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sa = sets.select(F.col(id_col).alias("id_a"), F.col("__s").alias("__sa"))
-    sb = sets.select(F.col(id_col).alias("id_b"), F.col("__s").alias("__sb"))
+    sa = sets.select(F.col("doc_id").alias("id_a"), F.col("__s").alias("__sa"))
+    sb = sets.select(F.col("doc_id").alias("id_b"), F.col("__s").alias("__sb"))
     inter = F.size(F.array_intersect("__sa", "__sb")).cast("double")
     union = F.size(F.array_union("__sa", "__sb")).cast("double")
     return (
@@ -1101,13 +938,7 @@ def jaccard_similarity_join(
     )
 
 
-def winnow_anchor_rows(
-    d: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 20,
-    w: int = 8,
-) -> DataFrame:
+def winnow_anchor_rows(d: DataFrame, n: int = 20, w: int = 8) -> DataFrame:
     """Winnow-selected anchor grams WITH POSITIONS, one row per selected
     (doc, pos): ``(id_col, pos (1-based into lower(trim(text))), gram)``.
     Map-side Arrow kernel (functions/text.py:winnow_positions_np) —
@@ -1120,29 +951,23 @@ def winnow_anchor_rows(
 
         for pdf in it:
             ids, poss, grams = [], [], []
-            for doc_id, text in zip(pdf[id_col].tolist(), pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"].tolist(), pdf["text"]):
                 t = (text or "").strip(" ").lower()
                 for p in TX.winnow_positions_np(t, n, w):
                     ids.append(doc_id)
                     poss.append(int(p))
                     grams.append(t[p - 1 : p - 1 + n])
-            yield pd.DataFrame({id_col: ids, "pos": poss, "gram": grams})
+            yield pd.DataFrame({"doc_id": ids, "pos": poss, "gram": grams})
 
-    id_type = dict(d.dtypes)[id_col]
+    id_type = dict(d.dtypes)["doc_id"]
     # spread before the winnow kernel (single-row-group scans are
     # unsplittable — guide §2.5; no-op at lake scale / post-shuffle)
-    return spread_scan(d.select(id_col, text_col), id_col).mapInPandas(
-        batches, schema=f"`{id_col}` {id_type}, pos long, gram string"
+    return spread_scan(d.select("doc_id", "text"), "doc_id").mapInPandas(
+        batches, schema=f"`doc_id` {id_type}, pos long, gram string"
     )
 
 
-def dup_span_coverage_frame(
-    d: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 20,
-    w: int = 8,
-) -> DataFrame:
+def dup_span_coverage_frame(d: DataFrame, n: int = 20, w: int = 8) -> DataFrame:
     """Per-document exact-substring duplication coverage (the ExactSubstr
     statistic, Lee et al. '21) without a suffix array and without ever
     materializing a document pair:
@@ -1162,23 +987,23 @@ def dup_span_coverage_frame(
     the matched join-back, and the per-doc selected count) — it is
     persisted so the winnow Arrow kernel runs ONCE per document, not 3×
     (SCALING.md's prescribed fix)."""
-    sel = winnow_anchor_rows(d, id_col, text_col, n, w).persist()
+    sel = winnow_anchor_rows(d, n, w).persist()
     shared = (
         sel.groupBy("gram")
-        .agg(F.count_distinct(id_col).alias("n_docs"))
+        .agg(F.count_distinct("doc_id").alias("n_docs"))
         .where(F.col("n_docs") >= 2)
     )
     matched = sel.join(shared.select("gram"), "gram").select(
-        id_col, "pos", (F.col("pos") + F.length("gram")).alias("endp")
+        "doc_id", "pos", (F.col("pos") + F.length("gram")).alias("endp")
     )
     wprev = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("pos", "endp")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     percov = (
         matched.withColumn("prev_end", F.max("endp").over(wprev))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_matched"),
             F.sum(
@@ -1193,16 +1018,14 @@ def dup_span_coverage_frame(
             ).alias("covered_chars"),
         )
     )
-    nsel = sel.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_selected"))
-    base = d.select(
-        id_col, F.length(F.trim(F.col(text_col))).alias("len_t")
-    )
+    nsel = sel.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_selected"))
+    base = d.select("doc_id", F.length(F.trim(F.col("text"))).alias("len_t"))
     cov = F.coalesce(F.col("covered_chars"), F.lit(0).cast("long"))
     return (
-        base.join(nsel, id_col)
-        .join(percov, id_col, "left")
+        base.join(nsel, "doc_id")
+        .join(percov, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_selected",
             F.coalesce(F.col("n_matched"), F.lit(0).cast("long")).alias(
                 "n_matched"
@@ -1216,13 +1039,7 @@ def dup_span_coverage_frame(
     )
 
 
-def keep_best_duplicate_groups(
-    pairs: DataFrame,
-    quality: DataFrame,
-    id_col: str = "doc_id",
-    quality_col: str = "q",
-    min_group_size: int = 2,
-) -> DataFrame:
+def keep_best_duplicate_groups(pairs: DataFrame, quality: DataFrame) -> DataFrame:
     """Quality-aware survivor selection over a verified duplicate-pair
     graph — the production refinement of canonical_duplicate_groups:
     real pipelines keep the BEST copy per duplicate cluster (longest /
@@ -1232,7 +1049,7 @@ def keep_best_duplicate_groups(
     id ASC — fully deterministic tie-break) elects the survivor.
 
     Returns (group_id, group_size, kept_doc_id, kept_quality,
-    discarded_quality) per group of >= min_group_size, where group_id is
+    discarded_quality) per group of >= 2 documents, where group_id is
     the component label (min member id), kept_* describe the elected
     survivor, and discarded_quality sums the quality of the members a
     dedup pass would drop. All-integer exports when ``quality`` is
@@ -1244,18 +1061,18 @@ def keep_best_duplicate_groups(
     node count — the same order as the component labeling itself."""
     from .graph import connected_components
 
-    comps = connected_components(pairs, src="id_a", dst="id_b", id_col=id_col)
+    comps = connected_components(pairs, src="id_a", dst="id_b", id_col="doc_id")
     member = comps.join(
-        quality.select(F.col(id_col), F.col(quality_col).alias("__q")),
-        id_col,
+        quality.select(F.col("doc_id"), F.col("q").alias("__q")),
+        "doc_id",
     )
-    w = Window.partitionBy("component").orderBy(F.desc("__q"), id_col)
+    w = Window.partitionBy("component").orderBy(F.desc("__q"), "doc_id")
     ranked = member.withColumn("__rk", F.row_number().over(w))
     return (
         ranked.groupBy(F.col("component").alias("group_id"))
         .agg(
             F.count(F.lit(1)).alias("group_size"),
-            F.max(F.when(F.col("__rk") == 1, F.col(id_col))).alias(
+            F.max(F.when(F.col("__rk") == 1, F.col("doc_id"))).alias(
                 "kept_doc_id"
             ),
             F.max(F.when(F.col("__rk") == 1, F.col("__q"))).alias(
@@ -1265,5 +1082,5 @@ def keep_best_duplicate_groups(
                 F.when(F.col("__rk") > 1, F.col("__q")).otherwise(F.lit(0))
             ).alias("discarded_quality"),
         )
-        .where(F.col("group_size") >= min_group_size)
+        .where(F.col("group_size") >= 2)
     )

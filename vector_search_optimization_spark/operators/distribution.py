@@ -39,9 +39,7 @@ from pyspark.sql import functions as F
 __all__ = ["cents_counts", "emd_pairs_from_counts"]
 
 
-def cents_counts(
-    df: DataFrame, group_col: str = "event_type", value_col: str = "value"
-) -> DataFrame:
+def cents_counts(df: DataFrame) -> DataFrame:
     """(group, cents, n): rows per group and exact cent value, nulls
     dropped — ONE definition for evt_type_emd and its streaming monitor.
 
@@ -53,26 +51,21 @@ def cents_counts(
     computing EMD on demand from a snapshot is the constant-size grid
     pipeline of ``emd_pairs_from_counts``."""
     return (
-        df.where(F.col(value_col).isNotNull())
+        df.where(F.col("value").isNotNull())
         .groupBy(
-            group_col,
-            F.round(F.col(value_col) * 100).cast("long").alias("cents"),
+            "event_type",
+            F.round(F.col("value") * 100).cast("long").alias("cents"),
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
 
 
-def emd_pairs_from_counts(
-    counts: DataFrame,
-    group_col: str = "event_type",
-    cents_col: str = "cents",
-    n_col: str = "n",
-) -> DataFrame:
+def emd_pairs_from_counts(counts: DataFrame) -> DataFrame:
     """Pairwise exact 1-D EMD (in measure units, e.g. dollars) between
     every group pair (a < b) of a (group, cents, n) count frame."""
-    g = F.col(group_col)
+    g = F.col("event_type")
     grid = (
-        counts.select(F.col(cents_col).alias("_gx"))
+        counts.select(F.col("cents").alias("_gx"))
         .distinct()
         .withColumn(
             "_gap",
@@ -87,8 +80,8 @@ def emd_pairs_from_counts(
         .join(
             counts.select(
                 g.alias("_grp"),
-                F.col(cents_col).alias("_gx"),
-                F.col(n_col).alias("_c"),
+                F.col("cents").alias("_gx"),
+                F.col("n").alias("_c"),
             ),
             ["_grp", "_gx"],
             "left",
@@ -108,9 +101,7 @@ def emd_pairs_from_counts(
     cum = dense.select(
         "_grp", "_gx", "_gap", F.sum("_c").over(wcum).alias("_cum")
     )
-    totals = counts.groupBy(g.alias("_grp")).agg(
-        F.sum(n_col).cast("long").alias("_nt")
-    )
+    totals = counts.groupBy(g.alias("_grp")).agg(F.sum("n").cast("long").alias("_nt"))
     a = cum.select(
         F.col("_grp").alias("grp_a"),
         "_gx",

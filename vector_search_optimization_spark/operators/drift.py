@@ -30,10 +30,8 @@ EPS = 1e-6  # proportion floor — the standard zero-bucket smoothing
 PSI_DRIFT_THRESHOLD = 0.2
 
 
-def bucketize(
-    value: Column | str, lo: Column, hi: Column, num_buckets: int = 10
-) -> Column:
-    """Fixed-width bucket index in [0, num_buckets) for ``value`` over
+def bucketize(value: Column | str, lo: Column, hi: Column) -> Column:
+    """Fixed-width bucket index in [0, 10) for ``value`` over
     the [lo, hi] reference range; out-of-range values clamp into the
     edge buckets (the current cohort may exceed the reference range —
     that mass lands in the boundary bins and drives PSI up, which is
@@ -44,27 +42,22 @@ def bucketize(
     # ANSI errors even on DOUBLE division by zero
     return F.when(hi > lo,
         F.least(
-            F.lit(num_buckets - 1),
+            F.lit(9),
             F.greatest(
                 F.lit(0),
-                F.floor((v - lo) / (hi - lo) * num_buckets).cast("int"),
+                F.floor((v - lo) / (hi - lo) * 10).cast("int"),
             ),
         ),
     ).otherwise(F.lit(0))
 
 
-def psi_from_counts(
-    counts: DataFrame,
-    group_col: str = "event_type",
-    ref_col: str = "n_ref",
-    cur_col: str = "n_cur",
-) -> DataFrame:
+def psi_from_counts(counts: DataFrame) -> DataFrame:
     """PSI per group from a (group, bucket, n_ref, n_cur) frame:
     proportions with the 1e-6 floor, summed over present buckets, plus
     the conventional 0.2 drift flag. The input frame is (groups ×
     buckets)-sized, so everything here is a tiny combine."""
-    totals = counts.groupBy(group_col).agg(
-        F.sum(ref_col).alias("__t_ref"), F.sum(cur_col).alias("__t_cur")
+    totals = counts.groupBy("event_type").agg(
+        F.sum("n_ref").alias("__t_ref"), F.sum("n_cur").alias("__t_cur")
     )
     # a cohort can be EMPTY for a group (novel event_type appearing only
     # in the stream, or a group whose rows all fall in one cohort):
@@ -73,88 +66,77 @@ def psi_from_counts(
     # as eps, PSI goes large, drifted flips true (maximal drift is the
     # right report for a brand-new group)
     p_ref = F.greatest(
-        F.when(F.col("__t_ref") > 0, F.col(ref_col) / F.col("__t_ref")).otherwise(
+        F.when(F.col("__t_ref") > 0, F.col("n_ref") / F.col("__t_ref")).otherwise(
             F.lit(0.0)
         ),
         F.lit(EPS),
     )
     p_cur = F.greatest(
-        F.when(F.col("__t_cur") > 0, F.col(cur_col) / F.col("__t_cur")).otherwise(
+        F.when(F.col("__t_cur") > 0, F.col("n_cur") / F.col("__t_cur")).otherwise(
             F.lit(0.0)
         ),
         F.lit(EPS),
     )
     return (
-        counts.join(totals, group_col)
-        .groupBy(group_col)
+        counts.join(totals, "event_type")
+        .groupBy("event_type")
         .agg(
             F.round(
                 F.sum((p_ref - p_cur) * F.log(p_ref / p_cur)), 6
             ).alias("psi")
         )
         .select(
-            group_col,
+            "event_type",
             "psi",
             (F.col("psi") > PSI_DRIFT_THRESHOLD).alias("drifted"),
         )
     )
 
 
-def reference_profile(
-    df: DataFrame,
-    group_col: str = "event_type",
-    value_col: str = "value",
-    num_buckets: int = 10,
-) -> tuple[DataFrame, DataFrame]:
+def reference_profile(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(range, bucket_counts) of a reference cohort: the one-row
     [lo, hi] frame and the (group, bucket, n_ref) counts — the static
     profile a streaming monitor compares against."""
-    rng = df.agg(F.min(value_col).alias("lo"), F.max(value_col).alias("hi"))
+    rng = df.agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
     counts = (
         df.join(F.broadcast(rng))
         .select(
-            group_col,
-            bucketize(value_col, F.col("lo"), F.col("hi"), num_buckets).alias(
+            "event_type",
+            bucketize("value", F.col("lo"), F.col("hi")).alias(
                 "bucket"
             ),
         )
-        .groupBy(group_col, "bucket")
+        .groupBy("event_type", "bucket")
         .agg(F.count(F.lit(1)).alias("n_ref"))
     )
     return rng, counts
 
 
-def psi_drift(
-    df: DataFrame,
-    ref_pred: Column,
-    group_col: str = "event_type",
-    value_col: str = "value",
-    num_buckets: int = 10,
-) -> DataFrame:
+def psi_drift(df: DataFrame, ref_pred: Column) -> DataFrame:
     """Batch PSI between the rows matching ``ref_pred`` (reference
     cohort) and the rest (current cohort): reference range via a one-row
     broadcast, ONE conditional bucket-count aggregate over both cohorts,
     then the shared PSI combine."""
-    e = df.select(group_col, value_col, ref_pred.alias("__is_ref"))
+    e = df.select("event_type", "value", ref_pred.alias("__is_ref"))
     rng = e.where("__is_ref").agg(
-        F.min(value_col).alias("lo"), F.max(value_col).alias("hi")
+        F.min("value").alias("lo"), F.max("value").alias("hi")
     )
     counts = (
         e.join(F.broadcast(rng))
         .select(
-            group_col,
+            "event_type",
             "__is_ref",
-            bucketize(value_col, F.col("lo"), F.col("hi"), num_buckets).alias(
+            bucketize("value", F.col("lo"), F.col("hi")).alias(
                 "bucket"
             ),
         )
-        .groupBy(group_col, "bucket")
+        .groupBy("event_type", "bucket")
         .agg(
             F.sum(F.col("__is_ref").cast("long")).alias("n_ref"),
             F.sum((~F.col("__is_ref")).cast("long")).alias("n_cur"),
         )
     )
-    return psi_from_counts(counts, group_col).orderBy(group_col)
+    return psi_from_counts(counts).orderBy("event_type")
 
 
 def ks_two_sample(

@@ -29,12 +29,7 @@ from pyspark.sql import functions as F
 from ..functions.text import poly_hash_py
 
 
-def hashing_trick_features(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_buckets: int = 64,
-) -> DataFrame:
+def hashing_trick_features(df: DataFrame, num_buckets: int = 64) -> DataFrame:
     """Per-document hashed bag-of-words: ``(id_col, n_buckets, n_tokens,
     features)`` where features is the sorted ``bucket:count`` CSV of the
     non-zero buckets. Tokenization = lower(trim(text)) split on
@@ -49,7 +44,7 @@ def hashing_trick_features(
 
         for pdf in it:
             ids, nbs, nts, feats = [], [], [], []
-            for doc_id, text in zip(pdf[id_col].tolist(), pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"].tolist(), pdf["text"]):
                 toks = [
                     t for t in (text or "").strip().lower().split() if t
                 ]
@@ -69,18 +64,18 @@ def hashing_trick_features(
                 )
             yield pd.DataFrame(
                 {
-                    id_col: ids,
+                    "doc_id": ids,
                     "n_buckets": nbs,
                     "n_tokens": nts,
                     "features": feats,
                 }
             )
 
-    id_type = dict(df.dtypes)[id_col]
-    return df.select(id_col, text_col).mapInPandas(
+    id_type = dict(df.dtypes)["doc_id"]
+    return df.select("doc_id", "text").mapInPandas(
         batches,
         schema=(
-            f"`{id_col}` {id_type}, n_buckets long, n_tokens long, "
+            f"`doc_id` {id_type}, n_buckets long, n_tokens long, "
             "features string"
         ),
     )

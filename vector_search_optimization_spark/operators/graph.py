@@ -356,15 +356,9 @@ def _greedy_modularity_fallback(nodes, edges, weighted: bool) -> list[set]:
 def pagerank(
     edges: DataFrame,
     vertices: DataFrame,
-    damping: float = 0.85,
     iterations: int = 8,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "weight",
-    id_col: str = "id",
     checkpoint_every: int = 0,
     driver_node_limit: int = 10_000,
-    driver_edge_limit: int = 2_000_000,
 ) -> DataFrame:
     """Weighted PageRank over an undirected graph (G2-adjacent centrality
     — the importance score TextRank/link-quality weighting pipelines put
@@ -408,17 +402,17 @@ def pagerank(
     Returns (id_col, rank). In the distributed path the transition frame
     stays persisted until the session-wide ``release_caches``."""
     n = vertices.count()
-    base = (1.0 - damping) / n
-    if 0 < n <= driver_node_limit and edges.count() <= driver_edge_limit:
+    base = (1.0 - 0.85) / n
+    if 0 < n <= driver_node_limit and edges.count() <= 2_000_000:
         import numpy as np
 
-        node_rows = [r[0] for r in vertices.select(id_col).collect()]
+        node_rows = [r[0] for r in vertices.select("id").collect()]
         idx = {node: i for i, node in enumerate(node_rows)}
         # endpoints outside ``vertices`` contribute nothing in the
         # distributed path (the rank join drops them) — mirror that
         erows = [
             r
-            for r in edges.select(src, dst, weight).collect()
+            for r in edges.select("src", "dst", "weight").collect()
             if r[0] in idx and r[1] in idx
         ]
         s = np.fromiter(
@@ -438,18 +432,18 @@ def pagerank(
         r = np.full(n, 1.0 / n)
         for _ in range(iterations):
             contrib = np.bincount(dd, weights=r[ss] * p, minlength=n)
-            r = base + damping * contrib
+            r = base + 0.85 * contrib
         return vertices.sparkSession.createDataFrame(
             [(node, float(r[i])) for node, i in idx.items()],
-            schema=vertices.select(id_col).schema.add("rank", "double"),
+            schema=vertices.select("id").schema.add("rank", "double"),
         )
 
-    w_d = F.col(weight).cast("double")
+    w_d = F.col("weight").cast("double")
     sym = edges.select(
-        F.col(src).alias("__s"), F.col(dst).alias("__d"), w_d.alias("__w")
+        F.col("src").alias("__s"), F.col("dst").alias("__d"), w_d.alias("__w")
     ).unionByName(
         edges.select(
-            F.col(dst).alias("__s"), F.col(src).alias("__d"), w_d.alias("__w")
+            F.col("dst").alias("__s"), F.col("src").alias("__d"), w_d.alias("__w")
         )
     )
     wdeg = sym.groupBy("__s").agg(F.sum("__w").alias("__wdeg"))
@@ -458,22 +452,22 @@ def pagerank(
         .select("__s", "__d", (F.col("__w") / F.col("__wdeg")).alias("__p"))
         .persist()
     )
-    ranks = vertices.select(F.col(id_col), F.lit(1.0 / n).alias("rank"))
+    ranks = vertices.select(F.col("id"), F.lit(1.0 / n).alias("rank"))
     for i in range(iterations):
         contrib = (
-            trans.join(ranks, trans["__s"] == ranks[id_col])
+            trans.join(ranks, trans["__s"] == ranks["id"])
             .select(
-                F.col("__d").alias(id_col),
+                F.col("__d").alias("id"),
                 (F.col("rank") * F.col("__p")).alias("__c"),
             )
-            .groupBy(id_col)
+            .groupBy("id")
             .agg(F.sum("__c").alias("__sum"))
         )
-        ranks = vertices.join(contrib, id_col, "left").select(
-            id_col,
+        ranks = vertices.join(contrib, "id", "left").select(
+            "id",
             (
                 F.lit(base)
-                + F.lit(damping) * F.coalesce(F.col("__sum"), F.lit(0.0))
+                + F.lit(0.85) * F.coalesce(F.col("__sum"), F.lit(0.0))
             ).alias("rank"),
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0:
@@ -486,11 +480,7 @@ def bfs_distances(
     vertices: DataFrame,
     source,
     max_hops: int = 6,
-    src: str = "src",
-    dst: str = "dst",
-    id_col: str = "id",
     driver_node_limit: int = 10_000,
-    driver_edge_limit: int = 2_000_000,
 ) -> DataFrame:
     """Bounded-depth BFS hop distances from ``source`` over an
     undirected graph — pagerank's label-propagation sibling:
@@ -505,10 +495,10 @@ def bfs_distances(
     Pass ``driver_node_limit=0`` to force the distributed loop
     (pytest-pinned equal)."""
     n = vertices.count()
-    if 0 < n <= driver_node_limit and edges.count() <= driver_edge_limit:
-        node_rows = [r[0] for r in vertices.select(id_col).collect()]
+    if 0 < n <= driver_node_limit and edges.count() <= 2_000_000:
+        node_rows = [r[0] for r in vertices.select("id").collect()]
         adj: dict = {v: [] for v in node_rows}
-        for r in edges.select(src, dst).collect():
+        for r in edges.select("src", "dst").collect():
             if r[0] in adj and r[1] in adj:
                 adj[r[0]].append(r[1])
                 adj[r[1]].append(r[0])
@@ -526,41 +516,37 @@ def bfs_distances(
             frontier = nxt
         out = vertices.sparkSession.createDataFrame(
             [(v, int(dist.get(v, -1))) for v in node_rows],
-            schema=vertices.select(id_col).schema.add("hop_dist", "integer"),
+            schema=vertices.select("id").schema.add("hop_dist", "integer"),
         )
         return out
 
-    sym = edges.select(src, dst).unionByName(
-        edges.select(F.col(dst).alias(src), F.col(src).alias(dst))
+    sym = edges.select("src", "dst").unionByName(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     distf = vertices.select(
-        id_col,
-        F.when(F.col(id_col) == source, F.lit(0))
+        "id",
+        F.when(F.col("id") == source, F.lit(0))
         .otherwise(F.lit(None))
         .alias("__d"),
     )
     for _ in range(max_hops):
         reach = (
-            sym.join(distf, sym[src] == distf[id_col])
+            sym.join(distf, sym["src"] == distf["id"])
             .where(F.col("__d").isNotNull())
-            .select(
-                F.col(dst).alias(id_col), (F.col("__d") + 1).alias("__nd")
-            )
-            .groupBy(id_col)
+            .select(F.col("dst").alias("id"), (F.col("__d") + 1).alias("__nd"))
+            .groupBy("id")
             .agg(F.min("__nd").alias("__nd"))
         )
-        distf = distf.join(reach, id_col, "left").select(
-            id_col, F.least("__d", "__nd").alias("__d")
+        distf = distf.join(reach, "id", "left").select(
+            "id", F.least("__d", "__nd").alias("__d")
         )
     return distf.select(
-        id_col,
+        "id",
         F.coalesce(F.col("__d"), F.lit(-1)).cast("int").alias("hop_dist"),
     )
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts over an undirected simple graph —
     the degree-ordered wedge-check algorithm (Schank/Wagner; the shape
     MapReduce/GraphX use): orient every edge from the lower-(degree, id)
@@ -577,7 +563,7 @@ def triangle_count(
     re-attributed to all 3 corners with one explode + count.
     """
     sym = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
+        F.col("src").alias("u"), F.col("dst").alias("v")
     ).where(F.col("u") != F.col("v"))
     sym = sym.unionByName(
         sym.select(F.col("v").alias("u"), F.col("u").alias("v"))

@@ -50,18 +50,18 @@ def z_value(cols: list[Column | str], bits: int = 10) -> Column:
     return out
 
 
-def z_value_sql(cols: list[str], bits: int = 10) -> str:
+def z_value_sql(cols: list[str]) -> str:
     """DuckDB twin of :func:`z_value` — the same unrolled expression,
     for value oracles. Every term is FULLY parenthesized: DuckDB gives
     ``<<`` and ``|`` equal precedence (left-associative, Postgres
     style), so ``a << 3 | b << 4`` would parse as ``((a << 3) | b) <<
     4`` and overflow."""
     k = len(cols)
-    mask = (1 << bits) - 1
+    mask = (1 << 10) - 1
     terms = [
         f"((((CAST({c} AS BIGINT) & {mask}) >> {b}) & 1) << {b * k + i})"
         for i, c in enumerate(cols)
-        for b in range(bits)
+        for b in range(10)
     ]
     return "(" + " | ".join(terms) + ")"
 

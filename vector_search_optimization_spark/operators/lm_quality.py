@@ -56,7 +56,6 @@ def train_unigram_lm(
 def unigram_surprisal(
     docs: DataFrame,
     vocab: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     vocab_top_k: int | None = None,
 ) -> DataFrame:
@@ -74,26 +73,24 @@ def unigram_surprisal(
         F.sum("cnt").cast("double").alias("n_total"),
         F.count(F.lit(1)).cast("double").alias("v_size"),
     )
-    toks = docs.select(F.col(id_col), F.explode(tokenize(text_col)).alias("word"))
+    toks = docs.select(F.col("doc_id"), F.explode(tokenize(text_col)).alias("word"))
     scored = (
         toks.join(broadcast(vocab), "word", "left")
         .join(broadcast(totals))
         .select(
-            id_col,
+            "doc_id",
             (
                 -F.log((F.coalesce(F.col("cnt"), F.lit(0)) + F.lit(1.0)) / (F.col("n_total") + F.col("v_size")))
             ).alias("surprisal"),
         )
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.avg("surprisal").alias("avg_surprisal"),
     )
 
 
-def bigram_pairs(
-    text_col: Column | str, tokens: Column | None = None
-) -> Column:
+def bigram_pairs(text_col: Column | str, tokens: Column | None = None) -> Column:
     """``array<struct<w1,w2>>`` of adjacent token pairs — F.transform
     with the index arg + 1-based element_at, so the struct fields carry
     stable names (arrays_zip would name slice-expression fields
@@ -112,16 +109,14 @@ def bigram_pairs(
     )
 
 
-def train_bigram_lm(
-    docs: DataFrame, text_col: str = "text", tokens_col: str | None = None
-) -> DataFrame:
+def train_bigram_lm(docs: DataFrame, tokens_col: str | None = None) -> DataFrame:
     """Adjacent-bigram counts over the corpus: (w1, w2, c2). Map-side
     pair explode + ONE combinable groupBy — same plan class as the
     unigram trainer, keyed on the pair. ``tokens_col`` consumes a
     pre-tokenized frame (see train_unigram_lm)."""
     toks = F.col(tokens_col) if tokens_col else None
     return (
-        docs.select(F.explode(bigram_pairs(text_col, toks)).alias("p"))
+        docs.select(F.explode(bigram_pairs("text", toks)).alias("p"))
         .select("p.w1", "p.w2")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c2"))
@@ -132,9 +127,6 @@ def bigram_surprisal(
     docs: DataFrame,
     bigram_counts: DataFrame,
     vocab: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lam: float = 0.75,
     model_top_k: int | None = None,
     tokens_col: str | None = None,
 ) -> DataFrame:
@@ -163,24 +155,24 @@ def bigram_surprisal(
         F.count(F.lit(1)).cast("double").alias("v_size"),
     )
     bg = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            bigram_pairs(text_col, F.col(tokens_col) if tokens_col else None)
+            bigram_pairs("text", F.col(tokens_col) if tokens_col else None)
         ).alias("p"),
-    ).select(id_col, "p.w1", "p.w2")
+    ).select("doc_id", "p.w1", "p.w2")
     u1 = vocab.select(F.col("word").alias("w1"), F.col("cnt").alias("c1"))
     u2 = vocab.select(F.col("word").alias("w2"), F.col("cnt").alias("cu2"))
     # the conditional keeps cross-corpus scoring finite: an OOV history
     # word (c1 NULL) contributes no bigram mass and falls back to the
     # unigram floor instead of null-propagating into the doc average
     p = (
-        F.lit(lam)
+        F.lit(0.75)
         * F.when(
             F.col("c1").isNotNull(),
             F.coalesce(F.col("c2"), F.lit(0)).cast("double")
             / F.col("c1").cast("double"),
         ).otherwise(F.lit(0.0))
-        + F.lit(1.0 - lam)
+        + F.lit(0.25)
         * (
             (F.coalesce(F.col("cu2"), F.lit(0)) + F.lit(1)).cast("double")
             / (F.col("n_total") + F.col("v_size"))
@@ -191,9 +183,9 @@ def bigram_surprisal(
         .join(u1, "w1", "left")
         .join(u2, "w2", "left")
         .join(broadcast(totals))
-        .select(id_col, (-F.log(p)).alias("nll"))
+        .select("doc_id", (-F.log(p)).alias("nll"))
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.avg("nll").alias("avg_bigram_nll"),
     )

@@ -39,23 +39,22 @@ FEATURES_SCHEMA = T.StructType(
 )
 
 
-def _fake_decode(payload: bytes, dim: int = 16) -> np.ndarray:
+def _fake_decode(payload: bytes) -> np.ndarray:
     """Deterministic stand-in for a codec: byte-histogram features.
 
     Real deployments replace this with PIL/librosa/ffmpeg decoding; the
     signature (bytes -> float vector) is the contract.
     """
     if not payload:
-        return np.zeros(dim, dtype=np.float32)
+        return np.zeros(16, dtype=np.float32)
     arr = np.frombuffer(payload, dtype=np.uint8)
-    hist, _ = np.histogram(arr, bins=dim, range=(0, 256))
+    hist, _ = np.histogram(arr, bins=16, range=(0, 256))
     return (hist / max(1, len(arr))).astype(np.float32)
 
 
 def extract_features(
     assets: DataFrame,
     decoder: Callable[[bytes], np.ndarray] | None = None,
-    dim: int = 16,
 ) -> DataFrame:
     """Binary → feature-vector stage over mapInPandas (Arrow batches).
 
@@ -64,7 +63,7 @@ def extract_features(
     """
     import hashlib
 
-    decode = decoder or (lambda b: _fake_decode(b, dim))
+    decode = decoder or (lambda b: _fake_decode(b))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -89,14 +88,14 @@ def extract_features(
     )
 
 
-def resize_plan(assets: DataFrame, max_px: int = MAX_IMAGE_PX) -> DataFrame:
+def resize_plan(assets: DataFrame) -> DataFrame:
     """Pure-plan resize bookkeeping: target dimensions under the size cap
     (aspect-preserving), computed as column expressions. The pixel work
     itself belongs in a decoder UDF; this stage decides and records the
     geometry so the expensive decode only runs on assets that need it."""
     scale = F.when(
-        F.greatest("width", "height") > max_px,
-        max_px / F.greatest("width", "height").cast("double"),
+        F.greatest("width", "height") > MAX_IMAGE_PX,
+        MAX_IMAGE_PX / F.greatest("width", "height").cast("double"),
     ).otherwise(F.lit(1.0))
     return assets.withColumn("resize_scale", F.round(scale, 6)).withColumn(
         "target_width", F.floor(F.col("width") * scale).cast("int")
@@ -107,9 +106,7 @@ def resize_plan(assets: DataFrame, max_px: int = MAX_IMAGE_PX) -> DataFrame:
     )
 
 
-def frame_sample_plan(
-    assets: DataFrame, every_ms: int = 1000
-) -> DataFrame:
+def frame_sample_plan(assets: DataFrame) -> DataFrame:
     """Video frame-sampling plan: one output row per sampled timestamp
     (explode of a sequence — a UDTF-shaped operator with no Python).
     Decode of the actual frames is the stubbed decoder's job."""
@@ -117,7 +114,7 @@ def frame_sample_plan(
     stamps = F.sequence(
         F.lit(0).cast("long"),
         F.greatest(F.col("duration_ms") - 1, F.lit(0)).cast("long"),
-        F.lit(every_ms).cast("long"),
+        F.lit(1000).cast("long"),
     )
     return video.select(
         "asset_id",

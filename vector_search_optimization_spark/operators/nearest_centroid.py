@@ -80,7 +80,6 @@ def nearest_centroid(
     df: DataFrame,
     centroids: DataFrame,
     vector_col: str = "content_vector",
-    centroid_col: str = "centroid",
     label_col: str = "cluster_label",
     metric: str = "euclidean",
     out_label: str = "assigned_label",
@@ -100,7 +99,7 @@ def nearest_centroid(
     if metric not in _METRICS:
         raise ValueError(f"unknown metric {metric!r}; one of {_METRICS}")
     cent_rows = sorted(
-        centroids.select(label_col, centroid_col).collect(),
+        centroids.select(label_col, "centroid").collect(),
         key=lambda r: _ascending(r[0]),
     )
     labels = np.array([r[0] for r in cent_rows])
@@ -141,11 +140,7 @@ def nearest_centroid_crossjoin(
     df: DataFrame,
     centroids: DataFrame,
     vector_col: str = "content_vector",
-    centroid_col: str = "centroid",
-    label_col: str = "cluster_label",
     metric: str = "euclidean",
-    out_label: str = "assigned_label",
-    out_dist: str = "assigned_dist",
 ) -> DataFrame:
     """Declarative formulation: broadcast cross-join + min_by.
 
@@ -159,7 +154,7 @@ def nearest_centroid_crossjoin(
     cand = with_id.crossJoin(
         F.broadcast(
             centroids.select(
-                F.col(label_col).alias("__cl"), F.col(centroid_col).alias("__cv")
+                F.col("cluster_label").alias("__cl"), F.col("centroid").alias("__cv")
             )
         )
     ).withColumn("__dist", V.distance(vector_col, "__cv", rank_metric))
@@ -168,9 +163,11 @@ def nearest_centroid_crossjoin(
     # survive and the wide vector column never becomes a grouping key
     best = cand.groupBy("__rid").agg(
         *[F.first(c).alias(c) for c in df.columns],
-        F.min_by(F.col("__cl"), F.struct("__dist", "__cl")).cast("long").alias(out_label),
-        F.min("__dist").alias(out_dist),
+        F.min_by(F.col("__cl"), F.struct("__dist", "__cl"))
+        .cast("long")
+        .alias("assigned_label"),
+        F.min("__dist").alias("assigned_dist"),
     ).drop("__rid")
     if metric == "euclidean":
-        best = best.withColumn(out_dist, F.sqrt(F.col(out_dist)))
+        best = best.withColumn("assigned_dist", F.sqrt(F.col("assigned_dist")))
     return best

@@ -31,44 +31,27 @@ from pyspark.sql import types as T
 from ..functions import vector as V
 
 
-def zscore_outliers(
-    df: DataFrame,
-    cluster_col: str,
-    dist_col: str,
-    threshold: float = 3.0,
-    out_col: str = "is_outlier",
-) -> DataFrame:
-    """M6 — |z| of dist within cluster > threshold (population std, ddof=0,
+def zscore_outliers(df: DataFrame, cluster_col: str, dist_col: str) -> DataFrame:
+    """M6 — |z| of dist within cluster > 3 (population std, ddof=0,
     matching np.std at main-script1.ipynb:3767 c64)."""
     w = Window.partitionBy(cluster_col)
     mean = F.mean(dist_col).over(w)
     std = F.stddev_pop(dist_col).over(w)
     z = V.z_score(F.col(dist_col), mean, std)
     return df.withColumn("z", z).withColumn(
-        out_col, F.coalesce(F.abs(F.col("z")) > threshold, F.lit(False))
+        "is_outlier", F.coalesce(F.abs(F.col("z")) > 3.0, F.lit(False))
     )
 
 
-def percentile_outliers(
-    df: DataFrame,
-    cluster_col: str,
-    dist_col: str,
-    pct: float = 0.95,
-    out_col: str = "is_outlier",
-) -> DataFrame:
-    """M7 — dist > per-cluster exact percentile (np.percentile linear
-    interpolation = Spark `percentile`). ``pct`` is a 0-1 FRACTION
-    (Spark convention); mahalanobis_outliers takes 0-100 (np.percentile
-    convention, matching the reference) — both validate their range so a
-    transplanted value fails loudly instead of flagging ~everything."""
-    if not 0.0 < pct < 1.0:
-        raise ValueError(f"pct={pct} must be a fraction in (0, 1)")
+def percentile_outliers(df: DataFrame, cluster_col: str, dist_col: str) -> DataFrame:
+    """M7 — dist > per-cluster exact 95th percentile (np.percentile linear
+    interpolation = Spark `percentile`)."""
     thresholds = df.groupBy(cluster_col).agg(
-        F.percentile(dist_col, F.lit(pct)).alias("__thr")
+        F.percentile(dist_col, F.lit(0.95)).alias("__thr")
     )
     return (
         df.join(F.broadcast(thresholds), cluster_col)
-        .withColumn(out_col, F.col(dist_col) > F.col("__thr"))
+        .withColumn("is_outlier", F.col(dist_col) > F.col("__thr"))
         .drop("__thr")
     )
 
@@ -104,7 +87,6 @@ def lof_outliers(
     id_col: str,
     n_neighbors_frac: float = 0.05,
     contamination: float = 0.02,
-    out_col: str = "is_outlier",
 ) -> DataFrame:
     """M8 — per-cluster LOF via applyInPandas.
 
@@ -120,7 +102,7 @@ def lof_outliers(
             T.StructField(cluster_col, c_field.dataType),
             T.StructField(id_col, id_field.dataType),
             T.StructField("lof", T.DoubleType()),
-            T.StructField(out_col, T.BooleanType()),
+            T.StructField("is_outlier", T.BooleanType()),
         ]
     )
 
@@ -138,7 +120,7 @@ def lof_outliers(
                     cluster_col: pdf[cluster_col],
                     id_col: pdf[id_col],
                     "lof": np.ones(m),
-                    out_col: np.zeros(m, dtype=bool),
+                    "is_outlier": np.zeros(m, dtype=bool),
                 }
             )
         k = max(1, int(n_neighbors_frac * m))
@@ -150,7 +132,7 @@ def lof_outliers(
                 cluster_col: pdf[cluster_col],
                 id_col: pdf[id_col],
                 "lof": lof,
-                out_col: lof >= thr if n_out else np.zeros(m, dtype=bool),
+                "is_outlier": lof >= thr if n_out else np.zeros(m, dtype=bool),
             }
         )
 
@@ -161,12 +143,7 @@ def lof_outliers(
     )
 
 
-def fast_mcd(
-    X: np.ndarray,
-    seed: int = 42,
-    n_trials: int = 30,
-    c_steps: int = 20,
-) -> tuple[np.ndarray, np.ndarray]:
+def fast_mcd(X: np.ndarray, seed: int = 42) -> tuple[np.ndarray, np.ndarray]:
     """FastMCD (Rousseeuw & Van Driessen 1999) — the estimator behind
     sklearn MinCovDet, which the reference uses for M9
     (main-script1.ipynb:4140 c70). Plain numpy, fully seeded.
@@ -185,12 +162,12 @@ def fast_mcd(
     rng = np.random.RandomState(seed)
     ridge = 1e-12 * np.eye(d)
     best: tuple[float, np.ndarray, np.ndarray] | None = None
-    for _ in range(n_trials):
+    for _ in range(30):
         idx = rng.choice(m, size=min(d + 1, m), replace=False)
         mu = X[idx].mean(axis=0)
         cov = np.atleast_2d(np.cov(X[idx], rowvar=False)) + ridge
         prev_det = np.inf
-        for _ in range(c_steps):
+        for _ in range(20):
             prec = np.linalg.pinv(cov)
             c = X - mu
             d2 = np.einsum("ij,jk,ik->i", c, prec, c)
@@ -235,12 +212,10 @@ def mahalanobis_outliers(
     cluster_col: str,
     vector_col: str,
     id_col: str,
-    pct: float = 95.0,
-    out_col: str = "is_outlier",
     method: str = "mcd",
     seed: int = 42,
 ) -> DataFrame:
-    """M9 — per-cluster robust Mahalanobis distance > pct-th percentile.
+    """M9 — per-cluster robust Mahalanobis distance > 95th percentile.
 
     method='mcd' (default) matches the reference's MinCovDet via the
     numpy FastMCD above — robust location/scatter, so clustered
@@ -251,11 +226,6 @@ def mahalanobis_outliers(
     UMAP->3D projection; the operator takes whatever vector column it is
     given (the registered query feeds a PCA-3D projection).
     """
-    if not 1.0 < pct < 100.0:
-        raise ValueError(
-            f"pct={pct} must be a PERCENT in (1, 100) — np.percentile "
-            "convention; percentile_outliers takes a 0-1 fraction"
-        )
     id_field = df.schema[id_col]
     c_field = df.schema[cluster_col]
     schema = T.StructType(
@@ -263,7 +233,7 @@ def mahalanobis_outliers(
             T.StructField(cluster_col, c_field.dataType),
             T.StructField(id_col, id_field.dataType),
             T.StructField("mahal", T.DoubleType()),
-            T.StructField(out_col, T.BooleanType()),
+            T.StructField("is_outlier", T.BooleanType()),
         ]
     )
 
@@ -277,20 +247,20 @@ def mahalanobis_outliers(
                     cluster_col: pdf[cluster_col],
                     id_col: pdf[id_col],
                     "mahal": np.zeros(m),
-                    out_col: np.zeros(m, dtype=bool),
+                    "is_outlier": np.zeros(m, dtype=bool),
                 }
             )
         mu, cov = location_covariance(X, method=method, seed=seed)
         prec = np.linalg.pinv(cov)
         c = X - mu
         mahal = np.sqrt(np.maximum(np.einsum("ij,jk,ik->i", c, prec, c), 0.0))
-        thr = np.percentile(mahal, pct)
+        thr = np.percentile(mahal, 95.0)
         return pd.DataFrame(
             {
                 cluster_col: pdf[cluster_col],
                 id_col: pdf[id_col],
                 "mahal": mahal,
-                out_col: mahal > thr,
+                "is_outlier": mahal > thr,
             }
         )
 

@@ -29,11 +29,7 @@ def pack_by_token_budget(
     df: DataFrame,
     budget: int,
     tokens: Column,
-    group_col: str = "lang",
-    id_col: str = "doc_id",
     shards: int | None = None,
-    out_tokens: str = "n_tok",
-    out_batch: str = "batch_id",
 ) -> DataFrame:
     """Assign each row ``batch_id = floor(exclusive_cumulative_tokens /
     budget)`` in ``id_col`` order — the one-pass windowed pack.
@@ -48,25 +44,23 @@ def pack_by_token_budget(
     window — no stateful scan — and global token offsets are recoverable
     from batch ids alone.
     """
-    out = df.withColumn(out_tokens, tokens)
+    out = df.withColumn("n_tok", tokens)
     if shards is None:
-        part = [group_col]
+        part = ["lang"]
     else:
         shard_name = "shard"
         while shard_name in df.columns:  # never clobber a caller's column
             shard_name += "_"
         out = out.withColumn(
-            shard_name, F.pmod(F.xxhash64(F.col(id_col)), F.lit(shards))
+            shard_name, F.pmod(F.xxhash64(F.col("doc_id")), F.lit(shards))
         )
-        part = [group_col, shard_name]
+        part = ["lang", shard_name]
     w = (
         Window.partitionBy(*part)
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     return out.withColumn(
-        out_batch,
-        F.floor(
-            F.coalesce(F.sum(out_tokens).over(w), F.lit(0)) / F.lit(budget)
-        ),
+        "batch_id",
+        F.floor(F.coalesce(F.sum("n_tok").over(w), F.lit(0)) / F.lit(budget)),
     )

@@ -43,12 +43,7 @@ __all__ = [
 ]
 
 
-def skyline_survivors_2d(
-    d: DataFrame,
-    price_col: str = "price_cents",
-    size_col: str = "size",
-    part_cols: tuple = (),
-) -> DataFrame:
+def skyline_survivors_2d(d: DataFrame, part_cols: tuple = ()) -> DataFrame:
     """Rows not dominated within their partition under (minimize
     `price_col`, maximize `size_col`): dominated iff a STRICTLY cheaper
     row has size ≥ mine (RANGE-frame max over the exact integer price)
@@ -56,27 +51,22 @@ def skyline_survivors_2d(
     co-survive. All other columns pass through untouched."""
     w_cheaper = (
         Window.partitionBy(*part_cols)
-        .orderBy(price_col)
+        .orderBy("price_cents")
         .rangeBetween(Window.unboundedPreceding, -1)
     )
-    w_same = Window.partitionBy(*part_cols, price_col)
+    w_same = Window.partitionBy(*part_cols, "price_cents")
     return (
-        d.withColumn("_mxc", F.max(size_col).over(w_cheaper))
-        .withColumn("_mxs", F.max(size_col).over(w_same))
+        d.withColumn("_mxc", F.max("size").over(w_cheaper))
+        .withColumn("_mxs", F.max("size").over(w_same))
         .where(
-            (F.col("_mxc").isNull() | (F.col("_mxc") < F.col(size_col)))
-            & (F.col("_mxs") <= F.col(size_col))
+            (F.col("_mxc").isNull() | (F.col("_mxc") < F.col("size")))
+            & (F.col("_mxs") <= F.col("size"))
         )
         .drop("_mxc", "_mxs")
     )
 
 
-def two_phase_skyline(
-    d: DataFrame,
-    price_col: str = "price_cents",
-    size_col: str = "size",
-    band_width: int = 1000,
-) -> DataFrame:
+def two_phase_skyline(d: DataFrame) -> DataFrame:
     """Distributable skyline: per-price-band local fronts prune in
     parallel (union of local skylines provably contains the global
     front — a dominator in the SAME band eliminates locally), then the
@@ -84,11 +74,9 @@ def two_phase_skyline(
     MERGE property skyline(A ∪ B) = skyline(skyline(A) ∪ B) is what
     makes both this pruning and the streaming fold
     (streaming/skyline_maintenance.py) correct."""
-    band = (F.col(price_col) / F.lit(int(band_width))).cast("long")
-    local = skyline_survivors_2d(
-        d.withColumn("_band", band), price_col, size_col, ("_band",)
-    ).drop("_band")
-    return skyline_survivors_2d(local, price_col, size_col)
+    band = (F.col("price_cents") / F.lit(int(1000))).cast("long")
+    local = skyline_survivors_2d(d.withColumn("_band", band), ("_band",)).drop("_band")
+    return skyline_survivors_2d(local)
 
 
 def exact_auc_by_grid(

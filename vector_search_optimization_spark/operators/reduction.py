@@ -1,7 +1,8 @@
 """Dimensionality reduction (SURVEY §2.9 M10-M11).
 
-- PCA 2D/3D + explained variance (nuevo-kmeans-pre.ipynb:520 c26): MLlib
-  PCA — distributed, covariance accumulated in one pass.
+- PCA 2D/3D + explained variance (nuevo-kmeans-pre.ipynb:520 c26): a
+  deterministic eigh basis from a bounded sample (pca_components_numpy),
+  applied as plan-literal projections by the m9/m10 queries.
 - UMAP 2D/3D (nuevo-kmeans-pre.ipynb:689 c31): no distributed equivalent;
   driver-side stage over a bounded sample (SURVEY §4.3). umap-learn when
   installed; otherwise a deterministic Laplacian-eigenmaps spectral
@@ -15,7 +16,6 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions import vector as V
 
@@ -41,29 +41,6 @@ def pca_components_numpy(
         if comps[i, np.argmax(np.abs(comps[i]))] < 0:
             comps[i] = -comps[i]
     return mu, comps
-
-
-def pca_project(
-    df: DataFrame,
-    n_components: int = 2,
-    vector_col: str = "embedding",
-    out_col: str = "pca",
-) -> tuple[DataFrame, list[float]]:
-    """M10 — PCA projection; returns (df + out_col array<double>,
-    explained variance ratios)."""
-    from pyspark.ml.feature import PCA
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    feats = df.withColumn(
-        "__features", array_to_vector(F.col(vector_col).cast("array<double>"))
-    )
-    model = PCA(k=n_components, inputCol="__features", outputCol="__pca").fit(feats)
-    out = (
-        model.transform(feats)
-        .withColumn(out_col, vector_to_array(F.col("__pca")))
-        .drop("__features", "__pca")
-    )
-    return out, [float(x) for x in model.explainedVariance]
 
 
 def spectral_embedding_numpy(
@@ -113,9 +90,6 @@ def spectral_embedding_numpy(
 
 def umap_project(
     df: DataFrame,
-    n_components: int = 2,
-    vector_col: str = "embedding",
-    id_col: str = "vec_id",
     max_rows: int = 10_000,
     fallback: bool = True,
     **umap_kwargs,
@@ -144,22 +118,20 @@ def umap_project(
                 "use fallback=True for the spectral embedding."
             ) from None
 
-    bounded = df.select(id_col, vector_col).limit(max_rows).persist()
+    bounded = df.select("vec_id", "embedding").limit(max_rows).persist()
     try:
         bounded.count()  # materialize once; bare limit-collect re-runs upstream
         pdf = bounded.toPandas()
     finally:
         bounded.unpersist()
-    X = V.stack_vectors(pdf[vector_col])
+    X = V.stack_vectors(pdf["embedding"])
     if have_umap:  # pragma: no cover - env without umap
-        emb = umap.UMAP(n_components=n_components, **umap_kwargs).fit_transform(X)
+        emb = umap.UMAP(n_components=2, **umap_kwargs).fit_transform(X)
         method = "umap"
     else:
-        emb = spectral_embedding_numpy(
-            X, n_components, umap_kwargs.get("n_neighbors", 15)
-        )
+        emb = spectral_embedding_numpy(X, 2, umap_kwargs.get("n_neighbors", 15))
         method = "spectral"
-    out = pdf[[id_col]].copy()
+    out = pdf[["vec_id"]].copy()
     out["umap"] = [row.tolist() for row in np.asarray(emb, dtype=np.float64)]
     out["method"] = method
     return df.sparkSession.createDataFrame(out)

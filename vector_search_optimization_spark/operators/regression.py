@@ -87,7 +87,6 @@ def score_linear_probe(
     df: DataFrame,
     feature_cols: list[str],
     weights: list[float],
-    out_col: str = "pred",
 ) -> DataFrame:
     """Map-side scoring: ``w0 + Σ w_i·x_i`` with the weights inlined as
     double literals, left-associated — the same IEEE evaluation order an
@@ -96,4 +95,4 @@ def score_linear_probe(
     expr = F.lit(weights[0])
     for w, c in zip(weights[1:], feature_cols):
         expr = expr + F.lit(w) * F.col(c).cast("double")
-    return df.withColumn(out_col, expr)
+    return df.withColumn("pred", expr)

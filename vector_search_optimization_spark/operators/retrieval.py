@@ -42,9 +42,8 @@ def bm25_keyword_scores(
     id_col: str = "doc_id",
     k1: float = BM25_K1,
     b: float = BM25_B,
-    keep_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """(id, kw_score [, keep_cols]) — BM25 over whitespace tokens.
+    """(id, kw_score) — BM25 over whitespace tokens.
 
     idf = ln(1 + (N - df + 0.5)/(df + 0.5)); per-term saturation
     tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl)). Corpus stats are a
@@ -69,7 +68,6 @@ def bm25_keyword_scores(
     tfs = [_tf(term).alias(f"tf{j}") for j, term in enumerate(terms)]
     scored = df.select(
         id_col,
-        *keep_cols,
         F.size(toks).cast("double").alias("dl"),
         *tfs,
     )
@@ -94,16 +92,11 @@ def bm25_keyword_scores(
         ).otherwise(F.lit(0.0))
         kw_expr = term_score if kw_expr is None else kw_expr + term_score
     return scored.crossJoin(F.broadcast(stats)).select(
-        id_col, *keep_cols, F.round(kw_expr, 6).alias("kw_score")
+        id_col, F.round(kw_expr, 6).alias("kw_score")
     )
 
 
-def tfidf_keywords(
-    docs: DataFrame,
-    n_keywords: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def tfidf_keywords(docs: DataFrame, n_keywords: int = 3) -> DataFrame:
     """Per-document top-n keywords by tf·idf (idf = ln(N/df)).
 
     The inverse operation of keyword *search*: surface what each doc is
@@ -116,16 +109,16 @@ def tfidf_keywords(
     """
     from .lm_quality import tokenize  # ONE tokenization contract repo-wide
 
-    base = docs.where(F.col(text_col).isNotNull())
-    toks = base.select(id_col, F.explode(tokenize(text_col)).alias("word"))
-    tf = toks.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("tf"))
+    base = docs.where(F.col("text").isNotNull())
+    toks = base.select("doc_id", F.explode(tokenize("text")).alias("word"))
+    tf = toks.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("dfreq"))
     n_docs = base.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
     scored = (
         tf.join(F.broadcast(dfreq), "word")
         .join(F.broadcast(n_docs))
         .select(
-            id_col,
+            "doc_id",
             "word",
             "tf",
             F.round(
@@ -133,7 +126,7 @@ def tfidf_keywords(
             ).alias("score"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), F.col("word").asc())
+    w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), F.col("word").asc())
     return (
         scored.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= n_keywords)
@@ -242,7 +235,6 @@ class SearchIndex:
         terms: Sequence[str],
         query: Sequence[float],
         k: int = 10,
-        top_per_side: int = 100,
     ) -> DataFrame:
         if self.vector_col is None:
             raise ValueError("index has no vector column")
@@ -257,8 +249,8 @@ class SearchIndex:
         ).where(F.col("vec_score").isNotNull())
         fused = rrf_fuse(
             {
-                "kw": top_ranked(kw, "kw_score", self.id_col, top_per_side, "rank_kw"),
-                "vec": top_ranked(vec, "vec_score", self.id_col, top_per_side, "rank_vec"),
+                "kw": top_ranked(kw, "kw_score", self.id_col, 100, "rank_kw"),
+                "vec": top_ranked(vec, "vec_score", self.id_col, 100, "rank_vec"),
             },
             id_col=self.id_col,
         )
@@ -329,8 +321,6 @@ def mmr_rerank(
     k: int = 10,
     shortlist: int = 50,
     lam: float = 0.5,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
 ) -> DataFrame:
     """Diversified top-k: exact cosine shortlist (distributed — map-side
     score + TakeOrdered, the brute_force_topk plan), then greedy MMR over
@@ -340,12 +330,10 @@ def mmr_rerank(
     the kernel's sims only drive the selection."""
     from .ann import brute_force_topk
 
-    top = brute_force_topk(
-        df, query, k=shortlist, id_col=id_col, vector_col=vector_col
-    )
+    top = brute_force_topk(df, query, k=shortlist)
     rows = (
-        top.join(df.select(id_col, vector_col), id_col)
-        .select(id_col, vector_col)
+        top.join(df.select("vec_id", "embedding"), "vec_id")
+        .select("vec_id", "embedding")
         .collect()
     )
     ids = [r[0] for r in rows]
@@ -355,13 +343,11 @@ def mmr_rerank(
     sel = spark.createDataFrame(
         [(r, i) for r, i, _, _ in picks], schema="rank int, __sel_id long"
     )
-    scored = df.join(
-        F.broadcast(sel), F.col(id_col) == F.col("__sel_id")
-    ).select(
+    scored = df.join(F.broadcast(sel), F.col("vec_id") == F.col("__sel_id")).select(
         "rank",
-        F.col(id_col),
-        F.round(V.cosine_similarity(vector_col, query), 6).alias("sim_q"),
-        F.col(vector_col).alias("__v"),
+        F.col("vec_id"),
+        F.round(V.cosine_similarity("embedding", query), 6).alias("sim_q"),
+        F.col("embedding").alias("__v"),
     )
     # max cosine to any HIGHER-ranked pick, recomputed engine-side: the
     # selected set is <= k rows, so the pair join is k x k broadcast
@@ -378,7 +364,7 @@ def mmr_rerank(
         scored.join(pairs, "rank", "left")
         .select(
             "rank",
-            id_col,
+            "vec_id",
             "sim_q",
             "max_prior_sim",
             (

@@ -80,7 +80,6 @@ def weighted_sample_fixed_n(
     key: str,
     weight_col: str,
     n: int,
-    key_col: str = "es_key",
 ) -> DataFrame:
     """Efraimidis–Spirakis A-ES weighted sampling without replacement:
     rank rows by ``u^(1/w)`` (u a deterministic uniform, w the row
@@ -105,21 +104,16 @@ def weighted_sample_fixed_n(
     )
     return (
         df.where(F.col(weight_col).isNotNull() & (F.col(weight_col) > 0))
-        .withColumn(key_col, es)
-        .orderBy(F.col(key_col).desc(), c.asc())
+        .withColumn("es_key", es)
+        .orderBy(F.col("es_key").desc(), c.asc())
         .limit(n)
     )
 
 
-def mixture_weights(
-    sizes: DataFrame,
-    group_col: str,
-    size_col: str,
-    alpha: float = 0.5,
-) -> DataFrame:
+def mixture_weights(sizes: DataFrame, group_col: str, size_col: str) -> DataFrame:
     """Temperature-based corpus mixture weighting (the GPT-3/LLaMA-style
-    source re-weighting: w_s ∝ n_s^alpha, alpha < 1 upsamples small
-    high-quality sources relative to their natural share).
+    source re-weighting: w_s ∝ n_s^alpha with alpha = 0.5, which upsamples
+    small high-quality sources relative to their natural share).
 
     Input: one row per source with its size (token count). Output adds
     ``raw_share`` (n_s / N, exported UNROUNDED — integer quotient,
@@ -128,17 +122,15 @@ def mixture_weights(
     order), and ``oversample_factor`` = weight / raw_share (derived
     unrounded from the already-identical exports).
 
-    alpha=0.5 (the default) computes n^alpha via sqrt — IEEE
-    correctly-rounded on every engine; other alphas use pow, which is
-    only within-1-ulp cross-engine (fine under the 6dp rounding, noted
-    for oracle authors).
+    n^0.5 is computed via sqrt — IEEE correctly-rounded on every engine
+    (pow would only be within-1-ulp cross-engine).
 
     One tiny frame (sources) + a one-row total broadcast — the heavy
     part (per-source token counting) happens upstream in one combinable
     agg over the corpus.
     """
     n = F.col(size_col).cast("double")
-    powed = F.sqrt(n) if alpha == 0.5 else F.pow(n, F.lit(alpha))
+    powed = F.sqrt(n)
     # totals aggregate the same expression over the same input (rather
     # than a derived column) so the one-row join carries no shared
     # attribute lineage (Spark's self-join ambiguity)
@@ -160,7 +152,7 @@ def mixture_weights(
 
 
 def stratified_sample_fixed_n(
-    df: DataFrame, stratum: str, key: str, n: int, rank_col: str = "rank"
+    df: DataFrame, stratum: str, key: str, n: int
 ) -> DataFrame:
     """Exactly min(n, |stratum|) rows per stratum, in hash order.
 
@@ -173,5 +165,4 @@ def stratified_sample_fixed_n(
         stratum,
         [sample_hash(key).asc(), F.col(key).asc()],
         n,
-        rank_col=rank_col,
     )

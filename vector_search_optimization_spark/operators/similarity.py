@@ -30,14 +30,13 @@ def intra_group_pairs(
     group_col: str,
     id_col: str,
     vector_col: str,
-    metric: str = "cosine",
 ) -> DataFrame:
     """All unordered pairs (i < j by id) within each group, with similarity.
 
-    Returns: group_col, id_a, id_b, sim (cosine similarity) or dist for
-    distance metrics. Declarative self-join: Catalyst plans a shuffled hash
-    join on the group key, pair generation and the similarity expression run
-    codegen'd — no Python in the loop.
+    Returns: group_col, id_a, id_b, sim (cosine similarity). Declarative
+    self-join: Catalyst plans a shuffled hash join on the group key, pair
+    generation and the similarity expression run codegen'd — no Python in
+    the loop.
     """
     left = df.select(
         F.col(group_col).alias("__g"),
@@ -50,11 +49,12 @@ def intra_group_pairs(
         F.col(vector_col).alias("__vb"),
     )
     pairs = left.join(right, "__g").where(F.col("id_a") < F.col("id_b"))
-    if metric == "cosine":
-        measure = V.cosine_similarity("__va", "__vb").alias("sim")
-    else:
-        measure = V.distance("__va", "__vb", metric).alias("dist")
-    return pairs.select(F.col("__g").alias(group_col), "id_a", "id_b", measure)
+    return pairs.select(
+        F.col("__g").alias(group_col),
+        "id_a",
+        "id_b",
+        V.cosine_similarity("__va", "__vb").alias("sim"),
+    )
 
 
 def intra_group_pairs_kernel(
@@ -62,7 +62,6 @@ def intra_group_pairs_kernel(
     group_col: str,
     id_col: str,
     vector_col: str,
-    metric: str = "cosine",
     min_sim: float | None = None,
 ) -> DataFrame:
     """BLAS formulation of intra_group_pairs: one numpy kernel per group.
@@ -85,9 +84,6 @@ def intra_group_pairs_kernel(
     """
     import numpy as np
     import pandas as pd
-
-    if metric != "cosine":
-        raise ValueError("kernel path currently implements cosine only")
 
     id_field = df.schema[id_col]
     g_field = df.schema[group_col]
@@ -151,22 +147,15 @@ def similarity_buckets(
     )
 
 
-def distance_matrix(
-    df: DataFrame,
-    id_col: str,
-    vector_col: str,
-    metric: str = "euclidean",
-    full: bool = True,
-) -> DataFrame:
-    """All-pairs distances as (id_a, id_b, dist) — the relational form of
-    ``squareform(pdist(...))``. With ``full=False`` emits the upper triangle
-    only. Intended for small tables (centroids); both sides broadcast-able."""
+def distance_matrix(df: DataFrame, id_col: str, vector_col: str) -> DataFrame:
+    """All-pairs euclidean distances as (id_a, id_b, dist) — the relational
+    form of ``squareform(pdist(...))``. Intended for small tables
+    (centroids); both sides broadcast-able."""
     a = df.select(F.col(id_col).alias("id_a"), F.col(vector_col).alias("__va"))
     b = df.select(F.col(id_col).alias("id_b"), F.col(vector_col).alias("__vb"))
-    out = a.crossJoin(F.broadcast(b))
-    if not full:
-        out = out.where(F.col("id_a") < F.col("id_b"))
-    return out.select("id_a", "id_b", V.distance("__va", "__vb", metric).alias("dist"))
+    return a.crossJoin(F.broadcast(b)).select(
+        "id_a", "id_b", V.euclidean("__va", "__vb").alias("dist")
+    )
 
 
 def cooccurrence_edges(

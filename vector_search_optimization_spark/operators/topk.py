@@ -23,7 +23,6 @@ def top_k_per_group(
     order_col: Column | str | list,
     k: int,
     descending: bool = False,
-    rank_col: str = "rank",
 ) -> DataFrame:
     """O5/O6 — k smallest (or largest with descending=True) rows per group.
 
@@ -39,8 +38,8 @@ def top_k_per_group(
         order = [col.desc() if descending else col.asc()]
     w = Window.partitionBy(*groups).orderBy(*order)
     return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .where(F.col(rank_col) <= k)
+        df.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
     )
 
 
@@ -95,9 +94,7 @@ def first_row_per_group(
     return top_k_per_group(df, group_col, order_col, k=1).drop("rank")
 
 
-def dense_label_numbering(
-    df: DataFrame, label_col: str, out_col: str = "etiqueta_numero"
-) -> DataFrame:
+def dense_label_numbering(df: DataFrame, label_col: str) -> DataFrame:
     """W5 — dense 0-based label ids.
 
     The reference numbers labels in encounter order ({v: i for i, v in
@@ -105,4 +102,4 @@ def dense_label_numbering(
     standardises on lexicographic order (documented deviation, SURVEY §4.3).
     """
     w = Window.orderBy(F.col(label_col).asc())
-    return df.withColumn(out_col, F.dense_rank().over(w) - 1)
+    return df.withColumn("etiqueta_numero", F.dense_rank().over(w) - 1)

@@ -118,7 +118,6 @@ def scd2_intervals(
     snapshots: DataFrame,
     key_cols: list[str],
     compare_cols: list[str],
-    version_col: str = "version",
     latest_version=None,
 ) -> DataFrame:
     """Type-2 slowly-changing-dimension history from stacked snapshots —
@@ -144,18 +143,18 @@ def scd2_intervals(
     ``latest_version`` bounds open intervals; when None it is taken
     from the data (one scalar agg — a bounded driver finish)."""
     if latest_version is None:
-        latest_version = snapshots.agg(F.max(version_col)).first()[0]
+        latest_version = snapshots.agg(F.max("version")).first()[0]
     from pyspark.sql import Window
 
     field_tokens = [
         F.coalesce(F.sha2(F.col(c).cast("string"), 256), F.lit("<NULL>"))
         for c in compare_cols
     ]
-    w = Window.partitionBy(*key_cols).orderBy(version_col)
+    w = Window.partitionBy(*key_cols).orderBy("version")
     flagged = (
         snapshots.select(
             *key_cols,
-            F.col(version_col).alias("__v"),
+            F.col("version").alias("__v"),
             *compare_cols,
             F.sha2(F.concat_ws("|", *field_tokens), 256).alias("__fp"),
         )

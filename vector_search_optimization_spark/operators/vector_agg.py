@@ -21,12 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def group_vector_mean(
-    df: DataFrame,
-    group_col: str,
-    vector_col: str,
-    out_col: str = "centroid",
-) -> DataFrame:
+def group_vector_mean(df: DataFrame, group_col: str, vector_col: str) -> DataFrame:
     """Per-group element-wise mean vector via MLlib Summarizer (one pass)."""
     from pyspark.ml.functions import array_to_vector, vector_to_array
     from pyspark.ml.stat import Summarizer
@@ -38,7 +33,7 @@ def group_vector_mean(
         )
         .groupBy(group_col)
         .agg(Summarizer.mean(F.col("__v")).alias("__m"))
-        .select(group_col, vector_to_array(F.col("__m")).alias(out_col))
+        .select(group_col, vector_to_array(F.col("__m")).alias("centroid"))
     )
 
 
@@ -46,7 +41,6 @@ def group_vector_mean_posexplode(
     df: DataFrame,
     group_col: str,
     vector_col: str,
-    out_col: str = "centroid",
 ) -> DataFrame:
     """Declarative formulation: posexplode + avg + ordered re-collect."""
     exploded = df.select(
@@ -62,6 +56,6 @@ def group_vector_mean_posexplode(
         )
         .select(
             group_col,
-            F.transform(F.col("__s"), lambda x: x["__m"]).alias(out_col),
+            F.transform(F.col("__s"), lambda x: x["__m"]).alias("centroid"),
         )
     )

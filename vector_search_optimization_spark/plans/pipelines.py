@@ -53,7 +53,6 @@ def analytics_prologue(
     category_col: str = "category",
     id_col: str = "id",
     doc_col: str = "document_id",
-    metric: str = "euclidean",
 ) -> DataFrame:
     """§7.3 minimum slice: normalise → assign → report.
 
@@ -66,8 +65,6 @@ def analytics_prologue(
         normalized,
         centroids,
         vector_col=vector_col,
-        metric=metric,
-        out_label="assigned_label",
     )
     report = assigned.groupBy("assigned_label", category_col).agg(
         F.count(id_col).alias("n_chunks"),
@@ -83,12 +80,8 @@ def cluster_label_pipeline(
     docs: DataFrame,
     k: int,
     llm: ChatModel | None = None,
-    id_col: str = "id",
-    text_col: str = "content",
-    vector_col: str = "content_vector",
     sample_k: int = 100,
     token_budget: int = 125_000,
-    n_init: int = 1,
     seed: int = 42,
     quantizer: str = "mllib",
 ) -> dict:
@@ -118,32 +111,29 @@ def cluster_label_pipeline(
     llm = llm or FakeChatModel()
     spark = docs.sparkSession
 
-    clean = docs.where(F.col(vector_col).isNotNull())
+    clean = docs.where(F.col("content_vector").isNotNull())
     if quantizer == "lloyd":
         from ..operators.ann import train_ivf_centroids
 
         centroids = train_ivf_centroids(
-            clean.orderBy(id_col), num_cells=k, vector_col=vector_col,
+            clean.orderBy("id"), num_cells=k, vector_col="content_vector",
             seed=seed,
         ).select(F.col("cell").alias("cluster_label"), "centroid")
     else:
         from ..operators.clustering import kmeans_fit
 
-        result = kmeans_fit(
-            clean, k, n_init=n_init, seed=seed, vector_col=vector_col
-        )
+        result = kmeans_fit(clean, k, seed=seed, vector_col="content_vector")
         centroids = result.centroids_df(spark)
 
     assigned = nearest_centroid(
         clean,
         centroids,
-        vector_col=vector_col,
         out_label="cluster",
         out_dist="dist",
     ).persist()
 
     sampled = topk.interleave_near_far(
-        assigned, "cluster", "dist", sample_k, tie_col=id_col
+        assigned, "cluster", "dist", sample_k, tie_col="id"
     )
     # token-budget concat per cluster in interleaved order: sort INSIDE
     # the aggregate (array_sort over (ord, text) structs — ord is unique
@@ -156,10 +146,8 @@ def cluster_label_pipeline(
                 F.concat_ws(
                     "\n",
                     F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("ord", text_col))
-                        ),
-                        lambda r: r[text_col],
+                        F.array_sort(F.collect_list(F.struct("ord", "content"))),
+                        lambda r: r["content"],
                     ),
                 ),
                 1,
@@ -190,10 +178,10 @@ def cluster_label_pipeline(
     doc_labels = assigned.join(
         F.broadcast(label_updates.select("cluster", "etiqueta_cluster")),
         "cluster",
-    ).select(id_col, "etiqueta_cluster")
+    ).select("id", "etiqueta_cluster")
 
     base = docs.withColumn("etiqueta_cluster", F.lit(None).cast("string"))
-    labeled = upsert_fields(base, doc_labels, id_col, ["etiqueta_cluster"],
+    labeled = upsert_fields(base, doc_labels, "id", ["etiqueta_cluster"],
                             broadcast_updates=False)
 
     audit = (

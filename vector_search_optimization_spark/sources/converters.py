@@ -384,7 +384,7 @@ def pdf_to_text(payload: bytes) -> str | None:
     return out or None
 
 
-def text_to_pdf(text: str, title: str = "doc") -> bytes:
+def text_to_pdf(text: str) -> bytes:
     """Minimal valid single-page PDF with a FlateDecode content stream —
     the sink side of the pdf roundtrip (S7 value check). One Tj per input
     line with T* line advances; characters outside latin-1 are written as

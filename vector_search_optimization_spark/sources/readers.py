@@ -79,8 +79,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    return {n: load_table(spark, sf_dir, n) for n in TESTDATA_TABLES}
 
 
 def spread_scan(df: DataFrame, *keys: str, target: int | None = None) -> DataFrame:
@@ -211,14 +211,10 @@ def _parquet_row_groups(path: str) -> int:
     return ng
 
 
-def read_chunks(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """S2/S3 — chunk fact table with the pinned schema (SURVEY §1.2)."""
-    reader = spark.read.schema(schemas.CHUNKS)
-    if fmt == "parquet":
-        return reader.parquet(path)
-    if fmt == "json":
-        return reader.json(path)
-    raise ValueError(f"unsupported chunks format {fmt!r}")
+def read_chunks(spark: SparkSession, path: str) -> DataFrame:
+    """S2/S3 — chunk fact table (parquet) with the pinned schema
+    (SURVEY §1.2)."""
+    return spark.read.schema(schemas.CHUNKS).parquet(path)
 
 
 def read_centroids_csv(spark: SparkSession, path: str) -> DataFrame:
@@ -250,7 +246,7 @@ def read_centroids_csv(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_excel(spark: SparkSession, path: str, sheet: str | int = 0) -> DataFrame:
+def read_excel(spark: SparkSession, path: str) -> DataFrame:
     """S6 — Excel scan (pd.read_excel inside the vendored converter,
     analisis-informe.ipynb:2806 c82). Excel is a driver-side small-table
     format — config/dimension tables only, never a distributed scan.
@@ -262,7 +258,7 @@ def read_excel(spark: SparkSession, path: str, sheet: str | int = 0) -> DataFram
     """
     from . import xlsx
 
-    header, rows = xlsx.read_xlsx(path, sheet)
+    header, rows = xlsx.read_xlsx(path, 0)
     schema, rows = infer_excel_schema(header, rows)
     return spark.createDataFrame(rows, schema)
 

@@ -24,28 +24,22 @@ def _stringify_vectors(df: DataFrame) -> DataFrame:
     return out
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_csv(df: DataFrame, path: str) -> None:
     """S8 — CSV sink (df_final.to_csv, cluster_creator.py:57-59)."""
-    _stringify_vectors(df).write.mode(mode).option("header", True).csv(path)
+    _stringify_vectors(df).write.mode("overwrite").option("header", True).csv(path)
 
 
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_json(df: DataFrame, path: str) -> None:
     """S10 — JSON sink (json.dump, nuevo-kmeans-pre.ipynb:136 c9)."""
-    df.write.mode(mode).json(path)
+    df.write.mode("overwrite").json(path)
 
 
-def write_parquet(
-    df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None
-) -> None:
-    """S3 — parquet sink; partition_by is the 100 TB layout lever (e.g.
-    partition the ANN corpus by IVF cell for partition-pruned probes)."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+def write_parquet(df: DataFrame, path: str) -> None:
+    """S3 — parquet sink (overwrite)."""
+    df.write.mode("overwrite").parquet(path)
 
 
-def write_excel(df: DataFrame, path: str, max_rows: int = 100_000) -> None:
+def write_excel(df: DataFrame, path: str) -> None:
     """S9 — Excel sink (table.to_excel, analisis-informe.ipynb:1052 c38).
 
     Driver-side: bounded collect + the stdlib zip+XML codec
@@ -57,31 +51,23 @@ def write_excel(df: DataFrame, path: str, max_rows: int = 100_000) -> None:
     # persist+count+collect, NOT limit(N).collect(): a bare limit-collect
     # executes partition batches serially (1, 4, 16, ...) re-running the
     # upstream plan each batch (CLAUDE.md hard-won fact)
-    bounded = _stringify_vectors(df).limit(max_rows).persist()
+    bounded = _stringify_vectors(df).limit(100_000).persist()
     bounded.count()
     collected = bounded.collect()
     bounded.unpersist()
     xlsx.write_xlsx(path, df.columns, [list(r) for r in collected])
 
 
-def write_orc(
-    df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None
-) -> None:
+def write_orc(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
     """ORC sink — Spark's built-in columnar alternative to parquet
     (same pushdown/pruning levers; some lakes standardize on ORC)."""
-    w = df.write.mode(mode)
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.orc(path)
 
 
-def write_upsert(
-    base_path: str,
-    updates: DataFrame,
-    key_col: str,
-    update_cols: list[str] | None = None,
-    fmt: str = "parquet",
-) -> None:
+def write_upsert(base_path: str, updates: DataFrame, key_col: str) -> None:
     """S11 — keyed upsert sink: read base, merge_documents-style partial
     update, atomic rewrite via staging path + rename.
 
@@ -95,10 +81,10 @@ def write_upsert(
     object stores without atomic rename need a manifest either way.
     """
     spark = updates.sparkSession
-    base = spark.read.format(fmt).load(base_path)
-    merged = upsert_fields(base, updates, key_col, update_cols)
+    base = spark.read.format("parquet").load(base_path)
+    merged = upsert_fields(base, updates, key_col)
     staging = base_path.rstrip("/") + ".__staging__"
-    merged.write.mode("overwrite").format(fmt).save(staging)
+    merged.write.mode("overwrite").format("parquet").save(staging)
     commit_swap(spark, staging, base_path)
 
 
@@ -155,7 +141,6 @@ def write_bucketed(
     num_buckets: int = 32,
     sort_col: str | None = None,
     mode: str = "overwrite",
-    fmt: str = "parquet",
 ) -> None:
     """Materialize a hash-bucketed (optionally sorted) table — the
     co-located-join layout SCALING.md prescribes for join-heavy keys
@@ -165,7 +150,7 @@ def write_bucketed(
     downstream join. Registered through the session catalog because
     bucket metadata lives there (a plain parquet path forgets it).
     """
-    w = df.write.format(fmt).mode(mode).bucketBy(num_buckets, bucket_col)
+    w = df.write.format("parquet").mode(mode).bucketBy(num_buckets, bucket_col)
     if sort_col is not None:
         w = w.sortBy(sort_col)
     w.saveAsTable(table)

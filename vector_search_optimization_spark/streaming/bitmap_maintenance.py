@@ -35,17 +35,15 @@ from pyspark.sql import functions as F
 from ..operators.timeseries import epoch_day
 
 
-def day_bucket_bitmaps(events: DataFrame, id_col: str = "user_id") -> DataFrame:
+def day_bucket_bitmaps(events: DataFrame) -> DataFrame:
     """ONE definition of the (day_idx, bucket, bm, n_events) pre-agg for
     both the batch rollup and the streaming fold — epoch-day indices via
     ``timeseries.epoch_day``."""
     return (
-        events.select(epoch_day("ts").alias("day_idx"), id_col)
-        .groupBy(
-            "day_idx", F.expr(f"bitmap_bucket_number({id_col})").alias("bucket")
-        )
+        events.select(epoch_day("ts").alias("day_idx"), "user_id")
+        .groupBy("day_idx", F.expr("bitmap_bucket_number(user_id)").alias("bucket"))
         .agg(
-            F.expr(f"bitmap_construct_agg(bitmap_bit_position({id_col}))").alias(
+            F.expr("bitmap_construct_agg(bitmap_bit_position(user_id))").alias(
                 "bm"
             ),
             F.count(F.lit(1)).alias("n_events"),
@@ -53,15 +51,13 @@ def day_bucket_bitmaps(events: DataFrame, id_col: str = "user_id") -> DataFrame:
     )
 
 
-def merge_bitmaps(
-    base: DataFrame | None, batch_df: DataFrame, id_col: str = "user_id"
-) -> DataFrame:
+def merge_bitmaps(base: DataFrame | None, batch_df: DataFrame) -> DataFrame:
     """OR one micro-batch's (day, bucket) bitmaps into ``base``. The
     merge is a unionByName + re-aggregate (bitmap_or_agg over the ≤2
     rows per cell) — Spark exposes the bitmap OR only as an aggregate,
     and the union form needs no join and no null-coalescing of binary
     columns."""
-    partial = day_bucket_bitmaps(batch_df, id_col)
+    partial = day_bucket_bitmaps(batch_df)
     if base is None:
         return partial
     return (

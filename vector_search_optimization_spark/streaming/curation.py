@@ -33,14 +33,12 @@ from ..schemas import DOCUMENTS
 __all__ = ["curate_columns", "read_documents_stream", "stream_curate_to_parquet"]
 
 
-def read_documents_stream(
-    spark: SparkSession, drop_dir: str, max_files_per_trigger: int = 4
-) -> DataFrame:
+def read_documents_stream(spark: SparkSession, drop_dir: str) -> DataFrame:
     """File-source stream over a parquet drop-zone with the canonical
     documents schema (explicit — a streaming source cannot infer)."""
     return (
         spark.readStream.schema(DOCUMENTS)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 4)
         .parquet(drop_dir)
     )
 
@@ -49,12 +47,11 @@ def stream_curate_to_parquet(
     stream_df: DataFrame,
     out_path: str,
     checkpoint: str,
-    min_tokens: int = 10,
 ) -> StreamingQuery:
     """Scrub+gate each micro-batch and append survivors, partitioned by
     lang. Stateless: exactly the batch `curate_columns` plan, replayed
     incrementally with checkpointed source offsets."""
-    curated = curate_columns(stream_df, min_tokens=min_tokens)
+    curated = curate_columns(stream_df)
     return (
         curated.writeStream.outputMode("append")
         .format("parquet")

@@ -46,43 +46,29 @@ def stream_dedup_against_corpus(
     stream_docs: DataFrame,
     index_path: str,
     pairs_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    num_bands: int = 16,
-    shingle_n: int = 3,
-    seed: int = 42,
     checkpoint: str | None = None,
 ) -> StreamingQuery:
     """Start the maintenance stream. ``index_path`` must be pre-seeded
     with the existing corpus's band rows (dedup.minhash_band_rows,
-    written as parquet) using the SAME (num_hashes, num_bands,
-    shingle_n, seed); candidate pairs (id_a = newer doc, id_b = already
+    written as parquet) with the same parameters (64 hashes, 16 bands,
+    word 3-shingles, seed 42); candidate pairs (id_a = newer doc, id_b = already
     indexed or same-batch lower id) land at ``pairs_path``."""
 
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        sig_b = dedup.minhash_signatures_kernel(
-            batch_df, text_col, id_col, num_hashes, shingle_n, seed
-        ).persist()
-        bands_b = dedup.minhash_band_rows(
-            sig_b, id_col, num_bands, num_hashes=num_hashes
-        ).persist()
+        sig_b = dedup.minhash_signatures_kernel(batch_df, 64).persist()
+        bands_b = dedup.minhash_band_rows(sig_b, 16, num_hashes=64).persist()
         try:
             idx = spark.read.parquet(index_path)
-            probe = bands_b.select(
-                F.col(id_col).alias("id_a"), "band", "bucket"
-            )
+            probe = bands_b.select(F.col("doc_id").alias("id_a"), "band", "bucket")
             cross = (
-                idx.select(F.col(id_col).alias("id_b"), "band", "bucket")
+                idx.select(F.col("doc_id").alias("id_b"), "band", "bucket")
                 .join(F.broadcast(probe), ["band", "bucket"])
                 .select("id_a", "id_b")
             )
-            intra = dedup.minhash_lsh_candidates(
-                sig_b, id_col, num_bands, num_hashes=num_hashes
-            )
+            intra = dedup.minhash_lsh_candidates(sig_b, 16, num_hashes=64)
             out = cross.unionByName(intra).distinct()
             out.write.mode("append").parquet(pairs_path)
             bands_b.write.mode("append").parquet(index_path)

@@ -38,9 +38,6 @@ def stream_psi_monitor(
     ref_counts: DataFrame,
     out_path: str,
     checkpoint_dir: str,
-    group_col: str = "event_type",
-    value_col: str = "value",
-    num_buckets: int = 10,
 ) -> StreamingQuery:
     """Start the monitor: running bucket counts over the stream
     (complete-mode streaming aggregate — the state store holds the
@@ -53,22 +50,22 @@ def stream_psi_monitor(
     (group, bucket, n_ref) frame.
     """
     bucketed = stream_df.select(
-        F.col(group_col),
-        bucketize(value_col, F.lit(float(lo)), F.lit(float(hi)), num_buckets).alias(
+        F.col("event_type"),
+        bucketize("value", F.lit(float(lo)), F.lit(float(hi))).alias(
             "bucket"
         ),
     )
-    counts = bucketed.groupBy(group_col, "bucket").count()
+    counts = bucketed.groupBy("event_type", "bucket").count()
 
     def _snapshot(batch_df: DataFrame) -> DataFrame:
         cur = batch_df.withColumnRenamed("count", "n_cur")
-        joined = ref_counts.join(cur, [group_col, "bucket"], "full").select(
-            F.col(group_col),
+        joined = ref_counts.join(cur, ["event_type", "bucket"], "full").select(
+            F.col("event_type"),
             F.col("bucket"),
             F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
             F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
         )
-        return psi_from_counts(joined, group_col).orderBy(group_col)
+        return psi_from_counts(joined).orderBy("event_type")
 
     return start_grid_rewrite_monitor(counts, out_path, checkpoint_dir, _snapshot)
 
@@ -78,8 +75,6 @@ def stream_ks_monitor(
     ref_counts: DataFrame,
     out_path: str,
     checkpoint_dir: str,
-    group_col: str = "event_type",
-    value_col: str = "value",
 ) -> StreamingQuery:
     """Exact two-sample KS drift against a static reference sample,
     maintained incrementally: the stream keeps a running
@@ -93,7 +88,7 @@ def stream_ks_monitor(
     (tests/test_streaming_drift.py pins it).
 
     ``ref_counts``: the reference cohort's per-value counts, columns
-    exactly (group_col, value_col, n_ref) —
+    exactly (event_type, value, n_ref) —
     ``ref.groupBy(group, value).count()`` with ``count`` renamed to
     ``n_ref``. Groups the stream has not reached yet (or reference-only
     groups) are dropped by the combine's n>0 guard, mirroring batch
@@ -101,23 +96,23 @@ def stream_ks_monitor(
     quantized upstream (the statistic is then exact on the quantized
     grid — same contract as batch)."""
     counts = (
-        stream_df.select(group_col, value_col)
-        .where(F.col(value_col).isNotNull())
-        .groupBy(group_col, value_col)
+        stream_df.select("event_type", "value")
+        .where(F.col("value").isNotNull())
+        .groupBy("event_type", "value")
         .count()
     )
 
     def _snapshot(batch_df: DataFrame) -> DataFrame:
         cur = batch_df.withColumnRenamed("count", "n_cur")
-        per_v = ref_counts.join(cur, [group_col, value_col], "full").select(
-            F.col(group_col),
-            F.col(value_col),
+        per_v = ref_counts.join(cur, ["event_type", "value"], "full").select(
+            F.col("event_type"),
+            F.col("value"),
             F.coalesce("n_ref", F.lit(0)).cast("long").alias("n_ref"),
             F.coalesce("n_cur", F.lit(0)).cast("long").alias("n_cur"),
         )
         return ks_from_value_counts(
-            per_v, group_col, value_col, "n_ref", "n_cur",
+            per_v, "event_type", "value", "n_ref", "n_cur",
             a_name="n_ref_total", b_name="n_cur_total",
-        ).orderBy(group_col)
+        ).orderBy("event_type")
 
     return start_grid_rewrite_monitor(counts, out_path, checkpoint_dir, _snapshot)

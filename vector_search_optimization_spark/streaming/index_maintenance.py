@@ -38,7 +38,6 @@ from ..operators import ann
 def stream_append_to_ivf_index(
     stream_df: DataFrame,
     path: str,
-    vector_col: str = "embedding",
     checkpoint: str | None = None,
     trigger_once: bool = False,
 ) -> StreamingQuery:
@@ -55,7 +54,7 @@ def stream_append_to_ivf_index(
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         # no emptiness probe: an empty batch's partitioned write lands no
         # file, so the guard would only cost a job per micro-batch
-        ann.append_to_ivf_index(batch_df, path, vector_col=vector_col)
+        ann.append_to_ivf_index(batch_df, path)
 
     writer = stream_df.writeStream.foreachBatch(_fold).outputMode("append")
     if checkpoint is not None:

@@ -72,23 +72,20 @@ def _joined(v: DataFrame, p: DataFrame, window_seconds: int) -> DataFrame:
 def interval_join_stream(
     view_stream: DataFrame,
     purchase_stream: DataFrame,
-    window_seconds: int = 3600,
     watermark_delay: str = "2 hours",
 ) -> DataFrame:
     """Watermarked stream-stream attribution join: each purchase pairs
-    with the same user's views in the preceding ``window_seconds``.
+    with the same user's views in the preceding hour.
     Both sides carry a watermark so the state store evicts buffered rows
     once they can no longer match (view state is held for watermark +
     window; purchase state for the watermark)."""
     v, p = _sides(view_stream, purchase_stream, watermark_delay)
-    return _joined(v, p, window_seconds)
+    return _joined(v, p, 3600)
 
 
-def interval_join_batch(
-    views: DataFrame, purchases: DataFrame, window_seconds: int = 3600
-) -> DataFrame:
+def interval_join_batch(views: DataFrame, purchases: DataFrame) -> DataFrame:
     """The batch twin — the SAME projection and join condition with no
     watermarks (a bounded input needs no state eviction); the streaming
     result must equal this once both streams drain."""
     v, p = _sides(views, purchases, None)
-    return _joined(v, p, window_seconds)
+    return _joined(v, p, 3600)

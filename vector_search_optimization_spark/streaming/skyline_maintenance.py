@@ -32,18 +32,11 @@ from ..operators.ranking_stats import skyline_survivors_2d, two_phase_skyline
 __all__ = ["merge_skyline"]
 
 
-def merge_skyline(
-    base: DataFrame | None,
-    batch_df: DataFrame,
-    price_col: str = "price_cents",
-    size_col: str = "size",
-) -> DataFrame:
+def merge_skyline(base: DataFrame | None, batch_df: DataFrame) -> DataFrame:
     """Merge one micro-batch's points into the maintained front
     (insert-only — see module docstring): the batch's own two-phase
     front, then one survivors pass over its union with ``base``."""
-    partial = two_phase_skyline(batch_df, price_col, size_col)
+    partial = two_phase_skyline(batch_df)
     if base is None:
         return partial
-    return skyline_survivors_2d(
-        base.select(*batch_df.columns).unionByName(partial), price_col, size_col
-    )
+    return skyline_survivors_2d(base.select(*batch_df.columns).unionByName(partial))

@@ -64,13 +64,12 @@ def read_events_stream(spark: SparkSession, dir_path: str) -> DataFrame:
     return raw
 
 
-def tumbling_window_agg(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Tumbling-window counts/sums per event_type with late-data bound."""
+def tumbling_window_agg(events: DataFrame) -> DataFrame:
+    """1-hour tumbling-window counts/sums per event_type with a 2-hour
+    late-data bound."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_start"),
@@ -81,17 +80,12 @@ def tumbling_window_agg(
     )
 
 
-def sliding_window_agg(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding-window event rate per type (each event lands in
-    window/slide overlapping windows)."""
+def sliding_window_agg(events: DataFrame) -> DataFrame:
+    """Sliding-window event rate per type: 1-hour windows every 15
+    minutes, so each event lands in 4 overlapping windows."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_start"),
@@ -101,15 +95,13 @@ def sliding_window_agg(
     )
 
 
-def sessionized_counts_stream(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
+def sessionized_counts_stream(events: DataFrame) -> DataFrame:
     """Session windows per user via the native session_window operator —
     the streaming twin of the batch lag+cumsum sessionization
     (__spark_entry__.evt_sessions)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -119,16 +111,16 @@ def sessionized_counts_stream(
     )
 
 
-def running_user_stats_stream(events: DataFrame, evict_idle: bool = False) -> DataFrame:
+def running_user_stats_stream(events: DataFrame) -> DataFrame:
     """Custom stateful operator: per-user running event count + value sum,
     emitted per micro-batch via applyInPandasWithState.
 
     The reference has no stateful streaming (SURVEY §2.12); this is the
     engine-extension pattern for operators windowing can't express —
-    arbitrary per-key state. State is one (count, sum) row per user.
-    ``evict_idle=True`` adds ProcessingTimeTimeout eviction for unbounded
-    production streams; the default NoTimeout keeps bounded-backlog runs
-    (tests, reprocessing) deterministic.
+    arbitrary per-key state. State is one (count, sum) row per user and
+    never times out: a ProcessingTimeTimeout state hangs
+    ``processAllAvailable()`` on a bounded backlog, and NoTimeout keeps
+    bounded-backlog runs (tests, reprocessing) deterministic.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -149,16 +141,11 @@ def running_user_stats_stream(events: DataFrame, evict_idle: bool = False) -> Da
     def update(key, pdfs, state: GroupState):
         import pandas as pd
 
-        if state.hasTimedOut:
-            state.remove()
-            return
         n, s = state.get if state.exists else (0, 0.0)
         for pdf in pdfs:
             n += len(pdf)
             s += float(pdf["value"].fillna(0.0).sum())
         state.update((n, s))
-        if evict_idle:
-            state.setTimeoutDuration(3600 * 1000)
         yield pd.DataFrame(
             {"user_id": [key[0]], "n_events": [n], "sum_value": [round(s, 4)]}
         )
@@ -168,11 +155,7 @@ def running_user_stats_stream(events: DataFrame, evict_idle: bool = False) -> Da
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if evict_idle
-            else GroupStateTimeout.NoTimeout
-        ),
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -254,9 +237,7 @@ def asof_click_purchase_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def first_seen_dedup_stream(
-    df: DataFrame, fingerprint_col: str = "fp", id_col: str = "event_id"
-) -> DataFrame:
+def first_seen_dedup_stream(df: DataFrame) -> DataFrame:
     """Streaming exact dedup: emit each content fingerprint's FIRST
     occurrence, drop every later duplicate — one boolean of state per
     distinct fingerprint, the stream twin of the batch
@@ -270,8 +251,8 @@ def first_seen_dedup_stream(
 
     out_schema = T.StructType(
         [
-            T.StructField(fingerprint_col, T.LongType()),
-            T.StructField(id_col, T.LongType()),
+            T.StructField("fp", T.LongType()),
+            T.StructField("event_id", T.LongType()),
         ]
     )
     state_schema = T.StructType([T.StructField("seen", T.ByteType())])
@@ -281,15 +262,13 @@ def first_seen_dedup_stream(
 
         pdf = pd.concat(list(pdfs), ignore_index=True)
         if state.exists or pdf.empty:
-            yield pd.DataFrame({fingerprint_col: [], id_col: []})
+            yield pd.DataFrame({"fp": [], "event_id": []})
             return
         state.update((1,))
-        first = pdf[id_col].min()
-        yield pd.DataFrame(
-            {fingerprint_col: [key[0]], id_col: [int(first)]}
-        )
+        first = pdf["event_id"].min()
+        yield pd.DataFrame({"fp": [key[0]], "event_id": [int(first)]})
 
-    return df.groupBy(fingerprint_col).applyInPandasWithState(
+    return df.groupBy("fp").applyInPandasWithState(
         update,
         outputStructType=out_schema,
         stateStructType=state_schema,
