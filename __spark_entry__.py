@@ -3492,7 +3492,7 @@ _M4_D2 = (
 _M4_SQL = f"""
 WITH RECURSIVE
 pts AS (SELECT vec_id, embedding FROM embeddings),
-neigh AS (
+neigh AS MATERIALIZED (
     SELECT a.vec_id AS src, b.vec_id AS dst
     FROM pts a JOIN pts b ON a.vec_id <> b.vec_id
     WHERE sqrt({_M4_D2}) <= {_M4_EPS}
@@ -4132,22 +4132,13 @@ FROM documents GROUP BY 1, 2
 # ---------------------------------------------------------------------------
 
 def evt_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour windows per event_type (batch twin of the streaming
-    plan in streaming/windows.py; window start exported as epoch seconds)."""
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
+    """Tumbling 1-hour windows per event_type: the streaming plan of
+    streaming/windows.py run over the batch table (the optimizer drops
+    the watermark from a batch plan; window start exported as epoch
+    seconds)."""
+    from vector_search_optimization_spark.streaming import windows as SW
+
+    return SW.tumbling_window_agg(load_table(spark, sf_dir, "events"))
 
 
 _EVT_WINDOW_SQL = """
@@ -4197,17 +4188,11 @@ GROUP BY ROLLUP(event_type, hour_start)
 
 def evt_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows (1h length, 15m slide): each event lands in 4
-    overlapping windows (streaming/windows.py sliding_window_agg batch twin)."""
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            "event_type",
-            "n",
-        )
-    )
+    overlapping windows (streaming/windows.py sliding_window_agg over the
+    batch table)."""
+    from vector_search_optimization_spark.streaming import windows as SW
+
+    return SW.sliding_window_agg(load_table(spark, sf_dir, "events"))
 
 
 _EVT_SLIDING_SQL = """
@@ -9559,10 +9544,8 @@ def zorder_events_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets) the row count and BOTH dimensions' min/max — demonstrating
     the property zone-map pruning relies on: every bucket covers a
     narrow range of EVERY interleaved column simultaneously (a
-    single-column sort gives this for one column only). The physical
-    write path (one range shuffle + partition-local sort) and the
-    footer-level pruning effectiveness are pinned in
-    tests/test_layout.py. All-integer exports."""
+    single-column sort gives this for one column only). All-integer
+    exports."""
     from vector_search_optimization_spark.operators import layout as LO
 
     e = load_table(spark, sf_dir, "events").where(F.col("value").isNotNull())
@@ -17350,7 +17333,7 @@ def _jl_signs() -> list[list[int]]:
 def emb_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss distance-preservation audit of the ±1
     random projection 64→16 — the measurement behind the RP blocking
-    step in dedup.embedding_near_duplicates and every
+    step (ann.random_projection_buckets) and every
     reduced-dimension prefilter: over all CONSECUTIVE vec_id pairs
     (deterministic, a linear pass — no sampling), the distortion ratio
     |R(u−v)|²/(k·|u−v|²) (unbiased for ±1 entries at k = 16 rows)
@@ -22476,6 +22459,14 @@ _CHANGED_SINCE_AUDIT: tuple[str, ...] = (
     # oracle text changed: the shared all-pairs distance CTE is
     # MATERIALIZED (DuckDB inlined it at each of its 12 references)
     "m4_grid_sweep",
+    # oracle text changed: the neigh CTE is MATERIALIZED (DuckDB inlined
+    # it at each of its three references)
+    "m4_dbscan_stats",
+    # the band explode reads the batch signatures unpersisted
+    "incremental_corpus_dedup",
+    # built by the streaming window aggregates over the batch table
+    "evt_tumbling_window",
+    "evt_sliding_window",
 )
 
 

@@ -6,7 +6,9 @@ shaped like the thesis corpus (FIXTURES.md F1).
 F2 centroids: the 12 true generator centers, both parquet-shaped (array)
 and CSV-shaped ("[f, f, ...]" strings).
 
-Also ``jobs_in_group``, the Spark-job counter the job-count pins share.
+Also ``jobs_in_group``, the Spark-job counter the job-count pins share,
+and ``run_stream_to_memory``, the harness the streaming tests drive a
+bounded stream through.
 """
 
 from __future__ import annotations
@@ -84,3 +86,19 @@ def jobs_in_group(spark, group: str, build) -> tuple:
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return list(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def run_stream_to_memory(stream_df, name: str, output_mode: str = "append"):
+    """Drive a bounded stream to completion into an in-memory table and
+    return it as a DataFrame."""
+    q = (
+        stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return stream_df.sparkSession.sql(f"SELECT * FROM {name}")

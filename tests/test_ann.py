@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.functions import vector as V
 from vector_search_optimization_spark.operators import ann
+from vector_search_optimization_spark.session import bounded_collect
 from vector_search_optimization_spark.sources import load_table
 from tests.fixtures import jobs_in_group
 
@@ -40,6 +41,23 @@ def test_ivf_recall_at_10(emb):
     # full probe = exact
     full = {r.vec_id for r in ann.ivf_topk(idx, cents, q, nprobe=16).collect()}
     assert full == exact
+
+
+def test_bounded_collect_materializes_once_and_leaves_no_cache(spark, sf_small):
+    """The bounded driver fetch train_ivf_centroids trains on: the limited
+    frame is counted into the cache and collected from it. That is 3 jobs
+    on this scan, the count train_ivf_centroids' own fetch fired before it
+    called the helper (a bare limit(N).collect() fires 1), and nothing
+    stays persisted."""
+    src = load_table(spark, sf_small, "embeddings").select("embedding")
+    cached = spark.sparkContext._jsc.getPersistentRDDs()
+    before = set(cached.keySet())
+    jobs, rows = jobs_in_group(
+        spark, "bounded_collect", lambda: bounded_collect(src, 100_000)
+    )
+    assert len(rows) == src.count()
+    assert len(jobs) == 3
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == before
 
 
 def test_all_pairs_distributed_equals_kernel(emb):
@@ -805,40 +823,6 @@ def test_stream_micro_batch_fires_one_spark_job(spark, emb, tmp_path):
     assert q.recentProgress[0]["numInputRows"] == new.count()
     indexed, _ = ann.load_ivf_index(spark, path)
     assert indexed.count() == emb.count()
-
-
-def test_recall_at_k_harness(spark, emb):
-    """recall_at_k: 1.0 against itself, correct fraction on a planted
-    overlap, 0.0 on an empty exact set."""
-    q = emb.orderBy("vec_id").first().embedding
-    exact = ann.brute_force_topk(emb, q)
-    assert ann.recall_at_k(exact, exact) == 1.0
-    far = (
-        emb.orderBy(F.col("vec_id").desc())
-        .limit(5)
-        .select("vec_id", F.lit(0.0).alias(exact.columns[1]))
-    )
-    half = exact.limit(5).union(far)
-    r = ann.recall_at_k(half, exact)
-    assert 0.4 <= r <= 0.7  # 5 guaranteed hits, tail may overlap
-    empty = exact.where(F.lit(False))
-    assert ann.recall_at_k(exact, empty) == 0.0
-
-
-def test_ivf_cell_stats_flags_imbalance(spark, emb):
-    """Even assignment ~ imbalance near 1; piling everything into one
-    cell drives imbalance to n_cells."""
-    cents = ann.train_ivf_centroids(emb, num_cells=8)
-    assigned = ann.assign_ivf_cells(emb, cents)
-    st = ann.ivf_cell_stats(assigned)
-    assert st["n_cells"] >= 2
-    assert st["min"] >= 1 and st["max"] >= st["min"]
-    assert 1.0 <= st["imbalance"] < st["n_cells"]
-    skew = assigned.withColumn("cell", F.lit(0))
-    st2 = ann.ivf_cell_stats(skew)
-    assert st2["n_cells"] == 1 and st2["imbalance"] == 1.0
-    empty = assigned.where(F.lit(False))
-    assert ann.ivf_cell_stats(empty)["n_cells"] == 0
 
 
 def test_matryoshka_rerank_full_equals_exact(spark, emb):

@@ -98,14 +98,6 @@ def test_silhouette_distributed_sampled_close(blobs):
     assert s1 == pytest.approx(full, abs=0.05)
 
 
-def test_k_sweep_prefers_true_k(blobs):
-    sweep = C.k_sweep(blobs, ks=range(2, 6), max_iter=50, silhouette_sample=None)
-    best = max(sweep, key=lambda r: r["silhouette"])
-    assert best["k"] == 3
-    inertias = [r["inertia"] for r in sweep]
-    assert all(a >= b - 1e-6 for a, b in zip(inertias, inertias[1:]))  # monotone
-
-
 def test_fit_and_evaluate_harness(blobs):
     """M5 — the reference's timing harness shape (mean±std over seeded runs
     + silhouette, nuevo-kmeans-pre.ipynb:284 c14)."""

@@ -29,13 +29,6 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string").cache()
 
 
-def test_exact_duplicates_groups(docs):
-    groups = dedup.exact_duplicates(docs).collect()
-    assert len(groups) == 1
-    assert sorted(groups[0].members) == [0, 1, 2]
-    assert groups[0].keeper == 0
-
-
 def test_dedup_exact_keeps_min_id(docs):
     kept = {r.doc_id for r in dedup.dedup_exact(docs).collect()}
     assert kept == {0, 3, 4, 5}
@@ -101,24 +94,6 @@ def test_ngram_jaccard_verification(docs, spark):
     assert j[(0, 1)] == pytest.approx(1.0)
     assert j[(0, 3)] > 0.8
     assert j[(0, 4)] < 0.2
-
-
-def test_embedding_near_duplicates_with_rp_blocking(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    base = rng.normal(size=32)
-    rows = [
-        (0, (base / np.linalg.norm(base)).tolist()),
-        (1, (base / np.linalg.norm(base) + 1e-3).tolist()),   # near dup
-        (2, rng.normal(size=32).tolist()),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    bucketed = ann.random_projection_buckets(df, num_planes=4)
-    pairs = dedup.embedding_near_duplicates(
-        bucketed, threshold=0.99, group_col="rp_bucket"
-    ).collect()
-    assert {(r.id_a, r.id_b) for r in pairs} == {(0, 1)}
 
 
 def test_canonical_groups_merge_transitive_chain(spark):
@@ -443,7 +418,6 @@ def test_incremental_probe_append_consistency(spark, sf_small):
     import shutil
 
     from vector_search_optimization_spark.sources import load_table
-    from vector_search_optimization_spark.sources.writers import write_bucketed
 
     d = load_table(spark, sf_small, "documents").select("doc_id", "text")
     corpus = d.where(F.col("doc_id") % 5 > 1)
@@ -465,9 +439,9 @@ def test_incremental_probe_append_consistency(spark, sf_small):
     try:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         shutil.rmtree(f"spark-warehouse/{tbl}", ignore_errors=True)
-        write_bucketed(
-            bands_of(corpus), tbl, "bucket", 8, sort_col="bucket"
-        )
+        bands_of(corpus).write.format("parquet").mode("overwrite").bucketBy(
+            8, "bucket"
+        ).sortBy("bucket").saveAsTable(tbl)
         got1 = {
             (r.id_a, r.id_b)
             for r in dedup.minhash_probe_corpus(
@@ -478,10 +452,9 @@ def test_incremental_probe_append_consistency(spark, sf_small):
         assert got1  # the synthetic corpus must actually produce candidates
 
         # nightly append: batch1's band rows enter the index
-        write_bucketed(
-            bands_of(batch1), tbl, "bucket", 8, sort_col="bucket",
-            mode="append",
-        )
+        bands_of(batch1).write.format("parquet").mode("append").bucketBy(
+            8, "bucket"
+        ).sortBy("bucket").saveAsTable(tbl)
         got2 = {
             (r.id_a, r.id_b)
             for r in dedup.minhash_probe_corpus(

@@ -13,6 +13,7 @@ from vector_search_optimization_spark.plans import (
     cluster_label_pipeline,
 )
 from vector_search_optimization_spark.sources import load_table
+from tests.fixtures import run_stream_to_memory
 
 
 # --- graph -------------------------------------------------------------------
@@ -150,7 +151,7 @@ def test_streaming_matches_batch_tumbling(spark, sf_small):
     ev = S.read_events_stream(spark, sf_small)
     # complete mode: append would (correctly) withhold windows the
     # watermark hasn't closed when the bounded backlog ends
-    got = S.run_stream_to_memory(
+    got = run_stream_to_memory(
         S.tumbling_window_agg(ev), "t_tumbling", output_mode="complete"
     ).toPandas()
     want = m.queries()["evt_tumbling_window"](spark, sf_small).toPandas()
@@ -165,7 +166,7 @@ def test_streaming_session_windows(spark, sf_small):
     from vector_search_optimization_spark import streaming as S
 
     ev = S.read_events_stream(spark, sf_small)
-    got = S.run_stream_to_memory(
+    got = run_stream_to_memory(
         S.sessionized_counts_stream(ev),
         "t_sessions",
         output_mode="complete",
@@ -182,7 +183,7 @@ def test_streaming_asof_matches_batch(spark, sf_small):
     import __spark_entry__ as m
 
     ev = S.read_events_stream(spark, sf_small)
-    rows = S.run_stream_to_memory(S.asof_click_purchase_stream(ev), "t_asof")
+    rows = run_stream_to_memory(S.asof_click_purchase_stream(ev), "t_asof")
     got = rows.agg(
         F.count(F.lit(1)).alias("n_purchases"),
         F.count("lag_s").alias("n_matched"),
@@ -205,7 +206,7 @@ def test_stateful_running_user_stats(spark, sf_small):
     from vector_search_optimization_spark import streaming as S
 
     ev = S.read_events_stream(spark, sf_small)
-    got = S.run_stream_to_memory(
+    got = run_stream_to_memory(
         S.running_user_stats_stream(ev), "t_stateful", output_mode="update"
     ).toPandas()
     # one bounded backlog → one micro-batch → final running totals match batch
@@ -262,15 +263,6 @@ def test_frame_sample_plan(assets):
     assert [(r.frame_idx, r.frame_ts_ms) for r in frames] == [(0, 0), (1, 1000), (2, 2000), (3, 3000)]
 
 
-def test_not_implemented_decoder_raises(assets):
-    import pytest as _pytest
-
-    with _pytest.raises(Exception):
-        multimodal.extract_features(
-            assets, decoder=multimodal.not_implemented_decode
-        ).collect()
-
-
 def test_events_replay_custom_streaming_source(spark, sf_small):
     """The Python DataSource stream reader replays the events table in
     bounded micro-batches; a streaming count over it must equal the
@@ -289,7 +281,7 @@ def test_events_replay_custom_streaming_source(spark, sf_small):
         .option("rows_per_batch", "300")  # 1000 rows → 4 micro-batches
         .load()
     )
-    got = S.run_stream_to_memory(
+    got = run_stream_to_memory(
         ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")),
         "t_replay",
         output_mode="complete",
@@ -331,7 +323,7 @@ def test_streaming_first_seen_dedup_matches_batch(spark, sf_small):
     )
     got = {
         (r.fp, r.event_id)
-        for r in S.run_stream_to_memory(
+        for r in run_stream_to_memory(
             S.first_seen_dedup_stream(ev), "t_dedup"
         ).collect()
     }

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import heavy_hitters as HH
 from vector_search_optimization_spark.sources import load_table
+from tests.fixtures import run_stream_to_memory
 
 
 def _planted(spark, n_noise=3000, n_hot=400, parts=7):
@@ -103,7 +104,7 @@ def test_streaming_monitor_brackets_counts_and_bounds_state(spark, sf_small):
         .option("rows_per_batch", "300")
         .load()
     )
-    out = S.run_stream_to_memory(
+    out = run_stream_to_memory(
         S.heavy_hitter_monitor_stream(ev, "user_id", phi, n_shards=n_shards),
         "t_hh_user",
         output_mode="update",
@@ -145,7 +146,7 @@ def test_streaming_monitor_candidates_superset_then_verify_equals_batch(
         .option("rows_per_batch", "300")
         .load()
     )
-    out = S.run_stream_to_memory(
+    out = run_stream_to_memory(
         S.heavy_hitter_monitor_stream(ev, "event_type", 0.1, n_shards=2),
         "t_hh_type",
         output_mode="update",

@@ -5,11 +5,14 @@ the seeded hash kernel since no model ships in the container)."""
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.functions import text as TX
-from vector_search_optimization_spark.functions import vector as V
 from vector_search_optimization_spark.operators import ann
 from vector_search_optimization_spark.sources import converters as CV
 
@@ -21,6 +24,28 @@ PARAGRAPH = (
     "at the hundred terabyte scale every extra pass over the corpus is "
     "real money and real hours on the cluster clock"
 )
+
+
+def hash_embedding(col: str):
+    """Deterministic text-embedding stand-in (Arrow-batched): the
+    unit-normalised 16-dim gaussian vector drawn from a RNG keyed by
+    (seed 42, utf-8 text hash). Identical text gives an identical
+    vector, so the index and probe steps can assert exact behavior."""
+
+    @F.pandas_udf("array<float>")
+    def _embed(s: pd.Series) -> pd.Series:
+        out = []
+        for text in s:
+            digest = hashlib.sha256(b"42:" + (text or "").encode("utf-8")).digest()
+            rng = np.random.RandomState(
+                int.from_bytes(digest[:4], "big") % (2**31 - 1)
+            )
+            v = rng.standard_normal(16)
+            n = float(np.linalg.norm(v))
+            out.append((v / n if n else v).astype(np.float32))
+        return pd.Series(out)
+
+    return _embed(F.col(col))
 
 
 @pytest.fixture(scope="module")
@@ -62,7 +87,7 @@ def test_end_to_end_ingest_convert_chunk_embed_index_probe(
 
     # 3. embed: deterministic surrogate kernel
     embedded = chunks.withColumn(
-        "embedding", V.hash_embedding_kernel("chunk_text")
+        "embedding", hash_embedding("chunk_text")
     ).persist()
     assert embedded.where(F.size("embedding") != 16).count() == 0
 
@@ -83,7 +108,7 @@ def test_end_to_end_ingest_convert_chunk_embed_index_probe(
     # 6. and the same text re-embedded independently lands in the same
     #    cell (determinism across jobs -- the incremental-append contract)
     re_embedded = chunks.where(F.col("chunk_id") == target.chunk_id).withColumn(
-        "embedding", V.hash_embedding_kernel("chunk_text")
+        "embedding", hash_embedding("chunk_text")
     )
     re_cell = ann.assign_ivf_cells(re_embedded, loaded_cents).first()
     orig_cell = (

@@ -7,7 +7,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from vector_search_optimization_spark.operators import ann, dedup
+from vector_search_optimization_spark.functions import vector as V
+from vector_search_optimization_spark.operators import ann
 from vector_search_optimization_spark.operators import similarity as SIM
 from vector_search_optimization_spark.sources import load_table
 
@@ -61,8 +62,12 @@ def test_intra_group_pairs_kernel_min_sim_pushdown(emb):
 
 def test_all_pairs_topk_matches_crossjoin(emb):
     kern = ann.all_pairs_topk(emb, k=15).toPandas()
+    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     decl = (
-        dedup.embedding_near_duplicates(emb, threshold=-1.0)
+        a.crossJoin(b)
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", F.round(V.cosine_similarity("va", "vb"), 6).alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), "id_a", "id_b")
         .limit(15)
         .toPandas()
@@ -102,8 +107,8 @@ def test_rp_table_buckets_kernel_matches_expression(spark, sf_small):
 
 def test_word_gram_stats_kernel_matches_expression(spark, sf_small):
     """word_gram_stats_expr (map-side Arrow kernel) must reproduce the
-    declarative explode-word_ngrams → two-groupBy formulation plus
-    dup_word_fraction's word counts exactly — on real documents AND the
+    declarative explode-word_ngrams → two-groupBy formulation plus the
+    word and distinct-word counts exactly — on real documents AND the
     edge cases (empty, single word, all-repeated, NULL, exotic
     whitespace that Java \\s does not split on)."""
     from vector_search_optimization_spark.functions import text as TX

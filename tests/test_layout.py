@@ -1,15 +1,8 @@
-"""Z-order layout: the Morton key must equal a pure-python interleave,
-and a z-ordered parquet write must give every interleaved column a
-narrow per-file min/max span (the zone-map pruning property), which a
-single-column sort provably does not."""
+"""Z-order layout: the Morton key must equal a pure-python interleave."""
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import pytest
-from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.operators import layout as LO
 
@@ -37,84 +30,3 @@ def test_z_value_matches_python_interleave(spark):
 def test_z_value_rejects_long_overflow(spark):
     with pytest.raises(ValueError):
         LO.z_value(["a", "b"], bits=32)
-
-
-@pytest.fixture()
-def tmpdir():
-    root = tempfile.mkdtemp(prefix="layout_")
-    yield root
-    shutil.rmtree(root, ignore_errors=True)
-
-
-def _per_file_spans(path: str, col: str) -> list[int]:
-    """Per-file (max - min) span of ``col`` straight from the parquet
-    footers — what a zone-map pruner sees."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    spans = []
-    for f in sorted(glob.glob(f"{path}/*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        lo, hi = None, None
-        idx = md.schema.to_arrow_schema().get_field_index(col)
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-        spans.append(hi - lo)
-    return spans
-
-
-def test_zorder_write_narrows_both_dimensions(spark, tmpdir):
-    # 64x64 grid, one row per cell — both dims uniform over [0, 64)
-    grid = (
-        spark.range(64 * 64)
-        .select(
-            (F.col("id") % 64).alias("x"),
-            (F.col("id") / 64).cast("long").alias("y"),
-        )
-        # shuffle the input so the writer, not the generator, must
-        # create the locality
-        .orderBy(F.shiftright(F.xxhash64("id"), 3))
-    )
-    zpath = f"{tmpdir}/zorder"
-    spath = f"{tmpdir}/xsort"
-    LO.zorder_write(grid, ["x", "y"], zpath, bits=6, num_files=16)
-    (
-        grid.repartitionByRange(16, "x")
-        .sortWithinPartitions("x")
-        .write.mode("overwrite")
-        .parquet(spath)
-    )
-
-    # content round-trips
-    assert spark.read.parquet(zpath).count() == 64 * 64
-
-    z_x = _per_file_spans(zpath, "x")
-    z_y = _per_file_spans(zpath, "y")
-    s_y = _per_file_spans(spath, "y")
-    # z-order: BOTH dims narrow per file (16 files over a 64x64 grid
-    # → each file is a 16x16 z-block: span 15)
-    assert max(z_x) <= 31 and max(z_y) <= 31
-    # x-sort: y is unconstrained — every file spans (almost) all of y
-    assert min(s_y) >= 48
-    # and a two-dimensional zone-map prune keeps only a corner of the
-    # z-ordered files: count files whose footer could contain the box
-    import glob
-
-    import pyarrow.parquet as pq
-
-    def files_matching(path, xlo, xhi, ylo, yhi):
-        n = 0
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            sch = md.schema.to_arrow_schema()
-            stx = md.row_group(0).column(sch.get_field_index("x")).statistics
-            sty = md.row_group(0).column(sch.get_field_index("y")).statistics
-            if stx.min <= xhi and stx.max >= xlo and sty.min <= yhi and sty.max >= ylo:
-                n += 1
-        return n
-
-    assert files_matching(zpath, 0, 7, 0, 7) <= 4
-    assert files_matching(spath, 0, 7, 0, 7) >= 2  # x prunes, y can't

@@ -102,10 +102,25 @@ def test_cooccurrence_edges(spark):
     assert got == {(1, 2): 2, (1, 3): 1, (2, 3): 1}
 
 
+def _group_vector_mean_posexplode(df, group_col, vector_col):
+    """Declarative formulation: posexplode + avg + ordered re-collect."""
+    exploded = df.select(
+        group_col,
+        F.posexplode(F.col(vector_col).cast("array<double>")).alias("__pos", "__val"),
+    )
+    return (
+        exploded.groupBy(group_col, "__pos")
+        .agg(F.avg("__val").alias("__m"))
+        .groupBy(group_col)
+        .agg(F.array_sort(F.collect_list(F.struct("__pos", "__m"))).alias("__s"))
+        .select(group_col, F.transform(F.col("__s"), lambda x: x["__m"]).alias("centroid"))
+    )
+
+
 def test_group_vector_mean_both_paths(spark):
     rows = [("a", [1.0, 2.0]), ("a", [3.0, 4.0]), ("b", [5.0, 6.0])]
     df = spark.createDataFrame(rows, "g string, v array<float>")
-    for fn in (VA.group_vector_mean, VA.group_vector_mean_posexplode):
+    for fn in (VA.group_vector_mean, _group_vector_mean_posexplode):
         got = {r.g: r.centroid for r in fn(df, "g", "v").collect()}
         assert got["a"] == pytest.approx([2.0, 3.0])
         assert got["b"] == pytest.approx([5.0, 6.0])

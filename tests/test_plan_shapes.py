@@ -279,48 +279,6 @@ def test_doc_chunking_is_map_only(spark, sf_small):
     assert "Generate" in plan  # the posexplode
 
 
-def test_bucketed_tables_join_without_exchange(spark, sf_small):
-    """Two tables bucketed identically on the join key must sort-merge
-    join with ZERO Exchange — the write-once-join-many layout for
-    join-heavy keys (SCALING.md). This is the plan contract bucketing
-    exists for; an Exchange appearing here means the bucket metadata was
-    lost and every downstream join re-pays the shuffle."""
-    import shutil
-
-    from vector_search_optimization_spark.sources.writers import write_bucketed
-
-    docs = load_table(spark, sf_small, "documents")
-    try:
-        # a killed previous run can leave unregistered table directories
-        # behind; saveAsTable refuses an existing location
-        spark.sql("DROP TABLE IF EXISTS bkt_docs_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_docs_b")
-        shutil.rmtree("spark-warehouse/bkt_docs_a", ignore_errors=True)
-        shutil.rmtree("spark-warehouse/bkt_docs_b", ignore_errors=True)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed(
-            docs.select("doc_id", "lang"), "bkt_docs_a", "doc_id", 8,
-            sort_col="doc_id",
-        )
-        write_bucketed(
-            docs.select("doc_id", "text"), "bkt_docs_b", "doc_id", 8,
-            sort_col="doc_id",
-        )
-        a = spark.table("bkt_docs_a")
-        b = spark.table("bkt_docs_b")
-        joined = a.join(b, "doc_id")
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan          # the whole point
-        assert joined.count() == docs.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_docs_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_docs_b")
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        shutil.rmtree("spark-warehouse/bkt_docs_a", ignore_errors=True)
-        shutil.rmtree("spark-warehouse/bkt_docs_b", ignore_errors=True)
-
-
 def test_rollup_is_single_pass_expand(spark, sf_small):
     """The three report granularities must compile to ONE Expand + one
     partial/final aggregate pair — not three scans/jobs."""

@@ -6,6 +6,8 @@
 - No module defines the same top-level name twice: Python keeps only the
   last binding, so the first is silently dead (a test that never runs, a
   function that is never called).
+- Every top-level function and class of the program is reached from a
+  root: code that only tests call is an API half nobody runs.
 """
 
 from __future__ import annotations
@@ -173,3 +175,149 @@ def test_no_top_level_name_is_defined_twice():
                 dupes.append(f"  {_module(path)}.{name}: L{seen[name]} and L{line}")
             seen.setdefault(name, line)
     assert not dupes, "defined twice (only the last one exists):\n" + "\n".join(dupes)
+
+
+# --- reachability -------------------------------------------------------------
+#
+# Roots: the module-level code of __spark_entry__.py (``_QUERIES`` holds
+# every query builder and oracle generator), bench.py, tools/, perfbench/
+# and the three lists below, which are kept here and nowhere else. A name
+# resolves by spelling: a bare name, an attribute or an imported name that
+# matches a top-level definition reaches every definition so named, so the
+# walk over-reaches rather than misses a caller. A package ``__init__``
+# re-export and a module's ``__all__`` reach nothing.
+
+ENTRY = ROOT / "__spark_entry__.py"
+SCRIPTS = [
+    ROOT / "bench.py",
+    *sorted((ROOT / "tools").rglob("*.py")),
+    *sorted(FROZEN.rglob("*.py")),
+]
+
+# The streaming surface: monitor starters, the merges a maintained table
+# is folded with, and the stream sources they read. A registry query
+# returns a batch frame, so only tests start these.
+STREAMING = [
+    "read_events_stream",
+    "sessionized_counts_stream",
+    "running_user_stats_stream",
+    "asof_click_purchase_stream",
+    "first_seen_dedup_stream",
+    "register_replay_source",
+    "heavy_hitter_monitor_stream",
+    "interval_join_stream",
+    "stream_dedup_against_corpus",
+    "read_documents_stream",
+    "stream_curate_to_parquet",
+    "stream_maintain_table",
+    "merge_counts",
+    "merge_bitmaps",
+    "merge_skyline",
+    "actives_from_bitmap_table",
+    "stream_drawdown_monitor",
+    "stream_psi_monitor",
+    "stream_ks_monitor",
+    "start_daily_cents_monitor",
+]
+# Reference twins: the plain formulation an operator is checked against,
+# with the test file that compares them.
+TWINS = {
+    "minhash_signatures": "tests/test_dedup.py",
+    "simhash": "tests/test_dedup.py",
+    "intra_group_pairs": "tests/test_kernel_equivalence.py",
+    "nearest_centroid_crossjoin": "tests/test_nearest_centroid.py",
+    "dbscan_kernel": "tests/test_outliers_dbscan.py",
+    "all_pairs_topk": "tests/test_ann.py",
+    "rp_table_buckets": "tests/test_kernel_equivalence.py",
+    "_loo_knn_pair_join": "tests/test_r10_ops.py",
+    "word_ngrams": "tests/test_kernel_equivalence.py",
+    "interval_join_batch": "tests/test_streaming_joins.py",
+}
+# The only cover of a SURVEY.md step (COVERAGE.md names it there).
+SURVEY_COVER = {
+    "register_xlsx_source": "S6 Excel scan, executor-side",
+    "write_upsert": "S11 keyed upsert sink",
+    "fit_and_evaluate": "M5 timing harness",
+    "umap_project": "M11 UMAP",
+    "SearchIndex": "the search-client surface of SURVEY.md section 1.1",
+}
+LISTED = [*STREAMING, *TWINS, *SURVEY_COVER]
+
+
+def _program_graph() -> tuple[dict[str, list[ast.AST]], list[ast.AST]]:
+    """(name -> the top-level nodes that define it, root nodes)."""
+    defs: dict[str, list[ast.AST]] = defaultdict(list)
+    roots: list[ast.AST] = [_parse(p) for p in SCRIPTS]
+    for path in PROGRAM:
+        if path.name == "__init__.py":
+            continue
+        for node in _parse(path).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs[node.name].append(node)
+            elif path == ENTRY:
+                roots.append(node)
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                for t in targets:
+                    for n in ast.walk(t):
+                        if isinstance(n, ast.Name) and n.id != "__all__":
+                            defs[n.id].append(node)
+    return defs, roots
+
+
+def _names(node: ast.AST) -> set[str]:
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+    return out
+
+
+def _reached(defs, roots: list[ast.AST], names: list[str]) -> set[str]:
+    todo = [n for r in roots for n in _names(r) if n in defs] + list(names)
+    seen: set[str] = set()
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        for node in defs[name]:
+            todo.extend(n for n in _names(node) if n in defs and n not in seen)
+    return seen
+
+
+def _top_level_defs() -> list[tuple[str, str, int]]:
+    return [
+        (_module(path), node.name, node.end_lineno - node.lineno + 1)
+        for path in PROGRAM
+        for node in _parse(path).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+    ]
+
+
+def test_every_definition_is_reached_from_a_root():
+    defs, roots = _program_graph()
+    seen = _reached(defs, roots, LISTED)
+    dead = [f"  {m}.{n} ({lines} lines)" for m, n, lines in _top_level_defs() if n not in seen]
+    assert not dead, (
+        f"{len(dead)} top-level definitions no root reaches; delete each, "
+        "or call it from the query that computes the same thing:\n" + "\n".join(dead)
+    )
+
+
+def test_root_lists_name_live_unreached_code():
+    defs, roots = _program_graph()
+    defined = {n for _, n, _ in _top_level_defs()}
+    from_program = _reached(defs, roots, [])
+    stale = [f"  {n}: not defined" for n in LISTED if n not in defined]
+    stale += [f"  {n}: a non-list root reaches it" for n in LISTED if n in from_program]
+    stale += [
+        f"  {n}: {test} no longer names it"
+        for n, test in TWINS.items()
+        if n not in _names(_parse(ROOT / test))
+    ]
+    assert not stale, "stale root-list entries:\n" + "\n".join(stale)

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -13,13 +12,9 @@ from vector_search_optimization_spark.sources import (
     read_centroids_csv,
     read_chunks,
     write_csv,
-    write_parquet,
     write_upsert,
 )
-from vector_search_optimization_spark.sources.readers import (
-    read_excel,
-    read_json_index_dump,
-)
+from vector_search_optimization_spark.sources.readers import read_excel
 from vector_search_optimization_spark.sources.writers import write_excel
 
 
@@ -38,23 +33,6 @@ def test_centroids_csv_roundtrip(spark, tmp_path):
     assert rows[1].etiqueta == "Etiqueta 1"
 
 
-def test_read_json_index_dump_nulls(spark, tmp_path):
-    """S2/S4 + P8: null content_vector records survive the scan (the
-    null-drop filter is the caller's explicit step)."""
-    p = tmp_path / "dump.json"
-    recs = [
-        {"id": "a", "document_id": "d1", "content_vector": [1.0, 2.0],
-         "document_path": "/x/a.pdf", "etiqueta_cluster": None},
-        {"id": "b", "document_id": "d1", "content_vector": None,
-         "document_path": "/x/b.pdf", "etiqueta_cluster": None},
-    ]
-    p.write_text("\n".join(json.dumps(r) for r in recs))
-    df = read_json_index_dump(spark, str(p))
-    assert df.count() == 2
-    assert df.where(F.col("content_vector").isNotNull()).count() == 1
-    assert "etiqueta_cluster" in df.columns
-
-
 def test_read_chunks_pinned_schema(spark, tmp_path):
     path = str(tmp_path / "chunks_parquet")
     df = spark.createDataFrame(
@@ -62,7 +40,7 @@ def test_read_chunks_pinned_schema(spark, tmp_path):
           [0.1, 0.2], "/p", "n", None, None, None, 3)],
         schemas.CHUNKS,
     )
-    write_parquet(df, path)
+    df.write.parquet(path)
     back = read_chunks(spark, path)
     # same names+types (nullability is storage-dependent after a roundtrip)
     assert [(f.name, f.dataType) for f in back.schema.fields] == [

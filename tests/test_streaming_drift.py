@@ -11,6 +11,23 @@ from vector_search_optimization_spark.sources import load_table
 from vector_search_optimization_spark.streaming.drift import stream_psi_monitor
 
 
+def reference_profile(df):
+    """(range, bucket_counts) of a reference cohort: the one-row
+    [lo, hi] frame and the (group, bucket, n_ref) counts the PSI monitor
+    compares its stream against."""
+    rng = df.agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
+    counts = (
+        df.join(F.broadcast(rng))
+        .select(
+            "event_type",
+            DR.bucketize("value", F.col("lo"), F.col("hi")).alias("bucket"),
+        )
+        .groupBy("event_type", "bucket")
+        .agg(F.count(F.lit(1)).alias("n_ref"))
+    )
+    return rng, counts
+
+
 def test_stream_psi_equals_batch(spark, sf_small, tmpdirs):
     events = load_table(spark, sf_small, "events").select(
         "event_id", "event_type", "value"
@@ -23,7 +40,7 @@ def test_stream_psi_equals_batch(spark, sf_small, tmpdirs):
     }
 
     ref = events.where(is_ref)
-    rng, ref_counts = DR.reference_profile(ref)
+    rng, ref_counts = reference_profile(ref)
     lo, hi = rng.first()
 
     # current cohort arrives as TWO drop-zone files (late second batch)
@@ -77,7 +94,7 @@ def test_stream_psi_survives_novel_group(spark, tmpdirs):
     ref = spark.createDataFrame(
         [("known", float(v)) for v in range(10)], "event_type string, value double"
     )
-    rng, ref_counts = DR.reference_profile(ref)
+    rng, ref_counts = reference_profile(ref)
     lo, hi = rng.first()
 
     drop = f"{tmpdirs}/drop2"

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from vector_search_optimization_spark.functions import text as TX
 
@@ -68,13 +67,11 @@ def test_quality_ratios(spark):
     df = spark.createDataFrame([("ab12, cd!",), ("",)], "text string")
     rows = df.select(
         TX.digit_ratio("text").alias("d"),
-        TX.punct_ratio("text").alias("p"),
         TX.mean_word_length("text").alias("m"),
     ).collect()
     assert rows[0].d == pytest.approx(2 / 9, abs=1e-6)
-    assert rows[0].p == pytest.approx(2 / 9, abs=1e-6)
     assert rows[0].m == pytest.approx((5 + 3) / 2, abs=1e-6)
-    assert rows[1].d is None and rows[1].p is None and rows[1].m is None
+    assert rows[1].d is None and rows[1].m is None
 
 
 def test_bpe_ish_token_count(spark):
@@ -92,23 +89,80 @@ def test_bpe_ish_drops_tabs_and_newlines(spark):
     assert n == 4  # a / b / c / d — no whitespace token
 
 
-def test_bpe_merges_table_reproducible():
-    """The committed merges table is exactly train_bpe(SEED_CORPUS)."""
+def _train_bpe(corpus: str) -> list[tuple[bytes, bytes]]:
+    """Textbook BPE training: count adjacent symbol pairs over the
+    pre-token frequency table, repeatedly merge the most frequent pair
+    (ties broken lexicographically so the table is deterministic)."""
+    from vector_search_optimization_spark.functions.bpe import pretokenize
+
+    freqs: dict[tuple[bytes, ...], int] = {}
+    for tok in pretokenize(corpus):
+        key = tuple(bytes([b]) for b in tok.encode("utf-8"))
+        if len(key) > 1:
+            freqs[key] = freqs.get(key, 0) + 1
+    merges: list[tuple[bytes, bytes]] = []
+    for _ in range(512):
+        pair_counts: dict[tuple[bytes, bytes], int] = {}
+        for sym, n in freqs.items():
+            for a, b in zip(sym, sym[1:]):
+                pair_counts[(a, b)] = pair_counts.get((a, b), 0) + n
+        if not pair_counts:
+            break
+        best = min(pair_counts, key=lambda p: (-pair_counts[p], p))
+        if pair_counts[best] < 2:
+            break
+        merges.append(best)
+        merged = best[0] + best[1]
+        new_freqs: dict[tuple[bytes, ...], int] = {}
+        for sym, n in freqs.items():
+            out: list[bytes] = []
+            i = 0
+            while i < len(sym):
+                if i + 1 < len(sym) and (sym[i], sym[i + 1]) == best:
+                    out.append(merged)
+                    i += 2
+                else:
+                    out.append(sym[i])
+                    i += 1
+            key = tuple(out)
+            new_freqs[key] = new_freqs.get(key, 0) + n
+        freqs = new_freqs
+    return merges
+
+
+def _bpe_truncate(text: str | None, budget_tokens: int) -> str:
+    """Reference truncation: whole pre-tokens appended while the running
+    BPE count of the prefix fits the budget."""
     from vector_search_optimization_spark.functions.bpe import (
-        SEED_CORPUS,
-        train_bpe,
+        bpe_token_count,
+        pretokenize,
     )
+
+    kept = ""
+    for tok in pretokenize(text or ""):
+        if bpe_token_count(kept + tok) > budget_tokens:
+            break
+        kept += tok
+    return kept
+
+
+def test_bpe_merges_table_reproducible():
+    """The committed merges table is exactly _train_bpe(SEED_CORPUS)."""
+    from vector_search_optimization_spark.functions.bpe import SEED_CORPUS
     from vector_search_optimization_spark.functions.bpe_merges import MERGES
 
-    assert train_bpe(SEED_CORPUS) == MERGES
+    assert _train_bpe(SEED_CORPUS) == MERGES
 
 
 def test_bpe_exact_count_and_truncate_semantics():
     from vector_search_optimization_spark.functions.bpe import (
+        bpe_budget_stats,
         bpe_token_count,
-        bpe_truncate,
         pretokenize,
     )
+
+    def bpe_truncate(t, budget):
+        return t[: bpe_budget_stats(t, budget)[2]]
 
     assert bpe_token_count("") == 0
     assert bpe_token_count(None) == 0
@@ -135,10 +189,7 @@ def test_bpe_exact_count_and_truncate_semantics():
 
 
 def test_bpe_exact_spark_matches_python(spark):
-    from vector_search_optimization_spark.functions.bpe import (
-        bpe_token_count,
-        bpe_truncate,
-    )
+    from vector_search_optimization_spark.functions.bpe import bpe_token_count
 
     rows = [
         (0, "the quick brown fox jumps over the lazy dog"),
@@ -148,40 +199,13 @@ def test_bpe_exact_spark_matches_python(spark):
     ]
     df = spark.createDataFrame(rows, "id long, text string")
     got = {
-        r.id: (r.n, r.kept)
+        r.id: r.n
         for r in df.select(
-            "id",
-            TX.bpe_token_count_exact("text").alias("n"),
-            TX.bpe_truncate_exact("text", 5).alias("kept"),
+            "id", TX.bpe_token_count_exact("text").alias("n")
         ).collect()
     }
     for i, t in rows:
-        assert got[i][0] == bpe_token_count(t)
-        assert got[i][1] == (None if t is None else bpe_truncate(t, 5))
-
-
-def test_word_shingles_udtf_lateral(spark):
-    """SQL LATERAL expansion via the Python UDTF matches a direct python
-    shingle walk, including the <n-token fallback and positions."""
-    from vector_search_optimization_spark.functions.udtfs import register_udtfs
-
-    register_udtfs(spark)
-    spark.createDataFrame(
-        [(1, "The quick brown fox"), (2, "hi")], "doc_id long, text string"
-    ).createOrReplaceTempView("udtf_docs")
-    rows = spark.sql(
-        """
-        SELECT d.doc_id, s.shingle, s.pos
-        FROM udtf_docs d, LATERAL word_shingles_udtf(d.text, 3) s
-        ORDER BY d.doc_id, s.pos
-        """
-    ).collect()
-    got = [(r.doc_id, r.shingle, r.pos) for r in rows]
-    assert got == [
-        (1, "the quick brown", 0),
-        (1, "quick brown fox", 1),
-        (2, "hi", 0),
-    ]
+        assert got[i] == bpe_token_count(t)
 
 
 # --- word-window chunking ----------------------------------------------------
@@ -242,14 +266,12 @@ def test_word_ngrams_and_repetition_metrics(spark):
         for r in df.select(
             "doc_id",
             TX.word_ngrams("text").alias("grams"),
-            F.round(TX.dup_word_fraction("text"), 6).alias("dup"),
         ).collect()
     }
     assert out[0].grams == ["spam spam"] * 3
-    assert out[0].dup == 0.75           # 4 words, 1 distinct
-    assert out[1].dup == 0.0
-    assert out[2].grams == [] and out[2].dup == 0.0   # < n words
-    assert out[3].grams == [] and out[3].dup == 0.0   # empty text
+    assert out[1].grams == ["all words", "words here", "here are", "are unique"]
+    assert out[2].grams == []   # < n words
+    assert out[3].grams == []   # empty text
 
 
 def test_bpe_budget_stats_equals_composed_definition():
@@ -259,7 +281,6 @@ def test_bpe_budget_stats_equals_composed_definition():
     from vector_search_optimization_spark.functions.bpe import (
         bpe_budget_stats,
         bpe_token_count,
-        bpe_truncate,
     )
 
     cases = [
@@ -272,7 +293,7 @@ def test_bpe_budget_stats_equals_composed_definition():
     ]
     for t in cases:
         for b in (0, 1, 5, 40, 10_000):
-            kept = bpe_truncate(t, b)
+            kept = _bpe_truncate(t, b)
             assert bpe_budget_stats(t, b) == (
                 bpe_token_count(t),
                 bpe_token_count(kept),

@@ -9,10 +9,8 @@ so this module implements the public byte-pair-encoding algorithm itself
   letter runs, digit runs, punctuation runs, trailing whitespace).
 - ``bpe_encode`` / ``bpe_token_count``: greedy lowest-rank pair merging
   over each pre-token's utf-8 bytes, against the committed merges table
-  in ``bpe_merges.py`` (generated by ``train_bpe`` on the seed corpus
-  below — re-runnable, deterministic, checked by tests).
-- ``train_bpe``: the textbook training loop (most-frequent adjacent pair,
-  lexicographic tie-break), kept so the committed table is reproducible.
+  in ``bpe_merges.py`` (trained on the seed corpus below by the textbook
+  loop in tests/test_text.py, which checks that it reproduces the table).
 
 One python implementation is shared by the Spark pandas UDF
 (functions.text.bpe_token_count) and the DuckDB oracle generators, so
@@ -76,45 +74,6 @@ def pretokenize(text: str) -> list[str]:
     return _PRETOK.findall(text)
 
 
-def train_bpe(corpus: str) -> list[tuple[bytes, bytes]]:
-    """Textbook BPE training: count adjacent symbol pairs over the
-    pre-token frequency table, repeatedly merge the most frequent pair
-    (ties broken lexicographically so the table is deterministic)."""
-    freqs: dict[tuple[bytes, ...], int] = {}
-    for tok in pretokenize(corpus):
-        key = tuple(bytes([b]) for b in tok.encode("utf-8"))
-        if len(key) > 1:
-            freqs[key] = freqs.get(key, 0) + 1
-    merges: list[tuple[bytes, bytes]] = []
-    for _ in range(512):
-        pair_counts: dict[tuple[bytes, bytes], int] = {}
-        for sym, n in freqs.items():
-            for a, b in zip(sym, sym[1:]):
-                pair_counts[(a, b)] = pair_counts.get((a, b), 0) + n
-        if not pair_counts:
-            break
-        best = min(pair_counts, key=lambda p: (-pair_counts[p], p))
-        if pair_counts[best] < 2:
-            break
-        merges.append(best)
-        merged = best[0] + best[1]
-        new_freqs: dict[tuple[bytes, ...], int] = {}
-        for sym, n in freqs.items():
-            out: list[bytes] = []
-            i = 0
-            while i < len(sym):
-                if i + 1 < len(sym) and (sym[i], sym[i + 1]) == best:
-                    out.append(merged)
-                    i += 2
-                else:
-                    out.append(sym[i])
-                    i += 1
-            key = tuple(out)
-            new_freqs[key] = new_freqs.get(key, 0) + n
-        freqs = new_freqs
-    return merges
-
-
 def _ranks() -> dict[tuple[bytes, bytes], int]:
     from .bpe_merges import MERGES
 
@@ -167,29 +126,14 @@ def bpe_token_count(text: str | None) -> int:
     return sum(_encode_pretoken(t.encode("utf-8")) for t in pretokenize(text))
 
 
-def bpe_truncate(text: str | None, budget_tokens: int) -> str:
-    """Longest prefix of whole pre-tokens whose BPE count fits the
-    budget — the exact F11 semantics (never splits a pre-token)."""
-    if not text:
-        return ""
-    used = 0
-    end = 0
-    for m in _PRETOK.finditer(text):
-        n = _encode_pretoken(m.group(0).encode("utf-8"))
-        if used + n > budget_tokens:
-            break
-        used += n
-        end = m.end()
-    return text[:end]
-
-
 def bpe_budget_stats(text: str | None, budget_tokens: int) -> tuple[int, int, int]:
     """One-pass (total_tokens, kept_tokens, kept_chars) for a budget:
     a single pre-tokenization scan serves the count AND the truncation
     audit (three separate count/truncate/recount passes triple the regex
-    scan and, in the Spark UDF, the Arrow round trips). Equivalent to
-    (bpe_token_count(t), bpe_token_count(bpe_truncate(t, b)),
-    len(bpe_truncate(t, b))) — pytest-pinned."""
+    scan and, in the Spark UDF, the Arrow round trips). The kept
+    text is the longest prefix of whole pre-tokens whose count fits the
+    budget (the exact F11 semantics: never splits a pre-token), equal to
+    the composed count/truncate/recount definition — pytest-pinned."""
     if not text:
         return (0, 0, 0)
     total = 0

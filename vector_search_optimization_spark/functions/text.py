@@ -66,21 +66,6 @@ def bpe_token_count_exact(text: Column | str) -> Column:
     return _u(_c(text))
 
 
-def bpe_truncate_exact(text: Column | str, budget_tokens: int) -> Column:
-    """F11 — truncate to the longest whole-pre-token prefix whose exact
-    BPE count fits the budget (never splits a pre-token)."""
-
-    @F.pandas_udf("string")
-    def _t(s: pd.Series) -> pd.Series:
-        from .bpe import bpe_truncate
-
-        return s.map(
-            lambda x: None if x is None else bpe_truncate(x, budget_tokens)
-        )
-
-    return _t(_c(text))
-
-
 # --- quality scoring ---------------------------------------------------------
 
 def word_chunks(
@@ -121,14 +106,6 @@ def word_chunks(
 
 def char_count(text: Column | str) -> Column:
     return F.length(_c(text))
-
-
-def punct_ratio(text: Column | str) -> Column:
-    """Fraction of characters that are punctuation (NULL for empty text)."""
-    t = _c(text)
-    n = F.length(t).cast("double")
-    punct = (n - F.length(F.regexp_replace(t, r"[\p{Punct}]", ""))).cast("double")
-    return F.when(n == 0, F.lit(None)).otherwise(F.round(punct / n, 6))
 
 
 def digit_ratio(text: Column | str) -> Column:
@@ -425,16 +402,6 @@ def word_ngrams(text: Column | str) -> Column:
     )
 
 
-def dup_word_fraction(text: Column | str) -> Column:
-    """1 - distinct/total words — word-level repetitiveness (the cheap
-    cousin of Gopher's duplicate-line fraction; pure expression)."""
-    words = F.filter(F.split(F.lower(F.trim(_c(text))), r"\s+"), lambda w: w != "")
-    n = F.size(words)
-    return F.when(n <= 0, F.lit(0.0)).otherwise(
-        1.0 - F.size(F.array_distinct(words)) / n.cast("double")
-    )
-
-
 def compressed_size_py(text: str | None) -> int | None:
     """Deflate-compressed byte size of the utf-8 text (stdlib zlib,
     fixed level — deterministic for a given zlib build). NULL → NULL."""
@@ -465,14 +432,14 @@ def word_gram_stats_py(
     """Python twin of the repetition-metric expression pipeline —
     per document ``(n_words, n_distinct_words, n_grams, max_gram_count)``
     with exactly the semantics of ``word_ngrams(text, n)`` exploded into
-    per-gram counts plus ``dup_word_fraction``'s word counts:
+    per-gram counts plus the word and distinct-word counts:
 
     - tokenization is :func:`word_tokens_py` (the canonical twin of
       ``split(lower(trim(text)), '\\s+')`` with empty pieces dropped);
     - fewer than ``n`` words → ``n_grams = max_gram_count = 0`` (the
       expression path's empty gram array → no exploded rows → coalesce 0);
     - NULL text → all-NULL so downstream expressions null-propagate the
-      way the expression path does (``dup_word_fraction(NULL)`` is NULL).
+      way the expression path does.
 
     Gram identity uses token tuples — equivalent to the expression
     path's ``array_join(slice(words, i, n), ' ')`` strings because
@@ -529,7 +496,7 @@ def word_gram_stats_multi_expr(text: Column | str) -> Column:
 
 def word_gram_stats_expr(text: Column | str, n: int = 2) -> Column:
     """Arrow-batched kernel twin of ``word_ngrams(n)`` + per-gram counts
-    + ``dup_word_fraction``'s word counts, as ONE map-side struct
+    + the word and distinct-word counts, as ONE map-side struct
     ``struct<n_words, n_distinct_words, n_grams, max_gram_count>``.
 
     The declarative formulation (explode word_ngrams → two groupBy

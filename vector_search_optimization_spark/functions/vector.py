@@ -254,39 +254,3 @@ def z_score(value: Column, mean: Column, std: Column) -> Column:
     """F8 — (x - mean) / std with NULL on zero std
     (main-script1.ipynb:3767 c64 divides by np.std; ddof=0 there)."""
     return F.when(std == 0.0, F.lit(None)).otherwise((value - mean) / std)
-
-
-def hash_embedding_kernel(col: Column | str) -> Column:
-    """Deterministic text-embedding stand-in (Arrow-batched).
-
-    The reference embeds chunks with a hosted 3072-dim model
-    (main-script1-extenso(1er).ipynb:293 c14) — no embedding model ships
-    in this container, so pipeline plumbing uses this seeded surrogate:
-    unit-normalised 16-dim gaussian vector drawn from a RNG keyed by
-    (seed 42, utf-8 text hash). Identical text → identical vector, so
-    downstream index/probe/dedup tests assert exact behavior. Swap in a
-    real model by replacing this one kernel; every consumer takes any
-    ``array<float>`` column.
-    """
-    import hashlib
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<float>")
-    def _embed(s: pd.Series) -> pd.Series:
-        import numpy as np
-
-        out = []
-        for text in s:
-            digest = hashlib.sha256(
-                b"42:" + (text or "").encode("utf-8")
-            ).digest()
-            rng = np.random.RandomState(
-                int.from_bytes(digest[:4], "big") % (2**31 - 1)
-            )
-            v = rng.standard_normal(16)
-            n = float(np.linalg.norm(v))
-            out.append((v / n if n else v).astype(np.float32))
-        return pd.Series(out)
-
-    return _embed(F.col(col) if isinstance(col, str) else col)

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import vector as V
+from ..session import bounded_collect
 from .nearest_centroid import nearest_centroid
 
 
@@ -166,7 +167,7 @@ def all_pairs_topk(df: DataFrame, k: int = 20) -> DataFrame:
 
     The collect bounds this path to corpora whose matrix fits the driver
     (~1M x 128 floats = 512 MB); beyond that, block with
-    random_projection_buckets + dedup.embedding_near_duplicates, or IVF.
+    random_projection_buckets (a cosine join within each bucket), or IVF.
     """
     import pandas as pd
     from pyspark.sql import types as T
@@ -313,10 +314,7 @@ def train_ivf_centroids(
     ~1e5 vectors, so the training set is driver-bounded by construction
     and the fit costs no Spark jobs beyond the one sample scan.
     """
-    bounded = df.select(vector_col).limit(100_000).persist()
-    bounded.count()  # materialize once; bare limit-collect scales up serially
-    rows = bounded.collect()
-    bounded.unpersist()
+    rows = bounded_collect(df.select(vector_col), 100_000)
     x = np.array([r[0] for r in rows], dtype=np.float64)
     centers = [list(map(float, c)) for c in _lloyd_kmeans(x, num_cells, seed, 20)]
     spark = df.sparkSession
@@ -375,39 +373,6 @@ def assign_ivf_cells(df: DataFrame, centroids: DataFrame) -> DataFrame:
         out_label="cell",
         out_dist="cell_dist",
     ).drop("cell_dist")
-
-
-def ivf_cell_stats(assigned: DataFrame) -> dict:
-    """Index-health summary for quantizer-drift monitoring: cell
-    occupancy spread as {n_cells, min, max, mean, imbalance} where
-    imbalance = max/mean (1.0 = perfectly even).
-
-    One combinable shuffle of per-cell counts. This is the signal that
-    triggers the out-of-band re-train + full rebuild (the stream never
-    retrains in-stream — SCALING.md): a drifting corpus piles new
-    vectors into few cells, imbalance grows, and probe pruning decays
-    toward a full scan of the hot cells.
-    """
-    rows = (
-        assigned.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            F.min("n").alias("min"),
-            F.max("n").alias("max"),
-            F.avg("n").alias("mean"),
-        )
-        .first()
-    )
-    if rows is None or rows["n_cells"] == 0:
-        return {"n_cells": 0, "min": 0, "max": 0, "mean": 0.0, "imbalance": 0.0}
-    return {
-        "n_cells": int(rows["n_cells"]),
-        "min": int(rows["min"]),
-        "max": int(rows["max"]),
-        "mean": float(rows["mean"]),
-        "imbalance": float(rows["max"] / rows["mean"]),
-    }
 
 
 def write_ivf_index(df: DataFrame, centroids: DataFrame, path: str) -> None:
@@ -527,28 +492,6 @@ def compact_ivf_cells(spark, path: str, max_files_per_cell: int = 4) -> list[int
             os.remove(f)
     shutil.rmtree(staging)
     return cells
-
-
-def recall_at_k(approx: DataFrame, exact: DataFrame) -> float:
-    """Recall@k of an approximate result set vs the exact top-k:
-    |approx ∩ exact| / |exact| over the id column.
-
-    The standard ANN quality gate (Faiss's `knn_recall` shape) — run it
-    on a held-out query sample whenever an index parameter (nprobe,
-    nbits, rerank) changes. Both inputs are k-row result frames, so the
-    semi-join is trivially small; returns 0.0 for an empty exact set.
-    """
-    exact_ids = exact.select("vec_id").distinct()
-    n_exact = exact_ids.count()
-    if n_exact == 0:
-        return 0.0
-    # distinct on BOTH sides: duplicate ids in an approx result (e.g. a
-    # crash-recovered index before its next compaction) must not inflate
-    # recall past 1.0
-    hit = (
-        approx.select("vec_id").distinct().join(exact_ids, "vec_id", "left_semi").count()
-    )
-    return hit / n_exact
 
 
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
@@ -735,10 +678,7 @@ def train_pq_codebooks(
     256 B → 8 B, 32×). Pass the input pre-ordered (e.g. orderBy(vec_id))
     so training — and any generated oracle literals — are a pure
     function of the data, like train_ivf_centroids."""
-    bounded = df.select("embedding").limit(100_000).persist()
-    bounded.count()  # materialize once; bare limit-collect scales up serially
-    rows = bounded.collect()
-    bounded.unpersist()
+    rows = bounded_collect(df.select("embedding"), 100_000)
     X = np.asarray([r[0] for r in rows], dtype=np.float64)
     dim = X.shape[1]
     if dim % num_subspaces:
@@ -943,7 +883,7 @@ def random_projection_buckets(df: DataFrame, num_planes: int = 12) -> DataFrame:
     num_planes seeded random hyperplanes; bit i = sign(<v, plane_i>).
     Cosine-similar vectors collide with probability 1 - theta/pi per bit.
     Pure column expressions over plan-literal plane vectors — scan-speed,
-    no UDF. Output feeds dedup.embedding_near_duplicates(group_col=...).
+    no UDF. Output feeds a cosine self-join within each bucket.
     """
     dim = len(df.select("embedding").first()[0])
     planes = rp_planes(num_planes, dim, 42)

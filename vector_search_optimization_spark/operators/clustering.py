@@ -282,29 +282,6 @@ def silhouette_exact_distributed(
     return float(np.mean(sil))
 
 
-def k_sweep(
-    df: DataFrame,
-    ks: range,
-    max_iter: int = 100,
-    silhouette_sample: int | None = 2000,
-) -> list[dict]:
-    """M3 — model selection sweep: per-k inertia + silhouette.
-
-    Reference sweeps k in [2,100) with N_INIT=25 and picks k=37
-    (nuevo-kmeans-pre.ipynb:400 c19, :481 c23). Driver loop; each fit is
-    distributed. Returns a list of {k, inertia, silhouette} dicts.
-    """
-    out = []
-    for k in ks:
-        res = kmeans_fit(df, k, max_iter=max_iter)
-        assigned = res.assign(df, "embedding")
-        sil = silhouette_exact_distributed(
-            assigned, "embedding", "cluster", sample_size=silhouette_sample
-        )
-        out.append({"k": k, "inertia": res.inertia, "silhouette": sil})
-    return out
-
-
 def fit_and_evaluate(
     df: DataFrame,
     k: int,

@@ -38,29 +38,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
-from ..functions import vector as V
 from ..session import release_caches  # noqa: F401 (re-exported for perfbench)
 from ..sources.readers import spread_scan
 
 # --- exact -------------------------------------------------------------------
-
-def exact_duplicates(df: DataFrame) -> DataFrame:
-    """Groups of exact duplicates (by normalized-text fingerprint).
-
-    Returns one row per duplicate group: fingerprint, size, member ids,
-    and the keeper (min id). Only groups with >1 member.
-    """
-    return (
-        df.select(F.col("doc_id"), TX.fingerprint("text").alias("fp"))
-        .groupBy("fp")
-        .agg(
-            F.count(F.lit(1)).alias("group_size"),
-            F.min("doc_id").alias("keeper"),
-            F.sort_array(F.collect_list("doc_id")).alias("members"),
-        )
-        .where(F.col("group_size") > 1)
-    )
-
 
 def dedup_exact(df: DataFrame) -> DataFrame:
     """Keep exactly one row (min id) per normalized-text fingerprint.
@@ -217,8 +198,8 @@ def minhash_band_rows(
 ) -> DataFrame:
     """Exploded LSH band keys per document: (id, band, bucket) where
     bucket = xxhash64 of the band's signature slice. This IS the corpus
-    dedup index row format — persist it bucketed on ``bucket``
-    (sources.writers.write_bucketed) and nightly batches band-probe it
+    dedup index row format — persist it as a table bucketed on
+    ``bucket`` (``bucketBy`` + ``saveAsTable``) and nightly batches band-probe it
     (minhash_probe_corpus) without recomputing corpus signatures.
 
     num_bands must divide the signature length: a non-divisor silently
@@ -274,9 +255,6 @@ def minhash_probe_corpus(batch: DataFrame, corpus_bands: DataFrame) -> DataFrame
     consistent (append→probe pytest in tests/test_dedup.py).
     """
     sig_b = minhash_signatures_kernel(batch, 64)
-    from pyspark import StorageLevel
-
-    sig_b = sig_b.persist(StorageLevel.MEMORY_AND_DISK)
     bands_b = minhash_band_rows(sig_b, 16, num_hashes=64).select(
         F.col("doc_id").alias("id_a"), "band", "bucket"
     )
@@ -608,38 +586,6 @@ def canonical_duplicate_groups(pairs: DataFrame) -> DataFrame:
 
 
 # --- embedding near-dup ----------------------------------------------------------
-
-def embedding_near_duplicates(
-    df: DataFrame,
-    threshold: float = 0.95,
-    group_col: str | None = None,
-) -> DataFrame:
-    """Cosine near-duplicate pairs over an embedding column.
-
-    With ``group_col`` (e.g. an LSH bucket or cluster label) the self-join
-    is confined within groups; without it this is a full O(n^2) cross join —
-    correctness baseline only, use operators.ann.random_projection_buckets
-    to produce the group at scale.
-    """
-    a = df.select(
-        *( [F.col(group_col)] if group_col else [] ),
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("__va"),
-    )
-    b = df.select(
-        *( [F.col(group_col)] if group_col else [] ),
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("__vb"),
-    )
-    joined = a.join(b, group_col) if group_col else a.crossJoin(b)
-    return (
-        joined.where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b", F.round(V.cosine_similarity("__va", "__vb"), 6).alias("cos_sim")
-        )
-        .where(F.col("cos_sim") >= threshold)
-    )
-
 
 # --- Bloom-filter decontamination prefilter ----------------------------------
 

@@ -93,25 +93,6 @@ def psi_from_counts(counts: DataFrame) -> DataFrame:
     )
 
 
-def reference_profile(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(range, bucket_counts) of a reference cohort: the one-row
-    [lo, hi] frame and the (group, bucket, n_ref) counts — the static
-    profile a streaming monitor compares against."""
-    rng = df.agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
-    counts = (
-        df.join(F.broadcast(rng))
-        .select(
-            "event_type",
-            bucketize("value", F.col("lo"), F.col("hi")).alias(
-                "bucket"
-            ),
-        )
-        .groupBy("event_type", "bucket")
-        .agg(F.count(F.lit(1)).alias("n_ref"))
-    )
-    return rng, counts
-
-
 def psi_drift(df: DataFrame, ref_pred: Column) -> DataFrame:
     """Batch PSI between the rows matching ``ref_pred`` (reference
     cohort) and the rest (current cohort): reference range via a one-row

@@ -1,12 +1,11 @@
-"""Data layout for scan pruning — Z-order (Morton) clustering.
+"""Data layout for scan pruning — the Z-order (Morton) key.
 
 The 100 TB lever parquet gives away for free: min/max zone maps prune
 row groups ONLY if the writer clustered the data. A single-column sort
 prunes one predicate dimension; bit-interleaving k columns into one
 Morton key and range-partition-sorting by it gives every interleaved
 dimension a narrow per-file range simultaneously — the Delta/Iceberg
-OPTIMIZE ZORDER technique, reproduced on plain parquet with two public
-primitives (repartitionByRange + sortWithinPartitions).
+OPTIMIZE ZORDER technique.
 
 The z-value is PURE integer bit math (unrolled shifts/masks), so it
 stays inside whole-stage codegen on the Spark side and has an exact
@@ -15,16 +14,12 @@ pre-quantized by the caller to small non-negative ints (bucket ids,
 clamped dims) — quantization choice is a layout policy, not hidden
 here.
 
-Scale notes: z_value is map-only; the layout write is exactly one
-range shuffle (sampling-based bounds, skew-tolerant) + a partition-
-local sort — the same cost as any global sort-write. Pruning
-effectiveness is pinned in tests/test_layout.py by reading the parquet
-footers' per-file min/max spans.
+Scale notes: z_value is map-only.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -64,26 +59,3 @@ def z_value_sql(cols: list[str]) -> str:
         for b in range(10)
     ]
     return "(" + " | ".join(terms) + ")"
-
-
-def zorder_write(
-    df: DataFrame,
-    quantized_cols: list[str],
-    path: str,
-    bits: int = 10,
-    num_files: int = 8,
-) -> None:
-    """Write ``df`` as parquet clustered by the Morton key of
-    ``quantized_cols``: ONE range shuffle on the key (sampled bounds)
-    + a partition-local sort, so each output file covers a narrow
-    range of EVERY interleaved column — min/max zone maps then prune
-    multi-dimensional predicates. The helper key column is dropped
-    from the files."""
-    keyed = df.withColumn("__z", z_value(quantized_cols, bits))
-    (
-        keyed.repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

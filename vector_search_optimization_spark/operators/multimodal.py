@@ -6,10 +6,10 @@ run as Arrow-batched ``mapInPandas`` stages so the binary bytes stream
 through executors without driver round-trips.
 
 The container has no image/audio codecs (no PIL/ffmpeg), so the decode
-step is STUBBED: ``decoder=None`` uses a deterministic fake that derives
-pixel/sample statistics from the payload bytes — the Spark-side plumbing
-(schema, batching, partitioning, UDF signatures) is real and tested, and a
-real decoder drops in as a callable without touching the plan.
+step is STUBBED: a deterministic fake derives pixel/sample statistics from
+the payload bytes — the Spark-side plumbing (schema, batching,
+partitioning, UDF signatures) is real and tested, and a real decoder
+replaces ``_fake_decode`` without touching the plan.
 
 Reference analog: the OCR ingest path caps images at 768px (ocr.py:1) and
 routes bytes to a vision model (L4) — the same binary-in, features-out
@@ -18,7 +18,7 @@ shape implemented here.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -52,25 +52,18 @@ def _fake_decode(payload: bytes) -> np.ndarray:
     return (hist / max(1, len(arr))).astype(np.float32)
 
 
-def extract_features(
-    assets: DataFrame,
-    decoder: Callable[[bytes], np.ndarray] | None = None,
-) -> DataFrame:
-    """Binary → feature-vector stage over mapInPandas (Arrow batches).
-
-    With ``decoder=None`` the deterministic fake runs (no codecs in this
-    container — clearly marked stub); pass a real decoder for production.
-    """
+def extract_features(assets: DataFrame) -> DataFrame:
+    """Binary → feature-vector stage over mapInPandas (Arrow batches),
+    decoding with the deterministic fake (no codecs in this container —
+    clearly marked stub)."""
     import hashlib
-
-    decode = decoder or (lambda b: _fake_decode(b))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             feats, shas, sizes = [], [], []
             for payload in pdf["payload"]:
                 b = bytes(payload) if payload is not None else b""
-                feats.append([float(x) for x in decode(b)])
+                feats.append([float(x) for x in _fake_decode(b)])
                 shas.append(hashlib.sha256(b).hexdigest()[:16])
                 sizes.append(len(b))
             yield pd.DataFrame(
@@ -119,16 +112,4 @@ def frame_sample_plan(assets: DataFrame) -> DataFrame:
     return video.select(
         "asset_id",
         F.posexplode(stamps).alias("frame_idx", "frame_ts_ms"),
-    )
-
-
-def not_implemented_decode(payload: bytes) -> np.ndarray:
-    """Explicit stub for environments without codecs: raises immediately.
-
-    Wire this as ``decoder=`` to make a pipeline fail fast rather than
-    silently using the fake features.
-    """
-    raise NotImplementedError(
-        "media decoding requires codec libraries (PIL/librosa/ffmpeg) not "
-        "present in this container; inject a real decoder callable"
     )

@@ -15,9 +15,10 @@
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..functions import vector as V
+from ..session import bounded_collect
 
 
 def pca_components_numpy(
@@ -118,20 +119,15 @@ def umap_project(
                 "use fallback=True for the spectral embedding."
             ) from None
 
-    bounded = df.select("vec_id", "embedding").limit(max_rows).persist()
-    try:
-        bounded.count()  # materialize once; bare limit-collect re-runs upstream
-        pdf = bounded.toPandas()
-    finally:
-        bounded.unpersist()
-    X = V.stack_vectors(pdf["embedding"])
+    rows = bounded_collect(df.select("vec_id", "embedding"), max_rows)
+    X = np.asarray([r.embedding for r in rows], dtype=np.float64)
     if have_umap:  # pragma: no cover - env without umap
         emb = umap.UMAP(n_components=2, **umap_kwargs).fit_transform(X)
         method = "umap"
     else:
         emb = spectral_embedding_numpy(X, 2, umap_kwargs.get("n_neighbors", 15))
         method = "spectral"
-    out = pdf[["vec_id"]].copy()
+    out = pd.DataFrame({"vec_id": [r.vec_id for r in rows]})
     out["umap"] = [row.tolist() for row in np.asarray(emb, dtype=np.float64)]
     out["method"] = method
     return df.sparkSession.createDataFrame(out)

@@ -4,8 +4,8 @@ The Deequ / Great Expectations pattern, Spark-first: every constraint
 compiles to a conditional aggregate over the same scan, so checking 20
 rules on a 100 TB table costs exactly one combinable shuffle of a
 1-row state — not 20 jobs. Results come back as (rule, violations,
-passed) rows for gating a pipeline stage (raise on any failure) or for
-writing to a quality-metrics table.
+passed) rows for gating a pipeline stage or for writing to a
+quality-metrics table.
 
 Usage::
 
@@ -15,7 +15,6 @@ Usage::
         accepted_values("lang", ["en", "es", "de", "fr", "zh"]),
         satisfies("text IS NULL OR length(text) >= 1", "text_not_empty"),
     ])
-    assert_constraints(df, rules)   # raises with the violation report
 
 Each rule is (name, violation_predicate_column): violations == rows
 where the predicate is TRUE. ``unique`` is the one exception — it needs
@@ -75,14 +74,6 @@ def accepted_values(col: str, values: list) -> Rule:
     return Rule(
         f"accepted_values({col})",
         _count_if(c.isNotNull() & ~c.isin(clean)),
-    )
-
-
-def matches(col: str, pattern: str, name: str | None = None) -> Rule:
-    c = F.col(col)
-    return Rule(
-        name or f"matches({col}, {pattern!r})",
-        _count_if(c.isNotNull() & ~c.rlike(pattern)),
     )
 
 
@@ -154,15 +145,3 @@ def benford_expected_sql(digit_expr: str) -> str:
         f"WHEN {d} THEN {BENFORD_P[d]!r}e0" for d in range(1, 10)
     )
     return f"CASE {digit_expr} {cases} END"
-
-
-def assert_constraints(df: DataFrame, rules: list[Rule]) -> None:
-    """Gate: raise ValueError listing every failed rule (one job)."""
-    failed = [
-        (r["rule"], r["violations"])
-        for r in check_constraints(df, rules).collect()
-        if not r["passed"]
-    ]
-    if failed:
-        detail = ", ".join(f"{name}: {n} violations" for name, n in failed)
-        raise ValueError(f"data-quality constraints failed — {detail}")

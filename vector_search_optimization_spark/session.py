@@ -89,3 +89,19 @@ def release_caches(df: DataFrame) -> None:
     if not rdds.isEmpty():
         for rdd in rdds.values():
             rdd.unpersist(True)
+
+
+def bounded_collect(df: DataFrame, n: int) -> list:
+    """The first ``n`` rows of ``df``, collected to the driver.
+
+    Not ``df.limit(n).collect()``: Spark runs a bare limit-collect as a
+    series of jobs over 1, 4, 16, ... partitions, each re-running the
+    uncached upstream plan. Here the limited frame is persisted and
+    counted (materialized once), collected from the cache, and
+    unpersisted before returning."""
+    bounded = df.limit(n).persist()
+    try:
+        bounded.count()
+        return bounded.collect()
+    finally:
+        bounded.unpersist()

@@ -1,8 +1,7 @@
 from .readers import (  # noqa: F401
     load_table,
-    load_tables,
     read_centroids_csv,
     read_chunks,
     spread_scan,
 )
-from .writers import write_csv, write_json, write_parquet, write_upsert  # noqa: F401
+from .writers import write_csv, write_json, write_upsert  # noqa: F401

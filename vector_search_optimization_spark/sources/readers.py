@@ -79,10 +79,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in TESTDATA_TABLES}
-
-
 def spread_scan(df: DataFrame, *keys: str, target: int | None = None) -> DataFrame:
     """Unsplittable-input remedy (optimization guide §2.5, "input skew:
     one huge unsplittable file ... repartition immediately after the
@@ -325,19 +321,3 @@ def coerce_cell_to_type(v, tp: T.DataType):
         except (TypeError, ValueError):
             return None
     return str(v)
-
-
-def read_json_index_dump(spark: SparkSession, path: str) -> DataFrame:
-    """S2/S4 — full search-index dump (documentos_pre.json shape): chunk
-    columns plus document_path and the writeback target etiqueta_cluster.
-    Null vectors are kept — the null-drop filter (P8) is the caller's
-    explicit step, as in get_all_embeddings (update-etiquetas.ipynb:171 c9).
-    """
-    schema = T.StructType(
-        list(schemas.CHUNKS.fields)
-        + [
-            T.StructField("document_path", T.StringType(), True),
-            T.StructField("etiqueta_cluster", T.StringType(), True),
-        ]
-    )
-    return spark.read.schema(schema).json(path)

@@ -13,6 +13,7 @@ from pyspark.sql import types as T
 
 from ..functions import vector as V
 from ..operators.upsert import upsert_fields
+from ..session import bounded_collect
 
 
 def _stringify_vectors(df: DataFrame) -> DataFrame:
@@ -34,27 +35,16 @@ def write_json(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").json(path)
 
 
-def write_parquet(df: DataFrame, path: str) -> None:
-    """S3 — parquet sink (overwrite)."""
-    df.write.mode("overwrite").parquet(path)
-
-
 def write_excel(df: DataFrame, path: str) -> None:
     """S9 — Excel sink (table.to_excel, analisis-informe.ipynb:1052 c38).
 
     Driver-side: bounded collect + the stdlib zip+XML codec
     (sources.xlsx) — no openpyxl dependency. Reporting-table sizes only;
-    use write_csv / write_parquet for data.
+    use write_csv or a parquet write for data.
     """
     from . import xlsx
 
-    # persist+count+collect, NOT limit(N).collect(): a bare limit-collect
-    # executes partition batches serially (1, 4, 16, ...) re-running the
-    # upstream plan each batch (CLAUDE.md hard-won fact)
-    bounded = _stringify_vectors(df).limit(100_000).persist()
-    bounded.count()
-    collected = bounded.collect()
-    bounded.unpersist()
+    collected = bounded_collect(_stringify_vectors(df), 100_000)
     xlsx.write_xlsx(path, df.columns, [list(r) for r in collected])
 
 
@@ -132,25 +122,3 @@ def commit_swap(spark, staging: str, base_path: str, require_base: bool = True) 
             )
         raise IOError(f"commit: rename {staging} -> {base_path} failed")
     fs.delete(old_p, True)
-
-
-def write_bucketed(
-    df,
-    table: str,
-    bucket_col: str,
-    num_buckets: int = 32,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Materialize a hash-bucketed (optionally sorted) table — the
-    co-located-join layout SCALING.md prescribes for join-heavy keys
-    (doc_id, fingerprint buckets): two tables bucketed the same way on
-    the join key sort-merge-join with ZERO Exchange on either side, so
-    the shuffle is paid once at write time and amortized over every
-    downstream join. Registered through the session catalog because
-    bucket metadata lives there (a plain parquet path forgets it).
-    """
-    w = df.write.format("parquet").mode(mode).bucketBy(num_buckets, bucket_col)
-    if sort_col is not None:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table)

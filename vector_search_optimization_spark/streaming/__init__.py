@@ -2,7 +2,6 @@ from .windows import (  # noqa: F401
     asof_click_purchase_stream,
     first_seen_dedup_stream,
     read_events_stream,
-    run_stream_to_memory,
     running_user_stats_stream,
     sessionized_counts_stream,
     sliding_window_agg,

@@ -45,9 +45,8 @@ def stream_psi_monitor(
     static reference profile so one-sided buckets keep their mass, PSI
     via the shared combine, latest scores overwritten at ``out_path``.
 
-    ``lo``/``hi`` are the reference cohort's range (from
-    operators.drift.reference_profile); ``ref_counts`` its
-    (group, bucket, n_ref) frame.
+    ``lo``/``hi`` are the reference cohort's value range; ``ref_counts``
+    its (group, bucket, n_ref) frame, bucketed over that range.
     """
     bucketed = stream_df.select(
         F.col("event_type"),

@@ -275,21 +275,3 @@ def first_seen_dedup_stream(df: DataFrame) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_stream_to_memory(
-    stream_df: DataFrame, name: str, output_mode: str = "append"
-) -> DataFrame:
-    """Drive a bounded stream to completion into an in-memory table and
-    return it as a DataFrame (test/smoke harness)."""
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
